@@ -131,7 +131,8 @@ def run_parallel(*thunks: Callable[[], Any], max_workers: int = 6) -> list[Any]:
     sibling cannot be interrupted and still completes; each store's own
     commit stays atomic behind its writer lock either way). Every root
     cause that did occur is surfaced: one exception re-raises as itself,
-    several raise as an ExceptionGroup.
+    several raise as a BaseExceptionGroup (an ExceptionGroup when all of
+    them are Exceptions), each with its own type and traceback.
     """
     if len(thunks) == 1:
         return [thunks[0]()]
@@ -172,8 +173,5 @@ def run_parallel(*thunks: Callable[[], Any], max_workers: int = 6) -> list[Any]:
         if errors:
             if len(errors) == 1:
                 raise errors[0]
-            raise ExceptionGroup(
-                "run_parallel: multiple thunks failed",
-                [e if isinstance(e, Exception) else Exception(repr(e)) for e in errors],
-            )
+            raise BaseExceptionGroup("run_parallel: multiple thunks failed", errors)
         return [f.result() for f in futures]

@@ -6,7 +6,8 @@ Stage map (reference cites):
   bronze  : CSV scan, `_c*` strings              (cell 4,  ipynb:L250-264)
   silver  : rename + cast via format_columns     (cell 8,  ipynb:L960-997)
   gold    : duration/time_id/ages enrichment     (cell 10, ipynb:L1072-1101)
-  dims    : trip_dates / payment_dates spines    (cells 12/17/18)
+  dims    : trip_dates / payment_dates spines    (cells 12/17/18), each a
+            lazy min/max -> sequence plan with no probe job
 
 Scale posture (deliberate deltas from the reference, SURVEY.md §7.4.8):
 * facts are written partitioned by a date column (`started_month` for trips,
@@ -15,8 +16,8 @@ Scale posture (deliberate deltas from the reference, SURVEY.md §7.4.8):
 * the riders birthday join for `age_at_ride_time` broadcasts the projected
   (rider_id, birthday) dim exactly like the reference's manual `.select`
   narrow-then-join (J3, ipynb:L1093);
-* every stage is DataFrame -> DataFrame; writes happen only in `run()`, so
-  the DAG is testable without IO.
+* every stage is DataFrame -> DataFrame and runs no Spark job; writes
+  happen only in `run()`, so the DAG is testable without IO.
 """
 
 from __future__ import annotations
@@ -80,10 +81,11 @@ def gold(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 def date_dims(spark: SparkSession, gold_tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Generated dimensions (cells 12/17/18)."""
+    """Generated dimensions (cells 12/17/18). ``spark`` is unused: the
+    spines are derived from the gold facts alone."""
     return {
-        "trip_dates": trip_dates_dim(spark, gold_tables["trips"], "time_id"),
-        "payment_dates": payment_dates_dim(spark, gold_tables["payments"], "date_id"),
+        "trip_dates": trip_dates_dim(gold_tables["trips"], "time_id"),
+        "payment_dates": payment_dates_dim(gold_tables["payments"], "date_id"),
     }
 
 

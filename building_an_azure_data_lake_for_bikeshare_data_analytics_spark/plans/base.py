@@ -110,7 +110,8 @@ def _table_layout(sf_dir: str, name: str) -> tuple[int, int]:
                 )
         total = sum(os.path.getsize(f) for f in files)
         hit = (total, max(1, len(files)))
-        _TABLE_LAYOUT[key] = hit
+        if files:  # an empty listing may be a table whose files come later
+            _TABLE_LAYOUT[key] = hit
     return hit
 
 

@@ -234,7 +234,7 @@ def _payments_with_dates(spark: SparkSession, sf: str) -> DataFrame:
     payments = _t(spark, sf, "orders").select(
         F.to_date("o_orderdate").alias("date_id"), F.col("o_totalprice").alias("amount")
     )
-    dim = payment_dates_dim(spark, payments, "date_id")
+    dim = payment_dates_dim(payments, "date_id")
     return payments.join(F.broadcast(dim), "date_id")
 
 
@@ -447,9 +447,10 @@ def q23(spark, sf):
 )
 def q24(spark, sf):
     """Generated daily date dimension (cells 12+18, ipynb:L1194/L1649-1661):
-    min/max probe -> explode(sequence(...)) spine -> attribute projection."""
+    min/max aggregate -> explode(sequence(...)) spine -> attribute
+    projection, as one lazy plan."""
     payments = _t(spark, sf, "orders").select(F.to_date("o_orderdate").alias("date_id"))
-    return payment_dates_dim(spark, payments, "date_id")
+    return payment_dates_dim(payments, "date_id")
 
 
 @query(
@@ -470,7 +471,7 @@ def q25(spark, sf):
     """Generated hourly date dimension with time-of-day CASE buckets
     (cells 12+17, ipynb:L1195/L1578-1593)."""
     trips = _t(spark, sf, "events").select(F.col("ts").alias("time_id"))
-    return trip_dates_dim(spark, trips, "time_id")
+    return trip_dates_dim(trips, "time_id")
 
 
 @query(

@@ -60,12 +60,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
-        # driver testdata writes INT64 TIMESTAMP(NANOS) parquet (events.ts).
-        # Spark 4 reads it natively as TIMESTAMP_NTZ (micros truncation) and
-        # ignores this legacy conf; on Spark 3.x the conf makes the scan
-        # yield raw nanos longs, which sources/readers.py truncates to
-        # micros timestamps — either way downstream sees a timestamp column.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     if delta_available():
         # reference semantics are Delta everywhere (ipynb:L263-264, L982);

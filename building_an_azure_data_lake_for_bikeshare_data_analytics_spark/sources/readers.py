@@ -21,7 +21,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 #: the driver-testdata star schema (TESTDATA.md) + extension tables
@@ -76,68 +75,18 @@ def read_jsonl(
     return reader.json(path)
 
 
-#: columns stored as INT64 TIMESTAMP(NANOS) in the driver testdata. Spark 4
-#: reads nanos parquet natively as TIMESTAMP_NTZ (micros truncation — same as
-#: DuckDB casting TIMESTAMP_NS to TIMESTAMP); the native scan keeps ts
-#: predicates pushdown-able, so it is the primary path. Older Sparks reject
-#: the type outright unless spark.sql.legacy.parquet.nanosAsLong is set, in
-#: which case we read raw nanos longs and truncate — that conf is scoped to
-#: the fallback scan and restored (ADVICE r1: it used to leak into
-#: caller-owned sessions).
-_NANOS_TS_COLS = {"events": ("ts",)}
-
-
-def _read_nanos_fallback(spark: SparkSession, path: str, name: str) -> DataFrame:
-    """Legacy-Spark path: scan nanos columns as longs, truncate to micros."""
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev: str | None = None
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "true")
-    try:
-        df = spark.read.parquet(path)
-        for c in _NANOS_TS_COLS.get(name, ()):
-            if c in df.columns and dict(df.dtypes).get(c) == "bigint":
-                df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        return df
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def read_parquet_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     """Path-based table scan: ``<root>/<name>.parquet`` (driver testdata
     layout) or ``<root>/<name>`` directory. Columnar, predicate/column
-    pushdown free via the vectorized parquet reader."""
+    pushdown free via the vectorized parquet reader.
+
+    INT64 TIMESTAMP(NANOS) columns (events.ts in the driver testdata) read
+    natively as ``timestamp_ntz`` with micros truncation — the same values
+    DuckDB gets casting TIMESTAMP_NS to TIMESTAMP."""
     file_path = os.path.join(root, f"{name}.parquet")
     dir_path = os.path.join(root, name)
     path = file_path if os.path.exists(file_path) else dir_path
-    try:
-        df = spark.read.parquet(path)
-        if name in _NANOS_TS_COLS:
-            dtypes = dict(df.dtypes)
-            if any(dtypes.get(c) == "bigint" for c in _NANOS_TS_COLS[name]):
-                # session already had nanosAsLong=true: normalize to micros
-                for c in _NANOS_TS_COLS[name]:
-                    if dtypes.get(c) == "bigint":
-                        df = df.withColumn(
-                            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-                        )
-        return df
-    except Exception as exc:
-        # Only the nanos-timestamp parquet-type error routes to the legacy-conf
-        # fallback; anything else (missing path, corrupt file, permissions)
-        # re-raises so the real cause surfaces.
-        msg = str(exc)
-        if name in _NANOS_TS_COLS and (
-            "PARQUET_TYPE_ILLEGAL" in msg or "Illegal Parquet type" in msg
-        ):
-            return _read_nanos_fallback(spark, path, name)
-        raise
+    return spark.read.parquet(path)
 
 
 def load_star(

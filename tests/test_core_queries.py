@@ -16,7 +16,7 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.regist
     REGISTRY,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_launched
 
 
 def test_entry_smoke(spark):
@@ -82,6 +82,17 @@ def test_date_dims_are_contiguous(spark, name):
     n = df.count()
     assert n == df.select(df.columns[0]).distinct().count()  # spine keys unique
     assert n > 1
+
+
+def test_date_dim_queries_build_without_jobs(spark):
+    """q13-q18 join the generated daily dim and q24/q25 are the dims: the
+    spine bounds stay inside the plan, so building them runs no job once
+    the tables' parquet schemas are resolved (first build)."""
+    names = [n for n in QUERIES if n.split("_")[0] in {"q13", "q14", "q15", "q16", "q17", "q18", "q24", "q25"}]
+    assert len(names) == 8
+    for name in names:
+        QUERIES[name](spark, SF_SMOKE)
+    assert jobs_launched(spark, lambda: [QUERIES[n](spark, SF_SMOKE) for n in names]) == 0
 
 
 def test_approx_distinct_within_tolerance(spark):

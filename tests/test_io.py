@@ -45,11 +45,10 @@ def test_read_parquet_table_and_load_star(spark):
 
 def test_events_nanos_ts_converted(spark):
     """Spark 4 reads the INT64 TIMESTAMP(NANOS) ts column natively as
-    TIMESTAMP_NTZ (micros truncation, matching DuckDB TIMESTAMP_NS -> TIMESTAMP);
-    the legacy-conf fallback yields TIMESTAMP. Either way, a timestamp — never
-    a raw bigint."""
+    TIMESTAMP_NTZ (micros truncation, matching DuckDB TIMESTAMP_NS -> TIMESTAMP)
+    — never a raw bigint."""
     ev = read_parquet_table(spark, SF_SMOKE, "events")
-    assert dict(ev.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
+    assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
     assert ev.where(ev.ts.isNull()).count() == 0
 
 
@@ -122,9 +121,9 @@ def test_compact_parquet_table(spark, tmp_path):
 
 
 def test_nanos_conf_restored_after_events_read(spark):
-    """read_parquet_table never leaks the nanosAsLong legacy conf into
-    caller-owned sessions (ADVICE r1): the native path does not touch it and
-    the legacy fallback restores whatever value the caller had set."""
+    """read_parquet_table never touches the nanosAsLong legacy conf of a
+    caller-owned session (ADVICE r1): Spark 4 ignores it for the native
+    nanos scan, so the caller's value survives the read."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
     try:
         prev = spark.conf.get(key)

@@ -74,6 +74,31 @@ def test_run_parallel_multiple_failures_raise_exception_group():
     assert kinds == {ValueError, KeyError}
 
 
+def test_run_parallel_keeps_base_exceptions_intact():
+    # a BaseException (KeyboardInterrupt-style) failing alongside a
+    # ValueError must come back as itself, not wrapped in an Exception
+    class Abort(BaseException):
+        pass
+
+    barrier = threading.Barrier(2)
+    abort = Abort("stop")
+
+    def a():
+        barrier.wait(5)
+        raise abort
+
+    def b():
+        barrier.wait(5)
+        raise ValueError("b")
+
+    with pytest.raises(BaseExceptionGroup) as ei:
+        run_parallel(a, b, max_workers=2)
+    assert not isinstance(ei.value, ExceptionGroup)
+    got = [e for e in ei.value.exceptions if isinstance(e, Abort)]
+    assert got == [abort] and got[0].__traceback__ is not None
+    assert {type(e) for e in ei.value.exceptions} == {Abort, ValueError}
+
+
 def test_spread_width_is_cost_based(spark):
     df = spark.range(10)
     # tiny input: one 16 KiB unit -> no exchange even though 1 < cores

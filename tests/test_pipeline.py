@@ -6,8 +6,11 @@ import datetime as dt
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import pipeline
+
+from conftest import jobs_launched
 
 
 @pytest.fixture(scope="module")
@@ -62,6 +65,8 @@ GOLD_TRIPS_SCHEMA = [
     ("start_station_id", "string"), ("end_station_id", "string"),
     ("time_id", "timestamp"), ("rider_id", "int"),
 ]
+TRIP_DATES_DTYPES = [("time_id", "timestamp"), ("day_of_week", "int"), ("time_of_day", "string")]
+PAYMENT_DATES_DTYPES = [("date_id", "date"), ("month", "int"), ("quarter", "int"), ("year", "int")]
 
 
 def test_full_pipeline_schemas_and_semantics(spark, csv_dir, tmp_path):
@@ -86,13 +91,39 @@ def test_full_pipeline_schemas_and_semantics(spark, csv_dir, tmp_path):
 
     # date dims cover the fact ranges at the right grain
     td = out["trip_dates"]
-    assert dict(td.dtypes) == {"time_id": "timestamp", "day_of_week": "int", "time_of_day": "string"}
+    assert td.dtypes == TRIP_DATES_DTYPES
     assert td.count() == td.select("time_id").distinct().count()
     pd_dim = out["payment_dates"]
-    assert dict(pd_dim.dtypes) == {"date_id": "date", "month": "int", "quarter": "int", "year": "int"}
+    assert pd_dim.dtypes == PAYMENT_DATES_DTYPES
     # every payment date joins (the reference's J4 join must not drop rows)
     joined = out["payments"].join(pd_dim, "date_id").count()
     assert joined == out["payments"].count()
+
+    # the spine is generated ascending from one bounds row, so the written
+    # dims read back in key order without a sort
+    for name, key in (("trip_dates", "time_id"), ("payment_dates", "date_id")):
+        keys = [r[0] for r in out[name].select(key).collect()]
+        assert len(keys) > 1 and keys == sorted(keys), name
+
+
+def test_building_stages_runs_no_spark_job(spark, csv_dir):
+    """silver -> gold -> date_dims only build plans: the date spines keep
+    their min/max bounds inside the plan instead of probing the facts.
+    (bronze's headerless CSV scans resolve their column count with one
+    read per file when the frames are created, so bronze is built first.)"""
+    raw = pipeline.bronze(spark, csv_dir)
+    n = jobs_launched(spark, lambda: pipeline.date_dims(spark, pipeline.gold(pipeline.silver(raw))))
+    assert n == 0
+
+
+def test_empty_facts_give_empty_date_dims(spark, csv_dir):
+    gold = pipeline.gold(pipeline.silver(pipeline.bronze(spark, csv_dir)))
+    empty = {name: df.where(F.lit(False)) for name, df in gold.items()}
+    dims = pipeline.date_dims(spark, empty)
+    assert dims["trip_dates"].dtypes == TRIP_DATES_DTYPES
+    assert dims["payment_dates"].dtypes == PAYMENT_DATES_DTYPES
+    assert dims["trip_dates"].count() == 0
+    assert dims["payment_dates"].count() == 0
 
 
 def test_pipeline_is_idempotent(spark, csv_dir, tmp_path):

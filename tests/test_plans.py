@@ -744,3 +744,17 @@ def test_mixture_rate_joins_broadcast(spark):
             if "Join condition:" in ln and rate_col in ln
         ]
         assert cond, (q, full)
+
+
+def test_table_layout_does_not_pin_an_empty_listing(spark, tmp_path):
+    """A table probed before its files exist must not stay (0, 1) for the
+    rest of the process: once a parquet file lands, the next probe sees it."""
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.base import (
+        _table_layout,
+    )
+
+    (tmp_path / "t").mkdir()
+    assert _table_layout(str(tmp_path), "t") == (0, 1)
+    spark.range(10).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "t"))
+    total, n_files = _table_layout(str(tmp_path), "t")
+    assert total > 0 and n_files == 1

@@ -85,8 +85,6 @@ BNLJ_WHITELIST = {
     "q244_multi_benchmark_decontamination": "per-source doc counts (<=20 rows) x 3-row benchmark dim (constant-key join constant-folded to BNLJ)",
     "q249_decontamination_index_maintenance": "same matrix tail as q244: batch per-source counts (<=20 rows) x 3-row benchmark dim (constant-key join constant-folded to BNLJ)",
     # bounded dimension spines (dates/hours), not scalars
-    "q24_payment_dates_dim": "bounded date spine",
-    "q25_trip_dates_dim": "bounded date/hour spine",
     "q78_value_range_join": "bounded band-boundary relation",
     "q82_gap_fill_forward": "bounded date spine",
     "q85_value_histogram": "bounded bucket spine",
