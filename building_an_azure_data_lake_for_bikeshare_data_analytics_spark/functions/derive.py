@@ -53,11 +53,6 @@ def time_of_day(ts: str) -> Column:
     )
 
 
-def month_of(c: str) -> Column:
-    """``month(col)`` (ipynb:L1653, L5164)."""
-    return F.month(F.col(c))
-
-
 def minutes_of(seconds: str) -> Column:
     """duration/60 as int (ipynb:L5370, cell 41)."""
     return (F.col(seconds) / 60).cast("int")

@@ -37,9 +37,9 @@ optimization playbook:
      Catalyst translation per call (~40-60 ms), ~85 call sites, a
      measurable slice of the suite's per-query floor — and with AQE it
      would eagerly materialize shuffle-bearing inputs during planning.
-     Scan callers now pass ``est_bytes``/``est_partitions`` derived from
-     the memoized FILE LISTING (``plans/base._table_layout``); the RDD
-     fallback remains only for opaque non-scan frames.
+     Callers pass ``est_bytes``/``est_partitions`` derived from the
+     memoized FILE LISTING (``plans/base._table_layout``); both are
+     required, so there is no RDD fallback.
 
   The repartition stays CONDITIONAL on the estimated scan split count, so
   it never fires at deployment scale — a 100 TB table scans as thousands
@@ -80,8 +80,8 @@ DENSE_BYTES_PER_TASK = 16 * 1024
 
 def spread(
     df: DataFrame,
-    est_bytes: int | None = None,
-    est_partitions: int | None = None,
+    est_bytes: int,
+    est_partitions: int,
     bytes_per_task: int = DENSE_BYTES_PER_TASK,
 ) -> DataFrame:
     """Cost-based round-robin fanout of a narrow scan — the
@@ -92,10 +92,8 @@ def spread(
     core count — never "cores because cores").
 
     ``est_bytes``/``est_partitions`` come from the caller's file listing
-    (``plans/base._table_layout``) so the decision costs no JVM call; the
-    ``df.rdd`` fallback is kept for opaque non-scan frames only (it
-    forces Catalyst translation and, under AQE, may materialize upstream
-    stages — scan callers must pass the estimates).
+    (``plans/base._table_layout``) so the decision costs no JVM call.
+    Both are required: without a byte estimate there is no cost to weigh.
 
     Round-robin (keyless) repartition is deterministic under retries
     (sort-before-repartition is on by default) and none of the engine's
@@ -104,14 +102,10 @@ def spread(
     """
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
-    cur = est_partitions if est_partitions is not None else df.rdd.getNumPartitions()
-    if cur >= cores:
+    if est_partitions >= cores:
         return df
-    if est_bytes is None:
-        target = cores
-    else:
-        target = min(cores, max(1, -(-est_bytes // max(1, bytes_per_task))))
-    if target <= cur:
+    target = min(cores, max(1, -(-est_bytes // max(1, bytes_per_task))))
+    if target <= est_partitions:
         return df
     return df.repartition(target)
 

@@ -87,6 +87,14 @@ BIKESHARE_CASTS: dict[str, dict[str, DataTypeLike]] = {
 }
 
 
+def raw_bikeshare_schema(table: str) -> T.StructType:
+    """The headerless CSV layout of one raw table: all-string ``_c0.._cN``,
+    one field per ``BIKESHARE_RENAMES`` key, so the width is declared here
+    rather than read off the file's first line. A short row gets nulls, a
+    long row keeps its first N fields."""
+    return T.StructType([T.StructField(c, T.StringType()) for c in BIKESHARE_RENAMES[table]])
+
+
 def format_bikeshare_table(df: DataFrame, table: str) -> DataFrame:
     """Apply the reference's rename+cast maps for one of the four raw tables."""
     return format_columns(df, BIKESHARE_RENAMES[table], BIKESHARE_CASTS[table])

@@ -3,7 +3,8 @@ engine module: raw headerless CSVs -> typed tables -> enriched star schema ->
 generated date dimensions (ipynb cells 3-18; SURVEY.md §0 flow diagram).
 
 Stage map (reference cites):
-  bronze  : CSV scan, `_c*` strings              (cell 4,  ipynb:L250-264)
+  bronze  : CSV scan, `_c*` strings              (cell 4,  ipynb:L250-264),
+            widths declared by the registry, so no column-count job
   silver  : rename + cast via format_columns     (cell 8,  ipynb:L960-997)
   gold    : duration/time_id/ages enrichment     (cell 10, ipynb:L1072-1101)
   dims    : trip_dates / payment_dates spines    (cells 12/17/18), each a
@@ -24,11 +25,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.derive import age_years, duration_seconds, hour_truncated
-from ..functions.schema import format_bikeshare_table
+from ..functions.schema import format_bikeshare_table, raw_bikeshare_schema
 from ..sources.readers import read_csv_raw
 from ..sources.writers import overwrite_parquet_table
 from .dates import payment_dates_dim, trip_dates_dim
@@ -37,7 +38,9 @@ from .dates import payment_dates_dim, trip_dates_dim
 def bronze(spark: SparkSession, csv_dir: str) -> dict[str, DataFrame]:
     """Raw ingestion: 4 headerless CSVs -> all-string `_c*` frames (cell 4)."""
     return {
-        t: read_csv_raw(spark, os.path.join(csv_dir, f"{t}.csv"))
+        t: read_csv_raw(
+            spark, os.path.join(csv_dir, f"{t}.csv"), schema=raw_bikeshare_schema(t)
+        )
         for t in ("payments", "trips", "riders", "stations")
     }
 
@@ -94,7 +97,9 @@ def run(
 ) -> dict[str, DataFrame]:
     """Full pipeline: ingest -> format -> enrich -> dims -> partitioned
     parquet star schema under ``out_dir``. Returns the written frames
-    (re-read from storage, like the reference's reload cell 20).
+    (re-read from storage, like the reference's reload cell 20). The date
+    dims are derived from the facts as written, so their bounds come from
+    a parquet scan rather than a second CSV scan, cast and rider join.
 
     ``versioned=True`` writes each table through the snapshot store
     (sources/versioned.py): re-runs create new versions instead of
@@ -102,28 +107,30 @@ def run(
     that re-derive tables from themselves."""
     from ..sources import versioned as V
 
+    def land(
+        name: str, df: DataFrame, part: str | None = None, value: Column | None = None
+    ) -> DataFrame:
+        """Write one table, partitioned by ``part`` = ``value`` when given,
+        and reload it with the partition column dropped."""
+        path = os.path.join(out_dir, name)
+        by = [part] if part else None
+        if part:
+            df = df.withColumn(part, value)
+        if versioned:
+            V.write_version(df, path, partition_by=by)
+            back = V.read_current(spark, path)
+        else:
+            overwrite_parquet_table(df, path, partition_by=by)
+            back = spark.read.parquet(path)
+        return back.drop(part) if part else back
+
     g = gold(silver(bronze(spark, csv_dir)))
-    dims = date_dims(spark, g)
-    partitioning = {
-        "trips": ["started_month"],
-        "payments": ["pay_year"],
+    out = {
+        "trips": land("trips", g["trips"], "started_month", F.date_format("started_at", "yyyy-MM")),
+        "payments": land("payments", g["payments"], "pay_year", F.year("date_id")),
+        "riders": land("riders", g["riders"]),
+        "stations": land("stations", g["stations"]),
     }
-    for name, df in {**g, **dims}.items():
-        part = partitioning.get(name)
-        if name == "trips":
-            df = df.withColumn("started_month", F.date_format("started_at", "yyyy-MM"))
-        elif name == "payments":
-            df = df.withColumn("pay_year", F.year("date_id"))
-        if versioned:
-            V.write_version(df, os.path.join(out_dir, name), partition_by=part)
-        else:
-            overwrite_parquet_table(df, os.path.join(out_dir, name), partition_by=part)
-    out = {}
-    for name in list(g) + list(dims):
-        if versioned:
-            df = V.read_current(spark, os.path.join(out_dir, name))
-        else:
-            df = spark.read.parquet(os.path.join(out_dir, name))
-        drop = {"trips": "started_month", "payments": "pay_year"}.get(name)
-        out[name] = df.drop(drop) if drop else df
+    for name, df in date_dims(spark, out).items():
+        out[name] = land(name, df)
     return out

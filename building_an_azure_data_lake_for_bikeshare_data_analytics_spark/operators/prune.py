@@ -117,16 +117,3 @@ def bloom_might_contain(key: Column, bitmap: list[int], k: int = 4) -> Column:
         == 1,
     )
 
-
-def bloom_prefilter(
-    fact: DataFrame,
-    keys: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    m_bits: int | None = None,
-    k: int = 4,
-) -> DataFrame:
-    """Convenience: build the bitmap from ``keys[dim_key]`` and return
-    ``fact`` filtered to bloom-probable rows. Follow with the exact join."""
-    bitmap = bloom_bitmap(keys.select(dim_key), dim_key, m_bits, k)
-    return fact.where(bloom_might_contain(F.col(fact_key), bitmap, k))

@@ -3,8 +3,8 @@
 Reference behaviors reproduced (SURVEY.md §2.1):
 
 * S1  headerless CSV scan producing all-string ``_c0.._cN`` columns
-      (ipynb:L250-253, cell 4) — plus an explicit-schema variant the
-      reference lacks (schema-on-read beats double-pass inference at scale).
+      (ipynb:L250-253, cell 4), with the all-string width declared by the
+      registry instead of counted from each file's first line.
 * S4  catalog/table scan (``spark.read.table``, ipynb:L973/L1074-1076/L1750)
       — here parameterized over a storage root so local parquet dirs,
       ``abfss://`` containers, or a metastore all interchange; the
@@ -44,12 +44,11 @@ def read_csv_raw(
     sep: str = ",",
     schema: StructType | None = None,
 ) -> DataFrame:
-    """Headerless CSV scan.
-
-    Without ``schema`` this matches the reference byte-for-byte: every column
-    arrives as a string named ``_c<i>`` (ipynb:L250-253). With ``schema`` the
-    scan is single-pass typed — the only sane mode at 100 TB.
-    """
+    """Headerless CSV scan: every column arrives as a string named
+    ``_c<i>`` (ipynb:L250-253). Without ``schema`` Spark runs one job to
+    count the first line's columns; ``pipeline.bronze`` passes the
+    registry's all-string ``functions.schema.raw_bikeshare_schema``, so
+    creating the frame runs no job and the width cannot drift."""
     reader = spark.read.format("csv").option("sep", sep).option("header", "false")
     if schema is not None:
         reader = reader.schema(schema)

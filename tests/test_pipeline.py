@@ -3,11 +3,17 @@
 the reference's exact gold schemas (SURVEY.md §1.1 table)."""
 
 import datetime as dt
+import os
 import random
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.schema import (
+    BIKESHARE_RENAMES,
+    raw_bikeshare_schema,
+)
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import pipeline
 
 from conftest import jobs_launched
@@ -99,6 +105,16 @@ def test_full_pipeline_schemas_and_semantics(spark, csv_dir, tmp_path):
     joined = out["payments"].join(pd_dim, "date_id").count()
     assert joined == out["payments"].count()
 
+    # the dims, built from the facts as written, span them exactly: one row
+    # per hour / day from the first to the last key, and every fact row joins
+    for dim, fact, key, step in (
+        ("trip_dates", "trips", "time_id", 3600),
+        ("payment_dates", "payments", "date_id", 86400),
+    ):
+        lo, hi = out[fact].agg(F.unix_timestamp(F.min(key)), F.unix_timestamp(F.max(key))).first()
+        assert out[dim].count() == (hi - lo) // step + 1, dim
+        assert out[fact].join(out[dim], key).count() == out[fact].count(), dim
+
     # the spine is generated ascending from one bounds row, so the written
     # dims read back in key order without a sort
     for name, key in (("trip_dates", "time_id"), ("payment_dates", "date_id")):
@@ -107,13 +123,54 @@ def test_full_pipeline_schemas_and_semantics(spark, csv_dir, tmp_path):
 
 
 def test_building_stages_runs_no_spark_job(spark, csv_dir):
-    """silver -> gold -> date_dims only build plans: the date spines keep
-    their min/max bounds inside the plan instead of probing the facts.
-    (bronze's headerless CSV scans resolve their column count with one
-    read per file when the frames are created, so bronze is built first.)"""
+    """bronze -> silver -> gold -> date_dims only build plans: bronze's CSV
+    scans get their all-string width from the registry instead of reading
+    each file's first line, and the date spines keep their min/max bounds
+    inside the plan instead of probing the facts."""
+
+    def build():
+        gold = pipeline.gold(pipeline.silver(pipeline.bronze(spark, csv_dir)))
+        return pipeline.date_dims(spark, gold)
+
+    assert jobs_launched(spark, build) == 0
+
+
+def test_bronze_frames_have_the_registry_schema(spark, csv_dir):
     raw = pipeline.bronze(spark, csv_dir)
-    n = jobs_launched(spark, lambda: pipeline.date_dims(spark, pipeline.gold(pipeline.silver(raw))))
-    assert n == 0
+    for t, df in raw.items():
+        want = raw_bikeshare_schema(t)
+        assert df.columns == list(BIKESHARE_RENAMES[t]), t
+        assert df.dtypes == [(f.name, f.dataType.simpleString()) for f in want], t
+        assert {ty for _, ty in df.dtypes} == {"string"}, t
+
+
+def test_raw_width_comes_from_the_registry_not_the_data(spark, csv_dir, tmp_path):
+    """A truncated first row must not narrow the table: it gets nulls and
+    every well-formed row still reaches gold. A row with an extra trailing
+    field keeps its first 7 fields."""
+    d = tmp_path / "ragged"
+    d.mkdir()
+    for t in ("payments", "riders", "stations"):
+        shutil.copy(os.path.join(csv_dir, f"{t}.csv"), d / f"{t}.csv")
+    with open(os.path.join(csv_dir, "trips.csv")) as f:
+        rows = f.read().splitlines()
+    good_ids = {r.split(",")[0] for r in rows}
+    short = "SHORT,classic_bike,2021-03-01 10:00:00,2021-03-01 10:30:00,525"
+    long_ = "LONG,classic_bike,2021-03-02 10:00:00,2021-03-02 10:30:00,525,525,1000,extra"
+    (d / "trips.csv").write_text("\n".join([short, *rows, long_]) + "\n")
+
+    raw = pipeline.bronze(spark, str(d))
+    assert raw["trips"].columns == [f"_c{i}" for i in range(7)]
+    got = {r["_c0"]: r for r in raw["trips"].collect()}
+    assert len(got) == len(rows) + 2
+    assert got["SHORT"]["_c4"] == "525"
+    assert got["SHORT"]["_c5"] is None and got["SHORT"]["_c6"] is None
+    assert got["LONG"]["_c6"] == "1000"
+
+    gold = pipeline.gold(pipeline.silver(raw))
+    ids = {r["trip_id"] for r in gold["trips"].select("trip_id").collect()}
+    # the short row has no rider, so the inner birthday join drops it
+    assert ids == good_ids | {"LONG"}
 
 
 def test_empty_facts_give_empty_date_dims(spark, csv_dir):
@@ -134,8 +191,6 @@ def test_pipeline_is_idempotent(spark, csv_dir, tmp_path):
 
 
 def test_trips_partitioned_by_month(spark, csv_dir, tmp_path):
-    import os
-
     lake = str(tmp_path / "lake3")
     pipeline.run(spark, csv_dir, lake)
     parts = [p for p in os.listdir(os.path.join(lake, "trips")) if p.startswith("started_month=")]
