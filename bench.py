@@ -210,15 +210,12 @@ def main() -> None:
     # "queries" map above (full names, ~8 KB) never fits the tail and
     # round-over-round / cores-scaling comparison lost its per-query
     # data (PERF_r12 n_common=0, scaling.per_query empty). This line
-    # carries every wall with SHORT keys (the qNN prefix — unique across
-    # the registry; full name kept on a collision) at 2 dp plus the cpu
+    # carries every wall with SHORT keys (the qNN prefix, which the
+    # registry keeps unique) at 2 dp plus the cpu
     # count, compact separators: ~3 KB for 262 entries, so the tail
     # always contains it whole. Purely additive — the full-name map and
     # the final summary line are unchanged.
-    short: dict[str, float] = {}
-    for k, v in per_query.items():
-        s = k.split("_", 1)[0]
-        short[k if s in short else s] = round(v, 2)
+    short = {k.split("_", 1)[0]: round(v, 2) for k, v in per_query.items()}
     print(
         json.dumps(
             {

@@ -13,7 +13,6 @@ Layout:
     operators/ — relational operator compositions (analytics templates,
                  date spines, dedup, similarity, windows, multimodal)
     plans/     — the named query registry + DuckDB oracle SQL (driver contract)
-    streaming/ — Structured Streaming pipelines
 """
 
 __version__ = "0.1.0"

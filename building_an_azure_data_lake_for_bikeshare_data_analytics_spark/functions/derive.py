@@ -51,8 +51,3 @@ def time_of_day(ts: str) -> Column:
         .when(h.between(17, 21), F.lit("evening"))
         .otherwise(F.lit("night"))
     )
-
-
-def minutes_of(seconds: str) -> Column:
-    """duration/60 as int (ipynb:L5370, cell 41)."""
-    return (F.col(seconds) / 60).cast("int")

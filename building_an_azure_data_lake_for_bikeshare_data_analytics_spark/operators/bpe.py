@@ -133,8 +133,7 @@ def roundtrip_flags(
     ^[a-z0-9]+$ alphabet contract; outside = byte-fallback territory),
     rt_ok as 0/1 (decode(encode(word)) == word, decode = strip the symbol
     delimiters), and the encoded symbol count (0 for non-encodable).
-    Shared by the q235 batch audit and the streaming validation gate so
-    the two surfaces can never drift."""
+    Used by the q235 batch audit."""
     enc = bpe_encode(word, merges)
     encodable = word.rlike(ALPHA_RE)
     decoded = F.replace(F.replace(enc, F.lit(L), F.lit("")), F.lit(R), F.lit(""))

@@ -1,7 +1,6 @@
 """Bigram language-model operators: the corpus-trained perplexity quality
 filter (CCNet/Gopher-style; no reference counterpart — SURVEY §2.6 lists no
-text ops), shared by the batch query (q138) and the streaming ingestion
-scorer (streaming.lm_scored_docs_stream).
+text ops), used by the batch query (q138).
 
 Determinism contract (the q119 discipline): every per-pair log-prob is one
 ln() of an IEEE-identical ratio of exact int64 counts, quantized to
@@ -12,7 +11,7 @@ Scale shape: the "model" IS two vocab-bounded count tables (the standard
 way n-gram filters train over petabyte corpora — one aggregation pass);
 scoring joins them keyed on (w1, w2) / w1 with the vocab-size scalar
 broadcast. In production the count tables persist once and every ingest
-batch scores against them — exactly what the streaming scorer does.
+batch scores against them.
 """
 
 from __future__ import annotations
@@ -110,8 +109,7 @@ def lm_dsir_score_pairs(
     Scale shape: ONE pass over the pair relation; all four count tables
     are vocab-bounded equi-join sides and the two vocab scalars broadcast.
     In production both models persist once (the target model is tiny) and
-    every ingest batch scores against them — same layout as the streaming
-    LM gate."""
+    every ingest batch scores against them."""
     bg_t, ug_t, v_t = target_model
     bg_r, ug_r, v_r = raw_model
 
@@ -140,31 +138,6 @@ def lm_dsir_score_pairs(
         F.round(F.sum("lp_t").cast("double") / n, 6).alias("avg_logp_target"),
         F.round(F.sum("lp_r").cast("double") / n, 6).alias("avg_logp_raw"),
         F.round((F.sum("lp_t") - F.sum("lp_r")).cast("double") / n, 6).alias("dsir_logw"),
-    )
-
-
-def lm_score_pairs_smoothed(
-    pairs: DataFrame, bg: DataFrame, ug: DataFrame, v: DataFrame
-) -> DataFrame:
-    """Score docs that were NOT in the training corpus (the ingestion
-    case): left joins with add-one defaults — an unseen bigram contributes
-    p = 1 / (c1 + V), an unseen unigram p = 1 / V. Every pair of every doc
-    scores (n_pairs = the doc's true pair count), which is what a
-    threshold gate needs; on in-corpus docs this reduces exactly to
-    lm_score_pairs (asserted in tests)."""
-    lp = F.log(
-        (F.coalesce(F.col("c12"), F.lit(0)) + 1).cast("double")
-        / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("vsz"))
-    ).cast(DecimalType(18, 12))
-    term = (
-        pairs.join(bg, ["w1", "w2"], "left")
-        .join(ug, "w1", "left")
-        .crossJoin(F.broadcast(v))
-        .select("doc_id", lp.alias("lp"))
-    )
-    return term.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_pairs"),
-        F.round(F.sum("lp").cast("double") / F.count(F.lit(1)), 6).alias("avg_logp"),
     )
 
 

@@ -686,47 +686,6 @@ def extract_features(with_blob: DataFrame) -> DataFrame:
     return with_blob.mapInPandas(batches, FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = (
-    "doc_id bigint, width int, height int, resized_blob binary, decode_status string"
-)
-
-
-def resize_images(with_blob: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Image-resize stage over binary payloads (mapInPandas).
-
-    STUB decode (no codecs in this container): a real deployment replaces
-    the body with ``PIL.Image.open(...).resize((width, height))``; here the
-    "resized" payload is a deterministic truncation/padding of the source
-    bytes to width*height so the Spark-side contract — binary in, binary +
-    typed dims out, Arrow batching, partition preservation — is real and
-    testable."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in it:
-            out_blob, status = [], []
-            for b in pdf["blob"]:
-                raw = bytes(b) if b is not None else b""
-                if not raw:
-                    out_blob.append(b"")
-                    status.append("empty")
-                    continue
-                resized = (raw * (target // len(raw) + 1))[:target]
-                out_blob.append(resized)
-                status.append("stub")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": width,
-                    "height": height,
-                    "resized_blob": out_blob,
-                    "decode_status": status,
-                }
-            )
-
-    return with_blob.mapInPandas(batches, RESIZE_SCHEMA)
-
-
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_blob binary"
 
 

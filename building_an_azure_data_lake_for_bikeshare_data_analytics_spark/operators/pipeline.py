@@ -92,20 +92,12 @@ def date_dims(spark: SparkSession, gold_tables: dict[str, DataFrame]) -> dict[st
     }
 
 
-def run(
-    spark: SparkSession, csv_dir: str, out_dir: str, versioned: bool = False
-) -> dict[str, DataFrame]:
+def run(spark: SparkSession, csv_dir: str, out_dir: str) -> dict[str, DataFrame]:
     """Full pipeline: ingest -> format -> enrich -> dims -> partitioned
     parquet star schema under ``out_dir``. Returns the written frames
     (re-read from storage, like the reference's reload cell 20). The date
     dims are derived from the facts as written, so their bounds come from
-    a parquet scan rather than a second CSV scan, cast and rider join.
-
-    ``versioned=True`` writes each table through the snapshot store
-    (sources/versioned.py): re-runs create new versions instead of
-    replacing files in place — the Delta-equivalent posture for pipelines
-    that re-derive tables from themselves."""
-    from ..sources import versioned as V
+    a parquet scan rather than a second CSV scan, cast and rider join."""
 
     def land(
         name: str, df: DataFrame, part: str | None = None, value: Column | None = None
@@ -116,12 +108,8 @@ def run(
         by = [part] if part else None
         if part:
             df = df.withColumn(part, value)
-        if versioned:
-            V.write_version(df, path, partition_by=by)
-            back = V.read_current(spark, path)
-        else:
-            overwrite_parquet_table(df, path, partition_by=by)
-            back = spark.read.parquet(path)
+        overwrite_parquet_table(df, path, partition_by=by)
+        back = spark.read.parquet(path)
         return back.drop(part) if part else back
 
     g = gold(silver(bronze(spark, csv_dir)))

@@ -666,72 +666,6 @@ def semantic_dedup_cells(
     )
 
 
-def build_cell_index(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """The static SemDeDup ingestion index: every CLEANED corpus vector
-    with its kmeans cell and precomputed norm — (cell, c_vec_id, c_emb,
-    c_nrm). Built once per corpus refresh (kernel assignment, one
-    map-only pass) and persisted; every ingest batch joins against it by
-    cell. The embedding-side analog of the persisted LSH index q103's
-    docstring describes."""
-    e = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    return (
-        assign_cells_vectorized(emb, centroids)
-        .join(e, "vec_id")
-        .select(
-            "cell",
-            F.col("vec_id").alias("c_vec_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-    )
-
-
-def semantic_dedup_against_index(
-    batch: DataFrame,
-    centroids: list[list[int]],
-    index: DataFrame,
-    threshold: float = 0.45,
-) -> DataFrame:
-    """Incremental SemDeDup — q103/q139's batch-vs-corpus contract applied
-    to the embedding space: a new vector is dropped iff some CORPUS vector
-    in its cell scores round(cos,4) >= threshold against it (the corpus
-    always keeps; batch members are not compared to each other, so a
-    vector's verdict depends only on itself and the static index — which
-    is exactly what makes the streaming gate's union-equals-batch parity
-    hold under any micro-batch chunking).
-
-    Returns every batch vector as (vec_id, cell, n_candidates, max_cos,
-    kept): n_candidates = same-cell corpus vectors compared, max_cos their
-    best score (NULL when the cell has no corpus member), kept = no
-    corpus near-dup found. Scale shape: kernel cell assignment is
-    map-only; the only join is the cell-keyed equi-join against the
-    index, so each batch vector touches ~1/k of the corpus."""
-    cells = assign_cells_vectorized(batch, centroids)
-    bemb = batch.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
-    cos = F.round(
-        dot(F.col("embedding"), F.col("c_emb")) / (F.col("nrm") * F.col("c_nrm")), 4
-    )
-    scored = (
-        cells.join(bemb, "vec_id")
-        .join(index, "cell", "left")
-        .select(
-            "vec_id",
-            "cell",
-            "c_vec_id",
-            F.when(F.col("c_vec_id").isNotNull(), cos).alias("cos"),
-        )
-    )
-    return scored.groupBy("vec_id", "cell").agg(
-        F.count("c_vec_id").cast("int").alias("n_candidates"),
-        F.max("cos").alias("max_cos"),
-        F.coalesce(F.max("cos") < F.lit(threshold), F.lit(True)).alias("kept"),
-    )
-
-
 # --------------------------------------------------------------------------
 # Compressed-domain similarity: int8 scalar quantization
 # --------------------------------------------------------------------------

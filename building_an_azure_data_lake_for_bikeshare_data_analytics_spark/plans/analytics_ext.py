@@ -31,7 +31,7 @@ _AVG = f"{_SUM}/count({{c}})"
 )
 def q42(spark, sf):
     """Hourly event rollup — date_trunc FK pattern (F2, ipynb:L1081) over the
-    stream table; the batch twin of streaming.windowed_type_counts."""
+    events table."""
     ev = _t(spark, sf, "events").withColumn("hour_id", F.date_trunc("hour", "ts"))
     return (
         ev.groupBy("hour_id")

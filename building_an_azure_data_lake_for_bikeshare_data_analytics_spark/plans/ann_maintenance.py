@@ -445,8 +445,8 @@ def q251(spark, sf):
 # funnel into few cells, so occupancy skew (and with it the candidate
 # fraction a probe touches) climbs while the stored assignments stay
 # correct. The documented trigger was "refresh when occ_skew or cand_frac
-# exceeds ~3x its build value"; these functions make that a POLICY the
-# maintenance path evaluates for free, mirroring maybe_compact's shape.
+# exceeds ~3x its build value"; these functions make that a check the
+# maintenance path evaluates for free.
 # ---------------------------------------------------------------------------
 
 _HEALTH = "_HEALTH.json"
@@ -504,53 +504,3 @@ def refresh_due(spark, store: str, factor: float = 3.0) -> tuple[bool, dict]:
     cur = index_health(spark, store)
     due = bool(base) and cur["occ_skew"] > factor * base["occ_skew"]
     return due, cur
-
-
-def maybe_refresh(
-    spark,
-    store: str,
-    k: int = 32,
-    factor: float = 3.0,
-    max_iter: int = 8,
-    cent_store: str | None = None,
-) -> int | None:
-    """Evaluate the aging trigger and, when due, perform the refresh the
-    r10 soak prescribed: retrain the coarse quantizer on the CURRENT
-    stored vectors (the cell table carries embeddings, so no corpus
-    rescan), rewrite the assignments as the next store version
-    (cell-partitioned, snapshot-isolated — probes against the old
-    version are undisturbed), and re-record the health baseline.
-    Returns the new version, or None when the index is healthy.
-
-    ``cent_store``: the sibling quantizer store (q246's layout: (cell,
-    centroid) rows). When given, the refreshed centroids are written
-    there as the next version, so writers that assign THROUGH the stored
-    quantizer (the batch append path, ``maintained_ivf_store_stream``)
-    pick up the new cells on their next read — without this the
-    assignment store and the quantizer would silently diverge after a
-    refresh.
-
-    Scale shape: the retrain is the same bounded-collect Lloyd's fit as
-    the build (KMEANS_TRAIN_ROWS sample cap); the rewrite is one
-    map-only assignment pass over the stored table — the O(corpus)
-    operation the trigger exists to amortize, paid only when probe cost
-    has demonstrably inflated."""
-    from ..operators.similarity import assign_cells, kmeans_fit
-    from ..sources.versioned import read_current, write_version
-
-    due, _cur = refresh_due(spark, store, factor=factor)
-    if not due:
-        return None
-    vecs = read_current(spark, store).select("vec_id", "embedding")
-    cents = kmeans_fit(vecs, k=k, max_iter=max_iter)
-    v = write_version(assign_cells(vecs, cents), store, partition_by=["cell"])
-    if cent_store is not None:
-        write_version(
-            spark.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "cell int, centroid array<bigint>",
-            ),
-            cent_store,
-        )
-    record_health(store, index_health(spark, store))
-    return v

@@ -170,39 +170,22 @@ def bench_shingle_table(d, benchmarks):
     return bench
 
 
-def doc_hits(corpus, bench, with_hit_stats: bool = False):
+def doc_hits(corpus, bench):
     """Per-doc contamination hits: one (doc_id, source, benchmark) row for
     every doc whose matched-shingle fraction clears that benchmark's
     threshold (integer-exact compare). This is the MERGEABLE unit of the
     screen — disjoint doc batches union to the from-scratch hit set, which
-    is what lets the streaming lifecycle append each micro-batch's hits to
-    a versioned contamination ledger (streaming/pipeline.py). ``benchmark``
-    is emitted LAST: it is the ledger's hive-partition key.
-
-    ``with_hit_stats``: additionally carry ``n_hits`` (distinct matched
-    shingles) and ``n_shingles`` (the doc's shingle total at the matched
-    n) — the evidence strength a release engineer needs to TIGHTEN a
-    threshold post-hoc without re-screening the corpus. A deployment
-    that starts recording them mid-lifecycle lands the columns through
-    an EVOLVED ledger append (``allow_new_columns=True``, the q259
-    posture): O(batch) IO, pre-evolution ledger rows read back
-    null-filled — no ledger rewrite."""
-    agged = (
+    is what lets a lifecycle append each batch's hits to a versioned
+    contamination ledger. ``benchmark`` is emitted LAST: it is the
+    ledger's hive-partition key."""
+    return (
         corpus.join(F.broadcast(bench), ["n", "sh"])
         .where(F.col("source") != F.col("bsrc"))
         .groupBy("doc_id", "source", "benchmark", "thresh_e4")
         .agg(F.count(F.lit(1)).alias("m"), F.max("tot").alias("tot"))
         .where((F.col("m") >= 1) & (F.col("m") * 10000 >= F.col("thresh_e4") * F.col("tot")))
+        .select("doc_id", "source", "benchmark")
     )
-    if with_hit_stats:
-        return agged.select(
-            "doc_id",
-            "source",
-            F.col("m").cast("bigint").alias("n_hits"),
-            F.col("tot").cast("bigint").alias("n_shingles"),
-            "benchmark",
-        )
-    return agged.select("doc_id", "source", "benchmark")
 
 
 def probe_matrix(spark, corpus, bench, src_docs):

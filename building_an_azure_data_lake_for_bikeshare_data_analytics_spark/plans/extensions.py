@@ -2052,8 +2052,7 @@ def q138(spark, sf):
     vocab-bounded: bigram join keyed (w1, w2), unigram join keyed w1,
     V a broadcast scalar. No per-group sort, no driver state; the LM
     "training" IS the two count aggregates — exactly how n-gram quality
-    filters run over petabyte corpora. Implementation shared with the
-    streaming ingestion scorer (operators/lm.py)."""
+    filters run over petabyte corpora. Implementation in operators/lm.py."""
     from ..operators.lm import lm_fit, lm_pairs, lm_score_pairs
 
     d = _t(spark, sf, "documents")

@@ -142,9 +142,7 @@ def q149(spark, sf):
 
 def scd2_versions(ev):
     """The SCD2 build over an (user_id, event_type, ts, event_id) event
-    relation — shared by q150 (batch) and streaming.scd2_history_stream
-    (incremental affected-entity maintenance; parity asserted in
-    tests/test_streaming.py)."""
+    relation (q150's body)."""
     w_scan = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
         ev.select(
@@ -211,8 +209,7 @@ def q150(spark, sf):
     second window re-sorts within the same partitioning, no second
     shuffle), then a narrow filter. This is the standard 100 TB history
     build: cost ∝ one shuffle of the event log, state ∝ nothing. The
-    build body is ``scd2_versions`` — shared with the streaming
-    incremental maintenance op (streaming.scd2_history_stream)."""
+    build body is ``scd2_versions``."""
     return scd2_versions(_t(spark, sf, "events").where(F.col("user_id") < 200))
 
 

@@ -85,7 +85,7 @@ def _hb_col() -> F.Column:
     return F.floor(_doc_hash() / F.lit(100)).cast("int")
 
 
-def index_rows(side, dl_with_uniq: bool = False):
+def index_rows(side):
     """Tokenize ONE side (corpus at v1 build, the batch at append) into
     the two inverted-index relations: term frequencies
     (doc_id, tok, f, tok_bucket) and doc lengths (doc_id, len, hb).
@@ -96,21 +96,11 @@ def index_rows(side, dl_with_uniq: bool = False):
     The trailing columns are the stores' hive-partition keys (emitted
     LAST so builder output and partitioned read-back keep identical
     column order): ``tok_bucket`` = token-prefix bucket of the tf store,
-    ``hb`` = doc-hash century of the dl store.
-
-    ``dl_with_uniq``: the dl relation additionally carries ``n_uniq``
-    (distinct tokens per doc — a vocabulary-richness statistic scoring
-    and dedup heuristics both want). A deployment that starts tracking
-    it mid-lifecycle lands the new column through an EVOLVED append
-    (``allow_new_columns=True``, the q259 posture): O(batch) IO, older
-    dl rows read back null-filled — no corpus rewrite."""
-    return index_rows_from_tokens(
-        side.select("doc_id", tokens("text").alias("ts")),
-        dl_with_uniq=dl_with_uniq,
-    )
+    ``hb`` = doc-hash century of the dl store."""
+    return index_rows_from_tokens(side.select("doc_id", tokens("text").alias("ts")))
 
 
-def index_rows_from_tokens(side_ts, dl_with_uniq: bool = False):
+def index_rows_from_tokens(side_ts):
     """``index_rows`` from a PRE-TOKENIZED (doc_id, ts) relation — the
     shared-scan entry point (q252's composed ingest tokenizes the batch
     once and derives every artifact's rows from that one relation)."""
@@ -118,10 +108,7 @@ def index_rows_from_tokens(side_ts, dl_with_uniq: bool = False):
     tf = tk.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("f")).withColumn(
         "tok_bucket", _tok_bucket_col()
     )
-    dl_aggs = [F.count(F.lit(1)).alias("len")]
-    if dl_with_uniq:
-        dl_aggs.append(F.countDistinct("tok").alias("n_uniq"))
-    dl = tk.groupBy("doc_id").agg(*dl_aggs).withColumn("hb", _hb_col())
+    dl = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len")).withColumn("hb", _hb_col())
     return tf, dl
 
 

@@ -3,6 +3,8 @@ module's queries into ``REGISTRY`` and exposes the driver-contract dicts."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from .base import REGISTRY, QuerySpec, QueryFn  # noqa: F401
 from . import core  # noqa: F401  (registers q01-q30)
 from . import extensions  # noqa: F401  (registers q31-q41, q53-q69, q98-q100, q104, q107-q109, q128, q135/q137-q139, q144-q148, q153-q154, q157, q163)
@@ -135,6 +137,10 @@ _PRIORITY: tuple[str, ...] = (
 _missing = [n for n in _PRIORITY if n not in REGISTRY]
 if _missing:  # fail loudly at import: a renamed query must update the prefix
     raise KeyError(f"registry priority prefix references unknown queries: {_missing}")
+
+_shared = sorted(p for p, n in Counter(q.split("_", 1)[0] for q in REGISTRY).items() if n > 1)
+if _shared:  # fail loudly at import: bench.py keys its compact line by qNN prefix
+    raise KeyError(f"registered queries share a qNN prefix: {_shared}")
 
 _ORDER: list[str] = list(_PRIORITY) + [n for n in REGISTRY if n not in set(_PRIORITY)]
 

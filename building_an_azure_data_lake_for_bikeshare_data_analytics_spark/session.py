@@ -61,31 +61,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
     )
-    if delta_available():
-        # reference semantics are Delta everywhere (ipynb:L263-264, L982);
-        # when delta-spark ships in the environment, register its SQL
-        # extension + catalog so format('delta') writes/time-travel work.
-        # Requires the matching delta JVM jars on the classpath (true for
-        # pip's delta-spark, which bundles them).
-        b = (
-            b.config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-            .config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def delta_available() -> bool:
-    """True when the ``delta-spark`` package is importable. The engine's
-    writers/versioned store route through real Delta format in that case and
-    fall back to parquet (+ the snapshot-manifest store) otherwise."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False

@@ -55,25 +55,6 @@ def read_csv_raw(
     return reader.load(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """JSON-lines scan (one object per line) — the dominant interchange
-    format for web-scale text corpora, absent from the reference (which is
-    CSV-only, SURVEY.md §2.1 S1).
-
-    Pass ``schema`` in production: inference costs an extra full pass over
-    100 TB and silently widens types on dirty data. Corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job —
-    filter/count that column as the ingest-quality gate."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_parquet_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     """Path-based table scan: ``<root>/<name>.parquet`` (driver testdata
     layout) or ``<root>/<name>`` directory. Columnar, predicate/column

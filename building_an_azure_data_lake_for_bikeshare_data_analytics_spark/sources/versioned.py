@@ -28,9 +28,9 @@ takeover, and validates against the version the writer based its work on:
   store continues per-shard offsets read from the current version) do NOT
   commute semantically: they pass ``expected_base`` and get the same CAS
   refusal ``write_version`` gives — never a silent double-fill.
-* ``write_version`` (and ``merge_upsert`` through it) is a read-transform-
-  OVERWRITE: if another commit landed after the writer captured its base
-  version, flipping would silently discard that commit, so it raises
+* ``write_version`` is a read-transform-OVERWRITE: if another commit
+  landed after the writer captured its base version, flipping would
+  silently discard that commit, so it raises
   ``ConcurrentWriteError`` (Delta's ConcurrentAppendException posture) —
   the caller re-reads and retries.
 * ``compact`` is pure physical optimization: if appends landed while it
@@ -44,18 +44,13 @@ takeover, and validates against the version the writer based its work on:
 
 The lock is a kernel-arbitrated ``fcntl.flock`` on a persistent ``_LOCK``
 file, which assumes a POSIX-coherent filesystem (local disk, NFSv4) —
-the store's stated scope; on object stores the delta backend's own log
-protocol takes over. A holder that dies releases automatically (the
+the store's stated scope. A holder that dies releases automatically (the
 kernel drops flocks with the process), so there is no stale-lock window
 to tune and no takeover protocol to race.
 
-When the ``delta-spark`` package is present (``session.delta_available``),
-every entry point routes through REAL Delta instead: ``format('delta')``
-writes with ``overwriteSchema`` (the reference's exact write shape,
-ipynb:L263-264/L982), ``versionAsOf`` time travel, ``DeltaTable.merge``
-upserts. Backend is auto-detected per path (``_delta_log/`` vs the
-``_CURRENT`` pointer), so mixed lakes read correctly; the parquet manifest
-remains the fallback in codec-less environments like this container.
+The pointer-plus-manifest commit is the lock-serialized form of Delta
+Lake's log-record commit: one atomic metadata write names the data files
+of the new version. It is the store's only backend.
 """
 
 from __future__ import annotations
@@ -67,8 +62,6 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..session import delta_available
 
 _POINTER = "_CURRENT"
 _PREFIX = "_v"
@@ -106,8 +99,7 @@ def writer_lock(path: str, timeout: float = 120.0, stale_after: float = 300.0):
     leftover ``_LOCK`` from a dead process is just an unlocked file.
 
     Scope: POSIX-coherent filesystems (local disk, NFSv4 — flock maps to
-    byte-range leases there); object stores use the delta backend's own
-    log protocol instead. flock is per open-file-description, so threads
+    byte-range leases there). flock is per open-file-description, so threads
     within one process exclude each other too (each hold opens its own
     fd)."""
     del stale_after  # legacy knob: flock has no staleness (see docstring)
@@ -151,34 +143,6 @@ def _write_manifest(path: str, version: int, parts: list[str]) -> None:
     os.replace(tmp_man, os.path.join(vdir, _MANIFEST))
 
 
-def _is_delta_path(path: str) -> bool:
-    return os.path.isdir(os.path.join(path, "_delta_log"))
-
-
-def resolve_backend(path: str, backend: str = "auto") -> str:
-    """'delta' | 'parquet'. Auto: whatever the path already is; for new
-    tables, delta when the package is importable."""
-    if backend != "auto":
-        if backend == "delta" and not delta_available():
-            raise RuntimeError("backend='delta' requested but delta-spark is not installed")
-        return backend
-    if _is_delta_path(path):
-        return "delta"
-    if os.path.exists(os.path.join(path, _POINTER)):
-        return "parquet"
-    return "delta" if delta_available() else "parquet"
-
-
-def _delta_log_versions(path: str) -> list[int]:
-    log = os.path.join(path, "_delta_log")
-    out = []
-    for name in os.listdir(log):
-        stem, dot, ext = name.partition(".")
-        if ext == "json" and stem.isdigit():
-            out.append(int(stem))
-    return sorted(out)
-
-
 def _versions(path: str) -> list[int]:
     if not os.path.isdir(path):
         return []
@@ -203,9 +167,6 @@ def _next_version(path: str, cur: int | None) -> int:
 
 
 def current_version(path: str) -> int | None:
-    if _is_delta_path(path):
-        vs = _delta_log_versions(path)
-        return vs[-1] if vs else None
     ptr = os.path.join(path, _POINTER)
     if not os.path.exists(ptr):
         return None
@@ -217,7 +178,6 @@ def write_version(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    backend: str = "auto",
     expected_base=_UNSET,
 ) -> int:
     """Write ``df`` as the next version of the table and flip the pointer.
@@ -225,8 +185,7 @@ def write_version(
     Safe even when ``df`` reads from the table's current version: the new
     snapshot is fully materialized in its own (staging) directory before
     the pointer moves (write-then-flip, the essence of snapshot
-    isolation). With the delta backend, Delta's own snapshot isolation
-    provides the same guarantee natively.
+    isolation).
 
     Concurrency: the snapshot commit is a CAS on ``_CURRENT`` — the flip
     happens only if the pointer still names ``expected_base`` (by default
@@ -236,12 +195,6 @@ def write_version(
     raised and the staging output removed; re-read and retry. Callers
     whose ``df`` reads an EARLIER pinned version pass that version as
     ``expected_base`` explicitly."""
-    if resolve_backend(path, backend) == "delta":
-        w = df.write.format("delta").mode("overwrite").option("overwriteSchema", "true")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
-        return current_version(path) or 0
     os.makedirs(path, exist_ok=True)
     base = current_version(path) if expected_base is _UNSET else expected_base
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
@@ -301,7 +254,6 @@ def append_version(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    backend: str = "auto",
     allow_new_columns: bool = False,
     expected_base=_UNSET,
 ) -> int:
@@ -328,8 +280,7 @@ def append_version(
     batch may carry columns older parts lack; reads null-fill them in
     the older rows (``unionByName(allowMissingColumns=True)``), so a
     statistic added later costs an O(batch) append, not the O(corpus)
-    ``write_version`` rewrite. With the delta backend this IS Delta's
-    native ``mode('append')`` (+ ``mergeSchema`` when evolving).
+    ``write_version`` rewrite.
 
     Concurrency: PURE appends commute, so by default this path never
     loses the race — the delta part lands under a unique name outside
@@ -349,25 +300,6 @@ def append_version(
     evolved append), the schema contract is RE-validated against the new
     current inside the lock — without this a batch missing a just-added
     column would land and silently null-fill (r11 advice TOCTOU)."""
-    if resolve_backend(path, backend) == "delta":
-        # match the parquet branch's contract: appending to a path with no
-        # committed version is an error, not an implicit table create —
-        # Delta's mode('append') would otherwise silently bootstrap a new
-        # table here (r9 advice)
-        if not _is_delta_path(path):
-            raise FileNotFoundError(
-                f"append_version: no committed version at {path} (use write_version)"
-            )
-        _validate_append_schema(df, path, allow_new_columns)
-        # expected_base is not forwarded: Delta's own transaction log
-        # serializes commits and raises its native concurrency errors
-        w = df.write.format("delta").mode("append")
-        if allow_new_columns:
-            w = w.option("mergeSchema", "true")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(path)
-        return current_version(path) or 0
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(
@@ -456,20 +388,15 @@ def _validate_append_schema(df: DataFrame, path: str, allow_new_columns: bool) -
     because the read path null-fills by name — without this check a
     batch missing a column would silently corrupt the table.
 
-    Cost discipline: on the manifest backend this is pure footer reads
-    (one per part, via pyarrow — ~ms each, no Spark job); a per-append
-    ``read_current`` would pay O(parts) DataFrame construction and made
-    long unpoliced chains quadratic (measured: 24 appends 15.6 s -> 37.7
-    s before this fast path)."""
-    if _is_delta_path(path):
-        have = set(read_current(df.sparkSession, path).columns)
-    else:
-        cur = current_version(path)
-        have = set()
-        for rel in _parts_of(path, cur):
-            have |= _part_columns(path, rel)
-        if not have:
-            return  # nothing committed carries data yet — any schema is fine
+    Cost discipline: pure footer reads (one per part, via pyarrow — ~ms
+    each, no Spark job); a per-append ``read_current`` would pay O(parts)
+    DataFrame construction and made long unpoliced chains quadratic
+    (measured: 24 appends 15.6 s -> 37.7 s before this fast path)."""
+    have: set[str] = set()
+    for rel in _parts_of(path, current_version(path)):
+        have |= _part_columns(path, rel)
+    if not have:
+        return  # nothing committed carries data yet — any schema is fine
     got = set(df.columns)
     missing = have - got
     if missing:
@@ -496,10 +423,6 @@ def read_current(spark: SparkSession, path: str) -> DataFrame:
 
 def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
     """Time travel: read a specific retained snapshot."""
-    if _is_delta_path(path):
-        return (
-            spark.read.format("delta").option("versionAsOf", version).load(path)
-        )
     vdir = os.path.join(path, f"{_PREFIX}{version}")
     if not os.path.isdir(vdir):
         raise FileNotFoundError(f"version {version} not found (or vacuumed) at {path}")
@@ -529,70 +452,6 @@ def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
     return out
 
 
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str | list[str],
-    partition_by: list[str] | None = None,
-    allow_new_columns: bool = False,
-) -> int:
-    """Delta-style MERGE (upsert): rows of ``updates`` replace current rows
-    with the same key; unmatched keys are inserted. Writes the result as
-    the next snapshot and flips the pointer.
-
-    Implementation is a left-anti join (current rows whose key does NOT
-    appear in updates) unioned with the updates — the matched/not-matched
-    split of MERGE without row-level file rewrites. Scale shape: updates
-    are usually a small delta, so the anti join broadcasts the update keys
-    and the big side streams map-only; no fact shuffle.
-
-    ``allow_new_columns=True`` adds schema evolution: columns present in
-    only one side are null-filled in the other (``unionByName``).
-
-    Like Delta MERGE, ``updates`` must be key-unique: with duplicate update
-    keys the anti-join would drop the current row once and then insert every
-    duplicate, silently multiplying rows per key (Delta raises
-    ``DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE``); we raise
-    ``ValueError`` instead. Dedupe (e.g. last-write-wins by a version
-    column) before calling."""
-    keys = [key] if isinstance(key, str) else list(key)
-    current = read_current(spark, path)
-    from pyspark.sql import functions as F
-
-    dup = (
-        updates.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > 1).limit(1).collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge_upsert: updates contain duplicate key {tuple(dup[0][k] for k in keys)!r}; "
-            "MERGE requires key-unique updates (dedupe before calling)"
-        )
-    if resolve_backend(path, "auto") == "delta" and _is_delta_path(path):
-        from delta.tables import DeltaTable
-
-        if allow_new_columns:
-            spark.conf.set("spark.databricks.delta.schema.autoMerge.enabled", "true")
-        cond = " AND ".join(f"t.`{k}` <=> u.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(updates.alias("u"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return current_version(path) or 0
-    key_set = F.broadcast(updates.select(*keys).distinct())
-    untouched = current.join(key_set, on=keys, how="left_anti")
-    if allow_new_columns:
-        merged = untouched.unionByName(updates, allowMissingColumns=True)
-    else:
-        merged = untouched.unionByName(updates)
-    return write_version(merged, path, partition_by=partition_by)
-
-
 def table_files(path: str, version: int | None = None) -> list[str]:
     """Absolute paths of the parquet data files composing one version
     (current by default) — the read-amplification metric ``compact``
@@ -617,7 +476,6 @@ def compact(
     path: str,
     partition_by: list[str] | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
-    backend: str = "auto",
 ) -> int:
     """Rewrite the table's CURRENT logical contents as one full snapshot
     version (Delta OPTIMIZE's role for the manifest store): a long-lived
@@ -636,21 +494,12 @@ def compact(
     partition keys so each partition directory lands as one file, and
     partition pruning keeps working across the compaction.
 
-    Delta backend: delegates to ``OPTIMIZE``'s ``executeCompaction``
-    (bin-packing small files natively; Delta appends never build
-    manifest chains, so this is the only compaction it needs).
-
     Concurrency: compaction is purely physical, so a lost race never loses
     rows — if appends landed while the snapshot was being rewritten, the
     commit REPARENTS (manifest = compacted snapshot + the delta parts
     added since); if a full rewrite superseded the compacted version, the
     staging output is abandoned and the store left as the rewrite made it
     (returning that current version)."""
-    if resolve_backend(path, backend) == "delta":
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(spark, path).optimize().executeCompaction()
-        return current_version(path) or 0
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(f"no committed version at {path}")
@@ -711,47 +560,6 @@ def _commit_compact(path: str, staging: str, base: int) -> int:
         return version
 
 
-def maybe_compact(
-    spark: SparkSession,
-    path: str,
-    max_parts: int | None = 16,
-    max_files: int | None = None,
-    partition_by: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int | None:
-    """The compaction CADENCE policy: compact iff the store's read
-    amplification crossed a bound — manifest chain deeper than
-    ``max_parts`` data directories, or more than ``max_files`` physical
-    parquet files (each partitioned append writes up to
-    tasks x partition-values files, so file count is the axis that
-    actually grows per batch). Returns the compacted version, or None
-    when the store is within bounds (the common case — the check costs
-    one manifest read, plus a file-tree walk only if ``max_files`` is
-    set).
-
-    Designed to be invoked from the append path itself (streaming
-    ``commit_store_batch``, batch lifecycles): the store then sawtooths —
-    file count climbs for ~``max_parts`` batches, one compaction folds it
-    back to one file set, repeat — so read cost stays bounded no matter
-    how long the deployment runs, at an amortized rewrite cost of
-    O(corpus / max_parts) per batch. A racing append is safe either way
-    (compact reparents); ``None`` bounds disable that axis."""
-    cur = current_version(path)
-    if cur is None:
-        return None
-    over = max_parts is not None and len(_parts_of(path, cur)) > max_parts
-    if not over and max_files is not None:
-        over = len(table_files(path, cur)) > max_files
-    if not over:
-        return None
-    return compact(
-        spark,
-        path,
-        partition_by=partition_by,
-        target_file_bytes=target_file_bytes,
-    )
-
-
 def vacuum(path: str, keep: int = 2, grace_seconds: float = 300.0) -> list[int]:
     """Drop all but the newest ``keep`` versions (never the current one).
     Returns the removed version numbers.
@@ -762,23 +570,7 @@ def vacuum(path: str, keep: int = 2, grace_seconds: float = 300.0) -> list[int]:
     taking the lock, so a part can be legitimately unreferenced for the
     seconds between its write and its manifest commit. Pass
     ``grace_seconds=0`` only when no concurrent writers exist (tests,
-    single-threaded maintenance).
-
-    Delta backend: delegates to ``DeltaTable.vacuum`` (Delta retains by
-    TIME, not version count — files unreferenced by the current snapshot
-    are removed; returns [] since Delta doesn't report version numbers)."""
-    if _is_delta_path(path):
-        from pyspark.sql import SparkSession as _S
-
-        from delta.tables import DeltaTable
-
-        spark = _S.getActiveSession()
-        if spark is None:
-            raise RuntimeError("vacuum on a delta path needs an active SparkSession")
-        spark.conf.set("spark.databricks.delta.retentionDurationCheck.enabled", "false")
-        DeltaTable.forPath(spark, path).vacuum(0.0)
-        return []
-
+    single-threaded maintenance)."""
     with writer_lock(path):
         cur = current_version(path)
         vs = _versions(path)
@@ -843,38 +635,6 @@ def vacuum(path: str, keep: int = 2, grace_seconds: float = 300.0) -> list[int]:
         for d in doomed:
             shutil.rmtree(d, ignore_errors=True)
     return removed
-
-
-_EPOCHS = "_EPOCHS"
-
-
-def applied_epochs(path: str) -> dict[int, int]:
-    """epoch_id -> committed version, from the store's streaming-commit
-    ledger (empty if the store has never been fed by a stream)."""
-    ledger = os.path.join(path, _EPOCHS)
-    if not os.path.exists(ledger):
-        return {}
-    out: dict[int, int] = {}
-    with open(ledger) as f:
-        for ln in f:
-            if ln.strip():
-                e, v = ln.split()
-                out[int(e)] = int(v)
-    return out
-
-
-def record_epoch(path: str, epoch_id: int, version: int) -> None:
-    """Record a streaming micro-batch commit (atomic rewrite of the tiny
-    ledger). With a checkpointed foreachBatch sink, a micro-batch replayed
-    after a mid-epoch failure re-arrives with the SAME epoch_id — the sink
-    consults ``applied_epochs`` and skips the duplicate append, keeping
-    the store's drain-equality contract exactly-once (r9 advice)."""
-    epochs = applied_epochs(path)
-    epochs[int(epoch_id)] = int(version)
-    tmp = os.path.join(path, _EPOCHS + ".tmp")
-    with open(tmp, "w") as f:
-        f.write("\n".join(f"{e} {v}" for e, v in sorted(epochs.items())) + "\n")
-    os.replace(tmp, os.path.join(path, _EPOCHS))
 
 
 _CLEANUP_REGISTERED: set[str] = set()

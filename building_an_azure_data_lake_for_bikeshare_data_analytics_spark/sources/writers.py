@@ -4,7 +4,7 @@ The reference writes every table as Delta with ``mode('overwrite')`` and
 ``option('overwriteSchema', True)`` (S2/S3: ipynb:L263-264, L982, L1087-1101)
 and relies on Delta snapshot isolation to read a table and overwrite it in
 the same job (SURVEY.md §3.4). Plain parquet self-overwrite would delete the
-input mid-scan, so the parquet fallback stages to ``<path>.__stage__`` and
+input mid-scan, so the parquet writer stages to ``<path>.__stage__`` and
 swaps — same observable semantics (full overwrite incl. schema change),
 no snapshot dependency.
 
@@ -25,22 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 def overwrite_table(
     df: DataFrame,
     name: str,
-    fmt: str = "auto",
     partition_by: list[str] | None = None,
 ) -> None:
     """Managed-table overwrite: the engine equivalent of the reference's
     ``df.write.format('delta').mode('overwrite')
-    .option('overwriteSchema', True).saveAsTable(name)`` (S2/S3).
-
-    ``fmt='auto'`` writes REAL Delta when delta-spark is installed
-    (reference parity), parquet otherwise."""
-    if fmt == "auto":
-        from ..session import delta_available
-
-        fmt = "delta" if delta_available() else "parquet"
-    w = df.write.format(fmt).mode("overwrite")
-    if fmt == "delta":
-        w = w.option("overwriteSchema", "true")
+    .option('overwriteSchema', True).saveAsTable(name)`` (S2/S3), written
+    as parquet; a full overwrite replaces the schema too."""
+    w = df.write.format("parquet").mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.saveAsTable(name)
@@ -61,40 +52,6 @@ def overwrite_parquet_table(
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(stage, path)
-
-
-def compact_parquet_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
-) -> dict[str, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target_file_bytes) files (the OPTIMIZE maintenance
-    op Delta users run; the reference never compacts — SURVEY.md §4).
-
-    Streaming sinks and incremental appends accrete kilobyte files; at
-    100 TB the scan's file-listing and per-file open overhead then dominate
-    the query. One ``repartition(n)`` rewrite restores ~target-size files.
-    ``sort_within_by`` optionally clusters rows inside each output file
-    (``sortWithinPartitions`` — a local sort, no extra shuffle) so min/max
-    footer stats give data-skipping on those columns.
-
-    Returns ``{"files_before": ..., "files_after": ..., "bytes": ...}``.
-    """
-    before = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(".")
-    ]
-    total = sum(os.path.getsize(f) for f in before)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil div
-    df = spark.read.parquet(path).repartition(n_out)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    overwrite_parquet_table(df, path)
-    after = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    return {"files_before": len(before), "files_after": len(after), "bytes": total}
 
 
 def drop_table_if_exists(spark: SparkSession, name: str) -> None:

@@ -9,7 +9,6 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.de
     age_years,
     duration_seconds,
     hour_truncated,
-    minutes_of,
     time_of_day,
 )
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.schema import (
@@ -55,11 +54,6 @@ def test_time_of_day_buckets(spark):
     )
     got = [r["b"] for r in df.select(time_of_day("ts").alias("b")).collect()]
     assert got == ["night", "morning", "morning", "afternoon", "afternoon", "evening", "evening", "night"]
-
-
-def test_minutes_of(spark):
-    df = spark.createDataFrame([Row(duration=119), Row(duration=120)])
-    assert [r["m"] for r in df.select(minutes_of("duration").alias("m")).collect()] == [1, 2]
 
 
 def test_format_columns_renames_and_casts(spark):

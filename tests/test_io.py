@@ -77,49 +77,6 @@ def test_load_star_cache_facts(spark):
         star["orders"].unpersist()
 
 
-def test_read_jsonl_with_schema_and_corrupt_line(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.readers import read_jsonl
-
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world"}\n'
-        "this is not json\n"
-        '{"doc_id": 2, "text": "second"}\n'
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
-    df = read_jsonl(spark, str(p), schema=schema).cache()
-    good = df.where(df._corrupt_record.isNull())
-    assert {r["doc_id"] for r in good.collect()} == {1, 2}
-    assert df.where(df._corrupt_record.isNotNull()).count() == 1
-    df.unpersist()
-
-
-def test_compact_parquet_table(spark, tmp_path):
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.writers import (
-        compact_parquet_table,
-    )
-
-    path = str(tmp_path / "shards")
-    df = spark.range(0, 10_000).withColumnRenamed("id", "k")
-    df.repartition(64).write.parquet(path)  # simulate small-file accretion
-
-    stats = compact_parquet_table(spark, path, target_file_bytes=10**9, sort_within_by=["k"])
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 1
-
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    assert back.agg({"k": "max"}).first()[0] == 9_999
-
-
 def test_nanos_conf_restored_after_events_read(spark):
     """read_parquet_table never touches the nanosAsLong legacy conf of a
     caller-owned session (ADVICE r1): Spark 4 ignores it for the native

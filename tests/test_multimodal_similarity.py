@@ -81,7 +81,6 @@ def test_resize_and_frame_sample_plumbing(spark):
 
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.multimodal import (
         attach_binary,
-        resize_images,
         sample_frames,
     )
 
@@ -90,11 +89,6 @@ def test_resize_and_frame_sample_plumbing(spark):
          Row(doc_id=2, text="xy", source="s", n_chars=2)]
     )
     blobs = attach_binary(docs)
-
-    resized = {r["doc_id"]: r for r in resize_images(blobs, 8, 8).collect()}
-    assert len(bytes(resized[1]["resized_blob"])) == 64  # exact target size
-    assert len(bytes(resized[2]["resized_blob"])) == 64  # short input padded
-    assert resized[1]["width"] == 8 and resized[1]["height"] == 8
 
     frames = sample_frames(blobs, n_frames=4).collect()
     per_doc = {}

@@ -447,6 +447,17 @@ def test_gate_prefix_contract():
     assert not missing, f"prefix entries without oracle SQL: {missing}"
 
 
+def test_registry_qnn_prefixes_unique():
+    """bench.py's compact per-query line is keyed by the qNN prefix alone,
+    so no two registered queries may share one."""
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
+        REGISTRY,
+    )
+
+    prefixes = [n.split("_", 1)[0] for n in REGISTRY]
+    assert len(set(prefixes)) == len(prefixes)
+
+
 def test_dsir_scoring_single_pass(spark):
     """q144: the checkpointed pair relation is scanned ONCE (ExistingRDD)
     and every LM count-table join broadcasts (vocab-bounded sides) — the

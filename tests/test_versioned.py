@@ -5,41 +5,28 @@ import pytest
 
 from pyspark.sql import Row
 
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.session import delta_available
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources import versioned as V
 
-#: both store backends; the delta cases run for real wherever delta-spark
-#: is installed and skip cleanly in this codec-less container
-BACKENDS = [
-    "parquet",
-    pytest.param(
-        "delta",
-        marks=pytest.mark.skipif(not delta_available(), reason="delta-spark not installed"),
-    ),
-]
 
-
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_write_read_roundtrip_and_versions(spark, tmp_path, backend):
+def test_write_read_roundtrip_and_versions(spark, tmp_path):
     p = str(tmp_path / "t")
     assert V.current_version(p) is None
-    v1 = V.write_version(spark.createDataFrame([Row(a=1)]), p, backend=backend)
-    v2 = V.write_version(spark.createDataFrame([Row(a=2)]), p, backend=backend)
-    assert v2 == v1 + 1  # delta numbers from 0, the manifest store from 1
+    v1 = V.write_version(spark.createDataFrame([Row(a=1)]), p)
+    v2 = V.write_version(spark.createDataFrame([Row(a=2)]), p)
+    assert v2 == v1 + 1
     assert V.current_version(p) == v2
     assert V.read_current(spark, p).first()["a"] == 2
     assert V.read_version(spark, p, v1).first()["a"] == 1  # time travel
 
 
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_self_overwrite_reads_stable_snapshot(spark, tmp_path, backend):
-    """The reference's read-X-overwrite-X pattern (ipynb:L1074->L1098) —
-    must work on both backends: the derivation reads v1 while v2 writes."""
+def test_self_overwrite_reads_stable_snapshot(spark, tmp_path):
+    """The reference's read-X-overwrite-X pattern (ipynb:L1074->L1098):
+    the derivation reads v1 while v2 writes."""
     p = str(tmp_path / "t")
-    v1 = V.write_version(spark.createDataFrame([Row(a=i) for i in range(100)]), p, backend=backend)
+    v1 = V.write_version(spark.createDataFrame([Row(a=i) for i in range(100)]), p)
     cur = V.read_current(spark, p)
     derived = cur.selectExpr("a", "a * 10 AS b")  # lazily reads v1
-    V.write_version(derived, p, backend=backend)
+    V.write_version(derived, p)
     out = V.read_current(spark, p).orderBy("a").collect()
     assert len(out) == 100 and out[3]["b"] == 30
     # v1 untouched and still readable
@@ -56,117 +43,6 @@ def test_vacuum_retention(spark, tmp_path):
     assert V.read_current(spark, p).first()["a"] == 4
     with pytest.raises(FileNotFoundError):
         V.read_version(spark, p, 1)
-
-
-def test_pipeline_versioned_mode(spark, tmp_path):
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import pipeline
-
-    d = tmp_path / "csv"
-    d.mkdir()
-    (d / "stations.csv").write_text("S1,One St,41.9,-87.6\n")
-    (d / "riders.csv").write_text("1000,F,L,1 St,1990-01-01,2020-01-01,,True\n")
-    (d / "trips.csv").write_text(
-        "0000000000000001,classic_bike,2021-02-01 10:00:00,2021-02-01 10:30:00,S1,S1,1000\n"
-    )
-    (d / "payments.csv").write_text("1,2021-02-01,9.5,1000\n")
-    lake = str(tmp_path / "lake")
-    a = pipeline.run(spark, str(d), lake, versioned=True)
-    assert a["trips"].count() == 1
-    b = pipeline.run(spark, str(d), lake, versioned=True)  # re-run -> v2
-    assert b["trips"].count() == 1
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources import versioned as V
-    import os
-
-    assert V.current_version(os.path.join(lake, "trips")) == 2
-    assert V.read_version(spark, os.path.join(lake, "trips"), 1).count() == 1
-
-
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_merge_upsert_updates_and_inserts(spark, tmp_path, backend):
-    p = str(tmp_path / "t")
-    base = spark.createDataFrame([(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["id", "tag", "x"])
-    V.write_version(base, p, backend=backend)
-    updates = spark.createDataFrame([(2, "B", 99), (4, "d", 40)], ["id", "tag", "x"])
-    v0 = V.current_version(p)
-    v = V.merge_upsert(spark, p, updates, key="id")
-    assert v == v0 + 1
-    got = {r["id"]: (r["tag"], r["x"]) for r in V.read_current(spark, p).collect()}
-    assert got == {1: ("a", 10), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
-    # time travel: the pre-merge snapshot still has the old row
-    old = {r["id"]: r["tag"] for r in V.read_version(spark, p, v0).collect()}
-    assert old[2] == "b" and 4 not in old
-
-
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_merge_upsert_schema_evolution(spark, tmp_path, backend):
-    p = str(tmp_path / "t")
-    V.write_version(spark.createDataFrame([(1, "a")], ["id", "tag"]), p, backend=backend)
-    updates = spark.createDataFrame([(2, "b", 7)], ["id", "tag", "extra"])
-    V.merge_upsert(spark, p, updates, key="id", allow_new_columns=True)
-    got = {r["id"]: r["extra"] for r in V.read_current(spark, p).collect()}
-    assert got == {1: None, 2: 7}
-
-
-def test_merge_upsert_rejects_duplicate_update_keys(spark, tmp_path):
-    """Delta MERGE errors when multiple source rows match one target row;
-    merge_upsert mirrors that instead of silently multiplying rows."""
-    import pytest
-
-    p = str(tmp_path / "t")
-    V.write_version(spark.createDataFrame([(1, "a")], ["id", "tag"]), p)
-    dup_updates = spark.createDataFrame([(1, "x"), (1, "y")], ["id", "tag"])
-    with pytest.raises(ValueError, match="duplicate key"):
-        V.merge_upsert(spark, p, dup_updates, key="id")
-    # table unchanged (no new version was written)
-    assert V.current_version(p) == 1
-
-
-@pytest.mark.parametrize("backend", BACKENDS)
-def test_lake_roundtrip_parity_merge_cdf_optimize(spark, tmp_path, backend):
-    """One small lake driven end-to-end per backend — the r4 verdict's
-    MERGE / change-feed / OPTIMIZE parity leg. The parquet manifest store
-    runs everywhere; the delta leg runs for real wherever delta-spark is
-    installed, asserting the SAME logical outcomes through real Delta
-    MERGE / versionAsOf / vacuum. Change-data-feed is derived the
-    backend-neutral way (full-outer join of two time-travel snapshots),
-    so the assertion is on the change set itself, not a backend API."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], ["id", "tag", "x"]
-    )
-    V.write_version(base, p, backend=backend)
-    v0 = V.current_version(p)
-
-    # MERGE: update id=2, insert id=4
-    updates = spark.createDataFrame([(2, "B", 99), (4, "d", 40)], ["id", "tag", "x"])
-    v1 = V.merge_upsert(spark, p, updates, key="id")
-    assert v1 == v0 + 1
-
-    # CDF between the two snapshots via time travel (both backends)
-    old = V.read_version(spark, p, v0).select("id", "tag", "x")
-    new = V.read_version(spark, p, v1).select("id", "tag", "x")
-    o = old.select(*(F.col(c).alias(f"o_{c}") for c in old.columns))
-    n = new.select(*(F.col(c).alias(f"n_{c}") for c in new.columns))
-    diff = o.join(n, o.o_id == n.n_id, "full_outer").select(
-        F.coalesce("o_id", "n_id").alias("id"),
-        F.when(F.col("o_id").isNull(), "insert")
-        .when(F.col("n_id").isNull(), "delete")
-        .when((F.col("o_tag") != F.col("n_tag")) | (F.col("o_x") != F.col("n_x")), "update_postimage")
-        .alias("change"),
-    )
-    changes = {r["id"]: r["change"] for r in diff.collect()}
-    assert changes == {1: None, 2: "update_postimage", 3: None, 4: "insert"}
-
-    # OPTIMIZE/vacuum: old snapshots reclaimable, current survives
-    for i in range(3):
-        V.merge_upsert(
-            spark, p, spark.createDataFrame([(1, f"t{i}", i)], ["id", "tag", "x"]), key="id"
-        )
-    V.vacuum(p, keep=1)
-    got = {r["id"]: (r["tag"], r["x"]) for r in V.read_current(spark, p).collect()}
-    assert got == {1: ("t2", 2), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
 
 
 def test_append_version_equals_union_write(spark, tmp_path):
@@ -307,63 +183,6 @@ def test_compact_preserves_partitioning(spark, tmp_path):
         assert len(files) == 1, (b, files)
     # partition filter still prunes to one directory's rows
     assert cur.where("band = 1").count() == 30
-
-
-def test_maybe_compact_policy_bounds(spark, tmp_path):
-    """maybe_compact: no-op within bounds, compacts past them, and under
-    a per-append invocation the chain depth sawtooths under the bound
-    while the row multiset stays the running union."""
-    p = str(tmp_path / "mc")
-    V.write_version(spark.createDataFrame([(0,)], ["id"]), p)
-    assert V.maybe_compact(spark, p, max_parts=3) is None  # within bounds
-    want, depths = [0], []
-    for i in range(1, 11):
-        V.append_version(spark.createDataFrame([(i,)], ["id"]), p)
-        want.append(i)
-        V.maybe_compact(spark, p, max_parts=3)
-        depths.append(len(V._parts_of(p, V.current_version(p))))
-    # sawtooth: post-policy depth never exceeds max_parts and keeps
-    # collapsing back to a single snapshot
-    assert max(depths) == 3 and depths.count(1) >= 3
-    assert sorted(r["id"] for r in V.read_current(spark, p).collect()) == want
-
-
-def test_maybe_compact_max_files_axis(spark, tmp_path):
-    """The file-count bound triggers even when the chain is shallow —
-    the axis partitioned appends actually grow."""
-    p = str(tmp_path / "mf")
-    df = spark.createDataFrame([(i, i % 3) for i in range(30)], ["id", "band"])
-    V.write_version(df, p, partition_by=["band"])
-    V.append_version(
-        spark.createDataFrame([(i, i % 3) for i in range(30, 60)], ["id", "band"]),
-        p,
-        partition_by=["band"],
-    )
-    n_before = len(V.table_files(p))
-    assert V.maybe_compact(spark, p, max_parts=None, max_files=n_before + 1) is None
-    v = V.maybe_compact(
-        spark, p, max_parts=None, max_files=n_before - 1, partition_by=["band"]
-    )
-    assert v is not None
-    assert len(V.table_files(p)) == 3  # one file per band directory
-    assert V.read_current(spark, p).count() == 60
-
-
-def test_commit_store_batch_with_compaction_cadence(spark, tmp_path):
-    """The streaming commit path with the cadence policy on: drain
-    equality holds across compactions and replayed epochs still dedupe."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.streaming.pipeline import commit_store_batch
-
-    p = str(tmp_path / "ccb")
-    for e in range(8):
-        rows = spark.createDataFrame([(e * 10 + j,) for j in range(10)], ["id"])
-        commit_store_batch(rows, p, e, dedupe_epochs=True, compact_max_parts=3)
-    assert len(V._parts_of(p, V.current_version(p))) <= 4
-    # replayed epoch: skipped, not re-appended, even after compactions
-    replay = spark.createDataFrame([(5,)], ["id"])
-    commit_store_batch(replay, p, 3, dedupe_epochs=True, compact_max_parts=3)
-    got = sorted(r["id"] for r in V.read_current(spark, p).collect())
-    assert got == list(range(80))
 
 
 def test_append_schema_evolution_add_column(spark, tmp_path):
