@@ -7,6 +7,18 @@ ipynb:L976/L979). That one-pass ``select`` is already the right shape at any
 scale (one narrow projection, no shuffle); we keep it and add a declarative
 table registry so schemas are data, not code.
 
+The projection is handed to Spark as SQL expression text in one
+``selectExpr``. Catalyst gets the same projection as from per-column
+``Column`` calls, but the driver sends about one py4j command per column
+(to pass the list) instead of about a dozen (each ``F.col``/``.cast``/
+``.alias`` is a round trip, plus the call-site capture of every ``F.*``
+function). At one monthly batch those round trips, not the data, set the
+plan-building time.
+
+Casts are ``TRY_CAST``: a malformed raw value becomes null, as under the
+reference's Spark 3.2 with ANSI off, instead of failing the whole batch
+under Spark 4's ANSI mode.
+
 Decimal subtlety preserved (SURVEY.md §1.2): the reference casts payment
 ``amount`` to bare ``decimal`` = ``DecimalType(10,0)`` (ipynb:L988), which
 rounds cents away before any aggregation. ``BIKESHARE_CASTS`` records exactly
@@ -16,10 +28,13 @@ that; engines wanting cents use an explicit DecimalType(10,2).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DataTypeLike = T.DataType | str
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def format_columns(
@@ -30,20 +45,22 @@ def format_columns(
     """Bulk rename + cast in one projection.
 
     Mirrors the reference's two list-comprehension selects (ipynb:L976, L979)
-    but fused into a single ``select`` so Catalyst sees one projection node.
-    Columns absent from the maps pass through untouched. ``casts`` keys are
-    the *new* (post-rename) names.
+    but fused into a single ``selectExpr`` so Catalyst sees one projection
+    node. Columns absent from the maps pass through untouched. ``casts`` keys
+    are the *new* (post-rename) names; a value that does not parse as its
+    type becomes null (``TRY_CAST``).
     """
     renames = renames or {}
     casts = casts or {}
-    cols = []
+    exprs = []
     for c in df.columns:
         new = renames.get(c, c)
-        col = F.col(c).alias(new)
+        col = _quoted(c)
         if new in casts:
-            col = F.col(c).cast(casts[new]).alias(new)
-        cols.append(col)
-    return df.select(*cols)
+            ty = casts[new]
+            col = f"TRY_CAST({col} AS {ty.simpleString() if isinstance(ty, T.DataType) else ty})"
+        exprs.append(f"{col} AS {_quoted(new)}")
+    return df.selectExpr(*exprs)
 
 
 # --- reference bikeshare schema registry (ipynb:L985-991, cell 8) ---------

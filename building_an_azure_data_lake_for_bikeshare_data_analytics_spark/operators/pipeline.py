@@ -10,6 +10,11 @@ Stage map (reference cites):
   dims    : trip_dates / payment_dates spines    (cells 12/17/18), each a
             lazy min/max -> sequence plan with no probe job
 
+Every projection is one ``selectExpr`` over SQL expression text
+(``functions.derive``): building a batch's six frames then costs a few
+JVM calls per projection rather than a py4j round trip per column builder,
+which at monthly-batch size dominated the batch's driver time.
+
 Scale posture (deliberate deltas from the reference, SURVEY.md §7.4.8):
 * facts are written partitioned by a date column (`started_month` for trips,
   `year` of date_id for payments) — the reference writes unpartitioned
@@ -25,10 +30,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.derive import age_years, duration_seconds, hour_truncated
+from ..functions.derive import age_sql, duration_sql, hour_sql
 from ..functions.schema import format_bikeshare_table, raw_bikeshare_schema
 from ..sources.readers import read_csv_raw
 from ..sources.writers import overwrite_parquet_table
@@ -58,23 +63,17 @@ def gold(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
     * riders += age_at_account_start;
     * payments pruned to its 4 final columns (P3).
     """
-    riders = tables["riders"].withColumn(
-        "age_at_account_start", age_years("birthday", "account_start_date")
+    riders = tables["riders"].selectExpr(
+        "*", f"{age_sql('birthday', 'account_start_date')} AS age_at_account_start"
     )
-    birthdays = riders.select("rider_id", "birthday")  # J3 narrow dim (L1093)
-    trips = (
-        tables["trips"]
-        .withColumn("duration", duration_seconds())
-        .withColumn("time_id", hour_truncated("started_at"))
-        .join(F.broadcast(birthdays), on="rider_id", how="inner")
-        .withColumn("age_at_ride_time", age_years("birthday", F.to_date("started_at")))
-        .select(
-            "trip_id", "duration", "rideable_type", "age_at_ride_time",
-            "started_at", "ended_at", "start_station_id", "end_station_id",
-            "time_id", "rider_id",
-        )
+    birthdays = riders.selectExpr("rider_id", "birthday")  # J3 narrow dim (L1093)
+    trips = tables["trips"].join(F.broadcast(birthdays), "rider_id").selectExpr(
+        "trip_id", f"{duration_sql()} AS duration", "rideable_type",
+        f"{age_sql('birthday', 'to_date(started_at)')} AS age_at_ride_time",
+        "started_at", "ended_at", "start_station_id", "end_station_id",
+        f"{hour_sql('started_at')} AS time_id", "rider_id",
     )
-    payments = tables["payments"].select("payment_id", "amount", "date_id", "rider_id")
+    payments = tables["payments"].selectExpr("payment_id", "amount", "date_id", "rider_id")
     return {
         "trips": trips,
         "payments": payments,
@@ -99,23 +98,21 @@ def run(spark: SparkSession, csv_dir: str, out_dir: str) -> dict[str, DataFrame]
     dims are derived from the facts as written, so their bounds come from
     a parquet scan rather than a second CSV scan, cast and rider join."""
 
-    def land(
-        name: str, df: DataFrame, part: str | None = None, value: Column | None = None
-    ) -> DataFrame:
-        """Write one table, partitioned by ``part`` = ``value`` when given,
-        and reload it with the partition column dropped."""
+    def land(name: str, df: DataFrame, part: str | None = None, value: str | None = None) -> DataFrame:
+        """Write one table, partitioned by ``part`` = SQL ``value`` when
+        given, and reload it with the partition column dropped."""
         path = os.path.join(out_dir, name)
         by = [part] if part else None
         if part:
-            df = df.withColumn(part, value)
+            df = df.selectExpr("*", f"{value} AS {part}")
         overwrite_parquet_table(df, path, partition_by=by)
         back = spark.read.parquet(path)
         return back.drop(part) if part else back
 
     g = gold(silver(bronze(spark, csv_dir)))
     out = {
-        "trips": land("trips", g["trips"], "started_month", F.date_format("started_at", "yyyy-MM")),
-        "payments": land("payments", g["payments"], "pay_year", F.year("date_id")),
+        "trips": land("trips", g["trips"], "started_month", "date_format(started_at, 'yyyy-MM')"),
+        "payments": land("payments", g["payments"], "pay_year", "year(date_id)"),
         "riders": land("riders", g["riders"]),
         "stations": land("stations", g["stations"]),
     }

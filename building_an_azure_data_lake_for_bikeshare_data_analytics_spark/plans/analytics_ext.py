@@ -481,7 +481,7 @@ def q127(spark, sf):
     o = _t(spark, sf, "orders").select("o_orderkey", "o_orderdate")
     return o.select(
         "o_orderkey",
-        age_years("o_orderdate", F.to_date(F.lit("2002-12-31"))).alias("age_years"),
+        age_years("o_orderdate", "to_date('2002-12-31')").alias("age_years"),
     )
 
 

@@ -128,8 +128,7 @@ def q115(spark, sf):
     bucket, and batches of 8 report their padding waste.
 
     Scale note: row_number over 4 bucket partitions serializes at 100 TB;
-    the cluster path (``length_bucket_batches_salted`` below, shape-
-    equivalence tested) salts the window key to (bucket, hash(doc_id) % K)
+    a cluster path would salt the window key to (bucket, hash(doc_id) % K)
     — batches stay intra-salt-group and shapes are unchanged, only batch
     ids renumber. The oracle pins the canonical single-partition
     numbering."""
@@ -871,44 +870,6 @@ def q124(spark, sf):
         ((F.col("pos_in_source") - 1) * F.col("n_sources") + F.col("source_rank")).alias(
             "curriculum_pos"
         ),
-    )
-
-
-def length_bucket_batches_salted(
-    docs: "DataFrame", salt_groups: int = 8, batch: int = _BATCH
-) -> "DataFrame":
-    """The cluster-scale variant q115's docstring promises: the batching
-    window keys on (bucket, salt) instead of bucket alone, so the
-    row_number runs over ``4 * salt_groups`` hash-distributed partitions
-    instead of 4 serial ones. Batches never cross a salt group, so every
-    batch still holds <= ``batch`` docs of one bucket — identical shapes,
-    renumbered ids (batch_id embeds the salt). Salt is a pure function of
-    doc_id (deterministic re-runs, layout-independent)."""
-    d = docs.select("doc_id", F.size(tokens("text")).alias("n_tok"))
-    b = d.select(
-        "doc_id",
-        "n_tok",
-        _bucket(F.col("n_tok")).alias("bucket"),
-        # mod BEFORE multiply (mirrors training._doc_hash): doc_id * 2654435761
-        # overflows int64 for doc_id > ~3.47e9 and throws under ANSI mode.
-        F.pmod((F.col("doc_id") % 100003) * 2654435761, salt_groups).alias("salt"),
-    )
-    w = Window.partitionBy("bucket", "salt").orderBy("doc_id")
-    r = b.select(
-        "bucket",
-        "n_tok",
-        (
-            F.col("salt") * 1_000_000
-            + F.floor((F.row_number().over(w) - 1) / batch)
-        ).alias("batch_id"),
-    )
-    return (
-        r.groupBy("bucket", "batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.max("n_tok").alias("max_len"),
-            F.sum("n_tok").alias("token_sum"),
-        )
     )
 
 

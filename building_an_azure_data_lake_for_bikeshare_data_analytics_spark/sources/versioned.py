@@ -76,7 +76,7 @@ class ConcurrentWriteError(RuntimeError):
 
 
 @contextmanager
-def writer_lock(path: str, timeout: float = 120.0, stale_after: float = 300.0):
+def writer_lock(path: str, timeout: float = 120.0):
     """Per-store writer mutex: an ``fcntl.flock`` exclusive lock on a
     persistent ``_LOCK`` file inside the store directory, held only
     across the metadata critical section (manifest write + pointer flip
@@ -90,7 +90,6 @@ def writer_lock(path: str, timeout: float = 120.0, stale_after: float = 300.0):
     holders), and a LIVE holder whose critical section outlasted the
     window was usurped mid-hold. Here a live holder simply blocks
     waiters until it releases; ``timeout`` bounds that wait.
-    ``stale_after`` is retained for signature compatibility and ignored.
 
     The lockfile persists between holds — release never unlinks it.
     Unlink-on-release would reopen the classic flock race: a waiter that
@@ -102,7 +101,6 @@ def writer_lock(path: str, timeout: float = 120.0, stale_after: float = 300.0):
     byte-range leases there). flock is per open-file-description, so threads
     within one process exclude each other too (each hold opens its own
     fd)."""
-    del stale_after  # legacy knob: flock has no staleness (see docstring)
     import fcntl
 
     os.makedirs(path, exist_ok=True)

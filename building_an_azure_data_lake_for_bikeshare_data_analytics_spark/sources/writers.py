@@ -43,12 +43,18 @@ def overwrite_parquet_table(
     partition_by: list[str] | None = None,
 ) -> None:
     """Path-based overwrite that is safe even when ``df`` reads from ``path``
-    (stage-and-swap; Delta gets this from snapshots, parquet needs help)."""
+    (stage-and-swap; Delta gets this from snapshots, parquet needs help).
+    A write that raises leaves the previous table as it was and no stage
+    directory behind."""
     stage = path.rstrip("/") + ".__stage__"
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(stage)
+    try:
+        w.parquet(stage)
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(stage, path)

@@ -3,6 +3,8 @@ import sys
 import uuid
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,3 +37,25 @@ def jobs_launched(spark, thunk) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jvm_round_trips(thunk) -> int:
+    """Number of py4j commands the driver sends to the JVM while ``thunk``
+    runs, counted by wrapping ``ClientServerConnection.send_command``.
+    Release commands (``m``/``d``: a Python-side reference was collected)
+    are not counted: the garbage collector decides when they are sent, so
+    they would make the count depend on when a collection happens."""
+    send = ClientServerConnection.send_command
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += not command.startswith(MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        thunk()
+    finally:
+        ClientServerConnection.send_command = send
+    return n

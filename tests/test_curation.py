@@ -279,30 +279,6 @@ def test_curriculum_order_properties(spark):
     assert all(r["pos_in_source"] == 1 for r in head)
 
 
-def test_salted_batching_preserves_batch_contract(spark):
-    """The salted window variant must keep every q115 batch invariant —
-    same bucket alphabet, batches never overfill, every doc batched —
-    while distributing the window over (bucket, salt) partitions."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.curation import (
-        _BATCH,
-        length_bucket_batches_salted,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    rows = length_bucket_batches_salted(docs, salt_groups=8).collect()
-    assert rows
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    assert {r["bucket"] for r in rows} <= {16, 32, 64, 128}
-    for r in rows:
-        assert 0 < r["n_docs"] <= _BATCH
-        assert r["max_len"] <= r["bucket"]
-        assert r["token_sum"] <= r["n_docs"] * r["bucket"]
-    # salting strictly increases window parallelism: more, smaller batches
-    plain = {(r["bucket"], r["batch_id"]) for r in QUERIES[
-        "q115_length_bucket_batches"](spark, SF_SMOKE).collect()}
-    assert len(rows) >= len(plain)
-
-
 def test_temperature_mix_weights(spark):
     """q201: per alpha the probabilities sum to 1; alpha=1.0 reproduces
     proportional sampling exactly; lower alpha compresses the spread

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.derive import (
     age_years,
-    duration_seconds,
-    hour_truncated,
-    time_of_day,
+    duration_sql,
+    hour_sql,
+    time_of_day_sql,
 )
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.schema import (
     format_bikeshare_table,
@@ -31,9 +31,7 @@ def test_duration_and_time_id(spark):
     df = spark.createDataFrame(
         [Row(started_at=dt.datetime(2021, 2, 1, 10, 15, 30), ended_at=dt.datetime(2021, 2, 1, 11, 0, 0))]
     )
-    r = df.select(
-        duration_seconds().alias("dur"), hour_truncated("started_at").alias("tid")
-    ).first()
+    r = df.selectExpr(f"{duration_sql()} AS dur", f"{hour_sql('started_at')} AS tid").first()
     assert r["dur"] == 2670  # (11:00:00 - 10:15:30) = 44m30s
     assert r["tid"] == dt.datetime(2021, 2, 1, 10, 0, 0)
 
@@ -52,7 +50,7 @@ def test_time_of_day_buckets(spark):
     df = spark.createDataFrame(
         [Row(ts=dt.datetime(2021, 1, 1, h)) for h in (0, 5, 11, 12, 16, 17, 21, 22)]
     )
-    got = [r["b"] for r in df.select(time_of_day("ts").alias("b")).collect()]
+    got = [r["b"] for r in df.selectExpr(f"{time_of_day_sql('ts')} AS b").collect()]
     assert got == ["night", "morning", "morning", "afternoon", "afternoon", "evening", "evening", "night"]
 
 

@@ -3,6 +3,7 @@ parquet self-overwrite (S2/S3 semantics without Delta)."""
 
 import os
 
+import pytest
 from pyspark.sql import Row
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.schema import (
@@ -64,6 +65,20 @@ def test_overwrite_parquet_table_safe_self_overwrite(spark, tmp_path):
     out = spark.read.parquet(path).orderBy("a").collect()
     assert [(r["a"], r["b"]) for r in out] == [(1, 10), (2, 20)]
     assert not os.path.exists(path + ".__stage__")
+
+
+def test_failed_overwrite_keeps_previous_table_and_no_stage(spark, tmp_path):
+    """A write whose tasks raise must leave the previous table readable and
+    no ``.__stage__`` directory behind."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame([Row(a=1), Row(a=2)]).write.parquet(path)
+    bad = spark.read.parquet(path).selectExpr(
+        "CASE WHEN a > 1 THEN raise_error('boom') ELSE a END AS a"
+    )
+    with pytest.raises(Exception, match="boom"):
+        overwrite_parquet_table(bad, path)
+    assert not os.path.exists(path + ".__stage__")
+    assert sorted(r["a"] for r in spark.read.parquet(path).collect()) == [1, 2]
 
 
 def test_load_star_cache_facts(spark):

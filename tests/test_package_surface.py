@@ -18,7 +18,6 @@ PACKAGE = "building_an_azure_data_lake_for_bikeshare_data_analytics_spark"
 
 ALLOWED = {
     "plans.extensions.exhaustive_jaccard_pairs": "exact-Jaccard test oracle in tests/test_dedup_similarity.py",
-    "plans.curation.length_bucket_batches_salted": "salted q115 variant, used only by tests/test_curation.py",
     "plans.profiling.join_size_estimate_sampled": "used by tools/stress_profiling.py",
     "operators.graph.connected_components_star": "used by tools/stress_graph.py",
     "sources.writers.overwrite_bucketed_table": "used by tools/stress_maintenance.py",

@@ -147,14 +147,13 @@ def test_writer_lock_dead_holder_does_not_block(tmp_path):
 
 def test_writer_lock_live_holder_never_usurped(tmp_path):
     """The r11-advice hole in the mtime protocol: a live holder whose
-    critical section outlasted stale_after was usurped mid-hold. With
-    flock a live holder blocks waiters regardless of hold duration — the
-    waiter times out instead of stealing the lock."""
+    critical section outlasted the staleness window was usurped mid-hold.
+    With flock a live holder blocks waiters regardless of hold duration —
+    the waiter times out instead of stealing the lock."""
     p = str(tmp_path / "live")
     with V.writer_lock(p):
         with pytest.raises(TimeoutError):
-            # stale_after far below the hold duration: must NOT take over
-            with V.writer_lock(p, timeout=0.4, stale_after=0.01):
+            with V.writer_lock(p, timeout=0.4):
                 pass
 
 
