@@ -17,7 +17,8 @@ plan-building time.
 
 Casts are ``TRY_CAST``: a malformed raw value becomes null, as under the
 reference's Spark 3.2 with ANSI off, instead of failing the whole batch
-under Spark 4's ANSI mode.
+under Spark 4's ANSI mode. Integral targets first pass through
+``_LEGACY_INTEGRAL``, so a fractional value truncates as it did there.
 
 Decimal subtlety preserved (SURVEY.md §1.2): the reference casts payment
 ``amount`` to bare ``decimal`` = ``DecimalType(10,0)`` (ipynb:L988), which
@@ -31,6 +32,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 DataTypeLike = T.DataType | str
+
+
+_INTEGRAL = {"tinyint", "byte", "smallint", "short", "int", "integer", "bigint", "long"}
+
+# The reference's ANSI-off string -> integral cast trims ASCII whitespace
+# and control characters, reads an optional sign and the digits before an
+# optional '.', and ignores a well-formed fraction: '9.5' -> 9, '-9.9' -> -9,
+# '12.' -> 12. TRY_CAST is the ANSI parse, which nulls any fraction. This
+# pattern rewrites such a value to sign, '0', digits ('$10' in the
+# replacement is group 1 then a literal 0: Java takes a second digit into a
+# group number only if that group exists), so '.5' reads 0 as it did
+# there, and TRY_CAST then range-checks for the target type. A value the
+# pattern does not match passes through unchanged and TRY_CAST nulls it:
+# everything TRY_CAST accepts matches the pattern. Backslashes are doubled
+# for the SQL string literal.
+_LEGACY_INTEGRAL = (
+    r"^[\\x00-\\x20\\x7F]*(?![+-]?[\\x00-\\x20\\x7F]*$)"
+    r"([+-]?)([0-9]*)(?:\\.[0-9]*)?[\\x00-\\x20\\x7F]*$"
+)
 
 
 def _quoted(name: str) -> str:
@@ -48,7 +68,8 @@ def format_columns(
     but fused into a single ``selectExpr`` so Catalyst sees one projection
     node. Columns absent from the maps pass through untouched. ``casts`` keys
     are the *new* (post-rename) names; a value that does not parse as its
-    type becomes null (``TRY_CAST``).
+    type becomes null (``TRY_CAST``), and an integral target truncates a
+    fractional value as the legacy cast does.
     """
     renames = renames or {}
     casts = casts or {}
@@ -58,7 +79,14 @@ def format_columns(
         col = _quoted(c)
         if new in casts:
             ty = casts[new]
-            col = f"TRY_CAST({col} AS {ty.simpleString() if isinstance(ty, T.DataType) else ty})"
+            ty = ty.simpleString() if isinstance(ty, T.DataType) else ty
+            cast = f"TRY_CAST({col} AS {ty})"
+            if ty.lower() in _INTEGRAL:
+                # where the plain TRY_CAST succeeds it agrees with the legacy
+                # cast, so only the values it nulls pay for the pattern
+                legacy = f"regexp_replace({col}, '{_LEGACY_INTEGRAL}', '$10$2')"
+                cast = f"coalesce({cast}, TRY_CAST({legacy} AS {ty}))"
+            col = cast
         exprs.append(f"{col} AS {_quoted(new)}")
     return df.selectExpr(*exprs)
 

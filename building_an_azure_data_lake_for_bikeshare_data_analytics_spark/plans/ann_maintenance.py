@@ -436,71 +436,3 @@ def q251(spark, sf):
         .withColumn("recall_at_5", F.col("hits").cast("double") / F.lit(5))
         .orderBy("query_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# Index aging policy (r11). The r10 aging soak (tools/stress_index_aging.py,
-# SCALE_NOTES r10) established the failure mode of a stale quantizer under
-# corpus drift: recall HOLDS but probe COST inflates — shifted vectors
-# funnel into few cells, so occupancy skew (and with it the candidate
-# fraction a probe touches) climbs while the stored assignments stay
-# correct. The documented trigger was "refresh when occ_skew or cand_frac
-# exceeds ~3x its build value"; these functions make that a check the
-# maintenance path evaluates for free.
-# ---------------------------------------------------------------------------
-
-_HEALTH = "_HEALTH.json"
-
-
-def index_health(spark, store: str) -> dict:
-    """Free-at-maintenance-time health of a stored IVF cell table:
-    occupancy skew = max cell share of the stored rows. One grouped
-    count over the store (bounded collect: at most k cells — the same
-    bound as the centroid reads); no vector math, no query sample."""
-    from ..sources.versioned import read_current
-
-    rows = (
-        read_current(spark, store)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    total = sum(r["n"] for r in rows)
-    return {
-        "n_rows": int(total),
-        "n_cells": len(rows),
-        "occ_skew": (max(r["n"] for r in rows) / total) if total else 0.0,
-    }
-
-
-def record_health(store: str, health: dict) -> None:
-    """Persist the build-time health baseline as a tiny sidecar at the
-    store root (atomic rewrite; not part of any version's data, so plans
-    and oracles are unaffected)."""
-    import json
-
-    tmp = os.path.join(store, _HEALTH + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(health, f)
-    os.replace(tmp, os.path.join(store, _HEALTH))
-
-
-def stored_health(store: str) -> dict | None:
-    import json
-
-    p = os.path.join(store, _HEALTH)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def refresh_due(spark, store: str, factor: float = 3.0) -> tuple[bool, dict]:
-    """The aging trigger: True when the store's occupancy skew exceeds
-    ``factor`` x its recorded build-time value (no baseline -> never due;
-    record one at build). Returns (due, current_health) so callers can
-    log the evidence."""
-    base = stored_health(store)
-    cur = index_health(spark, store)
-    due = bool(base) and cur["occ_skew"] > factor * base["occ_skew"]
-    return due, cur

@@ -35,8 +35,7 @@ corpus with the exhaustive quadratic join + recursive CTE, so a green
 row certifies that incremental maintenance converged to the from-scratch
 answer — the invariant that lets a production pipeline never rebuild.
 
-Measured CHEAPER, not just correct (r9 soak,
-``tools/stress_maintenance.py``, SCALE_NOTES "Maintenance lifecycle
+Measured CHEAPER, not just correct (SCALE_NOTES "Maintenance lifecycle
 soak (r9)"): with the stored signature table as the default candidate
 source, at 1M docs the per-batch update costs **0.19x the rebuild's
 write bytes** (4.1 vs 21.7 GB wr; the pre-r9 recompute fallback paid

@@ -280,8 +280,7 @@ def q213(spark, sf):
 
 def _margin_mutual_pairs(a, b):
     """The margin-mining pipeline over prepared sides a(va, ae, anrm) /
-    b(vb, be, bnrm) — exposed for the stress batch-size sweep
-    (tools/stress_evalmetrics.py)."""
+    b(vb, be, bnrm)."""
     cos = F.round(
         dot(F.col("ae"), F.col("be")) / (F.col("anrm") * F.col("bnrm")), 4
     )

@@ -40,11 +40,12 @@ everything from (a) the JSON files and (b) oracle-string identity:
      registry can silently outgrow: at 204 oracled queries the bound is
      5 (evidence at most 4 rounds old at close); it returns to 4 if the
      registry shrinks back under 200.
-  4. (overflow) when never-green registrations plus would-age-out
-     queries exceed the 50 slots, the NEWEST never-green entries are
-     deferred to lead the next round (they have no evidence that can go
-     stale; aged-out queries do, so the bound takes the slots) — the
-     same scheduling the late-r4 q178-q198 batch got. The checker fails
+  4. (overflow) when never-green registrations plus the round's
+     ``REVIEW_PINS`` and would-age-out queries exceed the 50 slots, the
+     NEWEST never-green entries are deferred to lead the next round
+     (they have no evidence that can go stale; aged-out queries do, so
+     the bound takes the slots) — the same scheduling the late-r4
+     q178-q198 batch got. The checker fails
      only when the would-age-out set ALONE exceeds 50: then no deferral
      can save the bound and the registry must shrink (the computed
      bound makes capacity track the registry, so this fires only on
@@ -87,9 +88,9 @@ GATE_SLOTS = 50
 #: and the interim coverage is builder-side twin tests only. A pin spends
 #: a slot on that independent hash in the named round; the deterministic
 #: scheduler and its checker both consume this table, so the policy stays
-#: data + code (pins displace only rule-2 slack, never rule 1 or the
-#: staleness cohort — check() still fails if a pin ever crowded out an
-#: aged-out query).
+#: data + code. Pins never displace the staleness cohort: like it, they
+#: reserve their slots under the overflow rule, which defers the newest
+#: never-green entries to the next round.
 REVIEW_PINS: dict[int, tuple[str, ...]] = {
     13: (
         "q123_pq_adc_rerank",
@@ -208,11 +209,12 @@ def build_prefix(
     queries in registry insertion order, then ascending effective-green
     round (insertion order tie-break).
 
-    Overflow rule: when never-green registrations plus would-age-out
-    queries exceed the k slots, the NEWEST never-green entries (registry
-    insertion order = registration order; new query modules import last)
-    are deferred — a brand-new query has no evidence that can go stale,
-    while an aged-out one does, so the staleness bound takes the slots.
+    Overflow rule: when never-green registrations plus this round's pins
+    and would-age-out queries exceed the k slots, the NEWEST never-green
+    entries (registry insertion order = registration order; new query
+    modules import last) are deferred — a brand-new query has no
+    evidence that can go stale, while an aged-out one does, so the
+    staleness bound takes the slots.
     Rule 1 makes every deferred query lead the next round's prefix; this
     is exactly how the late-r4 q178-q198 batch was scheduled into r5."""
     registry = registry if registry is not None else REGISTRY
@@ -236,9 +238,10 @@ def build_prefix(
         key=lambda q: (eff[q], order.index(q)),
     )
     floor = this_round - (staleness_bound(registry) - 1)
-    n_aged = sum(1 for q in rest if eff[q] < floor)
-    if len(never_self) + n_aged > k:
-        never_self = never_self[: max(0, k - n_aged)]
+    # pins sit ahead of the aged-out cohort in ``rest``, so both need slots
+    reserved = len({*pins, *(q for q in rest if eff[q] < floor)})
+    if len(never_self) + reserved > k:
+        never_self = never_self[: max(0, k - reserved)]
     return (never_self + rest)[:k]
 
 

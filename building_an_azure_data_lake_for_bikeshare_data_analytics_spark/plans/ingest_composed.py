@@ -56,9 +56,8 @@ composed lifecycle end-to-end: shared-scan derivation, stored-quantizer
 assignment, manifest appends, and store read-back all agree with the
 independent from-scratch definitions.
 
-Measured CHEAPER than the sum of independent updates in
-``tools/stress_shared_ingest.py`` (SCALE_NOTES r10): the shared scan
-pays tokenize once instead of four times.
+Measured CHEAPER than the sum of independent updates (SCALE_NOTES r10):
+the shared scan pays tokenize once instead of four times.
 
 Reference scope note: the reference notebook has no maintenance surface
 (SURVEY.md §2.6) — training-data-pipeline extension set.

@@ -176,7 +176,7 @@ def packed_store_lifecycle(spark, store: str, corpus, batch):
     versioned). ``corpus`` and ``batch`` are (doc_id, text) relations
     where every batch doc_id exceeds every corpus doc_id per shard (the
     append VALIDATES this, it is no longer assumed). Shared by the gated
-    head, tests, and tools/stress_packed_store.py."""
+    head and tests."""
     from ..sources.versioned import read_current, write_version
 
     write_version(

@@ -139,17 +139,10 @@ _PACKING_SQL = "WITH " + _packing_body("documents")
 _SPANS_SQL = "WITH " + _spans_body("documents")
 
 
-def packing_manifest(
-    docs,
-    nshards: int = _NSHARDS,
-    cap_toks: int = _SEQ_CAP,
-    base=None,
-    with_doc_bounds: bool = False,
-):
+def packing_manifest(docs, base=None, with_doc_bounds: bool = False):
     """The q253 plan body over an arbitrary (doc_id, text) relation —
-    shared by the gated head and tools/stress_packing.py (which scales
-    ``nshards`` with the corpus the way a deployment scales it with the
-    cluster).
+    shared by the gated head, the maintained stores and the composed
+    ingest.
 
     ``base`` (optional): a (shard, base_toks) relation of per-shard token
     offsets already packed — each shard's cumsum then CONTINUES from its
@@ -167,8 +160,8 @@ def packing_manifest(
     stored max per shard, see ``packed_store.packed_append``) instead of
     trusting it; the finalized relation drops them, so the gated heads'
     schemas are unchanged."""
-    cap = F.lit(cap_toks)
-    s = _span_stage(docs, nshards, cap_toks, base)
+    cap = F.lit(_SEQ_CAP)
+    s = _span_stage(docs, base)
     aggs = [
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(
@@ -188,7 +181,7 @@ def packing_manifest(
     )
 
 
-def _span_stage(docs, nshards: int, cap_toks: int, base=None):
+def _span_stage(docs, base=None):
     """The shared (doc x sequence) crossing stage of the packing family:
     per-shard doc_id-ordered token cumsum, then the boundary explode —
     one row per sequence a doc touches, carrying (shard, doc_id, n_toks,
@@ -212,7 +205,7 @@ def _span_stage(docs, nshards: int, cap_toks: int, base=None):
     )
     t = docs.select(
         "doc_id",
-        F.pmod(F.col("doc_id"), F.lit(nshards)).cast("int").alias("shard"),
+        F.pmod(F.col("doc_id"), F.lit(_NSHARDS)).cast("int").alias("shard"),
         F.greatest(n_toks, F.lit(0)).alias("n_toks"),
     ).where(F.col("n_toks") > 0)
     w = (
@@ -235,7 +228,7 @@ def _span_stage(docs, nshards: int, cap_toks: int, base=None):
             )
             .drop("base_toks")
         )
-    cap = F.lit(cap_toks)
+    cap = F.lit(_SEQ_CAP)
     return c.select(
         "shard",
         "doc_id",
@@ -250,7 +243,7 @@ def _span_stage(docs, nshards: int, cap_toks: int, base=None):
     )
 
 
-def packing_spans(docs, nshards: int = _NSHARDS, cap_toks: int = _SEQ_CAP, base=None):
+def packing_spans(docs, base=None):
     """The LOADER-facing packing relation: one row per (doc x sequence)
     crossing with the exact token slice — (shard, seq_id, doc_id,
     seq_off: where in the sequence the slice starts, doc_off: where in
@@ -262,11 +255,11 @@ def packing_spans(docs, nshards: int = _NSHARDS, cap_toks: int = _SEQ_CAP, base=
     are PER-DOC facts, so a batch's spans (continued offsets, ``base``)
     are purely additive — the q260 store appends them with no row ever
     rewritten."""
-    cap = F.lit(cap_toks)
+    cap = F.lit(_SEQ_CAP)
     cut_lo = F.greatest(F.col("tok_start"), F.col("seq") * cap)
     cut_hi = F.least(F.col("tok_start") + F.col("n_toks"), (F.col("seq") + 1) * cap)
     return (
-        _span_stage(docs, nshards, cap_toks, base)
+        _span_stage(docs, base)
         .select(
             "shard",
             F.col("seq").cast("bigint").alias("seq_id"),
@@ -368,7 +361,8 @@ def mixture_kept(docs, tok=None):
 
 def mixture_summary(docs, tok=None):
     """The q254 plan body over an arbitrary (doc_id, source, text)
-    relation — shared by the gated head and tools/stress_packing.py."""
+    relation — shared by the q254 head and q256, which passes rates
+    from the maintained census store as ``tok``."""
     d = docs.select(
         "doc_id", "source", token_count("text").cast("bigint").alias("n_toks")
     )
@@ -596,7 +590,7 @@ SELECT shard, seq_id,
 FROM sp GROUP BY shard, seq_id ORDER BY shard, seq_id"""
 
 
-def packed_boundaries(docs, nshards: int = _NSHARDS, cap_toks: int = _SEQ_CAP):
+def packed_boundaries(docs):
     """Per packed sequence, the ordered SEGMENT LAYOUT: the seq_off at
     which each document piece begins, comma-joined in splice (doc_id)
     order. Packing concatenates unrelated documents into one sequence;
@@ -605,7 +599,7 @@ def packed_boundaries(docs, nshards: int = _NSHARDS, cap_toks: int = _SEQ_CAP):
     from exactly these boundary offsets. One hash-agg over the span
     relation; the layout ships as a CSV string so the cross-engine
     value compare is exact (no list-typed hashing)."""
-    return boundaries_from_spans(packing_spans(docs, nshards, cap_toks))
+    return boundaries_from_spans(packing_spans(docs))
 
 
 def boundaries_from_spans(spans):

@@ -640,10 +640,9 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
     error. Every quantity is an exact integer until the one final division.
 
     Scale shape: per-key counts are partial-aggregated map-side before the
-    key shuffle; in estimation-only mode the h < theta filter prunes ~98.4%
-    of keys BEFORE the join exchange (predicate on the build of the hash —
-    pushes to the scan), which is the whole point: the estimate costs a
-    64th of the join it prices."""
+    key shuffle. An estimation-only plan would apply the h < theta filter
+    to raw rows on both sides, pruning ~98.4% of keys before the join
+    exchange, so the estimate costs a 64th of the join it prices."""
     o = _t(spark, sf, "orders")
     ev = _t(spark, sf, "events")
     a = (
@@ -660,37 +659,6 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
         F.round(
             (F.lit(float(_JS_RATE)) * sampled - F.sum("pairs")) / F.sum("pairs"), 6
         ).alias("rel_err"),
-    )
-
-
-def join_size_estimate_sampled(spark: SparkSession, sf: str) -> DataFrame:
-    """The production (estimation-only) shape of q176: the h < theta key
-    filter is applied to RAW rows on both sides BEFORE the per-key count
-    aggregates, so ~63/64ths of both tables are dropped map-side before any
-    exchange — the estimate costs a 64th of the join it prices. Returns one
-    row {est_pairs} that the q176 gate query's est_pairs must equal
-    (pinned in tests/test_profiling.py)."""
-    h_o = h60("o_custkey")
-    h_e = h60("user_id")
-    a = (
-        _t(spark, sf, "orders")
-        .where(h_o < _JS_THETA)
-        .groupBy(F.col("o_custkey").alias("k"))
-        .agg(F.count(F.lit(1)).alias("ca"))
-    )
-    b = (
-        _t(spark, sf, "events")
-        .where(h_e < _JS_THETA)
-        .groupBy(F.col("user_id").alias("k"))
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-    return a.join(b, "k").agg(
-        (
-            F.lit(_JS_RATE)
-            * F.coalesce(F.sum(F.col("ca") * F.col("cb")), F.lit(0))
-        )
-        .cast("long")
-        .alias("est_pairs")
     )
 
 

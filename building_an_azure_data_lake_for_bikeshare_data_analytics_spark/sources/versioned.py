@@ -22,8 +22,8 @@ pointer flip — runs under a per-store ``O_EXCL`` lockfile with stale-lock
 takeover, and validates against the version the writer based its work on:
 
 * ``append_version`` **commutes**: its manifest is rebuilt from whatever
-  ``_CURRENT`` names at commit time, so an append racing another append or
-  a ``compact`` is never lost — it reparents onto the latest version.
+  ``_CURRENT`` names at commit time, so an append racing another commit
+  is never lost — it reparents onto the latest version.
   Appends whose rows were DERIVED from store state (the packed-sequence
   store continues per-shard offsets read from the current version) do NOT
   commute semantically: they pass ``expected_base`` and get the same CAS
@@ -33,10 +33,6 @@ takeover, and validates against the version the writer based its work on:
   silently discard that commit, so it raises
   ``ConcurrentWriteError`` (Delta's ConcurrentAppendException posture) —
   the caller re-reads and retries.
-* ``compact`` is pure physical optimization: if appends landed while it
-  rewrote, it reparents (compacted snapshot + the newer delta parts); if a
-  full rewrite superseded the version it compacted, it abandons its
-  staging output and reports the store unchanged — never clobbering data.
 * ``vacuum`` runs under the same lock, and its unreferenced-``_parts``
   sweep skips directories younger than ``grace_seconds`` — an in-flight
   append writes its delta part BEFORE taking the lock, so a racing vacuum
@@ -283,8 +279,8 @@ def append_version(
     Concurrency: PURE appends commute, so by default this path never
     loses the race — the delta part lands under a unique name outside
     the lock, and the manifest is rebuilt at commit time from whatever
-    ``_CURRENT`` names THEN (reparenting over any append/compact that
-    landed while this batch materialized). Appends whose rows were
+    ``_CURRENT`` names THEN (reparenting over any commit that landed
+    while this batch materialized). Appends whose rows were
     DERIVED from store state do NOT commute: the packed-sequence store
     continues per-shard offsets read from the current version, so two
     such appends racing from the same base would silently double-fill
@@ -448,114 +444,6 @@ def read_version(spark: SparkSession, path: str, version: int) -> DataFrame:
         # later evolved append; write-time validation keeps removals loud
         out = out.unionByName(d, allowMissingColumns=True)
     return out
-
-
-def table_files(path: str, version: int | None = None) -> list[str]:
-    """Absolute paths of the parquet data files composing one version
-    (current by default) — the read-amplification metric ``compact``
-    exists to bound: a long append chain opens one file set per delta
-    part; a compacted snapshot opens one set total."""
-    v = current_version(path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    out: list[str] = []
-    for rel in _parts_of(path, v):
-        for root, _dirs, names in os.walk(os.path.join(path, rel)):
-            out.extend(
-                os.path.join(root, n)
-                for n in names
-                if n.endswith(".parquet") and not n.startswith(("_", "."))
-            )
-    return sorted(out)
-
-
-def compact(
-    spark: SparkSession,
-    path: str,
-    partition_by: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite the table's CURRENT logical contents as one full snapshot
-    version (Delta OPTIMIZE's role for the manifest store): a long-lived
-    store accumulates one small delta part per ``append_version`` plus
-    manifest indirection; compaction collapses the chain back to a
-    single snapshot directory, after which the existing ``vacuum`` rules
-    garbage-collect the superseded parts (nothing references them once
-    the pre-compact versions age out of the keep window).
-
-    Row multiset is unchanged (pinned in tests/test_versioned.py); this
-    is purely a physical-layout operation. Output file count is sized
-    from the chain's on-disk bytes / ``target_file_bytes`` (the same
-    small-file planning question q166 answers from metadata — here the
-    manifest IS the metadata), floored at one file; with
-    ``partition_by`` the rewrite instead hash-repartitions on the
-    partition keys so each partition directory lands as one file, and
-    partition pruning keeps working across the compaction.
-
-    Concurrency: compaction is purely physical, so a lost race never loses
-    rows — if appends landed while the snapshot was being rewritten, the
-    commit REPARENTS (manifest = compacted snapshot + the delta parts
-    added since); if a full rewrite superseded the compacted version, the
-    staging output is abandoned and the store left as the rewrite made it
-    (returning that current version)."""
-    cur = current_version(path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    df = read_version(spark, path, cur)
-    if partition_by:
-        # keyed REBALANCE (r13, same as write_version): ~one file per
-        # partition directory from AQE-sized write tasks; a skewed key
-        # splits across tasks instead of serializing its directory
-        df = df.hint("rebalance", *partition_by)
-    else:
-        import math
-
-        total = sum(os.path.getsize(f) for f in table_files(path, cur))
-        df = df.coalesce(max(1, math.ceil(total / target_file_bytes)))
-    # write-then-commit: the snapshot materializes fully in a staging
-    # directory before any metadata changes, so this is safe even though
-    # df reads the table's current version
-    staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    return _commit_compact(path, staging, cur)
-
-
-def _commit_compact(path: str, staging: str, base: int) -> int:
-    """CAS commit of a compacted snapshot staged at ``staging`` that holds
-    the full logical contents of version ``base``. Split out from
-    ``compact`` so the race window (appends/rewrites landing between the
-    snapshot read and the commit) is directly testable."""
-    with writer_lock(path):
-        cur = current_version(path)
-        if cur == base:
-            version = _next_version(path, cur)
-            os.rename(staging, os.path.join(path, f"{_PREFIX}{version}"))
-            _flip_pointer(path, version)
-            return version
-        base_parts = set(_parts_of(path, base)) if cur is not None else set()
-        cur_parts = _parts_of(path, cur) if cur is not None else []
-        if cur is None or not base_parts.issubset(cur_parts):
-            # a full rewrite superseded the version we compacted: our
-            # snapshot no longer describes the table — abandon, keep theirs
-            shutil.rmtree(staging, ignore_errors=True)
-            if cur is None:
-                raise FileNotFoundError(
-                    f"compact: store at {path} vanished during the rewrite"
-                )
-            return cur
-        # only appends landed meanwhile: reparent — compacted snapshot
-        # replaces base's parts, the newer delta parts ride on top
-        version = _next_version(path, cur)
-        os.makedirs(os.path.join(path, _PARTS_DIR), exist_ok=True)
-        comp_rel = os.path.join(_PARTS_DIR, f"c{version}_{uuid.uuid4().hex[:8]}")
-        os.rename(staging, os.path.join(path, comp_rel))
-        newer = [p for p in cur_parts if p not in base_parts]
-        _write_manifest(path, version, [comp_rel] + newer)
-        _flip_pointer(path, version)
-        return version
 
 
 def vacuum(path: str, keep: int = 2, grace_seconds: float = 300.0) -> list[int]:

@@ -1,30 +1,9 @@
-"""Catalog sinks (S2/S3/S5) and the reference's decimal widening (A7)."""
+"""The reference's decimal widening (A7)."""
 
 import decimal
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.writers import (
-    drop_table_if_exists,
-    overwrite_table,
-)
-
-
-def test_save_as_table_overwrite_and_drop(spark):
-    """S2/S3/S5: managed-table overwrite incl. schema change, then DROP."""
-    df1 = spark.createDataFrame([Row(a=1, b="x")])
-    overwrite_table(df1, "t_engine_test")
-    assert spark.table("t_engine_test").collect() == [Row(a=1, b="x")]
-    # overwrite with a different schema (the reference's overwriteSchema path)
-    df2 = spark.createDataFrame([Row(a=2, c=3.5)])
-    overwrite_table(df2, "t_engine_test")
-    out = spark.table("t_engine_test")
-    assert set(out.columns) == {"a", "c"}
-    drop_table_if_exists(spark, "t_engine_test")
-    assert "t_engine_test" not in [t.name for t in spark.catalog.listTables()]
-    drop_table_if_exists(spark, "t_engine_test")  # idempotent re-run (cell 3)
 
 
 def test_decimal_aggregate_widening_matches_reference(spark):
@@ -43,27 +22,3 @@ def test_decimal_aggregate_widening_matches_reference(spark):
     assert row["s"] == decimal.Decimal(19)
     assert row["a"] == decimal.Decimal("9.5000")
 
-
-def test_bucketed_join_needs_no_exchange(spark):
-    """Two tables bucketed on the join key must join without a runtime
-    shuffle: the plan may sort within buckets but contains no Exchange."""
-    from pyspark.sql import Row
-
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.writers import (
-        overwrite_bucketed_table,
-    )
-
-    a = spark.createDataFrame([Row(k=i, va=i * 2) for i in range(1000)])
-    b = spark.createDataFrame([Row(k=i % 100, vb=i) for i in range(2000)])
-    overwrite_bucketed_table(a, "t_bkt_a", ["k"], n_buckets=4, sort_cols=["k"])
-    overwrite_bucketed_table(b, "t_bkt_b", ["k"], n_buckets=4, sort_cols=["k"])
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
-    try:
-        joined = spark.table("t_bkt_a").join(spark.table("t_bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # co-located: no shuffle at query time
-        assert joined.count() == 2000  # every b row matches one a row
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS t_bkt_a")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_b")

@@ -62,6 +62,26 @@ def test_format_columns_renames_and_casts(spark):
     assert out.first()["id"] == 7
 
 
+def test_format_columns_integral_casts_match_the_legacy_cast(spark):
+    """An integral target parses its raw string as the reference's Spark
+    3.2 cast with ANSI off did: a fraction truncates ('9.5' -> 9), while
+    exponents, hex, overflow and junk become null."""
+    vals = ["9", "9.5", "-9.9", " 7 ", "1e3", "abc", "2147483648", "12.", "0x10", "+5"]
+    edges = ["", " ", "+", "-", ".", "-.5", "\t3\n", "007", "-2147483648", "9.5x",
+             "1 2", "- 5", "1.2.3", "128", "-128.7", "32768", "99999999999999999999", None]
+    df = spark.createDataFrame([(v,) for v in vals + edges], "v string")
+    types = ("int", "bigint", "smallint", "tinyint")
+    got = {ty: [r.v for r in format_columns(df, casts={"v": ty}).collect()] for ty in types}
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        want = {ty: [r.v for r in df.selectExpr(f"CAST(v AS {ty}) AS v").collect()] for ty in types}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want
+    assert got["int"][: len(vals)] == [9, 9, -9, 7, None, None, None, 12, None, 5]
+
+
 def test_format_bikeshare_payments_decimal_truncates(spark):
     # bare decimal = DecimalType(10,0): 9.99 -> 10 (reference's cents-rounding
     # behavior, SURVEY.md §1.2)

@@ -156,51 +156,6 @@ def test_pq_code_table_three_batch_chain(spark, tmp_path):
     assert len(_rows(got)) > 0
 
 
-def test_lexical_chain_compact_equals_scratch(spark, tmp_path):
-    """v1 + 2 appends + compact == from-scratch: compaction collapses the
-    manifest chain to one snapshot without changing the logical index,
-    and the post-compact store keeps answering identically."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.lexical_maintenance import (
-        batch_bm25_from_tables,
-        index_rows,
-    )
-
-    docs = _docs(spark).select("doc_id", "text")
-    t1, t2, t3 = _tranches(docs)
-    tf_p, dl_p = str(tmp_path / "ctf"), str(tmp_path / "cdl")
-
-    tf1, dl1 = index_rows(t1)
-    V.write_version(tf1, tf_p)
-    V.write_version(dl1, dl_p)
-    for t in (t2, t3):
-        tf_b, dl_b = index_rows(t)
-        V.append_version(tf_b, tf_p)
-        V.append_version(dl_b, dl_p)
-
-    files_chain = len(V.table_files(tf_p))
-    want = _rows(
-        batch_bm25_from_tables(
-            V.read_current(spark, tf_p), V.read_current(spark, dl_p)
-        )
-    )
-    V.compact(spark, tf_p)
-    V.compact(spark, dl_p)
-    V.vacuum(tf_p, keep=1)
-    V.vacuum(dl_p, keep=1)
-
-    tf_all, dl_all = index_rows(docs)
-    assert _rows(V.read_current(spark, tf_p)) == _rows(tf_all)
-    assert _rows(V.read_current(spark, dl_p)) == _rows(dl_all)
-    # physically fewer files, same answers through the consumer path
-    assert len(V.table_files(tf_p)) < files_chain
-    got = _rows(
-        batch_bm25_from_tables(
-            V.read_current(spark, tf_p), V.read_current(spark, dl_p)
-        )
-    )
-    assert got == want and len(got) > 0
-
-
 def test_ivf_drift_chain_recall_machinery(spark, tmp_path):
     """Index aging (r10): a 3-append chain whose later batches come from
     SHIFTED embedding distributions (reverse / negate — orthogonal
@@ -210,8 +165,8 @@ def test_ivf_drift_chain_recall_machinery(spark, tmp_path):
     same centroids (append correctness is drift-independent), and
     (b) q251's recall machinery yields a valid per-step curve, with the
     refreshed (retrained) index recovering at least the stale index's
-    recall on the drifted queries. The measured decay curve at scale
-    lives in SCALE_NOTES (tools/stress_index_aging.py)."""
+    recall on the drifted queries. The decay curve once measured at
+    scale is recorded in SCALE_NOTES."""
     from pyspark.sql import functions as F
 
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.similarity import (
@@ -277,48 +232,3 @@ def test_ivf_drift_chain_recall_machinery(spark, tmp_path):
     nq3 = qs3.count()
     r_fresh = exact3.join(fresh, ["query_id", "neighbor_id"]).count() / (nq3 * 5)
     assert r_fresh >= recalls[-1] - 1e-9, (r_fresh, recalls)
-
-
-def test_ivf_refresh_trigger_fires_on_drift(spark, tmp_path):
-    """The r11 aging trigger: build a store on clustered vectors and record
-    its health baseline; drift-append a batch that funnels into few cells
-    through the stale centroids (occ_skew inflates); refresh_due flips."""
-    from pyspark.sql import functions as F
-
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.similarity import (
-        assign_cells,
-        kmeans_fit,
-    )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-        index_health,
-        record_health,
-        refresh_due,
-        stored_health,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    half = F.col("vec_id") % 2
-    v1_side = emb.where(half == 0)
-    # the drifted batch: a large constant shift collapses its spread
-    # relative to the v1 centroids -> most of it lands in ONE stale cell
-    batch = emb.where(half == 1).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x * 0 + F.lit(9.0))
-        .cast("array<float>")
-        .alias("embedding"),
-    )
-    p = str(tmp_path / "refresh")
-    cents_v1 = kmeans_fit(v1_side, k=8, max_iter=6)
-    V.write_version(assign_cells(v1_side, cents_v1), p, partition_by=["cell"])
-    record_health(p, index_health(spark, p))
-    base = stored_health(p)
-    assert base is not None and 0 < base["occ_skew"] < 1
-
-    due0, _ = refresh_due(spark, p, factor=3.0)
-    assert not due0  # healthy at build
-
-    V.append_version(assign_cells(batch, cents_v1), p, partition_by=["cell"])
-    due1, cur1 = refresh_due(spark, p, factor=3.0)
-    assert due1 and cur1["occ_skew"] > 3.0 * base["occ_skew"], (base, cur1)

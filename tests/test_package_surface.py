@@ -4,13 +4,19 @@ A static scan, no Spark session: every public, undecorated top-level
 function or class in the package must be referenced by name somewhere in
 the package, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``,
 outside its own definition. A reference is a Name, an Attribute, an
-import alias or a string constant equal to the name. Registered ``qNN``
-queries are decorated, so the registry is their reference.
+import alias or a string constant equal to the name. A package
+``__init__.py`` re-export (its imports and ``__all__``) is not a use.
+Registered ``qNN`` queries are decorated, so the registry is their
+reference.
 
 Code kept on purpose for tests or tools goes in ``ALLOWED`` with a reason.
+
+The same scan guards ``tools/``: every script there is named in the
+verify skill, and its imports (of sibling scripts included) resolve.
 """
 
 import ast
+import importlib.util
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -18,13 +24,7 @@ PACKAGE = "building_an_azure_data_lake_for_bikeshare_data_analytics_spark"
 
 ALLOWED = {
     "plans.extensions.exhaustive_jaccard_pairs": "exact-Jaccard test oracle in tests/test_dedup_similarity.py",
-    "plans.profiling.join_size_estimate_sampled": "used by tools/stress_profiling.py",
-    "operators.graph.connected_components_star": "used by tools/stress_graph.py",
-    "sources.writers.overwrite_bucketed_table": "used by tools/stress_maintenance.py",
-    "sources.writers.drop_table_if_exists": "used by tools/stress_maintenance.py",
-    "sources.versioned.compact": "used by tools/stress_store_layout.py",
-    "plans.ann_maintenance.record_health": "used by tools/stress_index_aging.py",
-    "plans.ann_maintenance.refresh_due": "used by tools/stress_index_aging.py",
+    "operators.graph.connected_components_star": "used by tools/stress_graph.py and tests/test_training.py",
 }
 
 
@@ -54,6 +54,16 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
+def _is_reexport(stmt: ast.stmt) -> bool:
+    """An import or ``__all__`` assignment: how a package ``__init__.py``
+    re-exports a name without using it."""
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return True
+    return isinstance(stmt, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
+    )
+
+
 def unreferenced() -> list[str]:
     """Dotted names (relative to the package) of public, undecorated
     top-level definitions that nothing outside their own body names."""
@@ -67,6 +77,8 @@ def unreferenced() -> list[str]:
         module = rel[:-3].replace(os.sep, ".")
         for stmt in tree.body:
             sid += 1
+            if os.path.basename(path) == "__init__.py" and _is_reexport(stmt):
+                continue
             for name in _names(stmt):
                 refs.setdefault(name, set()).add(sid)
             if (
@@ -90,3 +102,33 @@ def test_allowlist_names_live_unused_definitions():
     """An allowlist entry whose definition is gone, or that gained a real
     caller, is stale."""
     assert sorted(ALLOWED) == sorted(set(ALLOWED) & set(unreferenced()))
+
+
+def test_every_tool_is_named_by_the_verify_skill_and_its_imports_resolve():
+    """A script under ``tools/`` that the verify skill does not name is run
+    by nothing; a kept tool importing a deleted sibling fails only when
+    someone runs it."""
+    tools = os.path.join(ROOT, "tools")
+    with open(os.path.join(ROOT, ".claude", "skills", "verify", "SKILL.md")) as f:
+        skill = f.read()
+    scripts = sorted(f for f in os.listdir(tools) if f.endswith(".py"))
+    unnamed = [s for s in scripts if f"tools/{s}" not in skill]
+    assert not unnamed, f"tools the verify skill does not name: {unnamed}"
+    broken = []
+    for s in scripts:
+        with open(os.path.join(tools, s)) as f:
+            tree = ast.parse(f.read(), s)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.level == 0:
+                mods = [n.module]
+            elif isinstance(n, ast.Import):
+                mods = [a.name for a in n.names]
+            else:
+                continue
+            for top in {m.split(".")[0] for m in mods}:
+                # a sibling script, or else an installed or repo-root module
+                if not os.path.exists(os.path.join(tools, f"{top}.py")) and (
+                    importlib.util.find_spec(top) is None
+                ):
+                    broken.append(f"{s}: {top}")
+    assert not broken, f"tools importing a module that does not exist: {broken}"

@@ -16,7 +16,6 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.profil
     _MAD_C,
     _MAD_CUT,
     _SNM_MAXDIST,
-    join_size_estimate_sampled,
 )
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import QUERIES
 
@@ -234,21 +233,6 @@ def test_join_size_exact_matches_duckdb(spark):
             JOIN '{SF_SMOKE}/events.parquet' e ON o.o_custkey = e.user_id"""
     ).fetchone()[0]
     assert r["exact_pairs"] == want
-
-
-def test_join_size_sampled_shape_and_value(spark):
-    """The estimation-only path must (a) reproduce the gate query's
-    est_pairs exactly — same hash, same theta — and (b) carry the key
-    filters BELOW the count aggregates so ~63/64 of rows die map-side."""
-    gate = QUERIES["q176_join_size_estimate"](spark, SF_SMOKE).collect()[0]
-    df = join_size_estimate_sampled(spark, SF_SMOKE)
-    assert df.collect()[0]["est_pairs"] == gate["est_pairs"]
-    tree = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    ).split("\n\n")[0]
-    # one Filter per scan branch, sitting under the aggregates
-    assert tree.count("Filter") >= 2
-    assert tree.count("Scan parquet") == 2
 
 
 def test_join_size_estimate_python_reference(spark):

@@ -623,7 +623,6 @@ _store_op = st.one_of(
     st.tuples(st.just("append"), _store_rows),
     st.tuples(st.just("evolve"), _store_rows),
     st.tuples(st.just("rewrite"), _store_rows),
-    st.tuples(st.just("compact"), st.just(None)),
     st.tuples(st.just("vacuum"), st.just(None)),
 )
 
@@ -633,7 +632,7 @@ _store_op = st.one_of(
 def test_versioned_store_random_op_sequences(spark, ops, tmp_path_factory):
     """Stateful property: ANY sequence of versioned-store operations —
     plain appends, evolved appends (add column x), full rewrites (schema
-    resets), compactions, vacuums — must keep read_current equal to a
+    resets), vacuums — must keep read_current equal to a
     pure-Python model of the row multiset and live schema, and a plain
     append AFTER the schema evolved must raise (the write-time contract)
     while leaving the store untouched. This is the randomized twin of
@@ -684,8 +683,6 @@ def test_versioned_store_random_op_sequences(spark, ops, tmp_path_factory):
             V.write_version(df, p)
             model = add
             evolved = False
-        elif op == "compact":
-            V.compact(spark, p)
         elif op == "vacuum":
             V.vacuum(p, keep=1)
 

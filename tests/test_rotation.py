@@ -10,6 +10,7 @@ than the staleness bound. No SparkSession needed.
 import pytest
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans import evidence
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.base import QuerySpec
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
     PREFIX_ROUND,
     REGISTRY,
@@ -113,9 +114,25 @@ def test_never_green_queries_lead_the_prefix():
         twins = evidence.oracle_twin_groups()
         eff = evidence.effective_green(green, twins)
         floor = this_round - (evidence.staleness_bound() - 1)
-        n_aged = sum(1 for q in oracled if q in green and eff[q] < floor)
+        aged = {q for q in oracled if q in green and eff[q] < floor}
+        n_reserved = len(aged | set(evidence.REVIEW_PINS.get(this_round, ())))
         n_never_kept = len(set(never) & set(_PRIORITY))
-        assert n_aged + n_never_kept >= evidence.GATE_SLOTS, (
+        assert n_reserved + n_never_kept >= evidence.GATE_SLOTS, (
             f"{deferred} deferred while the prefix had free non-mandatory "
-            f"slots ({n_aged} aged + {n_never_kept} never-green kept)"
+            f"slots ({n_reserved} aged or pinned + {n_never_kept} never-green kept)"
         )
+
+
+def test_pins_never_push_an_aged_query_out_of_the_prefix(monkeypatch):
+    """Three never-green queries, one aged-out query and one pin compete
+    for four slots: the pin and the aged query both keep a slot, and the
+    newest never-green query is deferred to the next round."""
+    reg = {
+        q: QuerySpec(q, None, f"SELECT '{q}'")
+        for q in ("n1", "n2", "n3", "aged", "fresh", "pinned")
+    }
+    green = {"aged": [5], "fresh": [9], "pinned": [9]}
+    monkeypatch.setattr(evidence, "REVIEW_PINS", {10: ("pinned",)})
+    # round 10 under the bound of 4: evidence older than round 7 ages out
+    prefix = evidence.build_prefix(reg, green, k=4, this_round=10)
+    assert prefix == ["n1", "n2", "pinned", "aged"]

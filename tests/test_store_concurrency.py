@@ -1,9 +1,7 @@
 """Concurrent-writer safety on the versioned store: the _CURRENT flip is
-a CAS under a per-store writer lock, appends reparent (commute), compact
-reparents over appends and abandons after rewrites, vacuum's grace
-window protects in-flight delta parts. The scenario that motivated all
-of this (r10 verdict): a ``compact()`` racing a streaming append must
-not silently drop the appended batch."""
+a CAS under a per-store writer lock, appends reparent (commute) over a
+racing commit, and vacuum's grace window protects in-flight delta
+parts."""
 
 import os
 import threading
@@ -20,43 +18,6 @@ def _ids(spark, lo, hi):
 
 def _all_ids(spark, p):
     return sorted(r["id"] for r in V.read_current(spark, p).collect())
-
-
-def test_compact_reparents_over_racing_append(spark, tmp_path):
-    """THE race: compact snapshots version k, an append lands k+1 before
-    compact commits. The commit must reparent (snapshot + the newer delta
-    part), not flip past the append — zero rows lost."""
-    p = str(tmp_path / "race")
-    V.write_version(_ids(spark, 0, 10), p)
-    V.append_version(_ids(spark, 10, 20), p)  # v2 — compact's base
-    base = V.current_version(p)
-    # compact phase 1: materialize the snapshot of v2 into staging
-    staging = os.path.join(p, "_staging_test")
-    V.read_version(spark, p, base).coalesce(1).write.parquet(staging)
-    # the racing append lands AFTER the snapshot read, BEFORE the commit
-    V.append_version(_ids(spark, 20, 30), p)  # v3
-    v = V._commit_compact(p, staging, base)
-    assert v == 4
-    assert _all_ids(spark, p) == list(range(30))  # nothing dropped
-    # the committed manifest carries the compacted part plus the newer delta
-    parts = V._parts_of(p, v)
-    assert len(parts) == 2 and parts[0].startswith("_parts/c4_")
-
-
-def test_compact_abandons_after_racing_rewrite(spark, tmp_path):
-    """If a full write_version superseded the version compact read, the
-    staged snapshot no longer describes the table: compact must abandon
-    its output and leave the rewrite untouched."""
-    p = str(tmp_path / "rw")
-    V.write_version(_ids(spark, 0, 10), p)
-    base = V.current_version(p)
-    staging = os.path.join(p, "_staging_test")
-    V.read_version(spark, p, base).coalesce(1).write.parquet(staging)
-    V.write_version(_ids(spark, 100, 105), p)  # racing full rewrite -> v2
-    v = V._commit_compact(p, staging, base)
-    assert v == 2  # the rewrite's version, unchanged
-    assert _all_ids(spark, p) == list(range(100, 105))
-    assert not os.path.exists(staging)  # staging abandoned, not leaked
 
 
 def test_write_version_cas_conflict_raises(spark, tmp_path):
@@ -96,24 +57,6 @@ def test_concurrent_appends_both_survive(spark, tmp_path):
     assert _all_ids(spark, p) == (
         list(range(10)) + list(range(100, 110)) + list(range(200, 210))
     )
-
-
-def test_append_reparents_over_compact(spark, tmp_path):
-    """The mirror race: an append whose base was compacted away mid-flight
-    commits against the compacted current — still no loss."""
-    p = str(tmp_path / "apc")
-    V.write_version(_ids(spark, 0, 10), p)
-    V.append_version(_ids(spark, 10, 20), p)
-    # simulate the append's pre-lock phase: its delta part already on disk
-    part_rel = os.path.join(V._PARTS_DIR, "p3_testpart")
-    _ids(spark, 20, 30).write.parquet(os.path.join(p, part_rel))
-    V.compact(spark, p)  # v3: plain snapshot of v2
-    # append's commit phase: manifest rebuilt from the NEW current
-    with V.writer_lock(p):
-        cur = V.current_version(p)
-        V._write_manifest(p, cur + 1, V._parts_of(p, cur) + [part_rel])
-        V._flip_pointer(p, cur + 1)
-    assert _all_ids(spark, p) == list(range(30))
 
 
 def test_writer_lock_blocks_then_times_out(tmp_path):

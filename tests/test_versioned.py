@@ -113,78 +113,6 @@ def test_append_version_then_full_write_vacuum_gc_parts(spark, tmp_path):
     assert not parts_dir.exists() or not any(parts_dir.iterdir())
 
 
-def test_compact_collapses_append_chain(spark, tmp_path):
-    """compact(): v1 + N appends + compact reads back row-multiset-equal
-    to the from-scratch union, as ONE plain snapshot (no manifest), with
-    strictly fewer data files than the chain — and vacuum can then GC
-    every superseded delta part."""
-    p = str(tmp_path / "cmp")
-    base = spark.createDataFrame([(i, f"r{i}") for i in range(50)], ["id", "s"])
-    V.write_version(base, p)
-    want_rows = [(i, f"r{i}") for i in range(50)]
-    for k in range(4):
-        lo = 100 + 10 * k
-        V.append_version(
-            spark.createDataFrame(
-                [(i, f"r{i}") for i in range(lo, lo + 10)], ["id", "s"]
-            ),
-            p,
-        )
-        want_rows += [(i, f"r{i}") for i in range(lo, lo + 10)]
-    files_before = len(V.table_files(p))
-    v = V.compact(spark, p)
-    assert v == 6  # v1 + 4 appends + the compaction snapshot
-    got = sorted(tuple(r) for r in V.read_current(spark, p).collect())
-    assert got == sorted(want_rows)
-    # one plain snapshot: no _PARTS manifest, fewer files than the chain
-    import os
-
-    vdir = tmp_path / "cmp" / f"_v{v}"
-    assert not (vdir / "_PARTS").exists()
-    files_after = len(V.table_files(p))
-    assert files_after < files_before
-    # time travel to the pre-compact chain still works until vacuumed
-    assert V.read_version(spark, p, 5).count() == 90
-    # once the chain ages out, its delta parts are reclaimable
-    V.vacuum(p, keep=1, grace_seconds=0)
-    parts_dir = tmp_path / "cmp" / "_parts"
-    assert not parts_dir.exists() or not any(parts_dir.iterdir())
-    assert sorted(tuple(r) for r in V.read_current(spark, p).collect()) == sorted(
-        want_rows
-    )
-
-
-def test_compact_preserves_partitioning(spark, tmp_path):
-    """A partitioned store compacts into one file per partition directory
-    and stays partition-discoverable (pruning keeps working)."""
-    p = str(tmp_path / "cmpp")
-    df = spark.createDataFrame(
-        [(i, i % 3, f"r{i}") for i in range(60)], ["id", "band", "s"]
-    )
-    V.write_version(df, p, partition_by=["band"])
-    V.append_version(
-        spark.createDataFrame(
-            [(i, i % 3, f"r{i}") for i in range(100, 130)], ["id", "band", "s"]
-        ),
-        p,
-        partition_by=["band"],
-    )
-    v = V.compact(spark, p, partition_by=["band"])
-    cur = V.read_current(spark, p)
-    assert cur.count() == 90
-    assert set(cur.columns) == {"id", "band", "s"}
-    # one file per band directory
-    import os
-
-    vdir = str(tmp_path / "cmpp" / f"_v{v}")
-    for b in (0, 1, 2):
-        bdir = os.path.join(vdir, f"band={b}")
-        files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
-        assert len(files) == 1, (b, files)
-    # partition filter still prunes to one directory's rows
-    assert cur.where("band = 1").count() == 30
-
-
 def test_append_schema_evolution_add_column(spark, tmp_path):
     """Evolved append: new column rides in O(batch); older rows read
     back null-filled; aggregates over the new column see batch rows only."""
@@ -223,35 +151,3 @@ def test_append_schema_removal_always_raises(spark, tmp_path):
             spark.createDataFrame([(2, "b", 1)], ["id", "s", "x"]), p
         )
     assert V.read_current(spark, p).count() == 1  # store untouched
-
-
-def test_compact_materializes_evolved_schema(spark, tmp_path):
-    """Evolution x compaction: compacting a chain whose later appends
-    EVOLVED the schema must produce a snapshot carrying the full evolved
-    schema with pre-evolution rows' new columns materialized as nulls —
-    the same logical contents the manifest chain read — and the
-    post-compact store must keep enforcing the contract both ways
-    (old-schema appends loud, evolved appends fine)."""
-    p = str(tmp_path / "evc")
-    V.write_version(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "s"]), p)
-    V.append_version(
-        spark.createDataFrame([(3, "c", 30)], ["id", "s", "x"]),
-        p,
-        allow_new_columns=True,
-    )
-    before = sorted(tuple(r) for r in V.read_current(spark, p).collect())
-
-    v = V.compact(spark, p)
-    after_df = V.read_current(spark, p)
-    assert sorted(tuple(r) for r in after_df.collect()) == before
-    assert set(after_df.columns) == {"id", "s", "x"}
-    # the compacted snapshot is ONE part: nulls are physical now
-    assert len(V._parts_of(p, v)) == 1
-
-    # contract still enforced against the compacted footers
-    with pytest.raises(ValueError, match="allow_new_columns"):
-        V.append_version(
-            spark.createDataFrame([(4, "d", 40, 1.0)], ["id", "s", "x", "y"]), p
-        )
-    V.append_version(spark.createDataFrame([(5, "e", 50)], ["id", "s", "x"]), p)
-    assert V.read_current(spark, p).count() == 4
