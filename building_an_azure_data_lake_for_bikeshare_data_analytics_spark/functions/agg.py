@@ -36,11 +36,11 @@ def exact_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     return F.sum(c.cast(DecimalType(18, scale))).cast("double").alias(alias)
 
 
-def exact_avg(col: Column | str, alias: str, scale: int = 2) -> Column:
+def exact_avg(col: Column | str, alias: str) -> Column:
     """Order-independent mean of a fixed-decimal measure, returned as double.
 
     exact decimal sum -> double, divided by count of non-null values: one
     deterministic IEEE division, identical in any engine.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(c.cast(DecimalType(18, scale))).cast("double") / F.count(c)).alias(alias)
+    return (F.sum(c.cast(DecimalType(18, 2))).cast("double") / F.count(c)).alias(alias)

@@ -24,12 +24,11 @@ optimization playbook:
   1.40 s, the index builds +8 s, and a broad per-query drag). Two fixes:
 
   1. **Cost-based width.** The fanout target is ``ceil(est_bytes /
-     bytes_per_task)`` capped at the core count — one task per
-     ``bytes_per_task`` of compressed input, not one per core. The
-     default (16 KiB) is calibrated from the r12 profile of the
-     compute-dense heads (0.59 MB of documents cost ~8 s of tokenize
-     single-task, so 16 KiB ~ 0.2 s of downstream work per task); sites
-     whose per-byte work is lighter pass a larger ``bytes_per_task`` or
+     DENSE_BYTES_PER_TASK)`` capped at the core count — one task per
+     16 KiB of compressed input, not one per core. 16 KiB is calibrated
+     from the r12 profile of the compute-dense heads (0.59 MB of
+     documents cost ~8 s of tokenize single-task, so 16 KiB ~ 0.2 s of
+     downstream work per task); sites whose per-byte work is lighter
      skip the fanout entirely (``plans/base._ts`` defaults to NO fanout —
      a site opts in with ``fan=True`` plus measured evidence).
   2. **No JVM round-trip.** The r12 form called
@@ -78,17 +77,12 @@ from pyspark.sql import DataFrame
 DENSE_BYTES_PER_TASK = 16 * 1024
 
 
-def spread(
-    df: DataFrame,
-    est_bytes: int,
-    est_partitions: int,
-    bytes_per_task: int = DENSE_BYTES_PER_TASK,
-) -> DataFrame:
+def spread(df: DataFrame, est_bytes: int, est_partitions: int) -> DataFrame:
     """Cost-based round-robin fanout of a narrow scan — the
     unsplittable-input fix. Identity when the scan already has enough
     splits (every real-scale deployment: ``est_partitions`` >= cores) or
     when the input is too small to amortize the extra tasks (the fanout
-    target is one task per ``bytes_per_task`` of input, capped at the
+    target is one task per ``DENSE_BYTES_PER_TASK`` of input, capped at the
     core count — never "cores because cores").
 
     ``est_bytes``/``est_partitions`` come from the caller's file listing
@@ -104,7 +98,7 @@ def spread(
     cores = sc.defaultParallelism
     if est_partitions >= cores:
         return df
-    target = min(cores, max(1, -(-est_bytes // max(1, bytes_per_task))))
+    target = min(cores, max(1, -(-est_bytes // DENSE_BYTES_PER_TASK)))
     if target <= est_partitions:
         return df
     return df.repartition(target)

@@ -72,5 +72,5 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
+def cosine(a: Column, b: Column, dim: int | None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))

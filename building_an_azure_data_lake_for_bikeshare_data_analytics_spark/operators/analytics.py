@@ -37,9 +37,8 @@ def grouped_metric(
     df: DataFrame,
     group_cols: str | Sequence[str],
     aggs: Sequence[Column],
-    order_by: str | None = None,
-    ascending: bool = False,
-    limit: int | None = None,
+    order_by: str,
+    limit: int,
 ) -> DataFrame:
     """γ_{group}(df) with explicit agg columns, deterministic sort, top-k.
 
@@ -48,13 +47,12 @@ def grouped_metric(
     limit. ``aggs`` are pre-aliased Columns (multi-agg A3 falls out free).
     """
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    out = df.groupBy(*groups).agg(*aggs)
-    if order_by is not None:
-        metric = F.col(order_by).asc() if ascending else F.col(order_by).desc()
-        out = out.orderBy(metric, *[F.col(g).asc() for g in groups])
-    if limit is not None:
-        out = out.limit(limit)
-    return out
+    return (
+        df.groupBy(*groups)
+        .agg(*aggs)
+        .orderBy(F.col(order_by).desc(), *[F.col(g).asc() for g in groups])
+        .limit(limit)
+    )
 
 
 def analyze_fact(

@@ -37,14 +37,14 @@ BPE_MERGES = 8
 _WORD_RE = "^[a-z0-9]+$"
 
 
-def _word_counts(docs: DataFrame, text_col: str, top_words: int) -> DataFrame:
+def _word_counts(docs: DataFrame, top_words: int) -> DataFrame:
     """Distributed word-frequency table: one explode + one hash aggregate,
     then the bounded (freq desc, word asc) head — TakeOrderedAndProject,
     never a full sort."""
     from ..functions.text import tokens
 
     return (
-        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
+        docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("word"))
         .where(F.col("word").rlike(_WORD_RE))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -59,7 +59,6 @@ def _sym_string(word: str) -> str:
 
 def bpe_fit(
     docs: DataFrame,
-    text_col: str = "text",
     n_merges: int = BPE_MERGES,
     top_words: int = BPE_TOP_WORDS,
 ) -> list[tuple[str, str, int]]:
@@ -70,7 +69,7 @@ def bpe_fit(
     fused symbol (``⟨lr⟩``). Deterministic: exact integer pair counts,
     ties broken by the pair string ascending — bit-reproducible by the
     DuckDB oracle, which replays every iteration."""
-    rows = _word_counts(docs, text_col, top_words).collect()
+    rows = _word_counts(docs, top_words).collect()
     words = [(_sym_string(r["word"]), int(r["freq"])) for r in rows]
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):

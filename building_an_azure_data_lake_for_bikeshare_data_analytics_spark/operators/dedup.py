@@ -54,6 +54,11 @@ _CKPT_LEVEL = StorageLevel.DISK_ONLY
 MINHASH_P = (1 << 31) - 1
 _B2_MOD = 1 << 55
 
+#: the LSH shape every MinHash query and its DuckDB oracle share: 32
+#: hashes in 16 bands of 2 rows
+MINHASH_HASHES = 32
+MINHASH_BANDS = 16
+
 
 def _hash_bases(shingle: Column) -> tuple[Column, Column]:
     """Two independent md5-derived integer bases per shingle (cross-engine:
@@ -64,7 +69,7 @@ def _hash_bases(shingle: Column) -> tuple[Column, Column]:
     return b1, b2
 
 
-def minhash_signature(shingled: DataFrame, num_hashes: int = 32) -> DataFrame:
+def minhash_signature(shingled: DataFrame, num_hashes: int = MINHASH_HASHES) -> DataFrame:
     """(doc_id, shingle) -> one row per doc with ``h0..h{k-1}`` minhash cols.
 
     Each permutation j is simulated by the family ``(b1 + j*b2) mod P31``
@@ -89,9 +94,8 @@ def minhash_signature(shingled: DataFrame, num_hashes: int = 32) -> DataFrame:
 
 def minhash_lsh_candidates(
     docs_tokens: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) sharing >= 1 LSH band.
 
@@ -104,7 +108,7 @@ def minhash_lsh_candidates(
     steeper 4-rows-per-band curve trades recall at the 0.5 threshold for
     fewer false candidates; tune per corpus.
     """
-    sh = shingle_sets(docs_tokens, shingle_n)
+    sh = shingle_sets(docs_tokens)
     return _lsh_candidates_from_shingles(sh, num_hashes, bands)
 
 
@@ -162,9 +166,8 @@ def _lsh_candidates_from_shingles(
 
 def minhash_lsh_candidates_salted(
     docs_tokens: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
+    num_hashes: int = MINHASH_HASHES,
+    bands: int = MINHASH_BANDS,
     n_salts: int = 8,
 ) -> DataFrame:
     """``minhash_lsh_candidates`` with a salted band join — the STRUCTURAL
@@ -187,7 +190,7 @@ def minhash_lsh_candidates_salted(
     an n_salts-x replication of the (narrow) right band relation. Use when
     boilerplate-heavy corpora make band buckets degenerate; the plain
     variant + AQE is right for organic bucket-size distributions."""
-    sh = shingle_sets(docs_tokens, shingle_n)
+    sh = shingle_sets(docs_tokens)
     banded = _banded_signatures(sh, num_hashes, bands)
     a = banded.select(
         "doc_id", "band", "sig",
@@ -210,12 +213,7 @@ def minhash_lsh_candidates_salted(
     )
 
 
-def minhash_jaccard_estimates(
-    docs_tokens: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_jaccard_estimates(docs_tokens: DataFrame) -> DataFrame:
     """Per LSH-candidate pair, the MinHash Jaccard ESTIMATE next to the
     exact value — the sketch-calibration operator: est = (#agreeing
     signature components)/k, exact = |A∩B|/|A∪B| restricted to candidates.
@@ -233,9 +231,10 @@ def minhash_jaccard_estimates(
     consumers). No all-pairs stage anywhere: candidates come from band
     buckets, exact Jaccard joins only candidate pairs.
     """
-    sh = shingle_sets(docs_tokens, shingle_n).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    num_hashes = MINHASH_HASHES
+    sh = shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
     sigs = minhash_signature(sh, num_hashes).localCheckpoint(storageLevel=_CKPT_LEVEL)
-    banded = _bands_from_sigs(sigs, num_hashes, bands)
+    banded = _bands_from_sigs(sigs, num_hashes, MINHASH_BANDS)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -264,13 +263,7 @@ def minhash_jaccard_estimates(
     return est.join(exact, ["doc_a", "doc_b"])
 
 
-def lsh_verified_jaccard_pairs(
-    docs_tokens: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
+def lsh_verified_jaccard_pairs(docs_tokens: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact >=threshold Jaccard pairs, found the 100 TB way: LSH band
     candidates first, exact Jaccard computed ONLY on candidates.
 
@@ -285,8 +278,10 @@ def lsh_verified_jaccard_pairs(
     # the (doc, shingle) relation feeds three consumers (signature build +
     # both sides of the verify join); localCheckpoint materializes the
     # explode+distinct once instead of re-running its shuffle three times
-    sh = shingle_sets(docs_tokens, shingle_n).localCheckpoint(storageLevel=_CKPT_LEVEL)
-    cand = _lsh_candidates_from_shingles(sh, num_hashes, bands).select("doc_a", "doc_b")
+    sh = shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    cand = _lsh_candidates_from_shingles(sh, MINHASH_HASHES, MINHASH_BANDS).select(
+        "doc_a", "doc_b"
+    )
     return _verify_jaccard(cand, sh, threshold)
 
 
@@ -337,13 +332,7 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFra
     )
 
 
-def banded_signature_table(
-    docs_tokens: DataFrame | None = None,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def banded_signature_table(shingles: DataFrame) -> DataFrame:
     """The maintained LSH index artifact: (doc_id, band, sig) band-bucket
     rows, the relation a deployment PERSISTS next to the dedup index so
     per-batch maintenance never recomputes corpus-side signatures (the
@@ -352,10 +341,8 @@ def banded_signature_table(
     soak"). Deterministic given the md5-derived Carter-Wegman family, so
     the stored table is bit-stable across rebuilds.
 
-    Pass either ``docs_tokens`` (shingled here) or a pre-built distinct
-    ``shingles`` relation."""
-    sh = shingles if shingles is not None else shingle_sets(docs_tokens, shingle_n)
-    return _banded_signatures(sh, num_hashes, bands)
+    ``shingles`` is a pre-built distinct (doc_id, shingle) relation."""
+    return _banded_signatures(shingles, MINHASH_HASHES, MINHASH_BANDS)
 
 
 def cross_pairs_from_signature_table(
@@ -391,7 +378,6 @@ def cross_pairs_from_signature_table(
 def prefix_filter_jaccard_pairs(
     docs_tokens: DataFrame,
     threshold: float = 0.5,
-    shingle_n: int = 3,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact >=threshold Jaccard pairs via PPJoin-style prefix filtering
@@ -468,9 +454,7 @@ def prefix_filter_jaccard_pairs(
     sh = (
         shingles
         if shingles is not None
-        else shingle_sets(docs_tokens, shingle_n).localCheckpoint(
-            storageLevel=_CKPT_LEVEL
-        )
+        else shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
     )
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # the (df, shingle) dense rank is VOCABULARY-scale, so it must not run
@@ -529,20 +513,14 @@ def prefix_filter_jaccard_pairs(
     return _verify_jaccard(cand, enc.select("doc_id", F.col("sid").alias("shingle")), threshold)
 
 
-def _cross_side_verified_pairs(
-    sh: DataFrame,
-    side: DataFrame,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
+def _cross_side_verified_pairs(sh: DataFrame, side: DataFrame, threshold: float) -> DataFrame:
     """Exact >= threshold Jaccard pairs with endpoints on OPPOSITE sides
     of the ``side`` marker (doc_id, __new): LSH band candidates filtered
     to cross-side pairs BEFORE the exact verify, so same-side collisions
     cost nothing. Shared by incremental_near_dedup (batch survivor view)
     and incremental_cross_pairs (index-maintenance edge view)."""
     cand = (
-        _lsh_candidates_from_shingles(sh, num_hashes, bands)
+        _lsh_candidates_from_shingles(sh, MINHASH_HASHES, MINHASH_BANDS)
         .select("doc_a", "doc_b")
         .join(side.select(F.col("doc_id").alias("doc_a"), F.col("__new").alias("na")), "doc_a")
         .join(side.select(F.col("doc_id").alias("doc_b"), F.col("__new").alias("nb")), "doc_b")
@@ -555,11 +533,8 @@ def _cross_side_verified_pairs(
 def incremental_cross_pairs(
     docs_tokens: DataFrame,
     is_new: Column,
+    shingles: DataFrame,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-    shingles: DataFrame | None = None,
     corpus_banded: DataFrame | None = None,
 ) -> DataFrame:
     """The EDGE view of incremental dedup: exact (doc_a, doc_b, jaccard)
@@ -567,8 +542,8 @@ def incremental_cross_pairs(
     corpus — what a maintained pair/component index appends per ingest
     batch (q239). Cost is O(batch x collisions), never corpus x corpus.
 
-    ``shingles``: optional pre-built distinct (doc_id, shingle) relation
-    for ``docs_tokens`` (caller handles its persistence).
+    ``shingles``: the pre-built distinct (doc_id, shingle) relation for
+    ``docs_tokens`` (caller handles its persistence).
 
     ``corpus_banded``: optional STORED banded signature table for the
     existing-corpus side (``banded_signature_table`` output — the q245
@@ -580,31 +555,22 @@ def incremental_cross_pairs(
     "Maintenance lifecycle soak"). Returns the identical relation either
     way (pinned in tests/test_signature_maintenance.py) — without it the
     self-contained recompute path runs as the fallback."""
-    tagged = docs_tokens.select("doc_id", "ts", is_new.alias("__new"))
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_sets(tagged, shingle_n).localCheckpoint(storageLevel=_CKPT_LEVEL)
-    )
-    side = tagged.select("doc_id", "__new")
+    side = docs_tokens.select("doc_id", is_new.alias("__new"))
     if corpus_banded is not None:
-        batch_sh = sh.join(
+        batch_sh = shingles.join(
             side.where(F.col("__new")).select("doc_id"), "doc_id", "left_semi"
         )
-        batch_banded = _banded_signatures(batch_sh, num_hashes, bands)
+        batch_banded = _banded_signatures(batch_sh, MINHASH_HASHES, MINHASH_BANDS)
         return cross_pairs_from_signature_table(
-            corpus_banded, batch_banded, sh, threshold
+            corpus_banded, batch_banded, shingles, threshold
         )
-    return _cross_side_verified_pairs(sh, side, threshold, num_hashes, bands)
+    return _cross_side_verified_pairs(shingles, side, threshold)
 
 
 def incremental_near_dedup(
     docs_tokens: DataFrame,
     is_new: Column,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
     corpus_banded: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus — the production shape:
@@ -625,22 +591,22 @@ def incremental_near_dedup(
     cross-side candidates only, exact-Jaccard verify on candidates, then
     an anti-join to drop matched batch docs — identical output (pinned in
     tests/test_signature_maintenance.py). Docs too short to shingle
-    (< shingle_n tokens) carry no dedup evidence and are excluded by
+    (< 3 tokens) carry no dedup evidence and are excluded by
     contract (both engines drop them identically).
     """
     tagged = docs_tokens.select("doc_id", "ts", is_new.alias("__new"))
-    sh = shingle_sets(tagged, shingle_n).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    sh = shingle_sets(tagged).localCheckpoint(storageLevel=_CKPT_LEVEL)
     side = tagged.select("doc_id", "__new")
     if corpus_banded is not None:
         batch_sh = sh.join(
             side.where(F.col("__new")).select("doc_id"), "doc_id", "left_semi"
         )
-        batch_banded = _banded_signatures(batch_sh, num_hashes, bands)
+        batch_banded = _banded_signatures(batch_sh, MINHASH_HASHES, MINHASH_BANDS)
         matched = cross_pairs_from_signature_table(
             corpus_banded, batch_banded, sh, threshold
         )
     else:
-        matched = _cross_side_verified_pairs(sh, side, threshold, num_hashes, bands)
+        matched = _cross_side_verified_pairs(sh, side, threshold)
     # either endpoint of a verified cross pair may be the batch doc
     dropped = (
         matched.join(side.select(F.col("doc_id").alias("doc_a"), F.col("__new").alias("na")), "doc_a")
@@ -703,7 +669,6 @@ def simhash64(col: Column) -> Column:
 def prefix_filter_containment_pairs(
     docs_tokens: DataFrame,
     threshold: float = 0.9,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact >=threshold set-CONTAINMENT pairs: every directed (doc_a,
     doc_b) with ``|A ∩ B| / |A| >= t`` — doc_a's shingle set mostly inside
@@ -735,9 +700,7 @@ def prefix_filter_containment_pairs(
     # two shuffle consumers (frequency agg + dictionary join): checkpoint
     # so tokenize + explode + distinct runs once (same r12 fix as the
     # Jaccard kernel)
-    sh = shingle_sets(docs_tokens, shingle_n).localCheckpoint(
-        storageLevel=_CKPT_LEVEL
-    )
+    sh = shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     # the (df, shingle) dense rank is VOCABULARY-scale, so it must not run
     # as a single-partition window: distributed_row_number buckets by

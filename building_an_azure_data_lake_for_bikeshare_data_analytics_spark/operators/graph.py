@@ -40,6 +40,11 @@ from pyspark.storagelevel import StorageLevel
 #: relation (re-read every round) keeps the default memory-backed level.
 _ROUND_LEVEL = StorageLevel.DISK_ONLY
 
+#: PageRank damping and the decimal scale each iteration rounds to — read
+#: by ``pagerank`` and by q158's DuckDB oracle
+PAGERANK_DAMPING = 0.85
+PAGERANK_SCALE = 9
+
 
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
@@ -85,7 +90,7 @@ def connected_components(
 
 
 def connected_components_star(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 30
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
@@ -132,7 +137,7 @@ def connected_components_star(
         return out.distinct()
 
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(30):
         # LAZY checkpoints (r12): the signature aggregate below is the
         # round's only action — it materializes both star passes' state
         # in one job instead of three (same reasoning as min-label CC)
@@ -167,18 +172,16 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     n_iter: int = 5,
-    damping: float = 0.85,
-    scale: int = 9,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected edge list, deterministic
     enough to value-check cross-engine.
 
     Float PageRank is normally partition-order-dependent (the per-node sum
     of neighbor contributions is a float reduction). Here each iteration's
-    contribution pr(u)/deg(u) is rounded to ``scale`` decimals and summed
+    contribution pr(u)/deg(u) is rounded to ``PAGERANK_SCALE`` decimals and summed
     as an exact DECIMAL (associative, order-independent — the q145/q152
     exact-sum rule), then the damped update 0.15 + 0.85*s is one identical
-    IEEE expression, re-rounded to ``scale`` decimals. The quantization
+    IEEE expression, re-rounded to ``PAGERANK_SCALE`` decimals. The quantization
     error is bounded by deg*5e-10 per node per iteration — noise relative
     to PageRank's own fixed-point tolerance — and in exchange every engine
     (and every partitioning) computes the identical trajectory, so a DuckDB
@@ -209,6 +212,7 @@ def pagerank(
         .agg(F.count(F.lit(1)).alias("deg"))
         .select(F.col("a").alias("id"), "deg", F.lit(1.0).alias("pr"))
     )
+    damping, scale = PAGERANK_DAMPING, PAGERANK_SCALE
     base = 1.0 - damping
     for _ in range(n_iter):
         contrib = pr.join(e, pr.id == e.a).select(

@@ -23,10 +23,10 @@ from pyspark.sql.types import DecimalType
 from ..functions.text import tokens
 
 
-def lm_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lm_pairs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> one row per adjacent token pair (doc_id, w1, w2).
     Map-side: transform-over-indices with O(1) element_at, one generator."""
-    d = docs.select("doc_id", tokens(text_col).alias("ts"))
+    d = docs.select("doc_id", tokens("text").alias("ts"))
     return (
         d.where(F.size("ts") >= 2)
         .select(
@@ -43,7 +43,7 @@ def lm_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def lm_fit(
-    docs: DataFrame, text_col: str = "text", pairs: DataFrame | None = None
+    docs: DataFrame, pairs: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Train the add-one-smoothed bigram LM: returns (bigram counts
     (w1, w2, c12), unigram counts (w1, c1), vocab-size scalar (vsz)) —
@@ -51,10 +51,10 @@ def lm_fit(
     Pass a precomputed (possibly checkpointed) ``pairs`` relation to share
     it with downstream scoring (q138 does) — the counts are the ONE
     definition of the model either way."""
-    d = docs.select(tokens(text_col).alias("ts"))
+    d = docs.select(tokens("text").alias("ts"))
     toks = d.select(F.explode("ts").alias("t"))
     if pairs is None:
-        pairs = lm_pairs(docs, text_col)
+        pairs = lm_pairs(docs)
     bg = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     ug = toks.groupBy(F.col("t").alias("w1")).agg(F.count(F.lit(1)).alias("c1"))
     v = toks.agg(F.countDistinct("t").alias("vsz"))

@@ -26,12 +26,12 @@ from pyspark.sql import functions as F
 FEATURE_SCHEMA = "doc_id bigint, byte_len int, first_byte int, checksum bigint, decode_status string"
 
 
-def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_binary(docs: DataFrame) -> DataFrame:
     """documents -> (doc_id, blob: binary, meta: struct) — the canonical
     multimodal layout: payload opaque, metadata typed and prunable."""
     return docs.select(
         "doc_id",
-        F.encode(F.col(text_col), "utf-8").alias("blob"),
+        F.encode(F.col("text"), "utf-8").alias("blob"),
         F.struct(
             F.col("source"), F.col("n_chars"), F.lit("text/plain").alias("mime")
         ).alias("meta"),

@@ -56,32 +56,25 @@ def _half_away(x: float, nd: int) -> float:
     return math.floor(abs(x) * p + 0.5) / p * (1.0 if x >= 0 else -1.0)
 
 
-def probe_features(
-    emb: DataFrame,
-    dim: int = PROBE_DIM,
-    label_threshold: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """(vec_id, y, f1..f{dim}): y = 1.0 iff label < threshold, features =
+def probe_features(emb: DataFrame) -> DataFrame:
+    """(vec_id, y, f1..f{PROBE_DIM}): y = 1.0 iff label < 5, features =
     floor-quantized leading embedding dims (exact micro-units / 1e6)."""
-    y = F.when(F.col(label_col) < label_threshold, F.lit(1.0)).otherwise(F.lit(0.0))
+    y = F.when(F.col("label") < 5, F.lit(1.0)).otherwise(F.lit(0.0))
     feats = [
         (
-            F.floor(F.col(vec_col)[j].cast("double") * F.lit(float(QUANT_SCALE)))
+            F.floor(F.col("embedding")[j].cast("double") * F.lit(float(QUANT_SCALE)))
             / F.lit(float(QUANT_SCALE))
         ).alias(f"f{j + 1}")
-        for j in range(dim)
+        for j in range(PROBE_DIM)
     ]
-    return emb.select(F.col(id_col), y.alias("y"), *feats)
+    return emb.select(F.col("vec_id"), y.alias("y"), *feats)
 
 
-def _z(w: list[float], dim: int) -> Column:
+def _z(w: list[float]) -> Column:
     """The linear score w0 + w1*f1 + ... as a LEFT-ASSOCIATIVE chain —
     association order is part of the cross-engine contract."""
     z = F.lit(w[0])
-    for j in range(1, dim + 1):
+    for j in range(1, PROBE_DIM + 1):
         z = z + F.lit(w[j]) * F.col(f"f{j}")
     return z
 
@@ -91,24 +84,20 @@ def _sigma(z: Column) -> Column:
     return F.lit(0.5) + (F.lit(0.5) * z) / (F.lit(1.0) + F.abs(z))
 
 
-def logreg_probe_fit(
-    feats: DataFrame,
-    dim: int = PROBE_DIM,
-    iters: int = PROBE_ITERS,
-    lr: float = PROBE_LR,
-) -> list[float]:
-    """Fit the probe by ``iters`` full-batch GD steps over a
-    probe_features relation; returns the dim+1 weights (bias first).
+def logreg_probe_fit(feats: DataFrame) -> list[float]:
+    """Fit the probe by ``PROBE_ITERS`` full-batch GD steps over a
+    probe_features relation; returns the PROBE_DIM+1 weights (bias first).
 
     Each iteration runs ONE distributed aggregate (dim+1 exact decimal
     sums of floor-quantized gradient terms) and collects a single row;
     the weight update runs on the driver in the oracle's arithmetic
     (round-12 half-away on IEEE-identical doubles)."""
+    dim, lr = PROBE_DIM, PROBE_LR
     gs = float(GRAD_SCALE)
     n = feats.count()
     w = [0.0] * (dim + 1)
-    for _ in range(iters):
-        r = _sigma(_z(w, dim)) - F.col("y")
+    for _ in range(PROBE_ITERS):
+        r = _sigma(_z(w)) - F.col("y")
         aggs = [
             F.sum(F.floor(r * F.lit(gs)).cast(DecimalType(38, 0))).alias("g0")
         ] + [
@@ -125,13 +114,11 @@ def logreg_probe_fit(
     return w
 
 
-def logreg_probe_score(
-    feats: DataFrame, w: list[float], dim: int = PROBE_DIM
-) -> DataFrame:
+def logreg_probe_score(feats: DataFrame, w: list[float]) -> DataFrame:
     """Score a probe_features relation against fitted weights — map-only:
     (vec_id, label_true, score round-6, pred). pred thresholds the ROUNDED
     score so both engines decide on identical values."""
-    score = F.round(_sigma(_z(w, dim)), 6)
+    score = F.round(_sigma(_z(w)), 6)
     return feats.select(
         "vec_id",
         F.col("y").cast("int").alias("label_true"),

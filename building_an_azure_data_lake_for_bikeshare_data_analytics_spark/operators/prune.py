@@ -19,11 +19,12 @@ This is why the gate query using it (q102) carries a plain-join oracle —
 value equality proves the pruning is transparent.
 
 Cost model: the bitmap is ``m_bits`` bits = ``m_bits/64`` longs, bounded by
-the configured filter size, NEVER by the data. Collecting it to the driver
+the 2^20-bit size cap, NEVER by the data. Collecting it to the driver
 (the one ``collect()`` here) is the same bounded transfer Spark's
 InjectRuntimeFilter performs; m=2^16 is 8 KiB. Sizing: false-positive rate
-≈ (1 - e^(-k·n/m))^k — for n=50k keys at m=2^20, k=4 that's ~0.6%; scale m
-with the expected key count, it stays kilobytes-to-megabytes.
+≈ (1 - e^(-k·n/m))^k — for n=50k keys at m=2^20, k=4 that's ~0.6%;
+``bloom_bitmap`` scales m with the counted key set, so it stays
+kilobytes-to-megabytes.
 """
 
 from __future__ import annotations
@@ -33,19 +34,20 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: hash functions per key (k)
+_BLOOM_K = 4
 
-def _positions(key: Column, m_bits: int, k: int) -> list[Column]:
+
+def _positions(key: Column, m_bits: int) -> list[Column]:
     """k bit positions per key: xxhash64 of (key, salt j), mod m.
 
     xxhash64 is a JVM intrinsic (whole-stage-codegen'd); salting the hash
     input with j yields k effectively-independent hash functions.
     """
-    return [F.pmod(F.xxhash64(key, F.lit(j)), F.lit(m_bits)) for j in range(k)]
+    return [F.pmod(F.xxhash64(key, F.lit(j)), F.lit(m_bits)) for j in range(_BLOOM_K)]
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, m_bits: int | None = None, k: int = 4
-) -> list[int]:
+def bloom_bitmap(keys: DataFrame, key_col: str) -> list[int]:
     """Aggregate the key set into an m-bit Bloom bitmap (m/64 longs).
 
     Distributed build: explode each key's k positions, bucket by word index,
@@ -53,20 +55,17 @@ def bloom_bitmap(
     shuffle of at most m/64 groups). Only the finished bitmap rows are
     collected; the transfer is bounded by the bitmap size.
 
-    ``m_bits=None`` sizes the filter from a count of the build side:
-    ~16 bits/key (FP ≈ 0.2% at k=4), clamped to [2^12, 2^20]. The clamp
+    The filter is sized from a count of the build side: ~16 bits/key
+    (FP ≈ 0.2% at k=4), clamped to [2^12, 2^20]. The clamp
     ceiling keeps the planted literal at 16 K longs; past ~10^6 keys the
     bitmap stops being literal-sized — shard the filter by key range or
     fall back to Spark's runtime bloom rewrite (see module doc).
     """
-    if m_bits is None:
-        n = keys.count()
-        m_bits = 1 << max(12, min(20, (16 * max(n, 1) - 1).bit_length()))
-    if m_bits % 64:
-        raise ValueError("m_bits must be a multiple of 64")
+    n = keys.count()
+    m_bits = 1 << max(12, min(20, (16 * max(n, 1) - 1).bit_length()))
     n_words = m_bits // 64
     pos = keys.select(
-        F.explode(F.array(*_positions(F.col(key_col), m_bits, k))).alias("p")
+        F.explode(F.array(*_positions(F.col(key_col), m_bits))).alias("p")
     )
     # variable-distance shifts go through call_function: the pyspark wrapper
     # F.shiftleft only accepts a literal count
@@ -86,7 +85,7 @@ def bloom_bitmap(
     return [got.get(i, 0) for i in range(n_words)]
 
 
-def bloom_might_contain(key: Column, bitmap: list[int], k: int = 4) -> Column:
+def bloom_might_contain(key: Column, bitmap: list[int]) -> Column:
     """Membership-test Column: true iff all k bits for ``key`` are set.
 
     The bitmap rides the plan as an array literal (exactly how Spark's
@@ -106,7 +105,7 @@ def bloom_might_contain(key: Column, bitmap: list[int], k: int = 4) -> Column:
     # occurrence of the bitmap literal inside the lambda: k inlined copies
     # of a 2^20-bit bitmap were measured 8x slower (expression-tree size,
     # not per-row work, dominated)
-    pos = F.array(*_positions(key, m_bits, k))
+    pos = F.array(*_positions(key, m_bits))
     return F.forall(
         pos,
         lambda p: F.call_function(

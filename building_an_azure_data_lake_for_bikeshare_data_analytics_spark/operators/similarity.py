@@ -79,14 +79,13 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataF
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    planes: list[list[float]],
     k: int = 5,
-    planes: list[list[float]] | None = None,
     bands: int = 2,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus rows sharing >= 1 LSH band with
     the query, ranked by exact cosine. Join keys are (band index, bucket id)
     — pure equi-joins, no cross product anywhere in the plan."""
-    planes = planes or hyperplanes()
     c = corpus.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm"),
         *lsh_bands(F.col("embedding"), planes, bands),
@@ -336,22 +335,25 @@ def _argmax_cell(qv: Column, centroids: list[list[int]]) -> Column:
 #: collect instead of max_iter distributed jobs.
 KMEANS_TRAIN_ROWS = 100_000
 
+#: the IVF coarse quantizer every IVF query and its DuckDB oracle share:
+#: KMEANS_K cells after KMEANS_ITERS Lloyd iterations, IVF_NPROBE cells
+#: probed per query, and IVF_PQ_RERANK_FROM ADC survivors re-ranked
+KMEANS_K = 8
+KMEANS_ITERS = 8
+IVF_NPROBE = 3
+IVF_PQ_RERANK_FROM = 20
+
 
 def kmeans_fit(
-    emb: DataFrame,
-    k: int = 8,
-    max_iter: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_rows: int = KMEANS_TRAIN_ROWS,
+    emb: DataFrame, k: int = KMEANS_K, max_iter: int = KMEANS_ITERS
 ) -> list[list[int]]:
     """Deterministic Lloyd's KMeans over a quantized embedding column — the
     coarse-quantizer trainer for IVF (r1 used corpus labels as cells, which
     are not geometric clusters; recall@5 was 0.205 on the stress corpus).
 
     Deterministic by construction, in a stronger sense than seeded KMeans:
-    the training set is the ``train_rows`` lowest-id vectors (collected
-    once), init = the k lowest-id vectors, a FIXED iteration count, exact
+    the training set is the ``KMEANS_TRAIN_ROWS`` lowest-id vectors
+    (collected once), init = the k lowest-id vectors, a FIXED iteration count, exact
     int64 dots/sums (order-independent — the result cannot depend on
     partitioning), centroid updates floor(sum/n) and scores dot/sqrt(|c|²)
     in IEEE double. Every step is bit-reproducible by another engine, which
@@ -365,9 +367,9 @@ def kmeans_fit(
     import numpy as np
 
     pdf = (
-        emb.orderBy(id_col)
-        .limit(train_rows)
-        .select(quantize_vec(F.col(vec_col)).alias("qv"))
+        emb.orderBy("vec_id")
+        .limit(KMEANS_TRAIN_ROWS)
+        .select(quantize_vec(F.col("embedding")).alias("qv"))
         .toPandas()
     )
     if len(pdf) < k:
@@ -396,7 +398,7 @@ def ivf_topk(
     queries: DataFrame,
     centroids: list[list[int]],
     k: int = 5,
-    nprobe: int = 3,
+    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """IVF probe: each query searches only the ``nprobe`` cells whose
     centroids score highest for it; exact cosine re-rank inside those cells
@@ -429,7 +431,7 @@ def ivf_topk_from_index(
     queries: DataFrame,
     centroids: list[list[int]],
     k: int = 5,
-    nprobe: int = 3,
+    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """The probe half of ``ivf_topk``, against a PRE-ASSIGNED
     (vec_id, embedding, cell) relation — the maintained-index read path
@@ -468,8 +470,8 @@ def ivf_topk_from_index(
 
 def lsh_dup_pairs(
     emb: DataFrame,
+    planes: list[list[float]],
     threshold: float = 0.45,
-    planes: list[list[float]] | None = None,
     bands: int = 2,
     candidates_only: bool = False,
 ) -> DataFrame:
@@ -490,7 +492,6 @@ def lsh_dup_pairs(
     computed once per VECTOR (not once per candidate pair) and joined back
     with the embeddings by id; the cosine expression tree is unchanged, so
     values hash-match the per-pair formulation exactly."""
-    planes = planes or hyperplanes()
     cols = lsh_bands(F.col("embedding"), planes, bands)
     banded = (
         emb.select("vec_id", *cols)
@@ -547,12 +548,7 @@ def lsh_dup_pairs(
     )
 
 
-def assign_cells_vectorized(
-    emb: DataFrame,
-    centroids: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_cells_vectorized(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Nearest-cell assignment through a numpy int64 kernel — the
     deployment twin of the `_argmax_cell` Column expression, which
     Catalyst cannot codegen at useful k (64 centroids x 64-dim folds
@@ -576,12 +572,12 @@ def assign_cells_vectorized(
             if pdf.empty:
                 continue
             X = np.floor(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
                 * float(QUANT_SCALE)
             ).astype(np.int64)
             scores = (X @ C.T).astype(np.float64) / nrm[None, :]
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "cell": scores.argmax(axis=1).astype("int32")}
+                {"vec_id": pdf["vec_id"], "cell": scores.argmax(axis=1).astype("int32")}
             )
 
     # no internal fanout (r13): the r12 spread here repartitioned the
@@ -591,16 +587,13 @@ def assign_cells_vectorized(
     # kernel twin q147: 0.93 s -> 1.75 s with the fanout). At deployment
     # scale the caller's scan is already wide. Callers that profile a
     # single-task bottleneck fan their scan before passing it in.
-    return emb.select(id_col, vec_col).mapInPandas(
-        part, f"{id_col} long, cell int"
-    )
+    return emb.select("vec_id", "embedding").mapInPandas(part, "vec_id long, cell int")
 
 
 def semantic_dedup_cells(
     emb: DataFrame,
     centroids: list[list[int]],
     threshold: float = 0.45,
-    vectorized: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): assign every vector to its
@@ -628,16 +621,10 @@ def semantic_dedup_cells(
     # pair sides + the final flag join); localCheckpoint runs the k x dim
     # assignment ONCE per vector instead of three times (measured on the
     # 40k stress corpus; at production scale the assignment table
-    # persists alongside the IVF index anyway). vectorized=True swaps the
-    # Column-fold assignment for the value-identical int64 numpy kernel
-    # (assign_cells_vectorized) — the deployment path at real k.
-    if vectorized:
-        cells = assign_cells_vectorized(emb, centroids).localCheckpoint()
-    else:
-        cells = emb.select(
-            "vec_id",
-            _argmax_cell(quantize_vec(F.col("embedding")), centroids).alias("cell"),
-        ).localCheckpoint()
+    # persists alongside the IVF index anyway). The assignment is the int64
+    # numpy kernel (assign_cells_vectorized), value-identical to the
+    # Column fold and the deployment path at real k.
+    cells = assign_cells_vectorized(emb, centroids).localCheckpoint()
     a, b = cells.alias("a"), cells.alias("b")
     cand = a.join(
         b,
@@ -853,19 +840,16 @@ def pq_fit(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
     max_iter: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_rows: int = KMEANS_TRAIN_ROWS,
 ) -> list[list[list[int]]]:
     """Train PQ codebooks: one integer-quantized Lloyd fit per subspace over
-    the ``train_rows`` lowest-id vectors (same bounded-sample posture as
+    the ``KMEANS_TRAIN_ROWS`` lowest-id vectors (same bounded-sample posture as
     kmeans_fit; faiss trains PQ on a sample too). Returns
     ``codebooks[s][c] -> list[int]`` — deterministic enough that the DuckDB
     oracle replays every iteration of all m fits (q118)."""
     pdf = (
-        emb.orderBy(id_col)
-        .limit(train_rows)
-        .select(quantize_vec(F.col(vec_col)).alias("qv"))
+        emb.orderBy("vec_id")
+        .limit(KMEANS_TRAIN_ROWS)
+        .select(quantize_vec(F.col("embedding")).alias("qv"))
         .toPandas()
     )
     if len(pdf) < ksub:
@@ -897,16 +881,11 @@ def _pq_code(qv_sub: Column, codebook: list[list[int]]) -> Column:
     return (-F.array_max(packed).getField("nj")).cast("int")
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """(id, embedding) -> (id, code: array<int>) — the PQ compression step.
     Map-only over the scan; at 100 TB this is the one full pass that turns
     the 100 TB float corpus into a ~1.5 TB code table."""
-    qv = quantize_vec(F.col(vec_col))
+    qv = quantize_vec(F.col("embedding"))
     sub = len(codebooks[0][0])
     codes = F.array(
         *[
@@ -914,7 +893,7 @@ def pq_encode(
             for s, cb in enumerate(codebooks)
         ]
     )
-    return corpus.select(F.col(id_col), codes.alias("code"))
+    return corpus.select("vec_id", codes.alias("code"))
 
 
 def pq_adc_topk(
@@ -1064,8 +1043,8 @@ def ivf_pq_rerank_topk(
     centroids: list[list[int]],
     codebooks: list[list[list[int]]],
     k: int = 5,
-    nprobe: int = 3,
-    rerank_from: int = 20,
+    nprobe: int = IVF_NPROBE,
+    rerank_from: int = IVF_PQ_RERANK_FROM,
 ) -> DataFrame:
     """The full IVF-PQ deployment stack in one plan (faiss's IVFx,PQy
     layout): coarse-quantizer cells bound WHICH corpus rows each query
@@ -1182,8 +1161,8 @@ def ivf_pq_rerank_from_index(
     centroids: list[list[int]],
     codebooks: list[list[list[int]]],
     k: int = 5,
-    nprobe: int = 3,
-    rerank_from: int = 20,
+    nprobe: int = IVF_NPROBE,
+    rerank_from: int = IVF_PQ_RERANK_FROM,
 ) -> DataFrame:
     """The probe -> ADC prune -> exact re-rank half of
     ``ivf_pq_rerank_topk``, against a PRE-BUILT (vec_id, cell, code)
@@ -1259,7 +1238,7 @@ def ivf_topk_vectorized(
     queries: DataFrame,
     centroids: list[list[int]],
     k: int = 5,
-    nprobe: int = 3,
+    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """q56's IVF probe through the numpy kernel — row-equal to ivf_topk
     (same integer-quantized cell assignment and probe selection, same
@@ -1282,7 +1261,7 @@ def ivf_topk_from_index_vectorized(
     queries: DataFrame,
     centroids: list[list[int]],
     k: int = 5,
-    nprobe: int = 3,
+    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """``ivf_topk_vectorized`` against a PRE-ASSIGNED (vec_id, embedding,
     cell) relation — the maintained-index deployment read path (q246's
@@ -1414,8 +1393,8 @@ def ivf_pq_rerank_topk_vectorized(
     centroids: list[list[int]],
     codebooks: list[list[list[int]]],
     k: int = 5,
-    nprobe: int = 3,
-    rerank_from: int = 20,
+    nprobe: int = IVF_NPROBE,
+    rerank_from: int = IVF_PQ_RERANK_FROM,
 ) -> DataFrame:
     """q125's IVF-PQ stack through the numpy kernel — bit-identical results
     (same floor quantization, same integer cell/code argmaxes, same exact
@@ -1510,8 +1489,8 @@ def ivf_pq_rerank_from_index_vectorized(
     centroids: list[list[int]],
     codebooks: list[list[list[int]]],
     k: int = 5,
-    nprobe: int = 3,
-    rerank_from: int = 20,
+    nprobe: int = IVF_NPROBE,
+    rerank_from: int = IVF_PQ_RERANK_FROM,
 ) -> DataFrame:
     """``ivf_pq_rerank_from_index`` through the numpy kernel — the
     maintained-code-table deployment read path (q247's stored v2 relation
@@ -1612,7 +1591,6 @@ def pq_adc_rerank_topk(
     codebooks: list[list[list[int]]],
     k: int = 5,
     rerank_from: int = 50,
-    vectorized: bool = False,
 ) -> DataFrame:
     """The PQ deployment shape: ADC prune in the compressed domain to
     ``rerank_from`` candidates per query, exact cosine re-rank over the raw
@@ -1626,14 +1604,12 @@ def pq_adc_rerank_topk(
     raw embeddings of non-candidates are never read past the scan filter
     and nothing fact-sized shuffles.
 
-    ``vectorized`` (r12 optimization, guide §4) routes the ADC prune
-    through ``pq_adc_topk_vectorized`` — bit-identical candidates (exact
+    The ADC prune runs through ``pq_adc_topk_vectorized`` (r12
+    optimization) — bit-identical candidates to ``pq_adc_topk`` (exact
     int64 scores, same tie rules; asserted row-equal in tests for the
-    q104<->q109 twins), so the re-rank output is unchanged while the
-    ~4,000-literal encode fold (seconds of driver plan analysis) never
-    builds."""
-    prune = pq_adc_topk_vectorized if vectorized else pq_adc_topk
-    cand = prune(corpus, queries, codebooks, k=rerank_from).select(
+    q104<->q109 twins), while the ~4,000-literal encode fold (seconds of
+    driver plan analysis) never builds."""
+    cand = pq_adc_topk_vectorized(corpus, queries, codebooks, k=rerank_from).select(
         "query_id", "neighbor_id"
     )
     withq = cand.join(F.broadcast(queries.select("query_id", "qe")), "query_id")

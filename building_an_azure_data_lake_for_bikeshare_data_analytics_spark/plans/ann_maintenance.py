@@ -48,12 +48,10 @@ extension set.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from .base import _t, _ts, query
+from ..operators.similarity import IVF_PQ_RERANK_FROM, KMEANS_TRAIN_ROWS
 from .extensions import _DOT, _kmeans_ctes, _kmeans_qprobe_cte
 
 #: vec-side analogue of training._HASH_SQL / _doc_hash — ONE arithmetic,
@@ -65,17 +63,7 @@ def _vec_hash() -> F.Column:
     return ((F.col("vec_id") % 100003) * F.lit(2654435761)) % 1000
 
 
-def _store_path(spark) -> str:
-    """Per-session ANN-index store root (same convention as q239/q245)."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ann_index_{spark.sparkContext.applicationId}",
-    )
-
-
-def _maintained_ivf_oracle(
-    k: int = 8, iters: int = 8, nprobe: int = 3, dim: int = 64, train_rows: int = 100_000
-) -> str:
+def _maintained_ivf_oracle() -> str:
     """q56's fit-replay oracle with the maintained-lifecycle split: the
     Lloyd training sample (``ptr``) is restricted to CORPUS-side vectors
     (the quantizer a deployment trained at v1 build), assignments cover
@@ -91,11 +79,11 @@ def _maintained_ivf_oracle(
       FROM embeddings),
     ptr AS MATERIALIZED (
       SELECT vec_id, qv FROM pts WHERE {_VEC_HASH_SQL} < 800
-      ORDER BY vec_id LIMIT {train_rows}),
-    {_kmeans_ctes(k, iters, dim)},
+      ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_kmeans_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts
           WHERE {_VEC_HASH_SQL} >= 800 AND vec_id % 5 = 0),
-    {_kmeans_qprobe_cte(nprobe, iters, dim)},
+    {_kmeans_qprobe_cte()},
     cand AS (
       SELECT qp.query_id, e.vec_id AS neighbor_id, qp.qe, e.embedding
       FROM qprobe qp
@@ -135,7 +123,7 @@ def q246(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -145,10 +133,8 @@ def q246(spark, sf):
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
     is_new = _vec_hash() >= 800
     corpus, batch = emb.where(~is_new), emb.where(is_new)
-    store = _store_path(spark)
+    store = session_store(spark, "ann_index")
     cent_store = store + "_centroids"
-    register_cleanup(store)
-    register_cleanup(cent_store)
 
     # 1) v1: quantizer trained on the corpus side ONLY (kmeans_fit's
     #    bounded lowest-id driver sample — the faiss posture); corpus
@@ -159,7 +145,7 @@ def q246(spark, sf):
     #    their driver-blocking writes (guide §2.6; contents unchanged)
     from ..functions.parallelism import run_parallel
 
-    cents = kmeans_fit(corpus, k=8, max_iter=8)
+    cents = kmeans_fit(corpus)
     run_parallel(
         lambda: write_version(
             assign_cells(corpus, cents), store, partition_by=["cell"]
@@ -193,16 +179,12 @@ def q246(spark, sf):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     out = ivf_topk_from_index_vectorized(
-        read_current(spark, store), qs, stored_cents, k=5, nprobe=3
+        read_current(spark, store), qs, stored_cents, k=5
     )
     return out.orderBy("query_id", "rnk")
 
 
-def _maintained_ivf_pq_oracle(
-    kcells: int = 8, kmeans_iters: int = 8, nprobe: int = 3,
-    m: int = 4, ksub: int = 8, pq_iters: int = 4, dim: int = 64,
-    k: int = 5, train_rows: int = 100_000, rerank_from: int = 20,
-) -> str:
+def _maintained_ivf_pq_oracle() -> str:
     """q125's composed double-fit-replay oracle with the maintained split:
     BOTH fits (coarse KMeans + all m PQ codebooks) train on the
     CORPUS-side sample, the encode/assignment covers all vectors (v1 ∪
@@ -210,19 +192,19 @@ def _maintained_ivf_pq_oracle(
     certifying the stored-codes read path value-for-value."""
     from .curation import _pq_adc_pair_sql, _pq_ctes, _pq_oracle_tail
 
-    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql(m, pq_iters, dim, qref="qq")
+    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql(qref="qq")
     return f"""WITH pts AS MATERIALIZED (
       SELECT vec_id, embedding,
              list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
     ptr AS MATERIALIZED (
       SELECT vec_id, qv FROM pts WHERE {_VEC_HASH_SQL} < 800
-      ORDER BY vec_id LIMIT {train_rows}),
-    {_kmeans_ctes(kcells, kmeans_iters, dim)},
-    {_pq_ctes(m, ksub, pq_iters, dim)},
+      ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_kmeans_ctes()},
+    {_pq_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts
           WHERE {_VEC_HASH_SQL} >= 800 AND vec_id % 5 = 0),
-    {_kmeans_qprobe_cte(nprobe, kmeans_iters, dim)},
+    {_kmeans_qprobe_cte()},
     p AS (
       SELECT qp.query_id, e0.vec_id AS neighbor_id, ({adc_terms}) AS adc
       FROM qprobe qp
@@ -231,15 +213,8 @@ def _maintained_ivf_pq_oracle(
       JOIN e0 ON e0.vec_id = asn.vec_id AND e0.vec_id <> qp.query_id
       {enc_joins}
       {cb_joins})
-    {_pq_oracle_tail(k, rerank_from)}
+    {_pq_oracle_tail(IVF_PQ_RERANK_FROM)}
     ORDER BY query_id, rnk"""
-
-
-def _pq_store_path(spark) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_annpq_index_{spark.sparkContext.applicationId}",
-    )
 
 
 @query(
@@ -285,7 +260,7 @@ def q247(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -295,11 +270,9 @@ def q247(spark, sf):
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
     is_new = _vec_hash() >= 800
     corpus, batch = emb.where(~is_new), emb.where(is_new)
-    store = _pq_store_path(spark)
+    store = session_store(spark, "annpq_index")
     cent_store = store + "_centroids"
     book_store = store + "_codebooks"
-    for p in (store, cent_store, book_store):
-        register_cleanup(p)
 
     # 1) v1: both quantizers trained on the corpus side; codes + the two
     #    quantizer tables to the store. r12: the two driver fits are
@@ -309,8 +282,8 @@ def q247(spark, sf):
     from ..functions.parallelism import run_parallel
 
     cents, books = run_parallel(
-        lambda: kmeans_fit(corpus, k=8, max_iter=8),
-        lambda: pq_fit(corpus, m=4, ksub=8, max_iter=4),
+        lambda: kmeans_fit(corpus),
+        lambda: pq_fit(corpus),
     )
     run_parallel(
         # kernel index build (r12): value-identical to the ivf_pq_index
@@ -360,7 +333,7 @@ def q247(spark, sf):
     )
     out = ivf_pq_rerank_from_index_vectorized(
         read_current(spark, store), emb, qs, stored_cents, stored_books,
-        k=5, nprobe=3, rerank_from=20,
+        k=5,
     )
     return out.orderBy("query_id", "rnk")
 

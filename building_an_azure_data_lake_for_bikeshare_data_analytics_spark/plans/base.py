@@ -49,13 +49,10 @@ def query(
     name: str,
     oracle: str | None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
     fixture: bool = False,
 ):
     def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = QuerySpec(
-            name, fn, oracle, tags, doc or (fn.__doc__ or ""), fixture
-        )
+        REGISTRY[name] = QuerySpec(name, fn, oracle, tags, fn.__doc__ or "", fixture)
         return fn
 
     return deco
@@ -131,7 +128,6 @@ def _ts(
     name: str,
     *cols: str,
     fan: bool = False,
-    bytes_per_task: int | None = None,
 ) -> DataFrame:
     """``_t`` + column-prune, plus an OPT-IN scan-parallelism floor
     (``functions/parallelism.spread``): the driver testdata writes each
@@ -140,7 +136,7 @@ def _ts(
     (tokenize/shingle explodes, regex batteries, Arrow kernels)
     serializes on one core. ``fan=True`` applies the guide's input-skew
     rule (repartition immediately after the read) with a COST-BASED
-    width — one task per ``bytes_per_task`` of compressed input, capped
+    width — one task per ``parallelism.DENSE_BYTES_PER_TASK`` of compressed input, capped
     at the core count — and only below an estimated-split threshold, so
     the exchange never exists at deployment scale.
 
@@ -160,13 +156,10 @@ def _ts(
         df = df.select(*cols)
     if not fan:
         return df
-    from ..functions.parallelism import DENSE_BYTES_PER_TASK, spread
+    from ..functions.parallelism import spread
 
     total, n_files = _table_layout(sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
     return spread(
-        df,
-        est_bytes=total,
-        est_partitions=_est_scan_partitions(total, n_files, cores),
-        bytes_per_task=bytes_per_task or DENSE_BYTES_PER_TASK,
+        df, est_bytes=total, est_partitions=_est_scan_partitions(total, n_files, cores)
     )

@@ -33,13 +33,10 @@ Reference scope note: the reference notebook has no maintenance surface
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..functions.text import token_count
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _TOKS
 from .training import _HASH_SQL, _doc_hash
 
@@ -67,7 +64,7 @@ def q259(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -75,11 +72,7 @@ def q259(spark, sf):
     # _ts (r12): same fanout as q250 — the state rows hash every text
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
     is_new = _doc_hash() >= 800
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_census_evo_{spark.sparkContext.applicationId}",
-    )
-    register_cleanup(store)
+    store = session_store(spark, "census_evo")
 
     # 1) v1: the store as an earlier deployment wrote it — no sum_toks
     old = docs.where(~is_new).groupBy("source").agg(

@@ -47,27 +47,17 @@ Reference scope note: the reference notebook has no maintenance surface
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import H60_SQL, h60
 from ..functions.text import token_count
 from .analytics_ext import _KMV_SPACE
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _TOKS
-from .training import _HASH_SQL, _doc_hash
+from .training import _doc_hash
 
 _CK = 64  # sketch size; same k as the q134 gate sketch
-
-
-def _store_path(spark) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_census_{spark.sparkContext.applicationId}",
-    )
 
 
 def _census_state(side):
@@ -162,7 +152,7 @@ def q250(spark, sf):
     down to each retained hash."""
     from ..sources.versioned import (
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -170,10 +160,8 @@ def q250(spark, sf):
     # _ts (r12): the census state md5-hashes every text — fan the scan out
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
     is_new = _doc_hash() >= 800
-    store = _store_path(spark)
+    store = session_store(spark, "census")
     stats_store, kmv_store = store + "_stats", store + "_kmv"
-    register_cleanup(stats_store)
-    register_cleanup(kmv_store)
 
     from ..functions.parallelism import run_parallel
 

@@ -8,10 +8,8 @@ overflow rule depends on (plans/evidence.py).
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: F401  (plan-module convention)
-
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _SHINGLES_SQL
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _NORM, _TOKS
 
 #: the token-set (bag-of-words) identity, shared between engines: sorted

@@ -26,7 +26,15 @@ from pyspark.sql.types import DecimalType
 from pyspark.sql.window import Window
 
 from ..functions.text import STOPWORDS, fingerprint, marker_count, tokens
-from ..functions.vectors import dot, norm
+from ..functions.vectors import EMBEDDING_DIM, dot, norm
+from ..operators.bpe import BPE_MERGES, BPE_TOP_WORDS
+from ..operators.similarity import (
+    IVF_PQ_RERANK_FROM,
+    KMEANS_TRAIN_ROWS,
+    PQ_ITERS,
+    PQ_KSUB,
+    PQ_M,
+)
 from .base import _t, _ts, query
 from .extensions import _ivf_oracle  # q130 carries its fold twin q56's oracle
 
@@ -333,15 +341,16 @@ def q117(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-def _pq_ctes(m: int = 4, ksub: int = 8, iters: int = 4, dim: int = 64) -> str:
-    """CTE chain replaying all m per-subspace integer Lloyd codebook fits
-    (init = ksub lowest-id subvectors, exact 2*dot-|c|^2 assignment,
-    floor-mean updates) and re-encoding the corpus: ``sv{s}, c{s}_0 ...
-    c{s}_{iters}, e{s}`` (e{s} = subspace-s code per corpus vector).
-    Expects ``pts`` (vec_id, qv) and ``ptr`` (lowest-id training sample)
-    to be defined by the caller; shared by q118/q123's oracle and the
-    composed IVF-PQ oracle (q125)."""
-    sub = dim // m
+def _pq_ctes() -> str:
+    """CTE chain replaying all PQ_M per-subspace integer Lloyd codebook
+    fits (init = PQ_KSUB lowest-id subvectors, exact 2*dot-|c|^2
+    assignment, floor-mean updates) and re-encoding the corpus: ``sv{s},
+    c{s}_0 ... c{s}_{PQ_ITERS}, e{s}`` (e{s} = subspace-s code per corpus
+    vector). Expects ``pts`` (vec_id, qv) and ``ptr`` (lowest-id training
+    sample) to be defined by the caller; shared by q118/q123's oracle and
+    the composed IVF-PQ oracle (q125)."""
+    m, ksub, iters = PQ_M, PQ_KSUB, PQ_ITERS
+    sub = EMBEDDING_DIM // m
 
     def dot_vc(v: str, c: str) -> str:
         return f"list_sum(list_transform(range(1, {sub + 1}), j -> {v}[j] * {c}[j]))"
@@ -394,14 +403,13 @@ def _pq_ctes(m: int = 4, ksub: int = 8, iters: int = 4, dim: int = 64) -> str:
     return ",\n    ".join(blocks)
 
 
-def _pq_adc_pair_sql(
-    m: int = 4, iters: int = 4, dim: int = 64, qref: str = "q"
-) -> tuple[str, str, str]:
+def _pq_adc_pair_sql(qref: str = "q") -> tuple[str, str, str]:
     """SQL fragments for scoring (query, neighbor) pairs over the _pq_ctes
     chain — returns ``(adc_terms, enc_joins, cb_joins)``: the exact integer
     ADC sum expression, the encoded-corpus joins, and the codebook joins.
     ``qref`` is the alias holding the query's quantized vector (column qv)."""
-    sub = dim // m
+    m, iters = PQ_M, PQ_ITERS
+    sub = EMBEDDING_DIM // m
     adc_terms = " + ".join(
         f"list_sum(list_transform(range(1, {sub + 1}), j -> {qref}.qv[{s * sub} + j] * k{s}.c[j]))"
         for s in range(m)
@@ -415,21 +423,18 @@ def _pq_adc_pair_sql(
     return adc_terms, enc_joins, cb_joins
 
 
-def _pq_oracle(
-    m: int = 4, ksub: int = 8, iters: int = 4, dim: int = 64, k: int = 5,
-    train_rows: int = 100_000, rerank_from: int | None = None,
-) -> str:
+def _pq_oracle(rerank_from: int | None = None) -> str:
     """DuckDB oracle for q118/q123: replays all m per-subspace integer Lloyd
     fits, re-encodes the corpus, and scores every (query, neighbor) pair by
     the exact integer ADC sum — the same replay-the-fit pattern as q56's
     IVF oracle, minus doubles even in the assignment scores."""
-    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql(m, iters, dim)
+    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql()
     return f"""WITH pts AS MATERIALIZED (
       SELECT vec_id,
              list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
-    ptr AS MATERIALIZED (SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {train_rows}),
-    {_pq_ctes(m, ksub, iters, dim)},
+    ptr AS MATERIALIZED (SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_pq_ctes()},
     q AS (SELECT vec_id AS query_id, qv FROM pts WHERE {_Q_FILTER}),
     p AS (
       SELECT q.query_id, e0.vec_id AS neighbor_id, ({adc_terms}) AS adc
@@ -437,13 +442,13 @@ def _pq_oracle(
       JOIN e0 ON e0.vec_id <> q.query_id
       {enc_joins}
       {cb_joins})
-    {_pq_oracle_tail(k, rerank_from)}"""
+    {_pq_oracle_tail(rerank_from)}"""
 
 
-def _pq_oracle_tail(k: int, rerank_from: int | None) -> str:
-    """Final stage of the PQ oracle: rank by exact integer ADC (q118), or
-    prune to ``rerank_from`` ADC candidates and re-rank by exact cosine
-    over the raw embeddings (q123 — the deployment shape)."""
+def _pq_oracle_tail(rerank_from: int | None) -> str:
+    """Final stage of the PQ oracle: top 5 by exact integer ADC (q118), or
+    prune to ``rerank_from`` ADC candidates and re-rank the top 5 by exact
+    cosine over the raw embeddings (q123 — the deployment shape)."""
     if rerank_from is None:
         return f"""SELECT query_id, neighbor_id,
            round(CAST(adc AS DOUBLE) / 1000000000000.0, 6) AS adc_dot,
@@ -451,7 +456,7 @@ def _pq_oracle_tail(k: int, rerank_from: int | None) -> str:
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                                        ORDER BY adc DESC, neighbor_id) AS rnk
           FROM p)
-    WHERE rnk <= {k}"""
+    WHERE rnk <= 5"""
     cos = (
         f"round({_DOT.format(a='qe.embedding', b='ne.embedding')}"
         f" / (sqrt({_DOT.format(a='qe.embedding', b='qe.embedding')})"
@@ -473,7 +478,7 @@ def _pq_oracle_tail(k: int, rerank_from: int | None) -> str:
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                                        ORDER BY cos DESC, neighbor_id) AS rnk
           FROM x)
-    WHERE rnk <= {k}"""
+    WHERE rnk <= 5"""
 
 
 # fixture: superseded fold — q120_pq_adc_topk_vectorized carries this
@@ -496,7 +501,7 @@ def q118(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    books = pq_fit(emb, m=4, ksub=8, max_iter=4)
+    books = pq_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
@@ -610,7 +615,7 @@ def q120(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    books = pq_fit(emb, m=4, ksub=8, max_iter=4)
+    books = pq_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
@@ -795,18 +800,18 @@ def q123(spark, sf):
     exact integer ADC, and re-ranks by the same fold cosine as q39.
 
     r12 optimization (guide §4): the ADC prune runs through the
-    bit-identical numpy kernel (vectorized=True — exact int64 scores,
+    bit-identical numpy kernel (``pq_adc_topk_vectorized`` — exact int64 scores,
     same tie rules, the q104<->q109 twin contract), which also skips the
     ~4,000-literal encode fold's driver plan-analysis cost."""
     from ..operators.similarity import pq_adc_rerank_topk, pq_fit
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    books = pq_fit(emb, m=4, ksub=8, max_iter=4)
+    books = pq_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    return pq_adc_rerank_topk(emb, q, books, k=5, rerank_from=50, vectorized=True)
+    return pq_adc_rerank_topk(emb, q, books, k=5, rerank_from=50)
 
 
 # ---------------------------------------------------------------------------
@@ -879,11 +884,7 @@ def q124(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-def _ivf_pq_oracle(
-    kcells: int = 8, kmeans_iters: int = 8, nprobe: int = 3,
-    m: int = 4, ksub: int = 8, pq_iters: int = 4, dim: int = 64,
-    k: int = 5, train_rows: int = 100_000, rerank_from: int = 20,
-) -> str:
+def _ivf_pq_oracle() -> str:
     """DuckDB oracle for q125: replays BOTH fits — the IVF coarse
     quantizer's every KMeans iteration (extensions._kmeans_ctes, q56's
     chain) and all m per-subspace Lloyd codebook fits (_pq_ctes, q118's
@@ -892,16 +893,16 @@ def _ivf_pq_oracle(
     the bounded lowest-id training sample (ptr)."""
     from .extensions import _kmeans_ctes, _kmeans_qprobe_cte
 
-    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql(m, pq_iters, dim, qref="qq")
+    adc_terms, enc_joins, cb_joins = _pq_adc_pair_sql(qref="qq")
     return f"""WITH pts AS MATERIALIZED (
       SELECT vec_id, embedding,
              list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
-    ptr AS MATERIALIZED (SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {train_rows}),
-    {_kmeans_ctes(kcells, kmeans_iters, dim)},
-    {_pq_ctes(m, ksub, pq_iters, dim)},
+    ptr AS MATERIALIZED (SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_kmeans_ctes()},
+    {_pq_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts WHERE {_Q_FILTER}),
-    {_kmeans_qprobe_cte(nprobe, kmeans_iters, dim)},
+    {_kmeans_qprobe_cte()},
     p AS (
       SELECT qp.query_id, e0.vec_id AS neighbor_id, ({adc_terms}) AS adc
       FROM qprobe qp
@@ -910,7 +911,7 @@ def _ivf_pq_oracle(
       JOIN e0 ON e0.vec_id = asn.vec_id AND e0.vec_id <> qp.query_id
       {enc_joins}
       {cb_joins})
-    {_pq_oracle_tail(k, rerank_from)}"""
+    {_pq_oracle_tail(IVF_PQ_RERANK_FROM)}"""
 
 
 # fixture: superseded fold — q129_ivf_pq_rerank_vectorized carries this
@@ -938,12 +939,12 @@ def q125(spark, sf):
     # shuffle contract (every join broadcast, 2 window exchanges only) —
     # the conditional fanout exchange would break the pinned plan shape
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_fit(emb, k=8, max_iter=8)
-    books = pq_fit(emb, m=4, ksub=8, max_iter=4)
+    cents = kmeans_fit(emb)
+    books = pq_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    return ivf_pq_rerank_topk(emb, q, cents, books, k=5, nprobe=3, rerank_from=20)
+    return ivf_pq_rerank_topk(emb, q, cents, books, k=5)
 
 
 @query(
@@ -968,12 +969,12 @@ def q129(spark, sf):
     )
 
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_fit(emb, k=8, max_iter=8)
-    books = pq_fit(emb, m=4, ksub=8, max_iter=4)
+    cents = kmeans_fit(emb)
+    books = pq_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    return ivf_pq_rerank_topk_vectorized(emb, q, cents, books, k=5, nprobe=3, rerank_from=20)
+    return ivf_pq_rerank_topk_vectorized(emb, q, cents, books, k=5)
 
 
 @query(
@@ -993,11 +994,11 @@ def q130(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    cents = kmeans_fit(emb, k=8, max_iter=8)
+    cents = kmeans_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    return ivf_topk_vectorized(emb, q, cents, k=5, nprobe=3)
+    return ivf_topk_vectorized(emb, q, cents, k=5)
 
 
 # ---------------------------------------------------------------------------
@@ -1007,9 +1008,9 @@ def q130(spark, sf):
 _BPE_L, _BPE_R = "⟨", "⟩"
 
 
-def _bpe_fit_ctes(n_merges: int = 8, top_words: int = 1000) -> str:
+def _bpe_fit_ctes() -> str:
     """CTE chain replaying the BPE fit: word frequencies -> wrapped symbol
-    strings -> n_merges iterations of (adjacent-pair count, argmax with
+    strings -> BPE_MERGES iterations of (adjacent-pair count, argmax with
     pair-string tie-break, literal replace). Defines w, s0, and per
     iteration pr{i}, m{i}, s{i} — the q56/q118 replay-the-fit pattern
     applied to a tokenizer."""
@@ -1019,14 +1020,14 @@ def _bpe_fit_ctes(n_merges: int = 8, top_words: int = 1000) -> str:
         SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS word
         FROM documents)
       WHERE regexp_matches(word, '^[a-z0-9]+$')
-      GROUP BY word ORDER BY freq DESC, word LIMIT {top_words}),
+      GROUP BY word ORDER BY freq DESC, word LIMIT {BPE_TOP_WORDS}),
     s0 AS (
       SELECT word, freq,
              array_to_string(list_transform(string_split(word, ''),
                  c -> '{_BPE_L}' || c || '{_BPE_R}'), '') AS s
       FROM w)"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, BPE_MERGES + 1):
         prev = f"s{i - 1}"
         ctes.append(f"""
     pr{i} AS (
@@ -1065,7 +1066,7 @@ def q131(spark, sf):
     from ..operators.bpe import bpe_fit
 
     d = _t(spark, sf, "documents").select("text")
-    merges = bpe_fit(d, n_merges=8, top_words=1000)
+    merges = bpe_fit(d)
     rows = [
         (i + 1, pair, merged, int(cnt)) for i, (pair, merged, cnt) in enumerate(merges)
     ]
@@ -1110,7 +1111,7 @@ def q132(spark, sf):
     from ..operators.bpe import bpe_fit, bpe_token_count
 
     d = _t(spark, sf, "documents")
-    merges = bpe_fit(d.select("text"), n_merges=8, top_words=1000)
+    merges = bpe_fit(d.select("text"))
     words = d.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("word")
     ).where(F.col("word").rlike("^[a-z0-9]+$"))

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_shingles
-from .base import _t, _ts, query
+from .base import _ts, query
 from .training import _HASH_SQL
 
 #: (benchmark name, benchmark source, n-gram size, threshold in 1e-4
@@ -285,16 +285,6 @@ _MAINT_DECON_SQL = (
 )
 
 
-def _store_path(spark) -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_decon_index_{spark.sparkContext.applicationId}",
-    )
-
-
 @query(
     "q249_decontamination_index_maintenance",
     _MAINT_DECON_SQL,
@@ -327,7 +317,7 @@ def q249(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -336,8 +326,7 @@ def q249(spark, sf):
     d = _ts(spark, sf, "documents", "doc_id", "source", "text").select(
         "doc_id", "source", tokens("text").alias("ts")
     )
-    store = _store_path(spark)
-    register_cleanup(store)
+    store = session_store(spark, "decon_index")
 
     # 1) v1: the initially-registered benchmarks' shingle table, hive-
     #    partitioned by benchmark — a screen against any benchmark subset

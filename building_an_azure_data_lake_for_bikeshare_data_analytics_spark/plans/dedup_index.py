@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import tokens
-from .base import _t
 
 #: the corpus-wide dedup operating threshold every index consumer shares;
 #: heads that sweep thresholds (q226) sweep ABOVE this floor over the
@@ -59,12 +58,12 @@ _CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _MAX_LIVE_ENTRIES = 12
 
 
-def clear_index_cache(spark=None) -> int:
-    """Drop every memoized relation (all sessions, or just ``spark``'s)
-    and unpersist live ones. Returns the number of entries dropped —
-    the explicit release path for soak loops that churn sf dirs."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    doomed = [k for k in _CACHE if app is None or k[0] == app]
+def clear_index_cache(spark) -> int:
+    """Drop every memoized relation of ``spark``'s session and unpersist
+    live ones. Returns the number of entries dropped — the explicit
+    release path for soak loops that churn sf dirs."""
+    app = spark.sparkContext.applicationId
+    doomed = [k for k in _CACHE if k[0] == app]
     for k in doomed:
         df = _CACHE.pop(k)
         try:

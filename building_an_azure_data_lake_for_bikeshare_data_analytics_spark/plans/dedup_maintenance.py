@@ -52,13 +52,10 @@ construction) — the subject of the query IS the materialization.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .base import _t, query
+from .base import query
 from .extensions import _SHINGLES_SQL
 from .training import _HASH_SQL, _doc_hash
 
@@ -85,17 +82,6 @@ _MAINT_SQL = f"""WITH RECURSIVE {_SHINGLES_SQL},
         FROM comp GROUP BY 1 ORDER BY component_id"""
 
 
-def _store_path(spark) -> str:
-    """Per-session store root: unique per Spark application so repeated
-    sessions never read each other's versions; within a session repeated
-    maintenance runs append versions (read_current always serves the
-    newest — same data every run, so the output stays deterministic)."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_dedup_index_{spark.sparkContext.applicationId}",
-    )
-
-
 @query(
     "q239_dedup_index_maintenance",
     _MAINT_SQL,
@@ -115,7 +101,7 @@ def q239(spark, sf):
     from ..operators.graph import connected_components
     from ..sources.versioned import (
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -132,10 +118,8 @@ def q239(spark, sf):
     )
     is_new = _doc_hash() >= 800
     corpus, batch = docs.where(~is_new), docs.where(is_new)
-    store = _store_path(spark)
+    store = session_store(spark, "dedup_index")
     sig_store = store + "_sigs"
-    register_cleanup(store)
-    register_cleanup(sig_store)
 
     # the (doc_id, shingle) relation feeds THREE pair kernels below
     # (corpus-internal, cross-side, batch-internal); tokenize + explode +

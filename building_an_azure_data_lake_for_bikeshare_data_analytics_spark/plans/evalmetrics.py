@@ -933,9 +933,9 @@ _MMR_COS = (
 )
 
 
-def _mmr_oracle(pool_n: int = _MMR_POOL, k: int = _MMR_K) -> str:
+def _mmr_oracle() -> str:
     """DuckDB oracle for q220: the ENTIRE greedy unrolled — pool CTE,
-    pairwise round-4 sims, then k argmax steps each conditioned on the
+    pairwise round-4 sims, then _MMR_K argmax steps each conditioned on the
     running selected set (the _probe_oracle replay-the-fit pattern
     applied to an iterative selection instead of a gradient)."""
     qcos = _MMR_COS.format(a="q.qe", b="e.embedding")
@@ -949,7 +949,7 @@ def _mmr_oracle(pool_n: int = _MMR_POOL, k: int = _MMR_K) -> str:
              CAST(round(rel * 10000) AS BIGINT) AS rel4
       FROM (SELECT *, row_number() OVER (ORDER BY rel DESC, vec_id) AS rn
             FROM relq)
-      WHERE rn <= {pool_n}),
+      WHERE rn <= {_MMR_POOL}),
     sims AS MATERIALIZED (
       SELECT a.vec_id AS va, b.vec_id AS vb,
              CAST(round({pcos} * 10000) AS BIGINT) AS s4
@@ -960,7 +960,7 @@ def _mmr_oracle(pool_n: int = _MMR_POOL, k: int = _MMR_K) -> str:
       FROM pool ORDER BY rel4 DESC, vec_id LIMIT 1),
     all1 AS MATERIALIZED (SELECT * FROM sel1)"""
     ]
-    for i in range(2, k + 1):
+    for i in range(2, _MMR_K + 1):
         blocks.append(
             f"""sel{i} AS MATERIALIZED (
       SELECT vec_id, rel, CAST({i} AS INTEGER) AS pick, s FROM (
@@ -981,7 +981,7 @@ def _mmr_oracle(pool_n: int = _MMR_POOL, k: int = _MMR_K) -> str:
         + f"""
     SELECT pick, vec_id, rel,
            round(CAST(s AS DOUBLE) / 100000.0, 5) AS mmr_score
-    FROM all{k} ORDER BY pick"""
+    FROM all{_MMR_K} ORDER BY pick"""
     )
 
 

@@ -128,9 +128,7 @@ def repo_root() -> str:
     )
 
 
-def load_green_history(
-    root: str | None = None, before_round: int | None = None
-) -> dict[str, list[int]]:
+def load_green_history(before_round: int | None = None) -> dict[str, list[int]]:
     """query -> sorted rounds with a fully green driver row (rows_match,
     schema_match, hash_match all true, err null), from the committed
     ``CORRECTNESS_r*.json`` files. Queries no longer registered (e.g. the
@@ -139,9 +137,8 @@ def load_green_history(
     ``before_round`` truncates the history to rounds strictly earlier —
     used to re-validate a prefix against the schedule it was FROZEN for
     after a newer gate file has already landed (the post-snapshot window)."""
-    root = root or repo_root()
     hist: dict[str, list[int]] = {}
-    for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    for f in sorted(glob.glob(os.path.join(repo_root(), "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
         if before_round is not None and rnd >= before_round:
             continue
@@ -158,11 +155,10 @@ def load_green_history(
     return {q: sorted(rs) for q, rs in hist.items()}
 
 
-def latest_gated_round(root: str | None = None) -> int:
-    root = root or repo_root()
+def latest_gated_round() -> int:
     rounds = [
         int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+        for f in glob.glob(os.path.join(repo_root(), "CORRECTNESS_r*.json"))
     ]
     return max(rounds) if rounds else 0
 
@@ -202,7 +198,6 @@ def build_prefix(
     registry: dict[str, QuerySpec] | None = None,
     green: dict[str, list[int]] | None = None,
     k: int = GATE_SLOTS,
-    root: str | None = None,
     this_round: int | None = None,
 ) -> list[str]:
     """The deterministic round-N gate prefix: never-self-green oracled
@@ -218,14 +213,14 @@ def build_prefix(
     Rule 1 makes every deferred query lead the next round's prefix; this
     is exactly how the late-r4 q178-q198 batch was scheduled into r5."""
     registry = registry if registry is not None else REGISTRY
-    green = green if green is not None else load_green_history(root)
+    green = green if green is not None else load_green_history()
     order = list(registry)
     twins = oracle_twin_groups(registry)
     eff = effective_green(green, twins)
     oracled = [q for q in order if _schedulable(registry[q])]
     never_self = [q for q in oracled if q not in green]
     if this_round is None:
-        this_round = latest_gated_round(root) + 1
+        this_round = latest_gated_round() + 1
     # judge-directed pins for this round (see REVIEW_PINS): scheduled
     # right after the never-green leaders, ahead of the eff-sorted cohort
     pins = [
@@ -246,10 +241,7 @@ def build_prefix(
 
 
 def check(
-    prefix: tuple[str, ...] | list[str],
-    registry: dict[str, QuerySpec] | None = None,
-    root: str | None = None,
-    as_of_round: int | None = None,
+    prefix: tuple[str, ...] | list[str], as_of_round: int | None = None
 ) -> tuple[list[str], dict]:
     """Validate a committed prefix against the policy. Returns
     (violations, report). Empty violations == compliant.
@@ -259,17 +251,15 @@ def check(
     the driver has written CORRECTNESS_r{N}.json but the round-(N+1)
     rotation has not landed yet; the frozen prefix must match its own
     round's schedule, anything else is genuine drift."""
-    registry = registry if registry is not None else REGISTRY
-    green_all = load_green_history(root, before_round=as_of_round)
+    registry = REGISTRY
+    green_all = load_green_history(before_round=as_of_round)
     green = {q: rs for q, rs in green_all.items() if q in registry}
     twins = oracle_twin_groups(registry)
     eff = effective_green(green, twins)
-    this_round = (
-        as_of_round if as_of_round is not None else latest_gated_round(root) + 1
-    )
+    this_round = as_of_round if as_of_round is not None else latest_gated_round() + 1
     violations: list[str] = []
 
-    expected = build_prefix(registry, green, root=root, this_round=this_round)
+    expected = build_prefix(registry, green, this_round=this_round)
     if list(prefix) != expected:
         drift = [
             f"slot {i}: have {a}, schedule says {b}"

@@ -27,10 +27,24 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
-from ..functions.vectors import dot, norm
-from ..operators.dedup import minhash_lsh_candidates, simhash64
+from ..functions.vectors import EMBEDDING_DIM, dot, norm
+from ..operators.dedup import (
+    MINHASH_BANDS,
+    MINHASH_HASHES,
+    minhash_lsh_candidates,
+    simhash64,
+)
+from ..operators.graph import PAGERANK_DAMPING, PAGERANK_SCALE
 from ..operators.multimodal import attach_binary, extract_features
-from ..operators.similarity import hyperplanes, lsh_topk
+from ..operators.probe import PROBE_DIM, PROBE_ITERS, PROBE_LR, _half_away
+from ..operators.similarity import (
+    IVF_NPROBE,
+    KMEANS_ITERS,
+    KMEANS_K,
+    KMEANS_TRAIN_ROWS,
+    hyperplanes,
+    lsh_topk,
+)
 from ..functions.hashing import h60
 from .base import _t, _ts, query
 
@@ -216,22 +230,30 @@ def exhaustive_jaccard_pairs(spark, sf):
     )
 
 
-def _minhash_oracle(num_hashes: int = 32, bands: int = 16) -> str:
-    """DuckDB oracle for q37: the identical md5-derived Carter-Wegman hash
-    family, minhash aggregation, banding, and bucket join — MinHash is
-    'approximate' w.r.t. Jaccard but fully deterministic given the hash
-    family, so the candidate set is value-for-value checkable."""
-    r = num_hashes // bands
+def _minhash_sigs_sql() -> tuple[str, str]:
+    """The ``sigs`` aggregate list and the ``banded`` UNION of the
+    ``MINHASH_HASHES``/``MINHASH_BANDS`` LSH shape, shared by the MinHash
+    oracles."""
+    r = MINHASH_HASHES // MINHASH_BANDS
     mins = ",\n                 ".join(
-        f"min((b1 + {j} * b2) % 2147483647) AS h{j}" for j in range(num_hashes)
+        f"min((b1 + {j} * b2) % 2147483647) AS h{j}" for j in range(MINHASH_HASHES)
     )
     band_selects = "\n           UNION ALL ".join(
         "SELECT doc_id, {b} AS band, concat({sig}) AS sig FROM sigs".format(
             b=b,
             sig=", ':', ".join(f"h{b * r + k}" for k in range(r)),
         )
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     )
+    return mins, band_selects
+
+
+def _minhash_oracle() -> str:
+    """DuckDB oracle for q37: the identical md5-derived Carter-Wegman hash
+    family, minhash aggregation, banding, and bucket join — MinHash is
+    'approximate' w.r.t. Jaccard but fully deterministic given the hash
+    family, so the candidate set is value-for-value checkable."""
+    mins, band_selects = _minhash_sigs_sql()
     return f"""
     WITH {_SHINGLES_SQL},
          bases AS (SELECT doc_id,
@@ -259,7 +281,7 @@ def q37(spark, sf):
     docs = _ts(spark, sf, "documents", "doc_id", "text", fan=True).select(
         "doc_id", tokens("text").alias("ts")
     )
-    return minhash_lsh_candidates(docs, num_hashes=32, bands=16)
+    return minhash_lsh_candidates(docs)
 
 
 @query(
@@ -288,27 +310,17 @@ def q128(spark, sf):
     docs = _ts(spark, sf, "documents", "doc_id", "text").select(
         "doc_id", tokens("text").alias("ts")
     )
-    return minhash_lsh_candidates_salted(docs, num_hashes=32, bands=16, n_salts=8)
+    return minhash_lsh_candidates_salted(docs)
 
 
-def _minhash_estimate_oracle(num_hashes: int = 32, bands: int = 16) -> str:
+def _minhash_estimate_oracle() -> str:
     """DuckDB oracle for q153: q37's hash family and band join, then per
     candidate pair the component-agreement estimate NEXT TO the exact
     candidate-restricted Jaccard (both engines compute the identical md5
     signatures, so even the estimator's error is value-checkable)."""
-    r = num_hashes // bands
-    mins = ",\n                 ".join(
-        f"min((b1 + {j} * b2) % 2147483647) AS h{j}" for j in range(num_hashes)
-    )
-    band_selects = "\n           UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, concat({sig}) AS sig FROM sigs".format(
-            b=b,
-            sig=", ':', ".join(f"h{b * r + k}" for k in range(r)),
-        )
-        for b in range(bands)
-    )
+    mins, band_selects = _minhash_sigs_sql()
     match_terms = " + ".join(
-        f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)" for j in range(num_hashes)
+        f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)" for j in range(MINHASH_HASHES)
     )
     return f"""
     WITH {_SHINGLES_SQL},
@@ -325,7 +337,7 @@ def _minhash_estimate_oracle(num_hashes: int = 32, bands: int = 16) -> str:
                   FROM banded a JOIN banded b
                     ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
          est AS (SELECT doc_a, doc_b,
-                        CAST({match_terms} AS DOUBLE) / {num_hashes} AS est_jaccard
+                        CAST({match_terms} AS DOUBLE) / {MINHASH_HASHES} AS est_jaccard
                  FROM cand
                  JOIN sigs sa ON doc_a = sa.doc_id
                  JOIN sigs sb ON doc_b = sb.doc_id),
@@ -364,7 +376,7 @@ def q153(spark, sf):
     docs = _ts(spark, sf, "documents", "doc_id", "text", fan=True).select(
         "doc_id", tokens("text").alias("ts")
     )
-    return minhash_jaccard_estimates(docs, num_hashes=32, bands=16)
+    return minhash_jaccard_estimates(docs)
 
 
 @query(
@@ -756,25 +768,26 @@ def q54(spark, sf):
     return d.join(keep, "doc_id").select("doc_id", "lang", "source", "n_chars")
 
 
-def _kmeans_score(dim: int = 64) -> str:
+def _kmeans_score() -> str:
     """The IVF assignment score (dot / |centroid|) as DuckDB SQL; expects
     the point aliased ``p`` (column qv) and the centroid aliased ``c``
     (column c)."""
-    d1 = dim + 1
+    d1 = EMBEDDING_DIM + 1
     return (
         "CAST(list_sum(list_transform(range(1, {d1}), j -> p.qv[j] * c.c[j])) AS DOUBLE)"
         " / sqrt(CAST(list_sum(list_transform(c.c, x -> x * x)) AS DOUBLE))"
     ).format(d1=d1)
 
 
-def _kmeans_ctes(k: int = 8, iters: int = 8, dim: int = 64) -> str:
+def _kmeans_ctes(k: int = KMEANS_K) -> str:
     """CTE chain replaying the IVF coarse-quantizer fit verbatim —
-    ``c0, a1, c1, ..., c{iters}, asn`` (asn = final cell per corpus vector).
-    Expects ``pts`` (vec_id, embedding, qv) and ``ptr`` (the lowest-id
-    training sample) to be defined by the caller; shared by q56's oracle
-    and the composed IVF-PQ oracle (curation.q125)."""
-    d1 = dim + 1
-    score = _kmeans_score(dim)
+    ``c0, a1, c1, ..., c{KMEANS_ITERS}, asn`` (asn = final cell per corpus
+    vector). Expects ``pts`` (vec_id, embedding, qv) and ``ptr`` (the
+    lowest-id training sample) to be defined by the caller; shared by
+    q56's oracle and the composed IVF-PQ oracle (curation.q125)."""
+    iters = KMEANS_ITERS
+    d1 = EMBEDDING_DIM + 1
+    score = _kmeans_score()
     blocks = [
         f"""c0 AS (
       SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell, qv AS c
@@ -810,23 +823,21 @@ def _kmeans_ctes(k: int = 8, iters: int = 8, dim: int = 64) -> str:
     return ",".join(blocks)
 
 
-def _kmeans_qprobe_cte(nprobe: int = 3, iters: int = 8, dim: int = 64) -> str:
-    """The query-side probe CTE: each query's ``nprobe`` best cells under
-    the same assignment score. Expects ``q`` (query_id, qe, qv) and the
-    _kmeans_ctes chain to be defined."""
-    score = _kmeans_score(dim)
+def _kmeans_qprobe_cte() -> str:
+    """The query-side probe CTE: each query's ``IVF_NPROBE`` best cells
+    under the same assignment score. Expects ``q`` (query_id, qe, qv) and
+    the _kmeans_ctes chain to be defined."""
+    score = _kmeans_score()
     return f"""qprobe AS (
       SELECT query_id, qe, cell FROM (
         SELECT p.query_id, p.qe, c.cell,
                row_number() OVER (PARTITION BY p.query_id
                                   ORDER BY {score} DESC, c.cell) AS rn
-        FROM (SELECT query_id, qe, qv FROM q) p CROSS JOIN c{iters} c)
-      WHERE rn <= {nprobe})"""
+        FROM (SELECT query_id, qe, qv FROM q) p CROSS JOIN c{KMEANS_ITERS} c)
+      WHERE rn <= {IVF_NPROBE})"""
 
 
-def _ivf_oracle(
-    k: int = 8, iters: int = 8, nprobe: int = 3, dim: int = 64, train_rows: int = 100_000
-) -> str:
+def _ivf_oracle() -> str:
     """DuckDB oracle for q56: replays the ENTIRE IVF computation — integer
     quantization, the bounded lowest-id training sample, k-lowest-id init,
     every Lloyd iteration, final cell assignment, nprobe probe, exact
@@ -841,10 +852,10 @@ def _ivf_oracle(
                  x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
     ptr AS MATERIALIZED (
-      SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {train_rows}),
-    {_kmeans_ctes(k, iters, dim)},
+      SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_kmeans_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts WHERE {_Q_FILTER}),
-    {_kmeans_qprobe_cte(nprobe, iters, dim)},
+    {_kmeans_qprobe_cte()},
     cand AS (
       SELECT qp.query_id, e.vec_id AS neighbor_id, qp.qe, e.embedding
       FROM qprobe qp
@@ -893,11 +904,11 @@ def q56(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    cents = kmeans_fit(emb, k=8, max_iter=8)
+    cents = kmeans_fit(emb)
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    return ivf_topk(emb, q, cents, k=5, nprobe=3)
+    return ivf_topk(emb, q, cents, k=5)
 
 
 @query(
@@ -1022,9 +1033,9 @@ def q63(spark, sf):
 _SPAN_K = 8  # tokens per gram — the duplicated-span detection granularity
 
 
-def _gram_hashes(docs, k: int = _SPAN_K, extra_cols: tuple = (), checkpoint: bool = True):
+def _gram_hashes(docs, extra_cols: tuple = (), checkpoint: bool = True):
     """(doc_id[, extra], ts) -> (doc_id[, extra], pos, gh): one 60-bit md5
-    hash per k-token gram position, computed map-side from an O(k) array
+    hash per _SPAN_K-token gram position, computed map-side from an O(k) array
     slice (the q63 winnowing lesson — no substr rescans). The ONE
     definition shared by the whole substring-dedup family (q135 detect /
     q137 clean / q139 incremental), so hash width / k / the
@@ -1033,6 +1044,7 @@ def _gram_hashes(docs, k: int = _SPAN_K, extra_cols: tuple = (), checkpoint: boo
     consumers — the measured 2.2x win over recompute (SCALE_NOTES);
     pass False to keep full lineage (the plan-pin test does, so the gram
     stage stays visible to .explain)."""
+    k = _SPAN_K
     grams = docs.where(F.size("ts") >= k).select(
         "doc_id",
         *extra_cols,
@@ -1052,7 +1064,7 @@ def _gram_hashes(docs, k: int = _SPAN_K, extra_cols: tuple = (), checkpoint: boo
     return g.localCheckpoint() if checkpoint else g
 
 
-def _dup_spans(g, k: int = _SPAN_K):
+def _dup_spans(g):
     """(doc_id, pos, gh) -> maximal cross-doc duplicated spans
     (doc_id, span_start, span_len) — q135's detect stage, factored so the
     plan-pin test can compose it over an un-checkpointed gram relation."""
@@ -1071,7 +1083,7 @@ def _dup_spans(g, k: int = _SPAN_K):
         isl.groupBy("doc_id", "grp")
         .agg(
             F.min("pos").cast("int").alias("span_start"),
-            (F.max("pos") - F.min("pos") + k).cast("int").alias("span_len"),
+            (F.max("pos") - F.min("pos") + _SPAN_K).cast("int").alias("span_len"),
         )
         .select("doc_id", "span_start", "span_len")
     )
@@ -1420,7 +1432,7 @@ _PI_ITERS = 48  # power-method iterations for q141 (fixed count, replayed;
 # 2% variance residual on the gate corpus, 48 is <0.1%)
 
 
-def _cov_matrix_ctes(d: int = _COV_DIM) -> str:
+def _cov_matrix_ctes() -> str:
     """CTEs building the full covariance matrix as a list-of-lists
     (``cmat(m)``) from the q140 CTEs (q, nn, sij, si)."""
     cov = _COV_EXPR_SQL  # the ONE definition of the cov expression
@@ -1435,11 +1447,11 @@ def _cov_matrix_ctes(d: int = _COV_DIM) -> str:
     cmat AS MATERIALIZED (SELECT list(r ORDER BY i) AS m FROM crow)"""
 
 
-def _power_loop_ctes(
-    mat: str, prefix: str, t: int = _PI_ITERS, d: int = _COV_DIM
-) -> str:
-    """``t`` power-method iterations over matrix CTE ``mat(m)``: matvec,
-    norm, per-element round-12 normalize; yields ``{prefix}{t}(v)``."""
+def _power_loop_ctes(mat: str, prefix: str) -> str:
+    """``_PI_ITERS`` power-method iterations over matrix CTE ``mat(m)``:
+    matvec, norm, per-element round-12 normalize; yields
+    ``{prefix}{_PI_ITERS}(v)``."""
+    t, d = _PI_ITERS, _COV_DIM
     blocks = [f"{prefix}0 AS (SELECT list_transform(range(1, {d + 1}), x -> 0.125) AS v)"]
     for k in range(1, t + 1):
         blocks.append(
@@ -1456,16 +1468,17 @@ def _power_loop_ctes(
     return ",\n    ".join(blocks)
 
 
-def _power_iter_ctes(t: int = _PI_ITERS, d: int = _COV_DIM) -> str:
+def _power_iter_ctes() -> str:
     """CTE chain replaying the q141 power-method fit over the q140
-    covariance CTEs; yields ``v{t}(v)``."""
-    return _cov_matrix_ctes(d) + ",\n    " + _power_loop_ctes("cmat", "v", t, d)
+    covariance CTEs; yields ``v{_PI_ITERS}(v)``."""
+    return _cov_matrix_ctes() + ",\n    " + _power_loop_ctes("cmat", "v")
 
 
-def _deflate_ctes(t: int = _PI_ITERS, d: int = _COV_DIM) -> str:
+def _deflate_ctes() -> str:
     """Deflation step for the second component (q143): lambda1 = v'Cv over
-    the converged v{t}, then C2 = C - lambda1 v v' (round-12 entries),
-    each step one fixed float expression the driver fit mirrors."""
+    the converged v{_PI_ITERS}, then C2 = C - lambda1 v v' (round-12
+    entries), each step one fixed float expression the driver fit mirrors."""
+    t, d = _PI_ITERS, _COV_DIM
     return f"""lam AS MATERIALIZED (
       SELECT round(list_sum(list_transform(range(1, {d + 1}),
                  i -> v[i] * list_sum(list_transform(range(1, {d + 1}),
@@ -1518,16 +1531,6 @@ def q141(spark, sf):
     return _ts(spark, sf, "embeddings", "vec_id", "embedding").select(
         "vec_id", proj.alias("proj")
     )
-
-
-def _half_away(x: float, nd: int) -> float:
-    """Round half-away-from-zero — the behavior of both engines' round()
-    (std::round / Spark HALF_UP); Python's round() is half-even and would
-    diverge at exact boundaries."""
-    import math
-
-    p = 10.0 ** nd
-    return math.floor(abs(x) * p + 0.5) / p * (1.0 if x >= 0 else -1.0)
 
 
 def _pca_power_components(spark, sf, n_components: int = 1) -> list[list[float]]:
@@ -1622,21 +1625,20 @@ def _probe_sigma_sql(z: str) -> str:
     return f"0.5e0 + (0.5e0 * {z}) / (1.0e0 + abs({z}))"
 
 
-def _probe_z_sql(dim: int, walias: str = "w") -> str:
+def _probe_z_sql() -> str:
     """Left-associative linear score — association order is part of the
     cross-engine contract (mirrors operators.probe._z)."""
-    return f"{walias}.w0 + " + " + ".join(
-        f"{walias}.w{j} * f{j}" for j in range(1, dim + 1)
-    )
+    return "w.w0 + " + " + ".join(f"w.w{j} * f{j}" for j in range(1, PROBE_DIM + 1))
 
 
-def _probe_oracle(dim: int = 8, iters: int = 8, lr: float = 0.5) -> str:
+def _probe_oracle() -> str:
     """DuckDB oracle for q145: replays the ENTIRE logistic-probe fit —
     floor-quantized features, every full-batch GD iteration (exact
     DECIMAL(38,0) gradient sums of floor-quantized per-row terms, round-12
     half-away weight updates), then the map-only scoring pass. Possible
     because the fast-sigmoid link is pure +,*,/,abs — no exp() anywhere
     (the q141 replay-the-fit pattern applied to a trained classifier)."""
+    dim, iters, lr = PROBE_DIM, PROBE_ITERS, PROBE_LR
     feat_cols = ",\n             ".join(
         f"floor(CAST(embedding[{j}] AS DOUBLE) * 1.0e6) / 1.0e6 AS f{j}"
         for j in range(1, dim + 1)
@@ -1666,7 +1668,7 @@ def _probe_oracle(dim: int = 8, iters: int = 8, lr: float = 0.5) -> str:
             f"""gt{i} AS MATERIALIZED (
       SELECT {gsums}
       FROM (SELECT y, {', '.join(f'f{j}' for j in range(1, dim + 1))},
-                   {_probe_z_sql(dim)} AS z
+                   {_probe_z_sql()} AS z
             FROM feat CROSS JOIN wt{i - 1} w)),
     wt{i} AS MATERIALIZED (
       SELECT {wups}
@@ -1682,7 +1684,7 @@ def _probe_oracle(dim: int = 8, iters: int = 8, lr: float = 0.5) -> str:
            round({sig_final}, 6) AS score,
            CAST(CASE WHEN round({sig_final}, 6) >= 0.5e0 THEN 1 ELSE 0 END
                 AS INTEGER) AS pred
-    FROM (SELECT vec_id, y, {_probe_z_sql(dim)} AS z
+    FROM (SELECT vec_id, y, {_probe_z_sql()} AS z
           FROM feat CROSS JOIN wt{iters} w)"""
     )
 
@@ -1766,9 +1768,7 @@ _SEMDEDUP_TAU = 0.45  # same verify threshold as the LSH variant (q100)
 _SEMDEDUP_K = 64
 
 
-def _semdedup_oracle(
-    k: int = _SEMDEDUP_K, iters: int = 8, dim: int = 64, threshold: float = _SEMDEDUP_TAU
-) -> str:
+def _semdedup_oracle() -> str:
     """DuckDB oracle for q146: replays the kmeans fit (the q56 CTE chain
     verbatim), the cell assignment, the within-cell pair comparison, and
     the lowest-id-wins keep rule — the learned clusters are value-checked,
@@ -1785,8 +1785,8 @@ def _semdedup_oracle(
                  x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
     ptr AS MATERIALIZED (
-      SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT 100000),
-    {_kmeans_ctes(k, iters, dim)},
+      SELECT vec_id, qv FROM pts ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
+    {_kmeans_ctes(_SEMDEDUP_K)},
     cand AS (
       SELECT x.vec_id AS va, y.vec_id AS vb
       FROM asn x JOIN asn y ON x.cell = y.cell AND x.vec_id < y.vec_id),
@@ -1795,7 +1795,7 @@ def _semdedup_oracle(
       FROM cand c
       JOIN pts ea ON ea.vec_id = c.va
       JOIN pts eb ON eb.vec_id = c.vb
-      WHERE {cos} >= {threshold})
+      WHERE {cos} >= {_SEMDEDUP_TAU})
     SELECT a.vec_id,
            CAST(a.cell AS INTEGER) AS cell,
            CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS INTEGER) AS kept
@@ -1838,8 +1838,8 @@ def q146(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    cents = kmeans_fit(emb, k=_SEMDEDUP_K, max_iter=8)
-    return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU, vectorized=True)
+    cents = kmeans_fit(emb, k=_SEMDEDUP_K)
+    return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU)
 
 
 @query(
@@ -1862,8 +1862,8 @@ def q147(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    cents = kmeans_fit(emb, k=_SEMDEDUP_K, max_iter=8)
-    return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU, vectorized=True)
+    cents = kmeans_fit(emb, k=_SEMDEDUP_K)
+    return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU)
 
 
 @query(
@@ -2134,7 +2134,7 @@ def q144(spark, sf):
     return lm_dsir_score_pairs(pairs, target, raw)
 
 
-def _semantic_lsh_oracle(threshold: float = 0.45) -> str:
+def _semantic_lsh_oracle() -> str:
     """DuckDB oracle for q100: the same deterministic hyperplanes as q40,
     same band packing, candidates = pairs sharing a band bucket, exact
     cosine verify — label-free semantic dedup, value-checked end to end."""
@@ -2165,7 +2165,7 @@ def _semantic_lsh_oracle(threshold: float = 0.45) -> str:
                    / (sqrt({_DOT.format(a='ea', b='ea')})
                       * sqrt({_DOT.format(a='eb', b='eb')})), 4) AS cos
       FROM cand)
-    SELECT vec_a, vec_b, cos FROM scored WHERE cos >= {threshold}"""
+    SELECT vec_a, vec_b, cos FROM scored WHERE cos >= {_SEMDEDUP_TAU}"""
 
 
 @query("q100_semantic_dup_lsh", _semantic_lsh_oracle(), tags=("dedup", "embedding", "lsh", "semantic"))
@@ -2179,7 +2179,7 @@ def q100(spark, sf):
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
     emb = _ts(spark, sf, "embeddings", "vec_id", "embedding", fan=True)
-    return lsh_dup_pairs(emb, threshold=0.45, planes=_PLANES, bands=2)
+    return lsh_dup_pairs(emb, _PLANES, threshold=_SEMDEDUP_TAU, bands=2)
 
 
 @query("q64_embedding_topk_vectorized", _BRUTE_TOPK_ORACLE, tags=("similarity", "knn", "vectorized"))
@@ -2561,24 +2561,22 @@ def q157(spark, sf):
 # --------------------------------------------------------------------------
 
 _PR_ITER = 5
-_PR_DAMP = 0.85
-_PR_SCALE = 9
 
 
-def _pagerank_oracle(n_iter: int = _PR_ITER) -> str:
+def _pagerank_oracle() -> str:
     """DuckDB oracle for q158: the exhaustive exact-Jaccard >=0.5 pair set
-    (q36/q98's SQL) as the edge list, then all n_iter PageRank iterations
+    (q36/q98's SQL) as the edge list, then all _PR_ITER PageRank iterations
     unrolled as CTEs — contributions quantized to DECIMAL(28,9) so each
     per-node sum is exact and the trajectory is engine-independent."""
     its = []
-    for i in range(1, n_iter + 1):
+    for i in range(1, _PR_ITER + 1):
         its.append(
             f"""pr{i} AS (
       SELECT d.id, d.deg,
-             round(0.15 + {_PR_DAMP} * CAST(t.s AS DOUBLE), {_PR_SCALE}) AS pr
+             round(0.15 + {PAGERANK_DAMPING} * CAST(t.s AS DOUBLE), {PAGERANK_SCALE}) AS pr
       FROM deg d
       JOIN (SELECT e.b AS id,
-                   sum(CAST(round(p.pr / p.deg, {_PR_SCALE}) AS DECIMAL(28,{_PR_SCALE}))) AS s
+                   sum(CAST(round(p.pr / p.deg, {PAGERANK_SCALE}) AS DECIMAL(28,{PAGERANK_SCALE}))) AS s
             FROM pr{i - 1} p JOIN e0 e ON p.id = e.a
             GROUP BY 1) t ON d.id = t.id)"""
         )
@@ -2599,7 +2597,7 @@ def _pagerank_oracle(n_iter: int = _PR_ITER) -> str:
     deg AS (SELECT a AS id, count(*) AS deg FROM e0 GROUP BY 1),
     pr0 AS (SELECT id, deg, 1.0 AS pr FROM deg),
     {chain}
-    SELECT id AS doc_id, pr AS pagerank FROM pr{n_iter} ORDER BY doc_id"""
+    SELECT id AS doc_id, pr AS pagerank FROM pr{_PR_ITER} ORDER BY doc_id"""
 
 
 @query(

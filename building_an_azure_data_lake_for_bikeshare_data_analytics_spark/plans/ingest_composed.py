@@ -65,14 +65,11 @@ Reference scope note: the reference notebook has no maintenance surface
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ..functions.hashing import H60_SQL
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .census_maintenance import _CK, _census_state
 from .packing import _NSHARDS, _SEQ_CAP
 from .decontamination import _MAINT_DECON_SQL
@@ -141,13 +138,6 @@ _COMPOSED_SQL = f"""WITH tk AS (
     ORDER BY artifact"""
 
 
-def _store_root(spark) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ingest_{spark.sparkContext.applicationId}",
-    )
-
-
 def _n(df) -> any:
     return df.agg(F.count(F.lit(1)).cast("long").alias("n"))
 
@@ -188,19 +178,17 @@ def q252(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
 
     from .packing import packing_manifest
 
-    root = _store_root(spark)
+    root = session_store(spark, "ingest")
     sig_s, tf_s, dl_s = root + "_sig", root + "_tf", root + "_dl"
     dec_s, ivf_s, cen_s = root + "_decon", root + "_ivf", root + "_cents"
     pk_s, sp_s = root + "_packed", root + "_spans"
-    for p in (sig_s, tf_s, dl_s, dec_s, ivf_s, cen_s, pk_s, sp_s):
-        register_cleanup(p)
 
     # THE shared scan: documents read + tokenized once, materialized;
     # every text-side relation below derives from this checkpoint.
@@ -286,7 +274,7 @@ def q252(spark, sf):
         )
 
     def _b_ivf():
-        cents = kmeans_fit(emb.where(~vec_new), k=8, max_iter=8)
+        cents = kmeans_fit(emb.where(~vec_new))
         write_version(
             assign_cells(emb.where(~vec_new), cents), ivf_s, partition_by=["cell"]
         )

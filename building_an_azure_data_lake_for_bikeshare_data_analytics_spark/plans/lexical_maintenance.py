@@ -41,23 +41,13 @@ Reference scope note: the reference notebook has no text surface at all
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .lakehouse import _BM25_B, _BM25_K1, _BM25_TERMS
 from .training import _HASH_SQL, _doc_hash
-
-
-def _store_path(spark) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_lex_index_{spark.sparkContext.applicationId}",
-    )
 
 
 #: token-prefix partition fan-out of the stored tf relation. The bucket
@@ -208,7 +198,7 @@ def q248(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -216,10 +206,8 @@ def q248(spark, sf):
     # _ts (r12): downstream index_rows_from_tokens tokenizes per row
     docs = _ts(spark, sf, "documents", "doc_id", "text")
     is_new = _doc_hash() >= 800
-    store = _store_path(spark)
+    store = session_store(spark, "lex_index")
     tf_store, dl_store = store + "_tf", store + "_dl"
-    register_cleanup(tf_store)
-    register_cleanup(dl_store)
 
     # 1) v1: tokenize the existing corpus ONCE; tf + len tables to store,
     #    hive-partitioned on their probe keys (token-prefix bucket /

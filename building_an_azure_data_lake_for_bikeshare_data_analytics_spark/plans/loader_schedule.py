@@ -41,10 +41,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _TOKS
 from .packing import (
-    _NSHARDS,
     _SEQ_CAP,
     _stage_ctes,
     packing_manifest,
@@ -70,7 +69,7 @@ def _sched_hash(epoch: int) -> F.Column:
     ) % F.lit(_P)
 
 
-def loader_schedule(manifest, epoch: int, batch_size: int = _STEP_B, nb: int = _NB):
+def loader_schedule(manifest, epoch: int):
     """One epoch's schedule over a (shard, seq_id, …) packing manifest:
     (epoch, shard, seq_id, step, slot), globally ranked by the seeded
     hash order WITHOUT a global sort — rank within hash bucket
@@ -79,7 +78,7 @@ def loader_schedule(manifest, epoch: int, batch_size: int = _STEP_B, nb: int = _
         "shard",
         "seq_id",
         _sched_hash(epoch).cast("bigint").alias("h"),
-    ).withColumn("b", F.pmod(F.col("h"), F.lit(nb)).cast("int"))
+    ).withColumn("b", F.pmod(F.col("h"), F.lit(_NB)).cast("int"))
     w = Window.partitionBy("b").orderBy("h", "shard", "seq_id")
     ranked = s.withColumn("r_in_b", F.row_number().over(w))
     # per-bucket offsets: NB rows — the exclusive cumsum of bucket sizes
@@ -89,7 +88,7 @@ def loader_schedule(manifest, epoch: int, batch_size: int = _STEP_B, nb: int = _
     offsets = sizes.select(
         "b", F.coalesce(F.sum("n").over(off_w), F.lit(0)).alias("off")
     )
-    cap = F.lit(batch_size)
+    cap = F.lit(_STEP_B)
     return (
         ranked.join(F.broadcast(offsets), "b")
         .select(

@@ -63,12 +63,9 @@ surface (SURVEY.md §2.6) — training-data-pipeline extension set.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _TOKS
 from .packing import (
     _NSHARDS,
@@ -79,6 +76,9 @@ from .packing import (
     packing_manifest,
     packing_spans,
 )
+
+#: bounded re-derive attempts of a packed/span append that loses a race
+_APPEND_ATTEMPTS = 3
 
 
 def _finalize(manifest):
@@ -121,7 +121,7 @@ def _monotone_guard(contrib_lo, state_hi, store: str) -> None:
 
 
 def packed_append(
-    spark, store: str, batch, retries: int = 3, require_monotone: bool = True
+    spark, store: str, batch, require_monotone: bool = True
 ) -> int:
     """Race-safe batch append to the packed-sequence store: read the
     per-shard offsets AND high-water doc_id from the current version,
@@ -145,7 +145,7 @@ def packed_append(
         read_version,
     )
 
-    for attempt in range(retries):
+    for attempt in range(_APPEND_ATTEMPTS):
         base_v = current_version(store)
         state = (
             read_version(spark, store, base_v)
@@ -166,7 +166,7 @@ def packed_append(
                 contrib, store, partition_by=["shard"], expected_base=base_v
             )
         except ConcurrentWriteError:
-            if attempt == retries - 1:
+            if attempt == _APPEND_ATTEMPTS - 1:
                 raise
     raise AssertionError("unreachable")
 
@@ -200,18 +200,14 @@ def q258(spark, sf):
     reproduces the scratch pack value-for-value. Like the other
     maintenance heads, plan construction is eager — the store is the
     subject."""
-    from ..sources.versioned import register_cleanup, vacuum
+    from ..sources.versioned import session_store, vacuum
 
     # _ts (r12): token counts tokenize every text — fan the scan out
     docs = _ts(spark, sf, "documents", "doc_id", "text")
     # monotone split: batch docs follow corpus docs in every shard's
     # doc_id order (arrival order in a deployment). Bounded collect: 1 row.
     thr = docs.agg((F.max("doc_id") * 4).cast("bigint")).first()[0] // 5
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_packed_{spark.sparkContext.applicationId}",
-    )
-    register_cleanup(store)
+    store = session_store(spark, "packed")
     cur = packed_store_lifecycle(
         spark,
         store,
@@ -223,7 +219,7 @@ def q258(spark, sf):
 
 
 def span_append(
-    spark, store: str, batch, retries: int = 3, require_monotone: bool = True
+    spark, store: str, batch, require_monotone: bool = True
 ) -> int:
     """``packed_append`` for the span store: span rows carry ``doc_id``
     natively, so the high-water mark needs no extra column — the same
@@ -236,7 +232,7 @@ def span_append(
         read_version,
     )
 
-    for attempt in range(retries):
+    for attempt in range(_APPEND_ATTEMPTS):
         base_v = current_version(store)
         state = (
             read_version(spark, store, base_v)
@@ -255,7 +251,7 @@ def span_append(
                 contrib, store, partition_by=["shard"], expected_base=base_v
             )
         except ConcurrentWriteError:
-            if attempt == retries - 1:
+            if attempt == _APPEND_ATTEMPTS - 1:
                 raise
     raise AssertionError("unreachable")
 
@@ -288,15 +284,11 @@ def q260(spark, sf):
     full corpus — a green row certifies every stored slice boundary
     value-for-value through the append. Same monotone doc_id split and
     eager store construction as q258."""
-    from ..sources.versioned import register_cleanup, vacuum
+    from ..sources.versioned import session_store, vacuum
 
     docs = _ts(spark, sf, "documents", "doc_id", "text")
     thr = docs.agg((F.max("doc_id") * 4).cast("bigint")).first()[0] // 5
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_spans_{spark.sparkContext.applicationId}",
-    )
-    register_cleanup(store)
+    store = session_store(spark, "spans")
     cur = span_store_lifecycle(
         spark,
         store,
@@ -412,15 +404,11 @@ def q261(spark, sf):
     training sequences — the contract a loader actually exercises
     (r11 verdict item 5). Same monotone doc_id split and eager store
     construction as q258/q260."""
-    from ..sources.versioned import register_cleanup, vacuum
+    from ..sources.versioned import session_store, vacuum
 
     docs = _ts(spark, sf, "documents", "doc_id", "text")
     thr = docs.agg((F.max("doc_id") * 4).cast("bigint")).first()[0] // 5
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_loader_{spark.sparkContext.applicationId}",
-    )
-    register_cleanup(store)
+    store = session_store(spark, "loader")
     span_store_lifecycle(
         spark,
         store,

@@ -181,7 +181,7 @@ def packing_manifest(docs, base=None, with_doc_bounds: bool = False):
     )
 
 
-def _span_stage(docs, base=None):
+def _span_stage(docs, base):
     """The shared (doc x sequence) crossing stage of the packing family:
     per-shard doc_id-ordered token cumsum, then the boundary explode —
     one row per sequence a doc touches, carrying (shard, doc_id, n_toks,
@@ -316,10 +316,10 @@ FROM rate r LEFT JOIN kept k ON r.source = k.source
 GROUP BY r.source, r.rate_e6 ORDER BY r.source"""
 
 
-def mixture_rates(docs, tok=None):
+def mixture_rates(docs, tok):
     """The q254 rate table (source, rate_e6) — the _RATE_CTES twin.
-    ``tok`` overrides the per-source (source, toks) totals relation:
-    q256 passes the MAINTAINED census stats table here, which removes
+    ``tok`` is the per-source (source, toks) totals relation, or None to
+    derive it from ``docs``: q256 passes the MAINTAINED census stats table here, which removes
     the rate derivation's corpus scan (|sources| stored rows instead).
 
     Integer floor division throughout (expr: DIV) — the SQL twin's //.
@@ -346,12 +346,12 @@ def mixture_rates(docs, tok=None):
     )
 
 
-def mixture_kept(docs, tok=None):
+def mixture_kept(docs):
     """The realized sampled corpus: ``docs`` rows kept by the q254 hash
     threshold, original columns intact — the relation a deployment
     actually feeds downstream (q257 packs it). One corpus scan, plus the
-    rate derivation's (zero when ``tok`` is the maintained census)."""
-    rate = mixture_rates(docs, tok)
+    rate derivation's."""
+    rate = mixture_rates(docs, None)
     return (
         docs.join(F.broadcast(rate), "source")
         .where(_hash6_col() < F.col("rate_e6"))
@@ -502,12 +502,9 @@ def q256(spark, sf):
     scan for the realization. The oracle is q254's from-scratch SQL
     verbatim, so a green row certifies that the stored census totals
     reproduce the scan-derived mix value-for-value through the merge."""
-    import os
-    import tempfile
-
     from ..sources.versioned import (
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -516,11 +513,7 @@ def q256(spark, sf):
 
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
     is_new = _doc_hash() >= 800
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_census_mix_{spark.sparkContext.applicationId}",
-    )
-    register_cleanup(store)
+    store = session_store(spark, "census_mix")
 
     # the q250 stats lifecycle: v1 corpus state, batch state merged in
     stats_v1, _ = _census_state(docs.where(~is_new))

@@ -51,22 +51,22 @@ from . import span_corruption  # noqa: F401  (registers q266, q268)
 # deterministic scheduler in ``plans/evidence.py`` (never-self-green
 # oracled queries first in insertion order, then oldest effective
 # evidence, oracle-twin groups derived from verbatim oracle-SQL identity,
-# staleness bound = 4 rounds). ``tools/check_rotation.py`` and
+# staleness bound computed from the registry size: 6 rounds at 260
+# oracled queries). ``tools/check_rotation.py`` and
 # ``tests/test_rotation.py`` recompute the schedule from the committed
 # CORRECTNESS_r*.json history and fail on any drift from this tuple —
 # the policy is data + code now, not prose (r4 verdict item 2).
 #
-# Round-13 prefix (computed by evidence.build_prefix(this_round=13) from
-# the committed CORRECTNESS_r1..r12 history): the four REVIEW_PINS lead —
-# q123/q140/q146/q247, the r12 kernel-switched queries the r12 verdict
-# flagged as never independently hashed by the driver since the switch
-# (evidence.REVIEW_PINS[13]; their own evidence is r8/r9) — then the
-# r7-evidence staleness cohort (q95-q97, q238-q243, q01/q21/q23) and the
-# r8-evidence cohort in effective-green order: the similarity/ANN
-# batteries (q153/q98/q39-q41/q154/q99), text kernels (q53/q63/q135/
-# q137-q148 families), the incremental-dedup chain (q100-q106, q110-q116)
-# up to the 50-slot cap. No never-self-green queries exist this round
-# (q261-q268 were gated green in r12).
+# Round-14 prefix (computed by evidence.build_prefix(this_round=14) from
+# the committed CORRECTNESS_r1..r13 history): no REVIEW_PINS and no
+# never-self-green queries this round, so the prefix is the staleness
+# order alone — the 13 queries whose effective evidence is still r8 (the
+# curation family q113-q124, the BPE pair q131/q132, q244/q245) lead,
+# then the r9-evidence cohort in effective-green order: the quantized
+# and vectorized ANN kernels (q65/q104/q109/q120/q129/q130), the
+# dedup-graph and sketch heads (q157/q158/q43/q136/q159/q168/q183), and
+# the lakehouse/analytics heads (q149-q177, q199, q201) up to the
+# 50-slot cap.
 # Deliberately never scheduled: q46/q81 (rows-only sketch values;
 # q134/q136 carry their evidence) and fixture-tagged superseded folds
 # (q56/q118/q125).
@@ -79,59 +79,59 @@ from . import span_corruption  # noqa: F401  (registers q266, q268)
 # window while still hard-failing on genuine drift from the schedule the
 # tuple was frozen for (r5 verdict item 5).
 # ---------------------------------------------------------------------------
-PREFIX_ROUND: int = 13
+PREFIX_ROUND: int = 14
 
 _PRIORITY: tuple[str, ...] = (
-    "q123_pq_adc_rerank",
-    "q140_embedding_covariance",
-    "q146_semantic_dedup_cells",
-    "q247_ivf_pq_index_maintenance",
-    "q95_supplier_revenue_rank",
-    "q96_trailing_hour_stats",
-    "q97_salted_flag_totals",
-    "q238_url_host_dedup",
-    "q239_dedup_index_maintenance",
-    "q240_domain_quota_enforce",
-    "q241_cross_source_overlap",
-    "q242_dedup_identity_ladder",
-    "q243_vocab_growth",
-    "q01_avg_price_by_dow",
-    "q21_member_spend_rides",
-    "q23_format_orders",
-    "q153_minhash_jaccard_estimate",
-    "q98_lsh_verified_pairs",
-    "q39_embedding_topk",
-    "q40_embedding_lsh_ann",
-    "q154_ann_recall",
-    "q41_multimodal_features",
-    "q99_frame_sample",
-    "q53_simhash_near_pairs",
-    "q63_winnow_fingerprints",
-    "q135_substring_dup_spans",
-    "q137_substring_dedup_clean",
-    "q141_pca_project",
-    "q143_pca_project2",
-    "q145_logreg_probe",
-    "q148_char_entropy",
-    "q139_incremental_span_dedup",
-    "q138_doc_lm_score",
-    "q144_dsir_weights",
-    "q100_semantic_dup_lsh",
-    "q64_embedding_topk_vectorized",
-    "q107_cms_heavy_hitters",
-    "q108_weighted_sample",
-    "q163_jaccard_prefix_join",
-    "q126_event_gap_seconds",
-    "q127_order_age_years",
-    "q134_kmv_distinct_users",
-    "q101_source_quota_cap",
-    "q102_bloom_prefilter_join",
-    "q103_incremental_dedup",
-    "q105_dup_group_canonical",
-    "q106_corpus_shuffle",
-    "q110_token_budget_mix",
-    "q111_salted_revenue_join",
-    "q112_incremental_gold_refresh",
+    "q113_leakage_safe_split",
+    "q114_decayed_user_activity",
+    "q115_length_bucket_batches",
+    "q116_hard_negatives",
+    "q117_corpus_filter_gate",
+    "q119_source_token_drift",
+    "q121_curation_pipeline",
+    "q122_value_drift_by_window",
+    "q124_curriculum_order",
+    "q131_bpe_vocab",
+    "q132_bpe_token_counts",
+    "q244_multi_benchmark_decontamination",
+    "q245_signature_table_maintenance",
+    "q65_embedding_dup_pairs_vectorized",
+    "q104_quantized_topk",
+    "q109_quantized_topk_vectorized",
+    "q157_token_pmi_pairs",
+    "q158_dup_graph_pagerank",
+    "q43_embedding_dup_pairs",
+    "q136_histogram_quantiles",
+    "q155_funnel_conversion",
+    "q156_retention_cohorts",
+    "q159_kmv_merge",
+    "q168_theta_intersection",
+    "q183_rolling_distinct_kmv",
+    "q165_weighted_sample",
+    "q167_integrity_audit",
+    "q120_pq_adc_topk_vectorized",
+    "q129_ivf_pq_rerank_vectorized",
+    "q130_ivf_ann_vectorized",
+    "q201_temperature_mix",
+    "q149_merge_upsert",
+    "q150_scd2_history",
+    "q151_bm25_topk",
+    "q152_value_trend_ols",
+    "q160_temporal_version_join",
+    "q161_zone_map_pruning",
+    "q162_version_diff_cdf",
+    "q164_zorder_layout",
+    "q166_compaction_plan",
+    "q199_rrf_fusion",
+    "q169_hll_distinct",
+    "q170_column_profile",
+    "q171_pareto_frontier",
+    "q172_grouping_sets",
+    "q173_event_transitions",
+    "q174_mad_outliers",
+    "q175_chi_square_independence",
+    "q176_join_size_estimate",
+    "q177_sorted_neighborhood",
 )
 
 _missing = [n for n in _PRIORITY if n not in REGISTRY]

@@ -23,7 +23,7 @@ from pyspark.sql.types import DecimalType
 
 from ..functions.rank import fractional_rank2
 from ..functions.text import STOPWORDS, marker_count, tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 
 _STOPS_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
 

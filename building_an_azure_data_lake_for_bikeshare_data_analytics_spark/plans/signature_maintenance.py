@@ -37,13 +37,8 @@ extension set.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
-from pyspark.sql import functions as F
-
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _SHINGLES_SQL
 from .training import _HASH_SQL, _doc_hash
 
@@ -66,16 +61,6 @@ _CROSS_SQL = f"""WITH {_SHINGLES_SQL},
         ORDER BY doc_a, doc_b"""
 
 
-def _store_path(spark) -> str:
-    """Per-session signature-store root (same convention as q239's
-    component store: unique per application; within a session repeated
-    runs append versions and read_current stays deterministic)."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sig_table_{spark.sparkContext.applicationId}",
-    )
-
-
 @query(
     "q245_signature_table_maintenance",
     _CROSS_SQL,
@@ -95,7 +80,7 @@ def q245(spark, sf):
     from ..sources.versioned import (
         append_version,
         read_current,
-        register_cleanup,
+        session_store,
         vacuum,
         write_version,
     )
@@ -104,8 +89,7 @@ def q245(spark, sf):
     docs = _ts(spark, sf, "documents", "doc_id", "text", fan=True).select(
         "doc_id", tokens("text").alias("ts")
     )
-    store = _store_path(spark)
-    register_cleanup(store)
+    store = session_store(spark, "sig_table")
 
     # one shingle relation feeds signature build AND the exact verify —
     # the same shared-relation discipline as q239

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from .base import _t, _ts, query
+from .base import _ts, query
 from .extensions import _TOKS
 
 #: fraction of docs FIM-transformed, in 1e-6 units against the e6 doc
@@ -64,7 +64,7 @@ FROM pp
 ORDER BY doc_id"""
 
 
-def fim_transform(docs, rate_e6: int = _FIM_RATE_E6):
+def fim_transform(docs):
     """The FIM transform over a (doc_id, text) relation: one row per
     tokenized doc — (doc_id, n_toks, fim, p1, p2, out_md5), where
     ``out_md5`` fingerprints the emitted token stream (PSM layout for
@@ -79,7 +79,7 @@ def fim_transform(docs, rate_e6: int = _FIM_RATE_E6):
         "doc_id",
         tokens("text").alias("ts"),
         F.size(tokens("text")).cast("bigint").alias("n_toks"),
-        (h6 < F.lit(rate_e6)).alias("fim"),
+        (h6 < F.lit(_FIM_RATE_E6)).alias("fim"),
     ).where(F.col("n_toks") > 0)
     # mod doc_id FIRST (the _HASH6 posture): a bare doc_id * mixer
     # overflows int64 past doc_id ~4e9 — a crash under ANSI at corpus

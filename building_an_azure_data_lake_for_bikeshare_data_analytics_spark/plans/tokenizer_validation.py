@@ -107,7 +107,7 @@ def q235(spark, sf):
     from ..operators.bpe import bpe_fit, roundtrip_flags
 
     d = _t(spark, sf, "documents")
-    merges = bpe_fit(d.select("text"), n_merges=8, top_words=1000)
+    merges = bpe_fit(d.select("text"))
     # _ts (r12): the per-word roundtrip_flags expressions dominated the
     # head as one task (2.4 s single-task stage profiled) — fan out the
     # scan below the explode

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.url import canonical_url, host_of, registrable_domain
-from .base import _t, _ts, query
+from .base import _ts, query
 
 #: a domain holding more than this fraction of the corpus trips the
 #: over-quota flag (RefinedWeb caps per-domain contributions so one

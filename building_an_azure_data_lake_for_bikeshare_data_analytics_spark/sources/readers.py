@@ -38,20 +38,12 @@ STAR_TABLES = (
 )
 
 
-def read_csv_raw(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-) -> DataFrame:
+def read_csv_raw(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Headerless comma-separated scan: every column arrives as a string
-    named ``_c<i>`` (ipynb:L250-253). Without ``schema`` Spark runs one job to
-    count the first line's columns; ``pipeline.bronze`` passes the
-    registry's all-string ``functions.schema.raw_bikeshare_schema``, so
-    creating the frame runs no job and the width cannot drift."""
-    reader = spark.read.format("csv").option("header", "false")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
+    named ``_c<i>`` (ipynb:L250-253). ``schema`` is the registry's
+    all-string ``functions.schema.raw_bikeshare_schema``, so creating the
+    frame runs no job and the width cannot drift."""
+    return spark.read.format("csv").option("header", "false").schema(schema).load(path)
 
 
 def read_parquet_table(spark: SparkSession, root: str, name: str) -> DataFrame:

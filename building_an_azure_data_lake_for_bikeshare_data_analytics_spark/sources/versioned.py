@@ -51,8 +51,11 @@ of the new version. It is the store's only backend.
 
 from __future__ import annotations
 
+import atexit
+import glob
 import os
 import shutil
+import tempfile
 import time
 import uuid
 from contextlib import contextmanager
@@ -526,19 +529,28 @@ def vacuum(path: str, keep: int = 2, grace_seconds: float = 300.0) -> list[int]:
 _CLEANUP_REGISTERED: set[str] = set()
 
 
-def register_cleanup(path: str) -> None:
-    """Remove a scratch store directory at interpreter exit (idempotent).
+def session_store(spark: SparkSession, kind: str) -> str:
+    """Path of the per-session scratch store ``kind``:
+    ``<tempdir>/spark_graft_<kind>_<applicationId>``. The path and its
+    ``<path>_<suffix>`` siblings (a head's derived stores) are removed at
+    interpreter exit.
 
-    The per-session maintenance stores (q239's component table, q245's
-    signature table) live under the system temp dir keyed by
-    applicationId; a long-lived host running many sessions would
-    otherwise accumulate one directory per application (r8 advice).
-    Registered lazily by the query that creates the store — real
-    deployments that want the store to PERSIST simply never call this."""
-    if path in _CLEANUP_REGISTERED:
-        return
-    _CLEANUP_REGISTERED.add(path)
-    import atexit
-    import shutil
+    The maintenance heads' stores (q239's component table, q245's
+    signature table, ...) are unique per application, so sessions never
+    read each other's versions, while repeated runs within a session
+    append versions. Without the exit cleanup a long-lived host running
+    many sessions would accumulate one directory per application (r8
+    advice). A deployment that wants a store to PERSIST names its own
+    path."""
+    path = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_{kind}_{spark.sparkContext.applicationId}"
+    )
+    if path not in _CLEANUP_REGISTERED:
+        _CLEANUP_REGISTERED.add(path)
+        atexit.register(_remove_store, path)
+    return path
 
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+
+def _remove_store(path: str) -> None:
+    for p in [path, *glob.glob(glob.escape(path) + "_*")]:
+        shutil.rmtree(p, ignore_errors=True)

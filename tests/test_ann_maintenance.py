@@ -13,7 +13,6 @@ corpus, and the centroid store holds exactly the k quantizer rows.
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.similarity import (
     assign_cells,
@@ -94,17 +93,15 @@ def test_q246_store_lifecycle(spark):
     corpus-only version. Versions are addressed RELATIVE to current
     (each run appends two and vacuums to keep=2, so absolute version
     numbers shift when the session has run q246 before)."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         current_version,
         read_current,
         read_version,
+        session_store,
     )
 
     QUERIES[NAME](spark, SF_SMOKE).collect()
-    store = _store_path(spark)
+    store = session_store(spark, "ann_index")
     emb = _emb(spark)
     n_all = emb.count()
     n_corpus = emb.where(_vec_hash() < 800).count()
@@ -255,17 +252,15 @@ def test_q247_store_lifecycle(spark):
     """The code store's current version covers every vector exactly once
     with m=4 codes each; the codebook store holds m*ksub=32 rows; batch
     vectors never appear in the corpus-only version."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-        _pq_store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         current_version,
         read_current,
         read_version,
+        session_store,
     )
 
     QUERIES["q247_ivf_pq_index_maintenance"](spark, SF_SMOKE).collect()
-    store = _pq_store_path(spark)
+    store = session_store(spark, "annpq_index")
     emb = _emb(spark)
     n_all = emb.count()
     n_corpus = emb.where(_vec_hash() < 800).count()

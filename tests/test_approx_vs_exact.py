@@ -18,7 +18,6 @@ Tolerances are the algorithms' documented accuracy:
   gap at sf0.01 group sizes.
 """
 
-from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import QUERIES
 

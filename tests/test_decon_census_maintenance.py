@@ -62,15 +62,13 @@ def test_q249_stored_index_equals_from_scratch(spark):
     """v1(two benchmarks) ∪ v2-append(third) == bench_shingle_table over
     ALL benchmarks — the maintained artifact is exactly the from-scratch
     one."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.decontamination import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES[Q249](spark, SF_SMOKE).collect()
-    stored = read_current(spark, _store_path(spark))
+    stored = read_current(spark, session_store(spark, "decon_index"))
     d = _docs(spark).select("doc_id", "source", tokens("text").alias("ts"))
     want = sorted(
         tuple(r) for r in bench_shingle_table(d, BENCHMARKS).collect()
@@ -158,14 +156,14 @@ def test_q250_store_holds_merged_state(spark):
     per-source kmv row counts are ≤ k and stats cover every source."""
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.census_maintenance import (
         _CK,
-        _store_path,
     )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES[Q250](spark, SF_SMOKE).collect()
-    store = _store_path(spark)
+    store = session_store(spark, "census")
     stats = read_current(spark, store + "_stats")
     kmv = read_current(spark, store + "_kmv")
     docs = _docs(spark)

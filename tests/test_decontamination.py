@@ -14,7 +14,6 @@ import re
 
 import duckdb
 import pandas as pd
-import pytest
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.decontamination import (
     BENCHMARKS,

@@ -56,15 +56,13 @@ def test_maintenance_appends_versions_and_reads_newest(spark):
     """Two lifecycle runs in one session append store versions; the census
     stays byte-identical because read_current always serves the newest
     snapshot of the same deterministic data."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.dedup_maintenance import (
-        _store_path,
-    )
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import session_store
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources import versioned as V
 
     first = [tuple(r) for r in QUERIES["q239_dedup_index_maintenance"](spark, SF_SMOKE).collect()]
-    v_after_first = V.current_version(_store_path(spark))
+    v_after_first = V.current_version(session_store(spark, "dedup_index"))
     second = [tuple(r) for r in QUERIES["q239_dedup_index_maintenance"](spark, SF_SMOKE).collect()]
-    v_after_second = V.current_version(_store_path(spark))
+    v_after_second = V.current_version(session_store(spark, "dedup_index"))
     assert first == second
     assert v_after_second == v_after_first + 2  # v1 build + v2 update per run
 

@@ -4,8 +4,6 @@ contract (bucketed equi-join, never a nested-loop theta join)."""
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.intervals import (
     interval_overlap_join,
     interval_stacking,

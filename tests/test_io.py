@@ -8,6 +8,7 @@ from pyspark.sql import Row
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.schema import (
     format_bikeshare_table,
+    raw_bikeshare_schema,
 )
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.readers import (
     load_star,
@@ -26,7 +27,7 @@ def test_read_csv_raw_headerless(spark, tmp_path):
     with open(p, "w") as f:
         f.write("525,Glenwood Ave & Touhy Ave,42.012701,-87.666058\n")
         f.write("KA1503000012,Clark St & Im Ave,41.8,-87.6\n")
-    df = read_csv_raw(spark, p)
+    df = read_csv_raw(spark, p, raw_bikeshare_schema("stations"))
     # reference behavior: _c* names, all strings (ipynb:L250-253)
     assert df.columns == ["_c0", "_c1", "_c2", "_c3"]
     assert all(t == "string" for _, t in df.dtypes)

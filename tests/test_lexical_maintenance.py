@@ -95,9 +95,6 @@ def test_q248_store_lifecycle(spark):
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import (
         tokens,
     )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.lexical_maintenance import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
         _doc_hash,
     )
@@ -105,10 +102,11 @@ def test_q248_store_lifecycle(spark):
         current_version,
         read_current,
         read_version,
+        session_store,
     )
 
     QUERIES[NAME](spark, SF_SMOKE).collect()
-    dl_store = _store_path(spark) + "_dl"
+    dl_store = session_store(spark, "lex_index") + "_dl"
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     n_all = docs.count()
     n_corpus = docs.where(_doc_hash() < 800).count()

@@ -13,11 +13,19 @@ Code kept on purpose for tests or tools goes in ``ALLOWED`` with a reason.
 
 The same scan guards ``tools/``: every script there is named in the
 verify skill, and its imports (of sibling scripts included) resolve.
+
+Two more scans keep the surface from drifting back:
+
+* every defaulted parameter of a package function is set by at least
+  one caller (an option nobody sets is a constant with extra steps);
+* no module in the package, ``tools/`` or ``tests/`` imports a name it
+  never uses.
 """
 
 import ast
 import importlib.util
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "building_an_azure_data_lake_for_bikeshare_data_analytics_spark"
@@ -27,13 +35,33 @@ ALLOWED = {
     "operators.graph.connected_components_star": "used by tools/stress_graph.py and tests/test_training.py",
 }
 
+#: "<module>.<function>(<parameter>)" -> reason, for a defaulted parameter
+#: kept although no caller sets it
+ALLOWED_PARAMS: dict[str, str] = {}
 
-def _sources() -> list[str]:
-    out = [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "__spark_entry__.py")]
-    for top in (PACKAGE, "perfbench"):
-        for d, _dirs, files in os.walk(os.path.join(ROOT, top)):
+#: where a call can set a package function's parameter
+CALLER_TOPS = (PACKAGE, "perfbench", "tools", "tests", "bench.py", "__spark_entry__.py")
+
+
+def _py_files(*tops: str) -> list[str]:
+    out = []
+    for top in tops:
+        p = os.path.join(ROOT, top)
+        if os.path.isfile(p):
+            out.append(p)
+            continue
+        for d, _dirs, files in os.walk(p):
             out += [os.path.join(d, f) for f in files if f.endswith(".py")]
     return sorted(out)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _sources() -> list[str]:
+    return _py_files("bench.py", "__spark_entry__.py", PACKAGE, "perfbench")
 
 
 def _names(node: ast.AST) -> set[str]:
@@ -71,8 +99,7 @@ def unreferenced() -> list[str]:
     refs: dict[str, set[int]] = {}
     sid = 0
     for path in _sources():
-        with open(path) as f:
-            tree = ast.parse(f.read(), path)
+        tree = _parse(path)
         rel = os.path.relpath(path, os.path.join(ROOT, PACKAGE))
         module = rel[:-3].replace(os.sep, ".")
         for stmt in tree.body:
@@ -132,3 +159,120 @@ def test_every_tool_is_named_by_the_verify_skill_and_its_imports_resolve():
                 ):
                     broken.append(f"{s}: {top}")
     assert not broken, f"tools importing a module that does not exist: {broken}"
+
+
+def unset_parameters() -> list[str]:
+    """Defaulted parameters no caller sets, as "<module>.<function>(<param>)".
+
+    Checked: every ``def`` in the package whose name is defined once
+    there. A caller is any call whose callee Name/Attribute has that name,
+    anywhere in ``CALLER_TOPS``. A function with no call, or with a call
+    passing ``*args``/``**kw``, is skipped. A call sets a parameter by
+    keyword, or by passing enough positional arguments to reach it (a
+    leading ``self``/``cls`` is not counted)."""
+    defs: dict[str, list[tuple[str, ast.FunctionDef]]] = {}
+    for path in _py_files(PACKAGE):
+        module = os.path.relpath(path, os.path.join(ROOT, PACKAGE))[:-3].replace(os.sep, ".")
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(n.name, []).append((module, n))
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _py_files(*CALLER_TOPS):
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in defs:
+                    calls.setdefault(name, []).append(n)
+    out = []
+    for name, found in defs.items():
+        cs = calls.get(name, [])
+        if len(found) != 1 or not cs or any(
+            any(isinstance(a, ast.Starred) for a in c.args)
+            or any(k.arg is None for k in c.keywords)
+            for c in cs
+        ):
+            continue
+        module, fn = found[0]
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+        defaulted = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+        defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        set_by_call = set()
+        for c in cs:
+            set_by_call |= {k.arg for k in c.keywords}
+            set_by_call |= {p.arg for p in pos[skip : skip + len(c.args)]}
+        out += [f"{module}.{name}({p})" for p in defaulted if p not in set_by_call]
+    return sorted(out)
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    found = unset_parameters()
+    unset = [p for p in found if p not in ALLOWED_PARAMS]
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no caller sets (make each a "
+        f"constant, or allowlist it with a reason): {unset}"
+    )
+    # an allowlist entry needs a reason, and goes once a caller sets it
+    assert all(ALLOWED_PARAMS.values())
+    assert sorted(ALLOWED_PARAMS) == sorted(set(ALLOWED_PARAMS) & set(found))
+
+
+def _loaded_names(node: ast.AST) -> set[str]:
+    """Names ``node`` reads, including those inside string annotations."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if re.fullmatch(r"[\w.\[\], |]+", n.value):  # e.g. "np.ndarray"
+                try:
+                    sub = ast.parse(n.value, mode="eval")
+                except SyntaxError:
+                    continue
+                out |= {m.id for m in ast.walk(sub) if isinstance(m, ast.Name)}
+    return out
+
+
+def _scope_imports(scope: ast.AST) -> list[ast.Import | ast.ImportFrom]:
+    """Imports whose innermost enclosing function (or module) is ``scope``."""
+    out = []
+    for ch in ast.iter_child_nodes(scope):
+        if isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        if isinstance(ch, (ast.Import, ast.ImportFrom)):
+            out.append(ch)
+        out += _scope_imports(ch)
+    return out
+
+
+def unused_imports() -> list[str]:
+    """"<path>:<line> <name>" for every imported name its scope never
+    reads, in the package, ``tools/`` and ``tests/``. ``__init__.py``
+    files re-export, and ``plans/registry.py`` imports the query modules
+    to register them, so both are exempt."""
+    out = []
+    for path in _py_files(PACKAGE, "tools", "tests"):
+        rel = os.path.relpath(path, ROOT)
+        if os.path.basename(path) == "__init__.py" or rel == os.path.join(PACKAGE, "plans", "registry.py"):
+            continue
+        tree = _parse(path)
+        scopes = [tree] + [
+            n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for scope in scopes:
+            used = _loaded_names(scope)
+            for stmt in _scope_imports(scope):
+                if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                    continue
+                for a in stmt.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in used:
+                        out.append(f"{rel}:{stmt.lineno} {bound}")
+    return sorted(out)
+
+
+def test_no_unused_imports():
+    unused = unused_imports()
+    assert not unused, f"imports nothing uses: {unused}"

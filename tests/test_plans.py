@@ -116,7 +116,6 @@ def test_dup_components_edges_avoid_quadratic_shingle_join(spark):
     additionally keyed by doc id. (q73's own returned plan is truncated by
     the connected-components localCheckpoints, so we pin the edge-source
     DataFrame q73 builds internally.)"""
-    from pyspark.sql import functions as F
 
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import tokens
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.dedup import (
@@ -366,7 +365,6 @@ def test_substring_dup_spans_grams_never_shuffle(spark):
     lineage and would make the assertion vacuous — the checkpointed
     query's explained plan roots at a Scan ExistingRDD and could never
     contain the gram stage), so the full gram pipeline is visible."""
-    from pyspark.sql import functions as F
 
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import (
         tokens,

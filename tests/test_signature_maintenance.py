@@ -13,7 +13,6 @@ corpus-side signature compute.
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import tokens
@@ -79,15 +78,13 @@ def test_q245_matches_duckdb_oracle(spark):
 
 
 def test_q245_store_holds_both_versions(spark):
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.signature_maintenance import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES[NAME](spark, SF_SMOKE).collect()
-    store = _store_path(spark)
+    store = session_store(spark, "sig_table")
     current = read_current(spark, store)
     # v2 = corpus ∪ batch signatures: every doc that shingles is banded
     docs = _docs(spark)
@@ -161,15 +158,13 @@ def test_q239_sig_store_holds_corpus_signatures(spark):
     """q239's lifecycle must leave the sibling signature store populated
     with the corpus side's banded table — the artifact the NEXT batch
     probes instead of recomputing corpus signatures."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.dedup_maintenance import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES["q239_dedup_index_maintenance"](spark, SF_SMOKE).collect()
-    sig_store = _store_path(spark) + "_sigs"
+    sig_store = session_store(spark, "dedup_index") + "_sigs"
     stored = read_current(spark, sig_store)
     docs = _docs(spark)
     n_corpus_shingled = (

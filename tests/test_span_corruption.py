@@ -3,8 +3,6 @@ reassembly, hash-gated selection, pass-through identity."""
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.span_corruption import (
     _FIM_RATE_E6,
     _Q1,

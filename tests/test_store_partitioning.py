@@ -46,12 +46,10 @@ def test_lexical_store_layout_and_probe_pruning(spark):
     store by doc-hash century; the BM25 probe's scans carry literal
     PartitionFilters on both keys (tok_bucket IN(...) from the fixed
     query-term set, hb IN (8,9) from the batch predicate)."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.lexical_maintenance import (
-        _store_path,
-    )
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import session_store
 
     df = QUERIES["q248_lexical_index_maintenance"](spark, SF_SMOKE)
-    store = _store_path(spark)
+    store = session_store(spark, "lex_index")
     assert any(
         d.startswith("tok_bucket=") for d in _store_partition_dirs(store + "_tf")
     )
@@ -73,15 +71,13 @@ def test_ivf_store_partitioned_by_cell_and_probe_filters_probed_union(spark):
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.similarity import (
         ivf_topk_from_index_vectorized,
     )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-        _store_path,
-    )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES["q246_ann_index_maintenance"](spark, SF_SMOKE).collect()
-    store = _store_path(spark)
+    store = session_store(spark, "ann_index")
     assert any(d.startswith("cell=") for d in _store_partition_dirs(store))
     # ONE query probes nprobe=2 of 8 cells -> the probed union is a strict
     # subset and must appear as a literal partition filter on the scan
@@ -114,14 +110,14 @@ def test_decon_store_partitioned_by_benchmark_single_screen_prunes(spark):
 
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.decontamination import (
         BENCHMARKS,
-        _store_path,
     )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         read_current,
+        session_store,
     )
 
     QUERIES["q249_decontamination_index_maintenance"](spark, SF_SMOKE).collect()
-    store = _store_path(spark)
+    store = session_store(spark, "decon_index")
     assert any(d.startswith("benchmark=") for d in _store_partition_dirs(store))
     name = BENCHMARKS[0][0]
     one = read_current(spark, store).where(F.col("benchmark") == name)

@@ -3,7 +3,6 @@
 import datetime
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import QUERIES
 

@@ -13,7 +13,6 @@ import re
 from urllib.parse import urlsplit
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.url import (

@@ -60,7 +60,6 @@ def test_append_version_equals_union_write(spark, tmp_path):
     # time travel still addresses the pre-append snapshot
     assert V.read_version(spark, p, v1).count() == 100
     # the appended version physically wrote ONLY the delta part
-    import os
 
     vdir = tmp_path / "ap" / f"_v{v2}"
     assert (vdir / "_PARTS").exists()
@@ -101,7 +100,6 @@ def test_append_version_requires_existing_table(spark, tmp_path):
 def test_append_version_then_full_write_vacuum_gc_parts(spark, tmp_path):
     """After a full write supersedes an append chain, vacuum reclaims the
     no-longer-referenced delta parts."""
-    import os
 
     p = str(tmp_path / "apgc")
     V.write_version(spark.createDataFrame([(1,)], ["id"]), p)

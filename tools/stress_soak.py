@@ -187,7 +187,7 @@ def main() -> None:
                 "vec_id", "embedding"
             )
             cents = kmeans_fit(emb, k=k_cells, max_iter=8)
-            out = semantic_dedup_cells(emb, cents, threshold=0.45, vectorized=True)
+            out = semantic_dedup_cells(emb, cents, threshold=0.45)
             agg = out.agg(
                 F.count(F.lit(1)).alias("n"), F.sum("kept").alias("kept")
             ).collect()[0]
