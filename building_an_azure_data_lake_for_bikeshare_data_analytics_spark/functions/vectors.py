@@ -68,9 +68,5 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     ).otherwise(_fold_dot(a, b))
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
-    return F.sqrt(dot(a, a, dim))
-
-
-def cosine(a: Column, b: Column, dim: int | None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def norm(a: Column) -> Column:
+    return F.sqrt(dot(a, a))

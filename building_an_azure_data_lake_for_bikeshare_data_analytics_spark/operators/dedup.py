@@ -375,6 +375,27 @@ def cross_pairs_from_signature_table(
     return _verify_jaccard(cand, sh, threshold)
 
 
+def _sid_sets(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Dictionary-encode a distinct (doc_id, shingle) relation: each
+    shingle becomes ``sid``, its dense int64 rank in the global
+    (document frequency, shingle) order, rarest first. Returns the narrow
+    (doc_id, sid) relation, checkpointed because it feeds the prefix
+    build and both verify sides, and each doc's sorted ``ss`` array."""
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    # the (df, shingle) dense rank is VOCABULARY-scale, so it must not run
+    # as a single-partition window: distributed_row_number buckets by
+    # (df, 8-char shingle prefix) — an order-consistent coarsening — and
+    # the result is row-identical to the naive global row_number
+    dic = distributed_row_number(
+        freq,
+        ["df", "shingle"],
+        F.struct("df", F.substring("shingle", 1, 8)),
+        out="sid",
+    ).select("shingle", "sid")
+    enc = sh.join(dic, "shingle").select("doc_id", "sid").localCheckpoint(storageLevel=_CKPT_LEVEL)
+    return enc, enc.groupBy("doc_id").agg(F.sort_array(F.collect_list("sid")).alias("ss"))
+
+
 def prefix_filter_jaccard_pairs(
     docs_tokens: DataFrame,
     threshold: float = 0.5,
@@ -456,20 +477,7 @@ def prefix_filter_jaccard_pairs(
         if shingles is not None
         else shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
     )
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # the (df, shingle) dense rank is VOCABULARY-scale, so it must not run
-    # as a single-partition window: distributed_row_number buckets by
-    # (df, 8-char shingle prefix) — an order-consistent coarsening — and
-    # the result is row-identical to the naive global row_number
-    dic = distributed_row_number(
-        freq,
-        ["df", "shingle"],
-        F.struct("df", F.substring("shingle", 1, 8)),
-        out="sid",
-    ).select("shingle", "sid")
-    # feeds the prefix build and both verify sides: narrow (doc_id, sid)
-    enc = sh.join(dic, "shingle").select("doc_id", "sid").localCheckpoint(storageLevel=_CKPT_LEVEL)
-    arr = enc.groupBy("doc_id").agg(F.sort_array(F.collect_list("sid")).alias("ss"))
+    enc, arr = _sid_sets(sh)
     n = F.size("ss")
     # epsilon inside ceil: float t*n can land one ulp ABOVE an exact
     # integer (e.g. 0.3*10 = 3.0000000000000004), which would shorten the
@@ -701,19 +709,7 @@ def prefix_filter_containment_pairs(
     # so tokenize + explode + distinct runs once (same r12 fix as the
     # Jaccard kernel)
     sh = shingle_sets(docs_tokens).localCheckpoint(storageLevel=_CKPT_LEVEL)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # the (df, shingle) dense rank is VOCABULARY-scale, so it must not run
-    # as a single-partition window: distributed_row_number buckets by
-    # (df, 8-char shingle prefix) — an order-consistent coarsening — and
-    # the result is row-identical to the naive global row_number
-    dic = distributed_row_number(
-        freq,
-        ["df", "shingle"],
-        F.struct("df", F.substring("shingle", 1, 8)),
-        out="sid",
-    ).select("shingle", "sid")
-    enc = sh.join(dic, "shingle").select("doc_id", "sid").localCheckpoint(storageLevel=_CKPT_LEVEL)
-    arr = enc.groupBy("doc_id").agg(F.sort_array(F.collect_list("sid")).alias("ss"))
+    enc, arr = _sid_sets(sh)
     n = F.size("ss")
     # same 1e-9 ulp guard as the Jaccard join: only ever LENGTHENS the
     # prefix / LOOSENS a filter — the safe direction for exactness

@@ -46,6 +46,13 @@ PAGERANK_DAMPING = 0.85
 PAGERANK_SCALE = 9
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (a, b) long pairs holding both directions of every edge,
+    checkpointed: each round of the iterations below re-reads it."""
+    e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
+    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().localCheckpoint()
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
 ) -> DataFrame:
@@ -56,9 +63,7 @@ def connected_components(
     least one edge. Deterministic: labels are mins over node ids, and the
     iteration is a fixed point (no dependence on partitioning or order).
     """
-    e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-    e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint()
+    e = _undirected(edges, src, dst)
     labels = e.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
     # Convergence probe: Σcomp strictly decreases while any label improves
     # (labels only ever move down to a smaller reachable id), so one scalar
@@ -204,9 +209,7 @@ def pagerank(
     """
     from pyspark.sql.types import DecimalType
 
-    e = edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
-    e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint()
+    e = _undirected(edges, src, dst)
     pr = (
         e.groupBy("a")
         .agg(F.count(F.lit(1)).alias("deg"))

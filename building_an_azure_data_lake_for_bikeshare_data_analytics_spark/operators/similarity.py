@@ -1,12 +1,36 @@
-"""Similarity search over embedding columns: brute-force cosine top-k and a
-random-hyperplane LSH (SimHash-for-vectors) approximate variant.
+"""Similarity search over embedding columns: exact cosine top-k, a
+random-hyperplane LSH (SimHash-for-vectors) approximate variant, IVF
+(k-means cells), int8 and product quantization (PQ/ADC), and IVF-PQ with
+an exact re-rank.
 
-Scale design (the reason both exist):
+Scale design (the reason both exact and approximate searches exist):
 * brute force is exact and embarrassingly parallel but O(|corpus|x|queries|);
   right when the query set is small enough to broadcast;
 * LSH bucketing replaces the cross product with equi-joins on band
   signatures: corpus shuffles once by bucket key, each query probes only
   its buckets — the 100 TB path. Recall is tunable via bands/bits.
+
+Each search is a Column-expression fold, which carries the DuckDB oracle;
+most also have a numpy twin (``*_vectorized``, ``mapInPandas`` over Arrow
+batches), the path a deployment runs. The twins are built from one copy
+of each step: ``_query_matrix`` (the capped driver collect of the query
+set), ``_quantize``/``_cell_scores_np``/``_probe_cells``/``_pq_codes``/
+``_adc`` (batch quantize, cell scores, probed cells, PQ encode, ADC
+gathers), ``_local_topk`` (each query's top-k of one batch) and
+``_map_batches``; folds and twins share ``_ranked`` (the global
+(score desc, neighbor_id asc) window) and ``_exact_cos_rerank``. Twin
+row-equality is asserted in tests/test_multimodal_similarity.py
+(``test_vectorized_topk_equals_expression_topk``,
+``test_ivf_vectorized_equals_fold``, ``test_ivf_pq_vectorized_equals_fold``),
+tests/test_dedup_similarity.py
+(``test_quantized_vectorized_equals_column_fold``), tests/test_curation.py
+(``test_pq_vectorized_twin_equals_fold``) and tests/test_ann_maintenance.py
+(``test_vectorized_index_probe_equals_fold``,
+``test_vectorized_pq_index_probe_equals_fold``).
+
+Zero-norm contract, for every cosine search, fold and twin: a zero vector
+has no cosine, so a zero-norm corpus row is never a neighbour and a
+zero-norm query emits no rows (``test_vectorized_topk_zero_norm_contract``).
 
 Hyperplanes are deterministic (seeded numpy, rounded to 6 decimals) and
 embedded as literals into BOTH the Spark plan and the DuckDB oracle SQL, so
@@ -16,6 +40,7 @@ even the approximate variant is value-checkable across engines.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -60,19 +85,47 @@ def lsh_bands(emb: Column, planes: list[list[float]], bands: int, prefix: str = 
     return cols
 
 
+def _band_rows(df: DataFrame, keep: list[str], prefix: str, bands: int, band: str) -> DataFrame:
+    """One row per (``keep`` columns, band): the band index as ``band`` and
+    its ``{prefix}{b}`` bucket id as ``sig`` — stacked so that one
+    equi-join on (band, sig) covers "any band matches"."""
+    bk = F.explode(F.array(*[
+        F.struct(F.lit(b).alias(band), F.col(f"{prefix}{b}").alias("sig")) for b in range(bands)
+    ]))
+    return df.select(*keep, bk.alias("bk")).select(
+        *keep, F.col(f"bk.{band}").alias(band), F.col("bk.sig").alias("sig")
+    )
+
+
+def _ranked(df: DataFrame, score: str, k: int, rank: str = "rnk") -> DataFrame:
+    """Each query's ``k`` best rows by (``score`` desc, neighbor_id asc),
+    numbered 1..k in ``rank`` — the one ranking window of every search."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _nonzero(df: DataFrame, vec: str, nrm: str) -> DataFrame:
+    """``df`` plus the L2 norm of ``vec`` as ``nrm``, without its zero-norm
+    rows (the zero-norm contract in the module docstring)."""
+    return df.select("*", norm(F.col(vec)).alias(nrm)).where(F.col(nrm) > 0)
+
+
+def _cos(a: str, an: str, b: str, bn: str) -> Column:
+    """Round-4 cosine of vector columns ``a``/``b`` with norm columns
+    ``an``/``bn``: the sequential-fold dot, then one divide."""
+    return F.round(dot(F.col(a), F.col(b)) / (F.col(an) * F.col(bn)), 4)
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k. ``corpus``: (vec_id, embedding); ``queries``:
     (query_id, qe). Queries broadcast; corpus never shuffles for the join;
     one window shuffle on query_id for ranking."""
-    c = corpus.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
-    q = queries.select("query_id", "qe", norm(F.col("qe")).alias("qnrm"))
-    cos = F.round(dot(F.col("qe"), F.col("embedding")) / (F.col("qnrm") * F.col("nrm")), 4)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+    c = _nonzero(corpus.select("vec_id", "embedding"), "embedding", "nrm")
+    q = _nonzero(queries.select("query_id", "qe"), "qe", "qnrm")
+    pairs = c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+    cos = _cos("qe", "qnrm", "embedding", "nrm")
+    return _ranked(
+        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")), "cos", k
     )
 
 
@@ -86,45 +139,169 @@ def lsh_topk(
     """Approximate top-k: candidates = corpus rows sharing >= 1 LSH band with
     the query, ranked by exact cosine. Join keys are (band index, bucket id)
     — pure equi-joins, no cross product anywhere in the plan."""
-    c = corpus.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm"),
-        *lsh_bands(F.col("embedding"), planes, bands),
+    c = _nonzero(
+        corpus.select("vec_id", "embedding", *lsh_bands(F.col("embedding"), planes, bands)),
+        "embedding", "nrm",
     )
-    q = queries.select(
-        "query_id", "qe", norm(F.col("qe")).alias("qnrm"),
-        *lsh_bands(F.col("qe"), planes, bands, prefix="qband"),
+    q = _nonzero(
+        queries.select("query_id", "qe", *lsh_bands(F.col("qe"), planes, bands, prefix="qband")),
+        "qe", "qnrm",
     )
-    # stack bands to rows so one equi-join covers "any band matches"
-    c_b = c.select(
-        "vec_id", "embedding", "nrm",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("b"), F.col(f"band{b}").alias("sig")) for b in range(bands)
-        ])).alias("bk"),
-    ).select("vec_id", "embedding", "nrm", F.col("bk.b").alias("b"), F.col("bk.sig").alias("sig"))
-    q_b = q.select(
-        "query_id", "qe", "qnrm",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("b"), F.col(f"qband{b}").alias("sig")) for b in range(bands)
-        ])).alias("bk"),
-    ).select("query_id", "qe", "qnrm", F.col("bk.b").alias("b"), F.col("bk.sig").alias("sig"))
+    c_b = _band_rows(c, ["vec_id", "embedding", "nrm"], "band", bands, "b")
+    q_b = _band_rows(q, ["query_id", "qe", "qnrm"], "qband", bands, "b")
     cand = (
         c_b.join(F.broadcast(q_b), on=["b", "sig"])
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "qe", "embedding", "qnrm", "nrm")
         .distinct()
     )
-    cos = F.round(dot(F.col("qe"), F.col("embedding")) / (F.col("qnrm") * F.col("nrm")), 4)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+    cos = _cos("qe", "qnrm", "embedding", "nrm")
+    return _ranked(
+        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")), "cos", k
     )
 
+
+# ---------------------------------------------------------------------------
+# The numpy kernels' shared steps
+# ---------------------------------------------------------------------------
 
 #: hard cap on the collected query matrix (rows). 100k x 64-d doubles is
 #: ~50 MB broadcast — the sensible ceiling for a driver-side matrix.
 _MAX_DRIVER_QUERIES = 100_000
+
+
+def _query_matrix(queries: DataFrame, kernel: str) -> tuple["np.ndarray", "np.ndarray"] | None:
+    """(query ids, float64 query matrix) collected to the driver, or None
+    for an empty query set (the kernel then runs its fold twin). The
+    query matrix is the ONLY thing a kernel collects: fail loudly if a
+    fact-sized table is pointed at it (a 10M-row "query set" would OOM
+    the driver long before the limit+1 rows do)."""
+    rows = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
+    if len(rows) > _MAX_DRIVER_QUERIES:
+        raise ValueError(
+            f"{kernel}: query set exceeds {_MAX_DRIVER_QUERIES} rows; it must fit "
+            "on the driver (broadcast side). Shard the query table or use "
+            "lsh_topk for fact-sized query sets."
+        )
+    if not rows:
+        return None
+    return (
+        np.array([r["query_id"] for r in rows], dtype=np.int64),
+        np.array([list(r["qe"]) for r in rows], dtype=np.float64),
+    )
+
+
+def _batch(pdf: pd.DataFrame) -> tuple["np.ndarray", "np.ndarray"]:
+    """(vec_id, float64 embedding matrix) of one Arrow batch."""
+    return (
+        pdf["vec_id"].to_numpy(dtype=np.int64),
+        np.stack(pdf["embedding"].to_numpy()).astype(np.float64),
+    )
+
+
+def _quantize(E: "np.ndarray") -> "np.ndarray":
+    """``quantize_vec`` of a float matrix: floor to int64 micro-units."""
+    return np.floor(E * float(QUANT_SCALE)).astype(np.int64)
+
+
+def _cell_scores_np(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """``_cell_scores`` of quantized rows ``X`` against integer centroids
+    ``C``: the exact int64 dot, then one IEEE divide by sqrt(|c|^2).
+    ``.argmax(axis=1)`` is the nearest cell, first max = lowest cell."""
+    return (X @ C.T).astype(np.float64) / np.sqrt((C * C).sum(axis=1).astype(np.float64))[None, :]
+
+
+def _code_scores(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """Exact int64 Euclidean affinity 2*x.c - |c|^2 (argmax = argmin
+    ||x - c||^2, first max = lowest code) — ``_pq_code``'s score."""
+    return 2 * (X @ C.T) - (C * C).sum(axis=1)[None, :]
+
+
+def _probe_cells(QQ: "np.ndarray", C: "np.ndarray", nprobe: int) -> "np.ndarray":
+    """Each quantized query's ``nprobe`` best cells, ties to the lower cell
+    (a stable sort) — ``_top_cells``'s selection."""
+    return np.argsort(-_cell_scores_np(QQ, C), axis=1, kind="stable")[:, :nprobe]
+
+
+def _pq_codes(X: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """PQ encode of quantized rows: per subspace, the best code of
+    ``books[s]`` (m, ksub, sub) — ``_pq_codes_col``'s values."""
+    m, _, sub = books.shape
+    Xs = X.reshape(len(X), m, sub)
+    return np.stack([_code_scores(Xs[:, s], books[s]).argmax(axis=1) for s in range(m)], axis=1)
+
+
+def _adc_tables(QQ: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """Per-query ADC tables T[q, s, c] = dot(q_sub_s, books[s][c]), exact."""
+    m, _, sub = books.shape
+    return np.einsum("qsd,scd->qsc", QQ.reshape(len(QQ), m, sub), books)
+
+
+def _adc(T: "np.ndarray", codes: "np.ndarray") -> "np.ndarray":
+    """(rows x queries) ADC scores sum_s T[q, s, codes[x, s]] — integer
+    table gathers only."""
+    return sum(T[:, s, :].T[codes[:, s]] for s in range(codes.shape[1]))
+
+
+def _cosines(A: "np.ndarray", an: "np.ndarray", B: "np.ndarray", bn: "np.ndarray") -> "np.ndarray":
+    """(rows of A x rows of B) round-4 cosines: dot-then-divide (the fold's
+    expression shape), rounded by the oracle's half-away rule. A zero norm
+    gives NaN, which ``_local_topk`` never selects."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _round4_half_away((A @ B.T) / (an[:, None] * bn[None, :]))
+
+
+def _local_topk(
+    S: "np.ndarray",
+    vecids: "np.ndarray",
+    qids: "np.ndarray",
+    k: int,
+    score: str,
+    probed: "np.ndarray | None" = None,
+) -> pd.DataFrame:
+    """Each query's ``k`` best rows of one batch's (rows x queries) score
+    matrix by (score desc, vec_id asc), as (query_id, neighbor_id,
+    ``score``) — the partial top-k that keeps the global window at
+    k x batches x queries rows (TakeOrderedAndProject's shape, applied to
+    ANN). A row never neighbours its own id, a non-finite score (a
+    zero-norm vector) is never selected, and ``probed`` masks out rows
+    outside each query's probed cells.
+
+    One O(rows x queries) ``np.partition`` finds each query's kth value
+    and only the survivors at or above it are lexsorted. Ties on the kth
+    value all survive, so the selection is exactly a full per-query sort's
+    (the per-query full-batch lexsort it replaced was the measured wall
+    sink of the brute-force kernel)."""
+    ok = np.isfinite(S) & (vecids[:, None] != qids[None, :])
+    if probed is not None:
+        ok &= probed
+    key = np.where(ok, S, -np.inf)
+    n = len(key)
+    kth = np.partition(key, n - k, axis=0)[n - k] if n > k else np.full(key.shape[1], -np.inf)
+    rows, cols = np.nonzero(ok & (key >= kth[None, :]))
+    order = np.lexsort((vecids[rows], -S[rows, cols], cols))
+    rows, cols = rows[order], cols[order]
+    first = np.searchsorted(cols, cols)  # each row's query starts here
+    top = np.arange(len(cols)) - first < k
+    rows, cols = rows[top], cols[top]
+    return pd.DataFrame({"query_id": qids[cols], "neighbor_id": vecids[rows], score: S[rows, cols]})
+
+
+def _map_batches(src: DataFrame, step, schema: str) -> DataFrame:
+    """``src.mapInPandas`` yielding the frames of ``step(pdf)`` for every
+    non-empty Arrow batch."""
+
+    def part(batches):
+        for pdf in batches:
+            if not pdf.empty:
+                yield from step(pdf)
+
+    return src.mapInPandas(part, schema)
+
+
+def _candidates(score: str) -> str:
+    """The schema of a kernel's local top-k rows."""
+    return f"query_id long, neighbor_id long, {score}"
 
 
 def brute_force_topk_vectorized(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
@@ -136,108 +313,30 @@ def brute_force_topk_vectorized(corpus: DataFrame, queries: DataFrame, k: int = 
     ~330s. A numpy matmul does the same 32M cosines in well under a second
     of BLAS time. Structure:
 
-      * the (small) query matrix is collected once, L2-normalized, and
-        broadcast to executors;
-      * each Arrow batch of the corpus is normalized and multiplied against
-        the query matrix (batch x dim @ dim x nq);
-      * each partition emits only its local top-k rows per query (partial
-        top-k), so the final global ranking window sees at most
-        k x n_partitions x n_queries rows — never the full product.
+      * the (small) query matrix is collected once and broadcast to
+        executors;
+      * each Arrow batch of the corpus is multiplied against the query
+        matrix (batch x dim @ dim x nq) and divided by both norms;
+      * each batch emits only its local top-k rows per query
+        (``_local_topk``), so the final global ranking window sees at most
+        k x batches x n_queries rows — never the full product.
 
-    Exactly the partial-aggregate shape Spark uses for TakeOrderedAndProject,
-    applied to ANN. Results match brute_force_topk (same round-4 cosines,
-    same id tie-breaks).
-    """
-    import numpy as np
-
-    # the query matrix is the ONLY thing collected to the driver; fail
-    # loudly if someone points a fact-sized table at it (a 10M-row "query
-    # set" would OOM the driver long before the limit+1 rows do)
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"brute_force_topk_vectorized: query set exceeds {_MAX_DRIVER_QUERIES} rows; "
-            "it must fit on the driver (broadcast side). Shard the query table "
-            "or use lsh_topk/ivf_topk for fact-sized query sets."
-        )
-    q_rows = probe
-    if not q_rows:
+    Results match brute_force_topk (same round-4 cosines, same id
+    tie-breaks; ``test_vectorized_topk_equals_expression_topk``)."""
+    got = _query_matrix(queries, "brute_force_topk_vectorized")
+    if got is None:
         return brute_force_topk(corpus, queries, k)
-    Q = np.array([list(r["qe"]) for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, Q, qn))
+    qids, Q = got
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, Q, np.linalg.norm(Q, axis=1)))
 
-    def part(batches):
-        import pandas as pd
+    def step(pdf):
+        ids, Qm, qn = bq.value
+        vecids, E = _batch(pdf)
+        S = _cosines(E, np.linalg.norm(E, axis=1), Qm, qn)
+        yield _local_topk(S, vecids, ids, k, "cos")
 
-        ids, Qm, qnv = bq.value
-        # query_id -> column index, for O(batch) self-exclusion
-        id_to_col = {int(i): j for j, i in enumerate(ids)}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            en = np.linalg.norm(E, axis=1)
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            # CONTRACT (pinned, not incidental): a zero-norm vector has no
-            # defined cosine. Zero-norm CORPUS rows are excluded from
-            # neighbor candidacy here, explicitly, before the matmul — the
-            # oracle's cos expression yields NULL/NaN for them and SQL
-            # ORDER BY ... LIMIT k drops those too, so engine and oracle
-            # agree by construction. A zero-norm QUERY column divides to
-            # NaN below and is dropped by the isfinite survivor mask: such
-            # a query deterministically emits no rows (same in the oracle).
-            nz = en > 0.0
-            if not nz.all():
-                E, en, vecids = E[nz], en[nz], vecids[nz]
-                if E.shape[0] == 0:
-                    continue
-            # dot-then-divide mirrors the fold's cos expression shape;
-            # rounding is the oracle's own half-away rule (_round4_half_away)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = _round4_half_away((E @ Qm.T) / (en[:, None] * qnv[None, :]))
-            # self-exclusion: -inf can never win a top-k over real cosines
-            for i, v in enumerate(vecids):
-                j = id_to_col.get(int(v))
-                if j is not None:
-                    S[i, j] = -np.inf
-            n = S.shape[0]
-            out_q, out_n, out_c = [], [], []
-            # one vectorized O(n x q) partition finds every query's kth
-            # value; the Python loop below then lexsorts only the ~k
-            # surviving rows per query (ties on the rounded cosine keep
-            # all equal-valued rows in play, so the (cos desc, id asc)
-            # selection is IDENTICAL to a full per-query sort — the
-            # original per-query full-batch lexsort was the measured wall
-            # sink of the whole kernel, ~8k sorts of the full batch each)
-            if n > k:
-                kth = np.partition(S, n - k, axis=0)[n - k, :]
-            else:
-                kth = np.full(S.shape[1], -np.inf)
-            surv = (S >= kth[None, :]) & np.isfinite(S)
-            rows, cols = np.nonzero(surv)
-            order = np.argsort(cols, kind="stable")
-            rows, cols = rows[order], cols[order]
-            bounds = np.searchsorted(cols, np.arange(S.shape[1] + 1))
-            for j in range(S.shape[1]):
-                cand_idx = rows[bounds[j] : bounds[j + 1]]
-                if cand_idx.size == 0:
-                    continue
-                col = S[cand_idx, j]
-                # local top-k by (cos desc, vec_id asc)
-                sel = cand_idx[np.lexsort((vecids[cand_idx], -col))[:k]]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(vecids[sel])
-                out_c.extend(S[sel, j])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos": out_c})
-
-    cands = corpus.select("vec_id", "embedding").mapInPandas(
-        part, "query_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return cands.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    cands = _map_batches(corpus.select("vec_id", "embedding"), step, _candidates("cos double"))
+    return _ranked(cands, "cos", k)
 
 
 def blocked_dup_pairs_vectorized(
@@ -252,18 +351,15 @@ def blocked_dup_pairs_vectorized(
     emitted. Scale: blocks are hash-partitioned across executors; block size
     bounds memory (a 50k-row block is a 2.5e9-cell S — split oversized
     blocks with a salt on the block key before calling this)."""
-    import numpy as np
-    import pandas as pd
 
     def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []}).astype(
                 {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
             )
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        ids, E = _batch(pdf)
         en = np.linalg.norm(E, axis=1)
-        S = _round4_half_away((E @ E.T) / (en[:, None] * en[None, :]))
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        S = _cosines(E, en, E, en)
         iu, ju = np.triu_indices(len(ids), k=1)
         keep = S[iu, ju] >= threshold
         a, b = ids[iu[keep]], ids[ju[keep]]
@@ -318,15 +414,24 @@ def _cell_scores(qv: Column, centroids: list[list[int]]) -> list[Column]:
     return out
 
 
-def _argmax_cell(qv: Column, centroids: list[list[int]]) -> Column:
-    """Map-side nearest-centroid id: no join, no shuffle — the centroid list
-    is tiny by construction, embedded as literals into the row expression.
-    Ties break toward the lower cell id (deterministic)."""
-    scores = _cell_scores(qv, centroids)
-    packed = F.array(
-        *[F.struct(s.alias("s"), F.lit(-j).alias("nj")) for j, s in enumerate(scores)]
-    )
-    return (-F.array_max(packed).getField("nj")).cast("int")
+def _packed(scores: list[Column]) -> Column:
+    """(score, -id) structs: their max, and a descending sort, put the best
+    score first with ties to the lower id."""
+    return F.array(*[F.struct(s.alias("s"), F.lit(-j).alias("nj")) for j, s in enumerate(scores)])
+
+
+def _argmax(scores: list[Column]) -> Column:
+    """Map-side id of the best of ``scores``, ties to the lower id: no join,
+    no shuffle — centroids and codebooks are tiny by construction,
+    embedded as literals into the row expression."""
+    return (-F.array_max(_packed(scores)).getField("nj")).cast("int")
+
+
+def _top_cells(qv: Column, centroids: list[list[int]], nprobe: int) -> Column:
+    """array<int> of the ``nprobe`` cells whose centroids score highest for
+    the quantized vector ``qv``, ties to the lower cell id."""
+    top = F.slice(F.sort_array(_packed(_cell_scores(qv, centroids)), asc=False), 1, nprobe)
+    return F.transform(top, lambda t: (-t["nj"]).cast("int"))
 
 
 #: the quantizer trains on a bounded deterministic sample (the lowest-id
@@ -342,6 +447,37 @@ KMEANS_K = 8
 KMEANS_ITERS = 8
 IVF_NPROBE = 3
 IVF_PQ_RERANK_FROM = 20
+
+
+def _train_sample(emb: DataFrame) -> "np.ndarray":
+    """The ``KMEANS_TRAIN_ROWS`` lowest-id vectors, quantized, id-sorted."""
+    pdf = (
+        emb.orderBy("vec_id")
+        .limit(KMEANS_TRAIN_ROWS)
+        .select(quantize_vec(F.col("embedding")).alias("qv"))
+        .toPandas()
+    )
+    return np.array(pdf["qv"].tolist(), dtype=np.int64)
+
+
+def _lloyd(X: "np.ndarray", k: int, max_iter: int, scores) -> "np.ndarray":
+    """Deterministic integer Lloyd iterations: init = first k rows, assign
+    = ``scores(X, cents).argmax`` (first max = lowest id on ties), update
+    = floor(mean) in exact int64, stop at a fixed point or ``max_iter``."""
+    cents = X[:k].copy()
+    for _ in range(max_iter):
+        assign = scores(X, cents).argmax(axis=1)
+        new = cents.copy()
+        for c in range(k):
+            members = X[assign == c]
+            if len(members):
+                new[c] = np.floor(
+                    members.sum(axis=0, dtype=np.int64) / len(members)
+                ).astype(np.int64)
+        if np.array_equal(new, cents):
+            break
+        cents = new
+    return cents
 
 
 def kmeans_fit(
@@ -364,33 +500,10 @@ def kmeans_fit(
     Scale posture: the SAMPLE trains the quantizer (bounded driver memory,
     one job); assigning the full 100 TB corpus to cells stays distributed
     and map-only (ivf_topk embeds the centroids as literals)."""
-    import numpy as np
-
-    pdf = (
-        emb.orderBy("vec_id")
-        .limit(KMEANS_TRAIN_ROWS)
-        .select(quantize_vec(F.col("embedding")).alias("qv"))
-        .toPandas()
-    )
-    if len(pdf) < k:
+    X = _train_sample(emb)
+    if len(X) < k:
         raise ValueError(f"kmeans_fit: corpus has fewer than k={k} rows")
-    X = np.array(pdf["qv"].tolist(), dtype=np.int64)  # (n, dim), exact
-    cents = X[:k].copy()  # init: the k lowest-id vectors (input is id-sorted)
-    for _ in range(max_iter):
-        nsq = (cents * cents).sum(axis=1)  # exact int64
-        scores = (X @ cents.T).astype(np.float64) / np.sqrt(nsq.astype(np.float64))[None, :]
-        assign = scores.argmax(axis=1)  # first max = lowest cell on ties
-        new = cents.copy()
-        for c in range(k):
-            members = X[assign == c]
-            if len(members):
-                new[c] = np.floor(
-                    members.sum(axis=0, dtype=np.int64) / len(members)
-                ).astype(np.int64)
-        if np.array_equal(new, cents):
-            break
-        cents = new
-    return [[int(x) for x in row] for row in cents]
+    return [[int(x) for x in row] for row in _lloyd(X, k, max_iter, _cell_scores_np)]
 
 
 def ivf_topk(
@@ -422,7 +535,7 @@ def assign_cells(corpus: DataFrame, centroids: list[list[int]]) -> DataFrame:
     return corpus.select(
         "vec_id",
         "embedding",
-        _argmax_cell(quantize_vec(F.col("embedding")), centroids).alias("cell"),
+        _argmax(_cell_scores(quantize_vec(F.col("embedding")), centroids)).alias("cell"),
     )
 
 
@@ -438,33 +551,20 @@ def ivf_topk_from_index(
     (q246: ``cells`` comes from the versioned store, so a query run pays
     zero corpus-side assignment compute). ``ivf_topk`` delegates here, so
     stored-index and recompute paths share every ranking expression —
-    equality is structural, pinned in tests/test_ann_maintenance.py."""
-    qscores = F.array(
-        *[
-            F.struct(s.alias("s"), F.lit(-j).alias("nj"))
-            for j, s in enumerate(_cell_scores(quantize_vec(F.col("qe")), centroids))
-        ]
-    )
-    probes = (
-        queries.select(
-            "query_id",
-            "qe",
-            F.slice(F.sort_array(qscores, asc=False), 1, nprobe).alias("top"),
-        )
-        .select("query_id", "qe", F.explode("top").alias("t"))
-        .select("query_id", "qe", (-F.col("t.nj")).cast("int").alias("cell"))
+    equality is structural, pinned by tests/test_ann_maintenance.py::
+    test_stored_index_path_equals_recompute_path."""
+    probes = _nonzero(queries.select("query_id", "qe"), "qe", "qnrm").select(
+        "query_id", "qe", "qnrm",
+        F.explode(_top_cells(quantize_vec(F.col("qe")), centroids, nprobe)).alias("cell"),
     )
     # no dedup needed: every corpus row lives in exactly one cell and each
     # query probes distinct cells, so (query, neighbor) pairs are unique
-    cand = probes.join(cells, "cell").where(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(
-        dot(F.col("qe"), F.col("embedding")) / (norm(F.col("qe")) * norm(F.col("embedding"))), 4
+    cand = probes.join(_nonzero(cells, "embedding", "nrm"), "cell").where(
+        F.col("vec_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+    cos = _cos("qe", "qnrm", "embedding", "nrm")
+    return _ranked(
+        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos")), "cos", k
     )
 
 
@@ -492,21 +592,9 @@ def lsh_dup_pairs(
     computed once per VECTOR (not once per candidate pair) and joined back
     with the embeddings by id; the cosine expression tree is unchanged, so
     values hash-match the per-pair formulation exactly."""
-    cols = lsh_bands(F.col("embedding"), planes, bands)
-    banded = (
-        emb.select("vec_id", *cols)
-        .select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("sig"))
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bs"),
-        )
-        .select("vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    banded = _band_rows(
+        emb.select("vec_id", *lsh_bands(F.col("embedding"), planes, bands)),
+        ["vec_id"], "band", bands, "band",
     )
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -550,7 +638,7 @@ def lsh_dup_pairs(
 
 def assign_cells_vectorized(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     """Nearest-cell assignment through a numpy int64 kernel — the
-    deployment twin of the `_argmax_cell` Column expression, which
+    deployment twin of the ``assign_cells`` Column expression, which
     Catalyst cannot codegen at useful k (64 centroids x 64-dim folds
     measured 24.0 s for 40k rows vs sub-second here; SCALE_NOTES).
 
@@ -558,27 +646,14 @@ def assign_cells_vectorized(emb: DataFrame, centroids: list[list[int]]) -> DataF
     exact int64 (quantized vectors x integer centroids — integer matmul
     has no summation-order sensitivity), each score is the same single
     CAST-to-double divide by sqrt(|c|^2), and argmax's first-max tie rule
-    matches the fold's (s, -j) struct max — lowest cell wins ties. Same
-    twin contract as q142's covariance kernel: the kernel can carry the
-    fold's oracle verbatim."""
-    import numpy as np
-    import pandas as pd
-
+    matches the fold's (s, -j) struct max — lowest cell wins ties. So
+    the kernel can carry the fold's oracle verbatim (q146)."""
     C = np.array(centroids, dtype=np.int64)  # (k, dim)
-    nrm = np.sqrt((C * C).sum(axis=1).astype(np.float64))  # (k,)
 
-    def part(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                * float(QUANT_SCALE)
-            ).astype(np.int64)
-            scores = (X @ C.T).astype(np.float64) / nrm[None, :]
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": scores.argmax(axis=1).astype("int32")}
-            )
+    def step(pdf):
+        vecids, E = _batch(pdf)
+        cell = _cell_scores_np(_quantize(E), C).argmax(axis=1)
+        yield pd.DataFrame({"vec_id": vecids, "cell": cell.astype("int32")})
 
     # no internal fanout (r13): the r12 spread here repartitioned the
     # caller's frame to the core count, but the numpy matmul is sub-ms
@@ -587,7 +662,7 @@ def assign_cells_vectorized(emb: DataFrame, centroids: list[list[int]]) -> DataF
     # kernel twin q147: 0.93 s -> 1.75 s with the fanout). At deployment
     # scale the caller's scan is already wide. Callers that profile a
     # single-task bottleneck fan their scan before passing it in.
-    return emb.select("vec_id", "embedding").mapInPandas(part, "vec_id long, cell int")
+    return _map_batches(emb.select("vec_id", "embedding"), step, "vec_id long, cell int")
 
 
 def semantic_dedup_cells(
@@ -632,11 +707,7 @@ def semantic_dedup_cells(
     ).select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
     embn = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
     ea, eb = embn.alias("ea"), embn.alias("eb")
-    cos = F.round(
-        dot(F.col("ea.embedding"), F.col("eb.embedding"))
-        / (F.col("ea.nrm") * F.col("eb.nrm")),
-        4,
-    )
+    cos = _cos("ea.embedding", "ea.nrm", "eb.embedding", "eb.nrm")
     dup = (
         cand.join(ea, F.col("va") == F.col("ea.vec_id"))
         .join(eb, F.col("vb") == F.col("eb.vec_id"))
@@ -712,13 +783,20 @@ def quantized_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> Da
         / (F.sqrt(F.col("qq").cast("double")) * F.sqrt(F.col("cc").cast("double"))),
         4,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return (
+    return _ranked(
         c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), qcos.alias("qcos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), qcos.alias("qcos")),
+        "qcos", k,
     )
+
+
+def _int8_codes(M: "np.ndarray") -> "np.ndarray":
+    """``quantize_int8`` codes of a float matrix, as float64 (exact small
+    integers). Rounds HALF AWAY FROM ZERO like F.round / DuckDB round()
+    (np.round is half-even and would drift on exact .5 code boundaries);
+    a zero row gets zero codes, so its cosine is NaN and never selected."""
+    s = np.abs(M).max(axis=1, keepdims=True)
+    return np.sign(M) * np.floor(np.abs(M) * 127 / np.where(s == 0, 1.0, s) + 0.5)
 
 
 def quantized_int8_topk_vectorized(
@@ -726,7 +804,8 @@ def quantized_int8_topk_vectorized(
 ) -> DataFrame:
     """BLAS twin of quantized_int8_topk: identical int8 codes (same
     round-half-away quantizer), identical exact integer dots, numpy matmul
-    kernel — asserted row-equal to the Column-fold formulation in tests.
+    kernel — asserted row-equal to the Column-fold formulation by
+    tests/test_dedup_similarity.py::test_quantized_vectorized_equals_column_fold.
 
     This is the actual 100 TB two-stage layout: the Column-fold (q104)
     exists to carry the value oracle; throughput comes from this kernel,
@@ -735,67 +814,22 @@ def quantized_int8_topk_vectorized(
     range, so BLAS speed costs no exactness). Same partial-top-k shape as
     brute_force_topk_vectorized: queries broadcast, each corpus partition
     emits only local top-k."""
-    import numpy as np
-
-    def _codes(M: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
-        # round HALF AWAY FROM ZERO to match F.round / DuckDB round();
-        # np.round is half-even and would drift on exact .5 code boundaries
-        s = np.abs(M).max(axis=1, keepdims=True)
-        keep = s[:, 0] > 0
-        C = np.sign(M) * np.floor(np.abs(M) * 127 / np.where(s == 0, 1.0, s) + 0.5)
-        return C, keep
-
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"quantized_int8_topk_vectorized: query set exceeds {_MAX_DRIVER_QUERIES} "
-            "rows; it must fit on the driver (broadcast side)."
-        )
-    if not probe:
+    got = _query_matrix(queries, "quantized_int8_topk_vectorized")
+    if got is None:
         return quantized_int8_topk(corpus, queries, k)
-    Q = np.array([list(r["qe"]) for r in probe], dtype=np.float64)
-    QC, qkeep = _codes(Q)
-    qids = np.array([r["query_id"] for r in probe], dtype=np.int64)[qkeep]
-    QC = QC[qkeep]
-    qn = np.sqrt((QC * QC).sum(axis=1))
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, QC, qn))
+    qids, Q = got
+    QC = _int8_codes(Q)
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, QC, np.sqrt((QC * QC).sum(axis=1))))
 
-    def part(batches):
-        import pandas as pd
+    def step(pdf):
+        ids, QCm, qn = bq.value
+        vecids, E = _batch(pdf)
+        C = _int8_codes(E)
+        S = _cosines(C, np.sqrt((C * C).sum(axis=1)), QCm, qn)
+        yield _local_topk(S, vecids, ids, k, "qcos")
 
-        ids, QCn, qnv = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            C, keep = _codes(E)
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)[keep]
-            C = C[keep]
-            if not len(vecids):
-                continue
-            cn = np.sqrt((C * C).sum(axis=1))
-            S = _round4_half_away((C @ QCn.T) / (cn[:, None] * qnv[None, :]))
-            out_q, out_n, out_c = [], [], []
-            for j in range(S.shape[1]):
-                col = S[:, j]
-                cand_idx = np.nonzero(vecids != ids[j])[0]
-                if cand_idx.size == 0:
-                    continue
-                order = np.lexsort((vecids[cand_idx], -col[cand_idx]))[:k]
-                sel = cand_idx[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(vecids[sel])
-                out_c.extend(col[sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "qcos": out_c}
-            )
-
-    cands = corpus.select("vec_id", "embedding").mapInPandas(
-        part, "query_id long, neighbor_id long, qcos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), F.asc("neighbor_id"))
-    return cands.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    cands = _map_batches(corpus.select("vec_id", "embedding"), step, _candidates("qcos double"))
+    return _ranked(cands, "qcos", k)
 
 
 # ---------------------------------------------------------------------------
@@ -811,30 +845,6 @@ PQ_KSUB = 8
 PQ_ITERS = 4
 
 
-def _lloyd_euclid(X: "np.ndarray", k: int, max_iter: int) -> "np.ndarray":
-    """Deterministic integer Lloyd iterations under EXACT Euclidean
-    assignment: argmin ||x - c||^2 == argmax (2*x.c - |c|^2), computed in
-    int64 so assignment is bit-exact (no doubles anywhere in the argmax —
-    stronger than the IVF fit, whose scores divide by a double sqrt).
-    Init = first k rows; ties -> lowest code; update = floor(mean)."""
-    cents = X[:k].copy()
-    for _ in range(max_iter):
-        nsq = (cents * cents).sum(axis=1)  # exact int64
-        scores = 2 * (X @ cents.T) - nsq[None, :]  # exact int64
-        assign = scores.argmax(axis=1)  # first max = lowest code on ties
-        new = cents.copy()
-        for c in range(k):
-            members = X[assign == c]
-            if len(members):
-                new[c] = np.floor(
-                    members.sum(axis=0, dtype=np.int64) / len(members)
-                ).astype(np.int64)
-        if np.array_equal(new, cents):
-            break
-        cents = new
-    return cents
-
-
 def pq_fit(
     emb: DataFrame,
     m: int = PQ_M,
@@ -843,56 +853,75 @@ def pq_fit(
 ) -> list[list[list[int]]]:
     """Train PQ codebooks: one integer-quantized Lloyd fit per subspace over
     the ``KMEANS_TRAIN_ROWS`` lowest-id vectors (same bounded-sample posture as
-    kmeans_fit; faiss trains PQ on a sample too). Returns
-    ``codebooks[s][c] -> list[int]`` — deterministic enough that the DuckDB
-    oracle replays every iteration of all m fits (q118)."""
-    pdf = (
-        emb.orderBy("vec_id")
-        .limit(KMEANS_TRAIN_ROWS)
-        .select(quantize_vec(F.col("embedding")).alias("qv"))
-        .toPandas()
-    )
-    if len(pdf) < ksub:
+    kmeans_fit; faiss trains PQ on a sample too). Assignment is EXACT
+    Euclidean (``_code_scores``, all int64 — no doubles anywhere in the
+    argmax, stronger than the IVF fit, whose scores divide by a double
+    sqrt). Returns ``codebooks[s][c] -> list[int]`` — deterministic enough
+    that the DuckDB oracle replays every iteration of all m fits (q118)."""
+    X = _train_sample(emb)
+    if len(X) < ksub:
         raise ValueError(f"pq_fit: corpus has fewer than ksub={ksub} rows")
-    X = np.array(pdf["qv"].tolist(), dtype=np.int64)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
     sub = dim // m
     return [
-        [[int(x) for x in row] for row in _lloyd_euclid(X[:, s * sub : (s + 1) * sub], ksub, max_iter)]
+        [[int(x) for x in row] for row in _lloyd(X[:, s * sub : (s + 1) * sub], ksub, max_iter, _code_scores)]
         for s in range(m)
     ]
 
 
-def _pq_code(qv_sub: Column, codebook: list[list[int]]) -> Column:
-    """Nearest-codeword id for one quantized subvector, by exact integer
-    Euclidean score (2*dot - |c|^2); ties -> lowest code. Map-only: the
-    codebook rides along as literals, like _argmax_cell."""
-    packed = F.array(
-        *[
-            F.struct(
-                (2 * _int_dot(qv_sub, c) - F.lit(int(sum(x * x for x in c)))).alias("s"),
-                F.lit(-j).alias("nj"),
-            )
-            for j, c in enumerate(codebook)
-        ]
+def _pq_codes_col(qv: Column, codebooks: list[list[list[int]]]) -> Column:
+    """array<int> PQ code of a quantized vector column: per subspace, the
+    nearest codeword by exact integer Euclidean score (2*dot - |c|^2),
+    ties to the lowest code. Map-only: the codebooks ride along as
+    literals, like the cell argmax."""
+    sub = len(codebooks[0][0])
+    return F.array(*[
+        _argmax([
+            2 * _int_dot(F.slice(qv, s * sub + 1, sub), c) - F.lit(int(sum(x * x for x in c)))
+            for c in cb
+        ])
+        for s, cb in enumerate(codebooks)
+    ])
+
+
+def _adc_tables_col(qv: Column, codebooks: list[list[list[int]]]) -> Column:
+    """A query's ADC lookup table as array<array<long>>: per subspace, the
+    exact int64 dot against every codeword (m*ksub dots, once per query)."""
+    sub = len(codebooks[0][0])
+    return F.array(*[
+        F.array(*[_int_dot(F.slice(qv, s * sub + 1, sub), c) for c in cb])
+        for s, cb in enumerate(codebooks)
+    ])
+
+
+def _adc_col() -> Column:
+    """The ADC score of a (``tbl``, ``code``) row: m table lookups, summed
+    in exact int64."""
+    return F.aggregate(
+        F.zip_with(F.col("tbl"), F.col("code"), lambda t, c: F.element_at(t, c + F.lit(1))),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
     )
-    return (-F.array_max(packed).getField("nj")).cast("int")
+
+
+def _adc_dot(ranked: DataFrame) -> DataFrame:
+    """Ranked ADC rows with the score de-quantized to the approximate raw
+    dot product."""
+    return ranked.select(
+        "query_id",
+        "neighbor_id",
+        F.round(F.col("adc").cast("double") / F.lit(float(QUANT_SCALE) ** 2), 6).alias("adc_dot"),
+        "rnk",
+    )
 
 
 def pq_encode(corpus: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame:
     """(id, embedding) -> (id, code: array<int>) — the PQ compression step.
     Map-only over the scan; at 100 TB this is the one full pass that turns
     the 100 TB float corpus into a ~1.5 TB code table."""
-    qv = quantize_vec(F.col("embedding"))
-    sub = len(codebooks[0][0])
-    codes = F.array(
-        *[
-            _pq_code(F.slice(qv, s * sub + 1, sub), cb)
-            for s, cb in enumerate(codebooks)
-        ]
-    )
+    codes = _pq_codes_col(quantize_vec(F.col("embedding")), codebooks)
     return corpus.select("vec_id", codes.alias("code"))
 
 
@@ -913,40 +942,13 @@ def pq_adc_topk(
     Scale shape: the encoded corpus (codes only, no embeddings) joins a
     broadcast of the tabled queries; nothing wider than m ints + the small
     table array ever shuffles."""
-    sub = len(codebooks[0][0])
     enc = pq_encode(corpus, codebooks)
-    qqv = quantize_vec(F.col("qe"))
-    tbl = F.array(
-        *[
-            F.array(*[_int_dot(F.slice(qqv, s * sub + 1, sub), c) for c in cb])
-            for s, cb in enumerate(codebooks)
-        ]
-    )
-    q = queries.select("query_id", tbl.alias("tbl"))
+    q = queries.select("query_id", _adc_tables_col(quantize_vec(F.col("qe")), codebooks).alias("tbl"))
     pairs = enc.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    adc = F.aggregate(
-        F.zip_with(F.col("tbl"), F.col("code"), lambda t, c: F.element_at(t, c + F.lit(1))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    return (
-        pairs.select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.alias("adc"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("adc").cast("double") / F.lit(float(QUANT_SCALE) ** 2), 6).alias(
-                "adc_dot"
-            ),
-            "rnk",
-        )
-    )
+    return _adc_dot(_ranked(
+        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_col().alias("adc")),
+        "adc", k,
+    ))
 
 
 def pq_adc_topk_vectorized(
@@ -961,80 +963,25 @@ def pq_adc_topk_vectorized(
     q64-class speed instead of expression-tree speed.
 
     Same twin contract as q109<->q104: the fold formulation carries the
-    DuckDB oracle, this kernel is asserted row-equal in tests and is what
-    a 100 TB run deploys. Per partition: vectorized encode (2*X@C.T -
+    DuckDB oracle, this kernel is asserted row-equal by
+    tests/test_curation.py::test_pq_vectorized_twin_equals_fold and is
+    what a 100 TB run deploys. Per batch: vectorized encode (2*X@C.T -
     |C|^2 argmax), ADC score matrix by table gather, local top-k per
-    query; the global window sees only k x partitions x queries rows."""
-    import numpy as np
-
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"pq_adc_topk_vectorized: query set exceeds {_MAX_DRIVER_QUERIES} rows; "
-            "shard the query table for fact-sized query sets."
-        )
-    if not probe:
+    query; the global window sees only k x batches x queries rows."""
+    got = _query_matrix(queries, "pq_adc_topk_vectorized")
+    if got is None:
         return pq_adc_topk(corpus, queries, codebooks, k)
+    qids, Q = got
     books = np.array(codebooks, dtype=np.int64)  # (m, ksub, sub)
-    m, ksub, sub = books.shape
-    qids = np.array([r["query_id"] for r in probe], dtype=np.int64)
-    Qf = np.array([list(r["qe"]) for r in probe], dtype=np.float64)
-    QQ = np.floor(Qf * float(QUANT_SCALE)).astype(np.int64)  # = quantize_vec
-    # per-query ADC tables: T[q, s, c] = dot(q_sub_s, codebook[s][c]), exact
-    T = np.einsum("qsd,scd->qsc", QQ.reshape(len(qids), m, sub), books)
-    nsq = (books * books).sum(axis=2)  # (m, ksub), exact
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, T))
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, _adc_tables(_quantize(Q), books)))
 
-    def part(batches):
-        import pandas as pd
+    def step(pdf):
+        ids, T = bq.value
+        vecids, E = _batch(pdf)
+        yield _local_topk(_adc(T, _pq_codes(_quantize(E), books)), vecids, ids, k, "adc")
 
-        ids, Tq = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            X = np.floor(E * float(QUANT_SCALE)).astype(np.int64)
-            Xs = X.reshape(len(E), m, sub)
-            codes = np.empty((len(E), m), dtype=np.int64)
-            for s in range(m):
-                scores = 2 * (Xs[:, s] @ books[s].T) - nsq[s][None, :]
-                codes[:, s] = scores.argmax(axis=1)  # first max = lowest code
-            # ADC[q, x] = sum_s T[q, s, codes[x, s]] — pure integer gathers
-            adc = np.zeros((len(ids), len(E)), dtype=np.int64)
-            for s in range(m):
-                adc += Tq[:, s, :][:, codes[:, s]]
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_a = [], [], []
-            for j in range(len(ids)):
-                cand = np.nonzero(vecids != ids[j])[0]
-                if cand.size == 0:
-                    continue
-                order = np.lexsort((vecids[cand], -adc[j][cand]))[:k]
-                sel = cand[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(vecids[sel])
-                out_a.extend(adc[j][sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "adc": out_a}
-            )
-
-    cands = corpus.select("vec_id", "embedding").mapInPandas(
-        part, "query_id long, neighbor_id long, adc long"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("adc").cast("double") / F.lit(float(QUANT_SCALE) ** 2), 6).alias(
-                "adc_dot"
-            ),
-            "rnk",
-        )
-    )
+    cands = _map_batches(corpus.select("vec_id", "embedding"), step, _candidates("adc long"))
+    return _adc_dot(_ranked(cands, "adc", k))
 
 
 def ivf_pq_rerank_topk(
@@ -1053,9 +1000,9 @@ def ivf_pq_rerank_topk(
 
     Stage shapes, in order:
       * index build — ONE map-only pass over the corpus emits (vec_id,
-        cell, code): cell via centroid literals (_argmax_cell), code via
-        codebook literals (_pq_code). At 100 TB this pass replaces the
-        float corpus with a ~1.5 TB code table partitioned by cell.
+        code, cell): cell via centroid literals, code via codebook
+        literals. At 100 TB this pass replaces the float corpus with a
+        ~1.5 TB code table partitioned by cell.
       * probe — each query's nprobe best cells + its ADC lookup table
         (m*ksub exact int64 dots) form a tiny relation, broadcast onto the
         code table: a broadcast hash join on cell, so the corpus never
@@ -1090,16 +1037,19 @@ def ivf_pq_index(
     ``cell`` is last because it is the hive-partition key: a partitioned
     read appends partition columns after the data columns, so builder
     output and store read-back keep identical column order."""
-    sub = len(codebooks[0][0])
     qv = quantize_vec(F.col("embedding"))
-    codes = F.array(
-        *[_pq_code(F.slice(qv, s * sub + 1, sub), cb) for s, cb in enumerate(codebooks)]
-    )
     return corpus.select(
         "vec_id",
-        codes.alias("code"),
-        _argmax_cell(qv, centroids).alias("cell"),
+        _pq_codes_col(qv, codebooks).alias("code"),
+        _argmax(_cell_scores(qv, centroids)).alias("cell"),
     )
+
+
+def _cells_and_codes(pdf: pd.DataFrame, C: "np.ndarray", books: "np.ndarray"):
+    """(nearest cell, PQ code) of every row of one Arrow batch: batch
+    quantize, cell argmax, per-subspace encode — ``ivf_pq_index``'s values."""
+    X = _quantize(_batch(pdf)[1])
+    return _cell_scores_np(X, C).argmax(axis=1), _pq_codes(X, books)
 
 
 def ivf_pq_index_vectorized(
@@ -1108,49 +1058,29 @@ def ivf_pq_index_vectorized(
     codebooks: list[list[list[int]]],
 ) -> DataFrame:
     """``ivf_pq_index`` through the numpy int64 kernel — value-identical
-    BY CONSTRUCTION (exact integer Euclid scores 2*dot - |c|^2 with the
-    fold's lowest-code/lowest-cell tie rules; the q142/q147 twin
-    contract), so a store built from it is row-identical to the fold's.
+    BY CONSTRUCTION (exact integer scores with the fold's
+    lowest-code/lowest-cell tie rules), so a store built from it is
+    row-identical to the fold's.
 
     Why (r12 optimization, guide §4): at m=4 x ksub=8 x 16-dim subspaces
     the encode fold is a ~4,000-literal expression tree that Catalyst
     cannot codegen — q247 paid seconds of driver plan analysis per
     lifecycle run, twice (v1 build + batch append). The kernel's encode
     is three integer matmuls per Arrow batch."""
-    import numpy as np
-    import pandas as pd
-
     C = np.array(centroids, dtype=np.int64)  # (kcells, dim)
-    cnrm = np.sqrt((C * C).sum(axis=1).astype(np.float64))
     books = np.array(codebooks, dtype=np.int64)  # (m, ksub, sub)
-    m, ksub, sub = books.shape
-    nsq = (books * books).sum(axis=2)  # (m, ksub)
 
-    def part(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            X = np.floor(E * float(QUANT_SCALE)).astype(np.int64)
-            Xs = X.reshape(len(E), m, sub)
-            codes = np.empty((len(E), m), dtype=np.int32)
-            for s in range(m):
-                scores = 2 * (Xs[:, s] @ books[s].T) - nsq[s][None, :]
-                codes[:, s] = scores.argmax(axis=1)  # first max = lowest code
-            cell = ((X @ C.T).astype(np.float64) / cnrm[None, :]).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "code": list(codes),
-                    "cell": cell.astype("int32"),
-                }
-            )
+    def step(pdf):
+        cell, codes = _cells_and_codes(pdf, C, books)
+        yield pd.DataFrame(
+            {"vec_id": pdf["vec_id"], "code": list(codes.astype(np.int32)), "cell": cell.astype("int32")}
+        )
 
     # no internal fanout (r13) — same rationale as assign_cells_vectorized:
     # the integer matmuls are cheaper than 32 python workers' startup at
     # test scale, and the caller's scan is already wide at real scale
-    return corpus.select("vec_id", "embedding").mapInPandas(
-        part, "vec_id long, code array<int>, cell int"
+    return _map_batches(
+        corpus.select("vec_id", "embedding"), step, "vec_id long, code array<int>, cell int"
     )
 
 
@@ -1172,43 +1102,26 @@ def ivf_pq_rerank_from_index(
     refine posture: codes in the index, floats stay in the lake and only
     survivors' rows are read). ``ivf_pq_rerank_topk`` delegates here, so
     stored-index and recompute paths share every ranking expression."""
-    sub = len(codebooks[0][0])
     qqv = quantize_vec(F.col("qe"))
-    tbl = F.array(
-        *[
-            F.array(*[_int_dot(F.slice(qqv, s * sub + 1, sub), c) for c in cb])
-            for s, cb in enumerate(codebooks)
-        ]
+    probes = queries.select(
+        "query_id",
+        _adc_tables_col(qqv, codebooks).alias("tbl"),
+        F.explode(_top_cells(qqv, centroids, nprobe)).alias("cell"),
     )
-    qscores = F.array(
-        *[
-            F.struct(s.alias("s"), F.lit(-j).alias("nj"))
-            for j, s in enumerate(_cell_scores(qqv, centroids))
-        ]
-    )
-    probes = (
-        queries.select(
-            "query_id",
-            tbl.alias("tbl"),
-            F.slice(F.sort_array(qscores, asc=False), 1, nprobe).alias("top"),
-        )
-        .select("query_id", "tbl", F.explode("top").alias("t"))
-        .select("query_id", "tbl", (-F.col("t.nj")).cast("int").alias("cell"))
-    )
-    adc = F.aggregate(
-        F.zip_with(F.col("tbl"), F.col("code"), lambda t, c: F.element_at(t, c + F.lit(1))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    wprune = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
+    scored = (
         index.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), adc.alias("adc"))
-        .withColumn("crnk", F.row_number().over(wprune))
-        .where(F.col("crnk") <= rerank_from)
-        .select("query_id", "neighbor_id")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _adc_col().alias("adc"))
     )
+    return _prune_rerank(scored, corpus, queries, rerank_from, k)
+
+
+def _prune_rerank(
+    scored: DataFrame, corpus: DataFrame, queries: DataFrame, rerank_from: int, k: int
+) -> DataFrame:
+    """The ADC prune window (each query's ``rerank_from`` best
+    (query_id, neighbor_id, adc) rows), then the exact cosine re-rank."""
+    cand = _ranked(scored, "adc", rerank_from, "crnk").select("query_id", "neighbor_id")
     return _exact_cos_rerank(corpus, queries, cand, k)
 
 
@@ -1216,21 +1129,79 @@ def _exact_cos_rerank(
     corpus: DataFrame, queries: DataFrame, cand: DataFrame, k: int
 ) -> DataFrame:
     """Exact cosine top-k over a (query_id, neighbor_id) candidate relation:
-    candidates broadcast onto the corpus, survivors' raw embeddings only."""
-    withq = cand.join(F.broadcast(queries.select("query_id", "qe")), "query_id")
-    ne = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
+    candidates broadcast onto the corpus, survivors' raw embeddings only.
+    Zero-norm queries and neighbours drop out here (the zero-norm contract)."""
+    withq = cand.join(
+        F.broadcast(_nonzero(queries.select("query_id", "qe"), "qe", "qnrm")), "query_id"
+    )
+    ne = _nonzero(
+        corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")),
+        "ne", "nnrm",
     )
     pairs = ne.join(F.broadcast(withq), "neighbor_id")
-    cos = F.round(
-        dot(F.col("qe"), F.col("ne")) / (norm(F.col("qe")) * norm(F.col("ne"))), 4
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+    cos = _cos("qe", "qnrm", "ne", "nnrm")
+    return _ranked(pairs.select("query_id", "neighbor_id", cos.alias("cos")), "cos", k)
+
+
+def _ivf_queries(queries: DataFrame, centroids: list[list[int]], nprobe: int, kernel: str):
+    """The IVF kernels' query prologue: (query ids, float64 query matrix,
+    int64 centroid matrix, each query's probed cells), or None for an
+    empty query set."""
+    got = _query_matrix(queries, kernel)
+    if got is None:
+        return None
+    C = np.array(centroids, dtype=np.int64)
+    return (*got, C, _probe_cells(_quantize(got[1]), C, nprobe))
+
+
+def _probed_only(src: DataFrame, probe_cells: "np.ndarray", ncells: int) -> DataFrame:
+    """``src`` without the rows outside the UNION of probed cells, which
+    can never be candidates. The filter is LITERALS on the stored cell
+    column, so when the index store is hive-partitioned by cell (q246,
+    q247) the scan prunes to the probed directories: a stored-index read
+    is proportional to the probed union, not O(corpus)."""
+    probed = sorted({int(c) for c in probe_cells.ravel()})
+    return src.where(F.col("cell").isin(*probed)) if len(probed) < ncells else src
+
+
+def _ivf_probe(
+    src: DataFrame,
+    qids: "np.ndarray",
+    Q: "np.ndarray",
+    probe_cells: "np.ndarray",
+    k: int,
+    cells_of,
+) -> DataFrame:
+    """The IVF kernel over ``src`` (vec_id, embedding[, cell]), with
+    ``cells_of(pdf, E)`` giving each batch row's cell.
+
+    Queries are grouped by their probed-cell COMBINATION (<= C(ncells,
+    nprobe) groups): per Arrow batch the matmul then covers ONLY the
+    probed rows for exactly the queries that probe them — the flop count
+    is the probed fraction, not rows x all-queries. The first formulation
+    did the FULL matmul and masked per query afterwards: measured at 1.2M
+    vectors it cost 3.9x BRUTE FORCE (234 s vs 60 s; the per-query
+    np.isin over every batch row went superlinear in n_queries x rows;
+    SCALE_NOTES r9 ANN lifecycle third point). Per-(query, batch) top-k is
+    a superset of the global top-k, so the final window is exact."""
+    combos: dict[tuple, list[int]] = {}
+    for j, pc in enumerate(probe_cells):
+        combos.setdefault(tuple(sorted(pc)), []).append(j)
+    groups = [(list(combo), np.asarray(qjs)) for combo, qjs in combos.items()]
+    bq = src.sparkSession.sparkContext.broadcast((qids, Q, np.linalg.norm(Q, axis=1), groups))
+
+    def step(pdf):
+        ids, Qm, qn, gs = bq.value
+        vecids, E = _batch(pdf)
+        cell = cells_of(pdf, E)
+        en = np.linalg.norm(E, axis=1)
+        for combo, qj in gs:
+            idx = np.nonzero(np.isin(cell, combo))[0]
+            if idx.size:
+                S = _cosines(E[idx], en[idx], Qm[qj], qn[qj])
+                yield _local_topk(S, vecids[idx], ids[qj], k, "cos")
+
+    return _ranked(_map_batches(src, step, _candidates("cos double")), "cos", k)
 
 
 def ivf_topk_vectorized(
@@ -1242,17 +1213,22 @@ def ivf_topk_vectorized(
 ) -> DataFrame:
     """q56's IVF probe through the numpy kernel — row-equal to ivf_topk
     (same integer-quantized cell assignment and probe selection, same
-    round-4 cosines with id tie-breaks), at q64-class speed.
+    round-4 cosines with id tie-breaks, at q64-class speed;
+    tests/test_multimodal_similarity.py::test_ivf_vectorized_equals_fold).
 
     The fold formulation carries the DuckDB fit-replay oracle; this kernel
     is the deployment path: per Arrow batch, vectorized cell assignment
-    against the centroid matrix, then one BLAS matmul per batch scoring
-    only (row, query) pairs whose cell is probed — masked per query — and
-    local top-k. Wall-clock at stress scale is minutes -> seconds
-    (SCALE_NOTES); the candidate FRACTION (nprobe/k cells) is what
-    transfers to 100 TB."""
-    return _ivf_topk_vectorized_impl(
-        corpus, queries, centroids, k, nprobe, stored_cells=False
+    against the centroid matrix, then one BLAS matmul per probed-cell
+    combination and local top-k (``_ivf_probe``). Wall-clock at stress
+    scale is minutes -> seconds (SCALE_NOTES); the candidate FRACTION
+    (nprobe/k cells) is what transfers to 100 TB."""
+    got = _ivf_queries(queries, centroids, nprobe, "ivf_topk_vectorized")
+    if got is None:
+        return ivf_topk(corpus, queries, centroids, k, nprobe)
+    qids, Q, C, probe_cells = got
+    return _ivf_probe(
+        corpus.select("vec_id", "embedding"), qids, Q, probe_cells, k,
+        lambda pdf, E: _cell_scores_np(_quantize(E), C).argmax(axis=1),
     )
 
 
@@ -1269,122 +1245,44 @@ def ivf_topk_from_index_vectorized(
     skipped entirely because the stored column IS the assignment, so a
     query run pays masking + one matmul per Arrow batch and nothing
     else. Row-equal to the fold ``ivf_topk_from_index`` by the same twin
-    contract as q130<->q56 (pinned in tests/test_ann_maintenance.py)."""
-    return _ivf_topk_vectorized_impl(
-        cells, queries, centroids, k, nprobe, stored_cells=True
+    contract as q130<->q56 (tests/test_ann_maintenance.py::
+    test_vectorized_index_probe_equals_fold)."""
+    got = _ivf_queries(queries, centroids, nprobe, "ivf_topk_from_index_vectorized")
+    if got is None:
+        return ivf_topk_from_index(cells, queries, centroids, k, nprobe)
+    qids, Q, C, probe_cells = got
+    return _ivf_probe(
+        _probed_only(cells.select("vec_id", "embedding", "cell"), probe_cells, len(C)),
+        qids, Q, probe_cells, k,
+        lambda pdf, E: pdf["cell"].to_numpy(dtype=np.int64),
     )
 
 
-def _ivf_topk_vectorized_impl(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[int]],
-    k: int,
-    nprobe: int,
-    stored_cells: bool,
+def _adc_prune(
+    src: DataFrame,
+    qids: "np.ndarray",
+    T: "np.ndarray",
+    probe_cells: "np.ndarray",
+    ncells: int,
+    rerank_from: int,
+    cells_and_codes,
 ) -> DataFrame:
-    import numpy as np
+    """The IVF-PQ kernels' ADC prune over ``src``, with
+    ``cells_and_codes(pdf)`` giving each batch row's cell and PQ code: per
+    Arrow batch, the exact int64 ADC scores (tables ``T``) of the rows
+    inside each query's probed cells and their local top-``rerank_from``
+    (query_id, neighbor_id, adc) rows."""
+    probed = np.zeros((ncells, len(qids)), dtype=bool)  # probed[cell, query]
+    probed[probe_cells, np.arange(len(qids))[:, None]] = True
+    bq = src.sparkSession.sparkContext.broadcast((qids, T, probed))
 
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"ivf_topk_vectorized: query set exceeds {_MAX_DRIVER_QUERIES} rows; "
-            "shard the query table for fact-sized query sets."
-        )
-    if not probe:
-        if stored_cells:
-            return ivf_topk_from_index(corpus, queries, centroids, k, nprobe)
-        return ivf_topk(corpus, queries, centroids, k, nprobe)
-    cents = np.array(centroids, dtype=np.int64)
-    ncells = cents.shape[0]
-    qids = np.array([r["query_id"] for r in probe], dtype=np.int64)
-    Qf = np.array([list(r["qe"]) for r in probe], dtype=np.float64)
-    QQ = np.floor(Qf * float(QUANT_SCALE)).astype(np.int64)
-    cnsq_sqrt = np.sqrt((cents * cents).sum(axis=1).astype(np.float64))
-    qscores = (QQ @ cents.T).astype(np.float64) / cnsq_sqrt[None, :]
-    probe_cells = np.stack(
-        [np.lexsort((np.arange(ncells), -qscores[i]))[:nprobe] for i in range(len(qids))]
-    )
-    qn = np.linalg.norm(Qf, axis=1)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, Qf, qn, probe_cells))
+    def step(pdf):
+        ids, Tq, P = bq.value
+        cell, codes = cells_and_codes(pdf)
+        vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        yield _local_topk(_adc(Tq, codes), vecids, ids, rerank_from, "adc", P[cell])
 
-    # queries grouped by their probed-cell COMBINATION (≤ C(ncells,
-    # nprobe) groups): per Arrow batch the matmul then covers ONLY the
-    # probed rows for exactly the queries that probe them — the flop
-    # count is the probed fraction, not rows x all-queries. The first
-    # formulation did the FULL matmul and masked per query afterwards:
-    # measured at 1.2M vectors it cost 3.9x BRUTE FORCE (234 s vs 60 s,
-    # wall exp 2.43 — the full matmul saved nothing and the per-query
-    # np.isin over every batch row went superlinar in n_queries x rows;
-    # SCALE_NOTES r9 ANN lifecycle third point). Results are unchanged:
-    # same dot-then-divide + half-away rounding, same (cos desc, id asc)
-    # tie-break, per-(query, batch) top-k is a superset of the global
-    # top-k so the final window is exact — twin row-equality re-pinned.
-    combos: dict[tuple, list[int]] = {}
-    for j in range(len(qids)):
-        combos.setdefault(tuple(sorted(probe_cells[j])), []).append(j)
-    bq2 = sc.broadcast(combos)
-
-    def part(batches):
-        import pandas as pd
-
-        ids, Qm, qnv, pc = bq.value
-        combo_map = bq2.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            if stored_cells:
-                # the maintained table carries the assignment — no argmax
-                cell = pdf["cell"].to_numpy(dtype=np.int64)
-            else:
-                X = np.floor(E * float(QUANT_SCALE)).astype(np.int64)
-                cell = ((X @ cents.T).astype(np.float64) / cnsq_sqrt[None, :]).argmax(axis=1)
-            en = np.linalg.norm(E, axis=1)
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cell_rows = {c: np.nonzero(cell == c)[0] for c in np.unique(cell)}
-            out_q, out_n, out_c = [], [], []
-            for combo, qjs in combo_map.items():
-                parts = [cell_rows[c] for c in combo if c in cell_rows]
-                if not parts:
-                    continue
-                idx = np.concatenate(parts)
-                Es, ens, vids = E[idx], en[idx], vecids[idx]
-                qj = np.asarray(qjs)
-                # dot-then-divide + half-away round — q64's recipe (see
-                # _round4_half_away for the cross-engine rounding contract)
-                S = _round4_half_away(
-                    (Es @ Qm[qj].T) / (ens[:, None] * qnv[qj][None, :])
-                )
-                for t, j in enumerate(qjs):
-                    keep = vids != ids[j]
-                    col, vid = S[keep, t], vids[keep]
-                    if col.size == 0:
-                        continue
-                    order = np.lexsort((vid, -col))[:k]
-                    out_q.extend([ids[j]] * len(order))
-                    out_n.extend(vid[order])
-                    out_c.extend(col[order])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "cos": out_c})
-
-    in_cols = ["vec_id", "embedding", "cell"] if stored_cells else ["vec_id", "embedding"]
-    src = corpus.select(*in_cols)
-    if stored_cells:
-        # rows outside the UNION of probed cells can never be candidates
-        # (every combo group masks to its probed cells) — filter them with
-        # LITERALS on the stored cell column, so when the index store is
-        # hive-partitioned by cell (q246) the scan prunes to the probed
-        # directories: the stored-index read is nprobe∪-proportional, not
-        # O(corpus)
-        probed = sorted({int(c) for c in probe_cells.ravel()})
-        if len(probed) < ncells:
-            src = src.where(F.col("cell").isin(*probed))
-    cands = src.mapInPandas(
-        part, "query_id long, neighbor_id long, cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return cands.withColumn("rnk", F.row_number().over(w)).where(F.col("rnk") <= k)
+    return _map_batches(src, step, _candidates("adc long"))
 
 
 def ivf_pq_rerank_topk_vectorized(
@@ -1402,84 +1300,23 @@ def ivf_pq_rerank_topk_vectorized(
 
     Same twin contract as q109<->q104 and q120<->q118: the Column-fold
     formulation (ivf_pq_rerank_topk) carries the DuckDB oracle; this kernel
-    is asserted row-equal in tests and is what a 100 TB run deploys.
+    is asserted row-equal by tests/test_multimodal_similarity.py::
+    test_ivf_pq_vectorized_equals_fold and is what a 100 TB run deploys.
     Per Arrow batch: vectorized cell assignment against the centroid
-    matrix, per-subspace integer codebook encode, per-query ADC gathers
-    restricted to that query's probed cells, local top-``rerank_from`` —
-    the global prune window then sees at most rerank_from x partitions x
-    queries narrow rows, and the exact re-rank tail is shared with the
-    fold twin."""
-    import numpy as np
-
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"ivf_pq_rerank_topk_vectorized: query set exceeds {_MAX_DRIVER_QUERIES} "
-            "rows; shard the query table for fact-sized query sets."
-        )
-    if not probe:
+    matrix, per-subspace integer codebook encode, ADC gathers restricted
+    to each query's probed cells, local top-``rerank_from`` — the global
+    prune window then sees at most rerank_from x batches x queries narrow
+    rows, and the exact re-rank tail is shared with the fold twin."""
+    got = _ivf_queries(queries, centroids, nprobe, "ivf_pq_rerank_topk_vectorized")
+    if got is None:
         return ivf_pq_rerank_topk(corpus, queries, centroids, codebooks, k, nprobe, rerank_from)
-    cents = np.array(centroids, dtype=np.int64)
+    qids, Q, C, probe_cells = got
     books = np.array(codebooks, dtype=np.int64)
-    m, ksub, sub = books.shape
-    ncells = cents.shape[0]
-    qids = np.array([r["query_id"] for r in probe], dtype=np.int64)
-    Qf = np.array([list(r["qe"]) for r in probe], dtype=np.float64)
-    QQ = np.floor(Qf * float(QUANT_SCALE)).astype(np.int64)  # = quantize_vec
-    cnsq_sqrt = np.sqrt((cents * cents).sum(axis=1).astype(np.float64))
-    # per-query probed cells: same score (exact int dot / sqrt |c|^2 in
-    # IEEE double) and the same lower-cell tie-break as _cell_scores
-    qscores = (QQ @ cents.T).astype(np.float64) / cnsq_sqrt[None, :]
-    probe_cells = np.stack(
-        [np.lexsort((np.arange(ncells), -qscores[i]))[:nprobe] for i in range(len(qids))]
+    scored = _adc_prune(
+        corpus.select("vec_id", "embedding"), qids, _adc_tables(_quantize(Q), books),
+        probe_cells, len(C), rerank_from, lambda pdf: _cells_and_codes(pdf, C, books),
     )
-    T = np.einsum("qsd,scd->qsc", QQ.reshape(len(qids), m, sub), books)  # exact
-    bnsq = (books * books).sum(axis=2)  # (m, ksub), exact
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, T, probe_cells))
-
-    def part(batches):
-        import pandas as pd
-
-        ids, Tq, pc = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            X = np.floor(E * float(QUANT_SCALE)).astype(np.int64)
-            cell = ((X @ cents.T).astype(np.float64) / cnsq_sqrt[None, :]).argmax(axis=1)
-            Xs = X.reshape(len(E), m, sub)
-            codes = np.empty((len(E), m), dtype=np.int64)
-            for s in range(m):
-                scores = 2 * (Xs[:, s] @ books[s].T) - bnsq[s][None, :]
-                codes[:, s] = scores.argmax(axis=1)  # first max = lowest code
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_a = [], [], []
-            for j in range(len(ids)):
-                mask = np.isin(cell, pc[j]) & (vecids != ids[j])
-                idx = np.nonzero(mask)[0]
-                if idx.size == 0:
-                    continue
-                adc = np.zeros(idx.size, dtype=np.int64)
-                for s in range(m):
-                    adc += Tq[j, s][codes[idx, s]]
-                order = np.lexsort((vecids[idx], -adc))[:rerank_from]
-                sel = idx[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(vecids[sel])
-                out_a.extend(adc[order])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "adc": out_a})
-
-    local = corpus.select("vec_id", "embedding").mapInPandas(
-        part, "query_id long, neighbor_id long, adc long"
-    )
-    wprune = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        local.withColumn("crnk", F.row_number().over(wprune))
-        .where(F.col("crnk") <= rerank_from)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_cos_rerank(corpus, queries, cand, k)
+    return _prune_rerank(scored, corpus, queries, rerank_from, k)
 
 
 def ivf_pq_rerank_from_index_vectorized(
@@ -1499,90 +1336,33 @@ def ivf_pq_rerank_from_index_vectorized(
 
     Cheaper than even ``ivf_pq_rerank_topk_vectorized``'s per-batch work:
     the stored columns ARE the assignment and the codes, so a query run
-    pays exactly the per-query ADC LUT gathers over probed-cell rows —
-    no embedding decode, no cell argmax, no PQ encode, no float math
-    until the exact re-rank over the ≤ queries x rerank_from survivors.
-    Row-equal to the fold twin by the q130<->q56 contract (pinned in
-    tests/test_ann_maintenance.py): same integer ADC sums, same
-    (-adc, neighbor_id) prune order, shared ``_exact_cos_rerank`` tail.
+    pays exactly the ADC LUT gathers over probed-cell rows — no embedding
+    decode, no cell argmax, no PQ encode, no float math until the exact
+    re-rank over the <= queries x rerank_from survivors. Row-equal to the
+    fold twin (tests/test_ann_maintenance.py::
+    test_vectorized_pq_index_probe_equals_fold): same integer ADC sums,
+    same (-adc, neighbor_id) prune order, shared ``_exact_cos_rerank`` tail.
 
     At deployment scale the int64 code table is the only relation the
     prune ever scans (~1.5 TB for a 100 TB float corpus), and each Arrow
     batch contributes at most queries x rerank_from narrow rows to the
     global prune window."""
-    import numpy as np
-
-    probe = queries.select("query_id", "qe").limit(_MAX_DRIVER_QUERIES + 1).collect()
-    if len(probe) > _MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"ivf_pq_rerank_from_index_vectorized: query set exceeds "
-            f"{_MAX_DRIVER_QUERIES} rows; shard the query table for "
-            "fact-sized query sets."
-        )
-    if not probe:
+    got = _ivf_queries(queries, centroids, nprobe, "ivf_pq_rerank_from_index_vectorized")
+    if got is None:
         return ivf_pq_rerank_from_index(
             index, corpus, queries, centroids, codebooks, k, nprobe, rerank_from
         )
-    cents = np.array(centroids, dtype=np.int64)
+    qids, Q, C, probe_cells = got
     books = np.array(codebooks, dtype=np.int64)
-    m, ksub, sub = books.shape
-    ncells = cents.shape[0]
-    qids = np.array([r["query_id"] for r in probe], dtype=np.int64)
-    Qf = np.array([list(r["qe"]) for r in probe], dtype=np.float64)
-    QQ = np.floor(Qf * float(QUANT_SCALE)).astype(np.int64)  # = quantize_vec
-    cnsq_sqrt = np.sqrt((cents * cents).sum(axis=1).astype(np.float64))
-    qscores = (QQ @ cents.T).astype(np.float64) / cnsq_sqrt[None, :]
-    probe_cells = np.stack(
-        [np.lexsort((np.arange(ncells), -qscores[i]))[:nprobe] for i in range(len(qids))]
+    scored = _adc_prune(
+        _probed_only(index.select("vec_id", "cell", "code"), probe_cells, len(C)),
+        qids, _adc_tables(_quantize(Q), books), probe_cells, len(C), rerank_from,
+        lambda pdf: (
+            pdf["cell"].to_numpy(dtype=np.int64),
+            np.stack(pdf["code"].to_numpy()).astype(np.int64),
+        ),
     )
-    T = np.einsum("qsd,scd->qsc", QQ.reshape(len(qids), m, sub), books)  # exact
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, T, probe_cells))
-
-    def part(batches):
-        import pandas as pd
-
-        ids, Tq, pc = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cell = pdf["cell"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["code"].to_numpy()).astype(np.int64)
-            vecids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_a = [], [], []
-            for j in range(len(ids)):
-                mask = np.isin(cell, pc[j]) & (vecids != ids[j])
-                idx = np.nonzero(mask)[0]
-                if idx.size == 0:
-                    continue
-                adc = np.zeros(idx.size, dtype=np.int64)
-                for s in range(m):
-                    adc += Tq[j, s][codes[idx, s]]
-                order = np.lexsort((vecids[idx], -adc))[:rerank_from]
-                sel = idx[order]
-                out_q.extend([ids[j]] * len(sel))
-                out_n.extend(vecids[sel])
-                out_a.extend(adc[order])
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "adc": out_a})
-
-    src = index.select("vec_id", "cell", "code")
-    # literal filter on the UNION of probed cells: rows outside it are
-    # masked out per query anyway, and with the code store partitioned by
-    # cell (q247) the scan prunes to the probed directories — the ADC
-    # prune reads nprobe∪/ncells of the stored table, not all of it
-    probed_all = sorted({int(c) for c in probe_cells.ravel()})
-    if len(probed_all) < ncells:
-        src = src.where(F.col("cell").isin(*probed_all))
-    local = src.mapInPandas(
-        part, "query_id long, neighbor_id long, adc long"
-    )
-    wprune = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    cand = (
-        local.withColumn("crnk", F.row_number().over(wprune))
-        .where(F.col("crnk") <= rerank_from)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_cos_rerank(corpus, queries, cand, k)
+    return _prune_rerank(scored, corpus, queries, rerank_from, k)
 
 
 def pq_adc_rerank_topk(
@@ -1606,23 +1386,10 @@ def pq_adc_rerank_topk(
 
     The ADC prune runs through ``pq_adc_topk_vectorized`` (r12
     optimization) — bit-identical candidates to ``pq_adc_topk`` (exact
-    int64 scores, same tie rules; asserted row-equal in tests for the
-    q104<->q109 twins), while the ~4,000-literal encode fold (seconds of
-    driver plan analysis) never builds."""
+    int64 scores, same tie rules; tests/test_curation.py::
+    test_pq_vectorized_twin_equals_fold), while the ~4,000-literal encode
+    fold (seconds of driver plan analysis) never builds."""
     cand = pq_adc_topk_vectorized(corpus, queries, codebooks, k=rerank_from).select(
         "query_id", "neighbor_id"
     )
-    withq = cand.join(F.broadcast(queries.select("query_id", "qe")), "query_id")
-    ne = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-    )
-    pairs = ne.join(F.broadcast(withq), "neighbor_id")
-    cos = F.round(
-        dot(F.col("qe"), F.col("ne")) / (norm(F.col("qe")) * norm(F.col("ne"))), 4
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-    )
+    return _exact_cos_rerank(corpus, queries, cand, k)

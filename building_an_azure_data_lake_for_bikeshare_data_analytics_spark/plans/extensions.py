@@ -27,7 +27,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
-from ..functions.vectors import EMBEDDING_DIM, dot, norm
+from ..functions.vectors import EMBEDDING_DIM, dot
 from ..operators.dedup import (
     MINHASH_BANDS,
     MINHASH_HASHES,
@@ -42,6 +42,7 @@ from ..operators.similarity import (
     KMEANS_ITERS,
     KMEANS_K,
     KMEANS_TRAIN_ROWS,
+    brute_force_topk,
     hyperplanes,
     lsh_topk,
 )
@@ -510,22 +511,11 @@ def q39(spark, sf):
     the join; per-query top-k is one window shuffle keyed by query_id. The
     LSH-bucketed variant (q40) is the 100 TB path."""
     # _ts (r12): per-row norm/cosine folds — fan the scan out
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding").select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
+    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
     q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qnrm"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    cos = F.round(dot(F.col("qe"), F.col("embedding")) / (F.col("qnrm") * F.col("nrm")), 4)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        pairs.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 5)
-    )
+    return brute_force_topk(emb, q, k=5)
 
 
 # --------------------------------------------------------------------------
@@ -1271,8 +1261,7 @@ _COV_BASE_CTES = f"""WITH q AS MATERIALIZED (SELECT list_transform(embedding,
 
 
 def _cov_oracle() -> str:
-    """q140's oracle SQL, shared verbatim with its BLAS twin q142 (exact
-    integer sums make the two formulations value-identical)."""
+    """q140's oracle SQL (q140 is also registered as q142)."""
     return f"""{_COV_BASE_CTES}
        SELECT CAST(sij.i AS INTEGER) AS i, CAST(sij.j AS INTEGER) AS j,
               {_COV_EXPR_SQL} AS cov
@@ -1301,17 +1290,17 @@ def q140(spark, sf):
     over those exact sums, rounded to 8 — value-checkable cross-engine.
 
     Scale shape (r12 optimization, guide §4.2): the exact sums now come
-    from the q142 kernel partials (``_cov_partials`` — one exact int64
+    from the kernel partials (``_cov_partials`` — one exact int64
     ``X'X`` + column-sum + count per Arrow batch, 2,145 narrow partial
     rows per BATCH instead of 2,080 exploded terms per ROW, DECIMAL(38,0)
     cross-partition merge). Value-identical BY CONSTRUCTION — integer
-    partials sum to the SAME exact integers the Column fold computed
-    (the q142 docstring's twin contract), so the oracle is untouched.
-    The exploded-generator formulation cost 2,080 interpreted struct
-    builds per row in a single-task stage (r12 profile: 4.2 s vs the
-    kernel's 0.5 s); its measurement survives in q142's docstring. The
-    final cov expression is unchanged — one fixed IEEE expression over
-    exact sums, rounded to 8."""
+    partials sum to the SAME exact integers the Column fold computed,
+    so the oracle is untouched. The exploded-generator formulation cost
+    2,080 interpreted struct builds per row in a single-task stage (r12
+    profile: 4.2 s vs the kernel's 0.5 s; 35.9 s vs kernel-class seconds
+    at stress scale). The final cov expression is unchanged — one fixed
+    IEEE expression over exact sums, rounded to 8. Also registered as
+    q142, the kernel twin's name from when this query was the fold."""
     from ..operators.similarity import QUANT_SCALE
 
     partials = _cov_partials(spark, sf)
@@ -1339,10 +1328,10 @@ def q140(spark, sf):
 
 
 def _cov_partials(spark, sf):
-    """The q142 covariance kernel: exact int64 per-batch X'X / column-sum /
+    """The q140 covariance kernel: exact int64 per-batch X'X / column-sum /
     count partials, cross-partition DECIMAL(38,0) sums, materialized once
     (2,145 rows; tagged union — (i, j>0, S_ij), (i, 0, S_i), (0, 0, n)).
-    Shared by the distributed q142 and the q141/q143 driver fits (the
+    Shared by the distributed q140 and the q141/q143 driver fits (the
     sums are exact, so fold vs kernel provenance cannot change a value)."""
     import numpy as np
     import pandas as pd
@@ -1382,49 +1371,14 @@ def _cov_partials(spark, sf):
     )
 
 
-@query(
+# q140 already runs the kernel, so q142 (registered as the kernel twin
+# when q140 was the fold) is the same function under a second name
+query(
     "q142_embedding_covariance_vectorized",
     _cov_oracle(),  # q140's oracle verbatim: per-partition int64 X'X
     # partials sum to the SAME exact integers the Column fold computes
     tags=("embedding", "covariance", "vectorized"),
-)
-def q142(spark, sf):
-    """q140 through a numpy kernel: each Arrow batch contributes one exact
-    int64 ``X'X`` matrix + column-sum vector + row count (mapInPandas —
-    2,145 narrow partial rows per BATCH, not 2,080 exploded terms per
-    ROW), cross-partition sums ride DECIMAL(38,0) so 100 TB row counts
-    can't overflow, and the final cov expression is q140's verbatim.
-    Same twin contract as q64/q109/q120: integer partials make the
-    kernel value-identical to the fold, so it carries the same oracle.
-    Measured 35.9 s (fold) vs kernel-class seconds at stress scale."""
-    from ..operators.similarity import QUANT_SCALE
-
-    partials = _cov_partials(spark, sf)
-    sij = partials.where(F.col("j") > 0).select("i", "j", F.col("s").alias("s2"))
-    si = partials.where((F.col("j") == 0) & (F.col("i") > 0)).select(
-        "i", F.col("s").alias("s1")
-    )
-    nn = partials.where((F.col("i") == 0) & (F.col("j") == 0)).select(
-        F.col("s").cast("long").alias("n")
-    )
-    a = si.select(F.col("i"), F.col("s1").alias("sa"))
-    b = si.select(F.col("i").alias("j"), F.col("s1").alias("sb"))
-    nd = F.col("n").cast("double")
-    cov = F.round(
-        (nd * F.col("s2").cast("double") - F.col("sa").cast("double") * F.col("sb").cast("double"))
-        / (nd * nd * F.lit(float(QUANT_SCALE) ** 2)),
-        8,
-    )
-    return (
-        sij.join(F.broadcast(a), "i")
-        .join(F.broadcast(b), "j")
-        .crossJoin(F.broadcast(nn))
-        .select(
-            F.col("i").cast("int").alias("i"),
-            F.col("j").cast("int").alias("j"),
-            cov.alias("cov"),
-        )
-    )
+)(q140)
 
 
 _PI_ITERS = 48  # power-method iterations for q141 (fixed count, replayed;
@@ -1829,11 +1783,13 @@ def q146(spark, sf):
     r12 optimization (guide §4): assignment now runs through the int64
     numpy kernel (``assign_cells_vectorized``) — value-identical to the
     Column fold BY CONSTRUCTION (exact integer dots, same argmax tie
-    rule; the q142 twin contract), so the oracle is untouched. The
+    rule; the q140 integer-partials contract), so the oracle is untouched. The
     interpreted 64-centroid x 64-dim fold cannot codegen and cost ~2 s of
     single-task execution plus ~6 s of driver plan analysis of its
     4096-literal expression tree per run (r12 profile); the
-    fold-vs-kernel contrast measurement is preserved in SCALE_NOTES."""
+    fold-vs-kernel contrast measurement is preserved in SCALE_NOTES.
+    Also registered as q147, the kernel twin's name from when this query
+    was the fold."""
     from ..operators.similarity import kmeans_fit, semantic_dedup_cells
 
     # _ts (r12): fan the one-row-group scan out — per-row vector math
@@ -1842,28 +1798,14 @@ def q146(spark, sf):
     return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU)
 
 
-@query(
+# q146 already assigns cells through the kernel, so q147 is the same
+# function under a second name
+query(
     "q147_semantic_dedup_cells_vectorized",
     _semdedup_oracle(),  # q146's oracle VERBATIM: int64 cell dots are
-    # exact whatever computes them (the q142 twin contract)
+    # exact whatever computes them
     tags=("dedup", "embedding", "semantic", "kmeans", "vectorized"),
-)
-def q147(spark, sf):
-    """q146 with the cell assignment through the numpy int64 kernel
-    (operators/similarity.assign_cells_vectorized) — the deployment path:
-    Catalyst interprets (cannot codegen) the 64-centroid x 64-dim fold
-    expression at ~600 us/row (24.0 s for the 40k stress corpus), while
-    the kernel's exact int64 matmul is sub-second for the same rows.
-    Value-identical by construction — integer dots have no
-    summation-order sensitivity, the divide and the argmax tie rule are
-    the fold's — so it carries q146's oracle verbatim and the gate checks
-    it value-for-value (not a rows-only twin)."""
-    from ..operators.similarity import kmeans_fit, semantic_dedup_cells
-
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    cents = kmeans_fit(emb, k=_SEMDEDUP_K)
-    return semantic_dedup_cells(emb, cents, threshold=_SEMDEDUP_TAU)
+)(q146)
 
 
 @query(
@@ -2185,7 +2127,9 @@ def q100(spark, sf):
 @query("q64_embedding_topk_vectorized", _BRUTE_TOPK_ORACLE, tags=("similarity", "knn", "vectorized"))
 def q64(spark, sf):
     """Exact cosine top-k via the BLAS mapInPandas kernel — same semantics
-    as q39 (asserted row-equal in tests), ~100x faster at stress scale.
+    as q39 (asserted row-equal by tests/test_multimodal_similarity.py::
+    test_vectorized_topk_equals_expression_topk), ~100x faster at stress
+    scale.
     Carries q39's oracle verbatim (r3 verdict item 1): the kernel computes
     dot-then-divide cosines rounded with the oracle's own half-away rule,
     so the only residual divergence risk is BLAS-vs-fold summation order
@@ -2203,9 +2147,8 @@ def q64(spark, sf):
 @query("q65_embedding_dup_pairs_vectorized", _EMB_DUP_PAIRS_ORACLE, tags=("dedup", "embedding", "vectorized"))
 def q65(spark, sf):
     """Label-blocked semantic dup pairs via per-block BLAS (applyInPandas) —
-    asserted row-identical to q43's equi-join formulation in tests; the
-    measured-fast path for big blocks. Carries q43's oracle verbatim
-    (same twin contract as q39/q64)."""
+    value-checked against q43's oracle, which it carries verbatim (same
+    twin contract as q39/q64); the measured-fast path for big blocks."""
     from ..operators.similarity import blocked_dup_pairs_vectorized
 
     # _ts (r12): fan the scan out for the per-block BLAS kernel
@@ -2469,7 +2412,9 @@ def q108(spark, sf):
 )
 def q109(spark, sf):
     """int8 compressed-domain top-k via the BLAS kernel — same codes and
-    exact integer dots as q104 (asserted row-equal in tests), the
+    exact integer dots as q104 (asserted row-equal by
+    tests/test_dedup_similarity.py::
+    test_quantized_vectorized_equals_column_fold), the
     throughput half of the two-stage retrieval layout. Carries q104's
     oracle verbatim (r3 verdict item 1): every dot is the same exact
     int64, and the one float divide/round uses the oracle's half-away

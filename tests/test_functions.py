@@ -22,9 +22,6 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.te
     tokens,
     word_shingles,
 )
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.vectors import (
-    cosine,
-)
 
 
 def test_duration_and_time_id(spark):
@@ -118,18 +115,6 @@ def test_fingerprint_normalizes_whitespace_and_case(spark):
     df = spark.createDataFrame([Row(text="Hello   World"), Row(text=" hello world ")])
     fps = [r["f"] for r in df.select(fingerprint("text").alias("f")).collect()]
     assert fps[0] == fps[1]
-
-
-def test_cosine_known_values(spark):
-    df = spark.createDataFrame([Row(a=[1.0, 0.0], b=[0.0, 1.0]), Row(a=[1.0, 1.0], b=[1.0, 1.0])])
-    for dim in (2, None):  # unrolled and fold paths agree on known values
-        got = [
-            r["c"]
-            for r in df.select(
-                F.round(cosine(F.col("a"), F.col("b"), dim=dim), 9).alias("c")
-            ).collect()
-        ]
-        assert got == [0.0, 1.0], dim
 
 
 def test_dot_unrolled_is_bit_identical_to_fold(spark):

@@ -1,5 +1,7 @@
 """Multimodal plumbing + LSH ANN tests."""
 
+import pytest
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -155,8 +157,6 @@ def test_kmeans_fit_deterministic_across_partitionings(spark):
 def test_vectorized_topk_rejects_oversized_query_set(spark, monkeypatch):
     """The collected query matrix is capped — a fact-sized query table must
     raise instead of OOMing the driver."""
-    import pytest
-
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import similarity as S
 
     emb = spark.range(20).select(
@@ -169,11 +169,31 @@ def test_vectorized_topk_rejects_oversized_query_set(spark, monkeypatch):
         S.brute_force_topk_vectorized(emb, qs, k=3)
 
 
-def test_vectorized_topk_zero_norm_contract(spark):
-    """Pinned degenerate behavior (r6 advice): a zero-norm corpus vector has
-    no defined cosine and must never surface as a neighbor; a zero-norm
-    query must emit no rows. Non-degenerate queries still get a full k
-    neighbors even with zero-norm rows interleaved in the corpus."""
+#: two cells (both probed at nprobe=3) and a 2-subspace PQ over 4-d
+#: vectors, in QUANT_SCALE micro-units — enough for the IVF and IVF-PQ
+#: kernels to run on the hand-made corpus below
+_ZN_CELLS = [[1_000_000, 0, 0, 0], [0, 1_000_000, 0, 0]]
+_ZN_BOOKS = [[[0, 0], [1_000_000, 0], [0, 1_000_000]]] * 2
+
+_ZERO_NORM_KERNELS = {
+    "brute_force_topk": lambda S, e, q: S.brute_force_topk(e, q, k=3),
+    "brute_force_topk_vectorized": lambda S, e, q: S.brute_force_topk_vectorized(e, q, k=3),
+    "ivf_topk": lambda S, e, q: S.ivf_topk(e, q, _ZN_CELLS, k=3),
+    "ivf_topk_vectorized": lambda S, e, q: S.ivf_topk_vectorized(e, q, _ZN_CELLS, k=3),
+    "ivf_pq_rerank_topk": lambda S, e, q: S.ivf_pq_rerank_topk(e, q, _ZN_CELLS, _ZN_BOOKS, k=3),
+    "ivf_pq_rerank_topk_vectorized": lambda S, e, q: S.ivf_pq_rerank_topk_vectorized(
+        e, q, _ZN_CELLS, _ZN_BOOKS, k=3
+    ),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_ZERO_NORM_KERNELS))
+def test_vectorized_topk_zero_norm_contract(spark, kernel):
+    """Pinned degenerate behavior, for the fold and the numpy kernel of
+    brute force, IVF and IVF-PQ: a zero-norm corpus vector has no defined
+    cosine and must never surface as a neighbor; a zero-norm query must
+    emit no rows. Non-degenerate queries still get a full k neighbors even
+    with zero-norm rows interleaved in the corpus."""
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import similarity as S
 
     rows = [
@@ -189,7 +209,7 @@ def test_vectorized_topk_zero_norm_contract(spark):
         [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 0.0, 0.0, 0.0])],
         ["query_id", "qe"],
     )
-    got = S.brute_force_topk_vectorized(emb, qs, k=3).collect()
+    got = _ZERO_NORM_KERNELS[kernel](S, emb, qs).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])

@@ -4,7 +4,7 @@ A static scan, no Spark session: every public, undecorated top-level
 function or class in the package must be referenced by name somewhere in
 the package, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``,
 outside its own definition. A reference is a Name, an Attribute, an
-import alias or a string constant equal to the name. A package
+import alias or a string dict key equal to the name. A package
 ``__init__.py`` re-export (its imports and ``__all__``) is not a use.
 Registered ``qNN`` queries are decorated, so the registry is their
 reference.
@@ -66,7 +66,9 @@ def _sources() -> list[str]:
 
 def _names(node: ast.AST) -> set[str]:
     """Every name ``node`` references: Name ids, Attribute attrs, imported
-    names and their aliases, and string constants."""
+    names and their aliases, and string dict keys (how
+    ``perfbench/oracle.py`` names its queries). Other string constants,
+    column names among them, are not uses."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -77,8 +79,8 @@ def _names(node: ast.AST) -> set[str]:
             out.add(n.name.rsplit(".", 1)[-1])
             if n.asname:
                 out.add(n.asname)
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            out.add(n.value)
+        elif isinstance(n, ast.Dict):
+            out |= {k.value for k in n.keys if isinstance(k, ast.Constant) and isinstance(k.value, str)}
     return out
 
 
@@ -276,3 +278,40 @@ def unused_imports() -> list[str]:
 def test_no_unused_imports():
     unused = unused_imports()
     assert not unused, f"imports nothing uses: {unused}"
+
+
+def _statement_bodies(tree: ast.AST):
+    """Every statement list in ``tree``: module and function bodies and
+    the branches of compound statements."""
+    for n in ast.walk(tree):
+        for field in ("body", "orelse", "finalbody", "handlers"):
+            body = getattr(n, field, None)
+            if isinstance(body, list) and body and isinstance(body[0], ast.stmt):
+                yield body
+
+
+def repeated_statement_runs(top: str) -> list[list[str]]:
+    """Runs of 3 consecutive statements that appear more than once
+    under ``top``, compared by ``ast.dump``, as lists of "<file>:<line>".
+    Imports and docstrings are skipped before the runs are formed."""
+    seen: dict[tuple[str, ...], list[str]] = {}
+    for path in _py_files(top):
+        rel = os.path.relpath(path, os.path.join(ROOT, top))
+        for body in _statement_bodies(_parse(path)):
+            stmts = [
+                s for s in body
+                if not isinstance(s, (ast.Import, ast.ImportFrom))
+                and not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant)
+                         and isinstance(s.value.value, str))
+            ]
+            for i in range(len(stmts) - 2):
+                key = tuple(ast.dump(s) for s in stmts[i : i + 3])
+                seen.setdefault(key, []).append(f"{rel}:{stmts[i].lineno}")
+    return sorted(where for where in seen.values() if len(where) > 1)
+
+
+def test_no_repeated_statement_runs_in_operators():
+    """A run of statements written twice in ``operators/`` is a step with
+    two copies that can drift apart; it belongs in one helper."""
+    runs = repeated_statement_runs(os.path.join(PACKAGE, "operators"))
+    assert not runs, f"{len(runs)} repeated 3-statement runs (make each one helper): {runs}"
