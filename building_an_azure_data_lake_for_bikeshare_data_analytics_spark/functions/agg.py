@@ -24,6 +24,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
+#: DuckDB-side rendering of ``exact_sum`` at scale 2; format with the
+#: column expression
+EXACT_SUM_SQL = "CAST(sum(CAST({c} AS DECIMAL(18,2))) AS DOUBLE)"
+
+
 def exact_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     """Order-independent sum of a fixed-decimal measure, returned as double.
 
@@ -34,6 +39,10 @@ def exact_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(DecimalType(18, scale))).cast("double").alias(alias)
+
+
+#: DuckDB-side rendering of ``exact_avg``
+EXACT_AVG_SQL = f"{EXACT_SUM_SQL}/count({{c}})"
 
 
 def exact_avg(col: Column | str, alias: str) -> Column:

@@ -22,12 +22,18 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and")
+#: ``STOPWORDS`` as a SQL ``IN`` list
+STOPWORDS_IN_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
 
 
 def tokens(text: str | Column = "text") -> Column:
     """Whitespace tokenization of trimmed text."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(c), r"\s+")
+
+
+#: DuckDB-side rendering of ``tokens("text")``
+TOKENS_SQL = r"string_split_regex(trim(text), '\s+')"
 
 
 def token_count(text: str | Column = "text") -> Column:
@@ -56,6 +62,10 @@ def normalized_text(text: str | Column = "text") -> Column:
     for fingerprinting and exact dedup."""
     c = F.col(text) if isinstance(text, str) else text
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+
+
+#: DuckDB-side rendering of ``normalized_text("text")``
+NORMALIZED_TEXT_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 
 
 def fingerprint(text: str | Column = "text") -> Column:

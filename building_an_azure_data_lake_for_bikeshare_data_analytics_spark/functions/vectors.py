@@ -68,5 +68,10 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
     ).otherwise(_fold_dot(a, b))
 
 
+#: DuckDB-side rendering of ``dot``: the same left-to-right double sum;
+#: format with the two list expressions
+DOT_SQL = "list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+
+
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))

@@ -33,8 +33,9 @@ BPE_TOP_WORDS = 1000
 BPE_MERGES = 8
 
 #: vocabulary contract: only plain lowercase alphanumeric words train the
-#: merges (delimiter characters can then never collide with content)
-_WORD_RE = "^[a-z0-9]+$"
+#: merges (delimiter characters can then never collide with content); the
+#: encodable alphabet of the round-trip validation
+ALPHA_RE = "^[a-z0-9]+$"
 
 
 def _word_counts(docs: DataFrame, top_words: int) -> DataFrame:
@@ -45,7 +46,7 @@ def _word_counts(docs: DataFrame, top_words: int) -> DataFrame:
 
     return (
         docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("word"))
-        .where(F.col("word").rlike(_WORD_RE))
+        .where(F.col("word").rlike(ALPHA_RE))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("word"))
@@ -118,10 +119,6 @@ def bpe_token_count(text: Column, merges: list[tuple[str, str, int]]) -> Column:
     encoded = bpe_encode(text, merges)
     # each symbol contributes exactly one R delimiter
     return (F.length(encoded) - F.length(F.replace(encoded, F.lit(R), F.lit("")))).cast("int")
-
-
-#: encodable-alphabet contract for validation (same as the fit's _WORD_RE)
-ALPHA_RE = _WORD_RE
 
 
 def roundtrip_flags(

@@ -28,9 +28,11 @@ tests/test_dedup_similarity.py
 (``test_vectorized_index_probe_equals_fold``,
 ``test_vectorized_pq_index_probe_equals_fold``).
 
-Zero-norm contract, for every cosine search, fold and twin: a zero vector
-has no cosine, so a zero-norm corpus row is never a neighbour and a
-zero-norm query emits no rows (``test_vectorized_topk_zero_norm_contract``).
+Zero-norm contract, for every cosine search, fold and twin, and every
+dedup kernel: a zero vector has no cosine, so a zero-norm corpus row is
+never a neighbour or a duplicate and a zero-norm query emits no rows
+(``test_vectorized_topk_zero_norm_contract``,
+``test_dedup_kernels_zero_norm_contract``).
 
 Hyperplanes are deterministic (seeded numpy, rounded to 6 decimals) and
 embedded as literals into BOTH the Spark plan and the DuckDB oracle SQL, so
@@ -615,9 +617,8 @@ def lsh_dup_pairs(
         # posture is b ~ log2(N) - 5 (constant expected bucket occupancy),
         # exactly like SemDeDup's k proportional to N.
         return cand
-    embn = emb.select(
-        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-    )
+    # a zero vector's candidate pairs drop out here (the zero-norm contract)
+    embn = _nonzero(emb.select("vec_id", "embedding"), "embedding", "nrm")
     ea, eb = embn.alias("ea"), embn.alias("eb")
     joined = cand.join(ea, F.col("vec_a") == F.col("ea.vec_id")).join(
         eb, F.col("vec_b") == F.col("eb.vec_id")
@@ -681,8 +682,9 @@ def semantic_dedup_cells(
 
     Keep rule (deterministic lowest-id-wins, the q54/q137 keeper
     discipline): a vector is dropped iff some LOWER-id vector in the same
-    cell scores round(cos,4) >= threshold against it. Returns every input
-    row as (vec_id, cell, kept 1/0).
+    cell scores round(cos,4) >= threshold against it. Returns every
+    nonzero input row as (vec_id, cell, kept 1/0); a zero vector has no
+    cosine, so it has no row (the zero-norm contract).
 
     Scale shape: cell assignment is map-only against centroid literals
     (kmeans_fit trains on a bounded sample); the quadratic is confined to
@@ -699,13 +701,13 @@ def semantic_dedup_cells(
     # persists alongside the IVF index anyway). The assignment is the int64
     # numpy kernel (assign_cells_vectorized), value-identical to the
     # Column fold and the deployment path at real k.
-    cells = assign_cells_vectorized(emb, centroids).localCheckpoint()
+    embn = _nonzero(emb.select("vec_id", "embedding"), "embedding", "nrm")
+    cells = assign_cells_vectorized(embn, centroids).localCheckpoint()
     a, b = cells.alias("a"), cells.alias("b")
     cand = a.join(
         b,
         (F.col("a.cell") == F.col("b.cell")) & (F.col("a.vec_id") < F.col("b.vec_id")),
     ).select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-    embn = emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
     ea, eb = embn.alias("ea"), embn.alias("eb")
     cos = _cos("ea.embedding", "ea.nrm", "eb.embedding", "eb.nrm")
     dup = (

@@ -13,19 +13,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.agg import exact_avg, exact_sum
+from ..functions.agg import EXACT_AVG_SQL, EXACT_SUM_SQL, exact_avg, exact_sum
 from ..functions.hashing import h60
 from .base import _t, _ts, query
-
-_SUM = "CAST(sum(CAST({c} AS DECIMAL(18,2))) AS DOUBLE)"
-_AVG = f"{_SUM}/count({{c}})"
 
 
 @query(
     "q42_hourly_event_stats",
     f"""SELECT date_trunc('hour', ts) AS hour_id,
                count(*) AS n_events,
-               {_SUM.format(c='value')} AS value_sum
+               {EXACT_SUM_SQL.format(c='value')} AS value_sum
         FROM events GROUP BY 1 ORDER BY n_events DESC, hour_id LIMIT 20""",
     tags=("extension", "F2", "A3"),
 )
@@ -218,7 +215,7 @@ def q49(spark, sf):
 @query(
     "q50_props_json_extract",
     f"""SELECT event_type,
-               {_AVG.format(c="CAST(json_extract_string(props, '$.k') AS INTEGER)")} AS k_avg,
+               {EXACT_AVG_SQL.format(c="CAST(json_extract_string(props, '$.k') AS INTEGER)")} AS k_avg,
                max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS k_max
         FROM events GROUP BY 1 ORDER BY event_type""",
     tags=("extension", "json"),
@@ -241,11 +238,11 @@ _SUM4 = "CAST(sum(CAST({c} AS DECIMAL(18,4))) AS DOUBLE)"
 @query(
     "q51_pricing_summary",
     f"""SELECT l_returnflag, l_linestatus,
-               {_SUM.format(c='l_quantity')} AS sum_qty,
-               {_SUM.format(c='l_extendedprice')} AS sum_base_price,
+               {EXACT_SUM_SQL.format(c='l_quantity')} AS sum_qty,
+               {EXACT_SUM_SQL.format(c='l_extendedprice')} AS sum_base_price,
                {_SUM4.format(c='l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-               {_AVG.format(c='l_quantity')} AS avg_qty,
-               {_AVG.format(c='l_discount')} AS avg_disc,
+               {EXACT_AVG_SQL.format(c='l_quantity')} AS avg_qty,
+               {EXACT_AVG_SQL.format(c='l_discount')} AS avg_disc,
                count(*) AS count_order
         FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-06-01 00:00:00'
         GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""",
@@ -386,7 +383,7 @@ def q67(spark, sf):
 @query(
     "q68_status_priority_cube",
     f"""SELECT o_orderstatus, o_orderpriority,
-               {_SUM.format(c='o_totalprice')} AS sum_price,
+               {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price,
                count(*) AS n_orders
         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
     tags=("extension", "cube"),

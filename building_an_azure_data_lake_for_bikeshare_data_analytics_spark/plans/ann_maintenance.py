@@ -50,17 +50,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.hashing import batch_sql, corpus_sql
+from ..functions.vectors import DOT_SQL
 from .base import _t, _ts, query
 from ..operators.similarity import IVF_PQ_RERANK_FROM, KMEANS_TRAIN_ROWS
-from .extensions import _DOT, _kmeans_ctes, _kmeans_qprobe_cte
+from .extensions import _kmeans_ctes, _kmeans_qprobe_cte
 
-#: vec-side analogue of training._HASH_SQL / _doc_hash — ONE arithmetic,
-#: spelled identically in the Spark Column and the oracle SQL
-_VEC_HASH_SQL = "((vec_id % 100003) * 2654435761) % 1000"
-
-
-def _vec_hash() -> F.Column:
-    return ((F.col("vec_id") % 100003) * F.lit(2654435761)) % 1000
+def _split_embeddings(spark, sf):
+    """The embeddings scan and its corpus and batch sides (the vec_id
+    split). The scan is fanned out (_ts): the fits, folds and kernels the
+    maintained heads run over it are per-row heavy."""
+    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    is_new = F.expr(batch_sql("vec_id"))
+    return emb, emb.where(~is_new), emb.where(is_new)
 
 
 def _maintained_ivf_oracle() -> str:
@@ -78,11 +80,11 @@ def _maintained_ivf_oracle() -> str:
                  x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
     ptr AS MATERIALIZED (
-      SELECT vec_id, qv FROM pts WHERE {_VEC_HASH_SQL} < 800
+      SELECT vec_id, qv FROM pts WHERE {corpus_sql('vec_id')}
       ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
     {_kmeans_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts
-          WHERE {_VEC_HASH_SQL} >= 800 AND vec_id % 5 = 0),
+          WHERE {batch_sql('vec_id')} AND vec_id % 5 = 0),
     {_kmeans_qprobe_cte()},
     cand AS (
       SELECT qp.query_id, e.vec_id AS neighbor_id, qp.qe, e.embedding
@@ -92,9 +94,9 @@ def _maintained_ivf_oracle() -> str:
       WHERE e.vec_id <> qp.query_id),
     scored AS (
       SELECT query_id, neighbor_id,
-             round({_DOT.format(a='qe', b='embedding')}
-                   / (sqrt({_DOT.format(a='qe', b='qe')})
-                      * sqrt({_DOT.format(a='embedding', b='embedding')})), 4) AS cos
+             round({DOT_SQL.format(a='qe', b='embedding')}
+                   / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                      * sqrt({DOT_SQL.format(a='embedding', b='embedding')})), 4) AS cos
       FROM cand)
     SELECT query_id, neighbor_id, cos, CAST(rnk AS INTEGER) AS rnk
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -128,11 +130,7 @@ def q246(spark, sf):
         write_version,
     )
 
-    # _ts (r12): fan the one-row-group scan out — the cell-assignment
-    # fold and the probe kernel below are per-row heavy
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    is_new = _vec_hash() >= 800
-    corpus, batch = emb.where(~is_new), emb.where(is_new)
+    _, corpus, batch = _split_embeddings(spark, sf)
     store = session_store(spark, "ann_index")
     cent_store = store + "_centroids"
 
@@ -198,12 +196,12 @@ def _maintained_ivf_pq_oracle() -> str:
              list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
       FROM embeddings),
     ptr AS MATERIALIZED (
-      SELECT vec_id, qv FROM pts WHERE {_VEC_HASH_SQL} < 800
+      SELECT vec_id, qv FROM pts WHERE {corpus_sql('vec_id')}
       ORDER BY vec_id LIMIT {KMEANS_TRAIN_ROWS}),
     {_kmeans_ctes()},
     {_pq_ctes()},
     q AS (SELECT vec_id AS query_id, embedding AS qe, qv FROM pts
-          WHERE {_VEC_HASH_SQL} >= 800 AND vec_id % 5 = 0),
+          WHERE {batch_sql('vec_id')} AND vec_id % 5 = 0),
     {_kmeans_qprobe_cte()},
     p AS (
       SELECT qp.query_id, e0.vec_id AS neighbor_id, ({adc_terms}) AS adc
@@ -265,11 +263,7 @@ def q247(spark, sf):
         write_version,
     )
 
-    # _ts (r12): fan the one-row-group scan out — encode folds + the
-    # ADC LUT kernel below are per-row heavy
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    is_new = _vec_hash() >= 800
-    corpus, batch = emb.where(~is_new), emb.where(is_new)
+    emb, corpus, batch = _split_embeddings(spark, sf)
     store = session_store(spark, "annpq_index")
     cent_store = store + "_centroids"
     book_store = store + "_codebooks"
@@ -344,11 +338,11 @@ def _maint_brute_oracle() -> str:
     maintained-lifecycle query filter."""
     return f"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
                    FROM embeddings
-                   WHERE {_VEC_HASH_SQL} >= 800 AND vec_id % 5 = 0),
+                   WHERE {batch_sql('vec_id')} AND vec_id % 5 = 0),
          p AS (SELECT query_id, e.vec_id AS neighbor_id,
-                      round({_DOT.format(a='qe', b='e.embedding')}
-                            / (sqrt({_DOT.format(a='qe', b='qe')})
-                               * sqrt({_DOT.format(a='e.embedding', b='e.embedding')})),
+                      round({DOT_SQL.format(a='qe', b='e.embedding')}
+                            / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                               * sqrt({DOT_SQL.format(a='e.embedding', b='e.embedding')})),
                             4) AS cos
                FROM embeddings e, q WHERE e.vec_id <> query_id)
         SELECT query_id, neighbor_id
@@ -390,7 +384,7 @@ def q251(spark, sf):
     # matmul per batch — at test-scale row counts the extra exchange and
     # the 32x window fan-in cost more than the kernel saves
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    qs = emb.where((_vec_hash() >= 800) & (F.col("vec_id") % 5 == 0)).select(
+    qs = emb.where(F.expr(batch_sql("vec_id")) & (F.col("vec_id") % 5 == 0)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     exact = brute_force_topk_vectorized(emb, qs, k=5).select(

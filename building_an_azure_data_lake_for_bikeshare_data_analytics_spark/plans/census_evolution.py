@@ -35,17 +35,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import token_count
+from ..functions.hashing import batch_sql
+from ..functions.text import TOKENS_SQL, token_count
 from .base import _ts, query
-from .extensions import _TOKS
-from .training import _HASH_SQL, _doc_hash
 
 _EVOLUTION_SQL = f"""
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-       CAST(coalesce(sum(CASE WHEN {_HASH_SQL} >= 800
-                              THEN len({_TOKS}) END), 0) AS BIGINT)
+       CAST(coalesce(sum(CASE WHEN {batch_sql('doc_id')}
+                              THEN len({TOKENS_SQL}) END), 0) AS BIGINT)
            AS sum_toks_batch
 FROM documents GROUP BY source ORDER BY source"""
 
@@ -71,7 +70,7 @@ def q259(spark, sf):
 
     # _ts (r12): same fanout as q250 — the state rows hash every text
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     store = session_store(spark, "census_evo")
 
     # 1) v1: the store as an earlier deployment wrote it — no sum_toks

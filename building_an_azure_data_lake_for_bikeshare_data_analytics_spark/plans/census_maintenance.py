@@ -50,12 +50,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import H60_SQL, h60
-from ..functions.text import token_count
+from ..functions.hashing import H60_SQL, batch_sql, h60
+from ..functions.text import TOKENS_SQL, token_count
 from .analytics_ext import _KMV_SPACE
 from .base import _ts, query
-from .extensions import _TOKS
-from .training import _doc_hash
 
 _CK = 64  # sketch size; same k as the q134 gate sketch
 
@@ -114,7 +112,7 @@ def _merge_kmv(a, b):
 _CENSUS_SQL = f"""WITH s AS (
       SELECT source, count(*) AS n_docs,
              CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-             CAST(sum(len({_TOKS})) AS BIGINT) AS sum_toks,
+             CAST(sum(len({TOKENS_SQL})) AS BIGINT) AS sum_toks,
              min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
       FROM documents GROUP BY 1),
     h AS (SELECT DISTINCT source, {H60_SQL.format(x="text")} AS h
@@ -159,7 +157,7 @@ def q250(spark, sf):
 
     # _ts (r12): the census state md5-hashes every text — fan the scan out
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     store = session_store(spark, "census")
     stats_store, kmv_store = store + "_stats", store + "_kmv"
 

@@ -27,7 +27,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .base import _t, query
-from .extensions import _CHUNK, _STEP, _TOKS
+from ..functions.text import TOKENS_SQL
+from .extensions import _CHUNK, _STEP
 
 _CHUNK_RT_SQL = rf"""WITH ch AS (
       SELECT doc_id, source,
@@ -38,7 +39,7 @@ _CHUNK_RT_SQL = rf"""WITH ch AS (
              len(ts[start:start + {_CHUNK} - 1]) AS n_chunk_tokens
       FROM (SELECT doc_id, source, ts,
                    unnest(range(1, len(ts) + 1, {_STEP})) AS start
-            FROM (SELECT doc_id, source, {_TOKS} AS ts FROM documents))),
+            FROM (SELECT doc_id, source, {TOKENS_SQL} AS ts FROM documents))),
     st AS (
       SELECT *, max(chunk_idx) OVER (PARTITION BY doc_id) AS last_idx
       FROM ch),

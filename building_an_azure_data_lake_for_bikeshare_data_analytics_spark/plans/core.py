@@ -23,15 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from ..functions.agg import exact_avg, exact_sum
+from ..functions.agg import EXACT_AVG_SQL, EXACT_SUM_SQL, exact_avg, exact_sum
 from ..functions.schema import format_columns
 from ..operators.analytics import analyze_fact, analyze_fact_with_dim, grouped_metric
 from ..operators.dates import payment_dates_dim, trip_dates_dim
 from .base import _t, query
-
-# shared oracle fragment: order-independent aggregates (see functions/agg.py)
-_SUM = "CAST(sum(CAST({c} AS DECIMAL(18,2))) AS DOUBLE)"
-_AVG = f"{_SUM}/count({{c}})"
 
 _MEMBER = "c_mktsegment = 'BUILDING'"
 
@@ -43,7 +39,7 @@ _MEMBER = "c_mktsegment = 'BUILDING'"
 @query(
     "q01_avg_price_by_dow",
     f"""SELECT CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-               {_AVG.format(c='o_totalprice')} AS avg_price
+               {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_price
         FROM orders GROUP BY 1
         ORDER BY avg_price DESC, dow LIMIT 10""",
     tags=("parity", "A1", "F5", "O1", "O3", "P4"),
@@ -57,7 +53,7 @@ def q01(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q02_sum_price_by_dow",
     f"""SELECT CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-               {_SUM.format(c='o_totalprice')} AS sum_price
+               {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price
         FROM orders GROUP BY 1
         ORDER BY sum_price DESC, dow LIMIT 10""",
     tags=("parity", "A2"),
@@ -70,7 +66,7 @@ def q02(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q03_avg_price_by_orderdate",
-    f"""SELECT o_orderdate, {_AVG.format(c='o_totalprice')} AS avg_price
+    f"""SELECT o_orderdate, {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_price
         FROM orders GROUP BY 1
         ORDER BY avg_price DESC, o_orderdate LIMIT 10""",
     tags=("parity", "A1"),
@@ -83,7 +79,7 @@ def q03(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q04_sum_price_by_orderdate",
-    f"""SELECT o_orderdate, {_SUM.format(c='o_totalprice')} AS sum_price
+    f"""SELECT o_orderdate, {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price
         FROM orders GROUP BY 1
         ORDER BY sum_price DESC, o_orderdate LIMIT 10""",
     tags=("parity", "A2"),
@@ -100,7 +96,7 @@ def q04(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q05_avg_extprice_by_supp",
-    f"""SELECT l_suppkey, {_AVG.format(c='l_extendedprice')} AS avg_ext
+    f"""SELECT l_suppkey, {EXACT_AVG_SQL.format(c='l_extendedprice')} AS avg_ext
         FROM lineitem GROUP BY 1 ORDER BY avg_ext DESC, l_suppkey LIMIT 20""",
     tags=("parity", "A1"),
 )
@@ -112,7 +108,7 @@ def q05(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q06_sum_extprice_by_supp",
-    f"""SELECT l_suppkey, {_SUM.format(c='l_extendedprice')} AS sum_ext
+    f"""SELECT l_suppkey, {EXACT_SUM_SQL.format(c='l_extendedprice')} AS sum_ext
         FROM lineitem GROUP BY 1 ORDER BY sum_ext DESC, l_suppkey LIMIT 20""",
     tags=("parity", "A2"),
 )
@@ -124,7 +120,7 @@ def q06(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q07_avg_extprice_by_part",
-    f"""SELECT l_partkey, {_AVG.format(c='l_extendedprice')} AS avg_ext
+    f"""SELECT l_partkey, {EXACT_AVG_SQL.format(c='l_extendedprice')} AS avg_ext
         FROM lineitem GROUP BY 1 ORDER BY avg_ext DESC, l_partkey LIMIT 20""",
     tags=("parity", "A1"),
 )
@@ -136,7 +132,7 @@ def q07(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q08_sum_extprice_by_part",
-    f"""SELECT l_partkey, {_SUM.format(c='l_extendedprice')} AS sum_ext
+    f"""SELECT l_partkey, {EXACT_SUM_SQL.format(c='l_extendedprice')} AS sum_ext
         FROM lineitem GROUP BY 1 ORDER BY sum_ext DESC, l_partkey LIMIT 20""",
     tags=("parity", "A2"),
 )
@@ -164,7 +160,7 @@ _BAND = "CAST(floor(c_acctbal / 100) AS INTEGER)"
 
 @query(
     "q09_sum_price_by_acct_band",
-    f"""SELECT {_BAND} AS acct_band, {_SUM.format(c='o_totalprice')} AS sum_price
+    f"""SELECT {_BAND} AS acct_band, {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1 ORDER BY sum_price DESC, acct_band LIMIT 10""",
     tags=("parity", "J2", "A2"),
@@ -177,7 +173,7 @@ def q09(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q10_avg_price_by_acct_band",
-    f"""SELECT {_BAND} AS acct_band, {_AVG.format(c='o_totalprice')} AS avg_price
+    f"""SELECT {_BAND} AS acct_band, {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_price
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1 ORDER BY avg_price DESC, acct_band LIMIT 10""",
     tags=("parity", "J2", "A1"),
@@ -190,7 +186,7 @@ def q10(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q11_avg_price_by_membership",
-    f"""SELECT ({_MEMBER}) AS is_member, {_AVG.format(c='o_totalprice')} AS avg_price
+    f"""SELECT ({_MEMBER}) AS is_member, {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_price
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1 ORDER BY avg_price DESC, is_member LIMIT 10""",
     tags=("parity", "J1", "A1"),
@@ -206,7 +202,7 @@ def q11(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "q12_sum_price_by_membership",
-    f"""SELECT ({_MEMBER}) AS is_member, {_SUM.format(c='o_totalprice')} AS sum_price
+    f"""SELECT ({_MEMBER}) AS is_member, {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price
         FROM orders JOIN customer ON o_custkey = c_custkey
         GROUP BY 1 ORDER BY sum_price DESC, is_member LIMIT 10""",
     tags=("parity", "J1", "A2"),
@@ -249,42 +245,42 @@ def _payment_q(spark: SparkSession, sf: str, group: str, agg_col, alias: str) ->
     return grouped_metric(j, group, [agg_col], order_by=alias, limit=10)
 
 
-@query("q13_sum_amount_by_month", _payment_oracle("month", _SUM.format(c="o_totalprice"), "amount_sum"),
+@query("q13_sum_amount_by_month", _payment_oracle("month", EXACT_SUM_SQL.format(c="o_totalprice"), "amount_sum"),
        tags=("parity", "J4", "A2", "F8", "F9"))
 def q13(spark, sf):
     """G13: payment sum by month via generated date dim (ipynb cell 37)."""
     return _payment_q(spark, sf, "month", exact_sum("amount", "amount_sum"), "amount_sum")
 
 
-@query("q14_avg_amount_by_month", _payment_oracle("month", _AVG.format(c="o_totalprice"), "amount_avg"),
+@query("q14_avg_amount_by_month", _payment_oracle("month", EXACT_AVG_SQL.format(c="o_totalprice"), "amount_avg"),
        tags=("parity", "J4", "A1"))
 def q14(spark, sf):
     """G14: payment avg by month (ipynb cell 37)."""
     return _payment_q(spark, sf, "month", exact_avg("amount", "amount_avg"), "amount_avg")
 
 
-@query("q15_sum_amount_by_quarter", _payment_oracle("quarter", _SUM.format(c="o_totalprice"), "amount_sum"),
+@query("q15_sum_amount_by_quarter", _payment_oracle("quarter", EXACT_SUM_SQL.format(c="o_totalprice"), "amount_sum"),
        tags=("parity", "J4", "A2"))
 def q15(spark, sf):
     """G15: payment sum by quarter (ipynb cell 37)."""
     return _payment_q(spark, sf, "quarter", exact_sum("amount", "amount_sum"), "amount_sum")
 
 
-@query("q16_avg_amount_by_quarter", _payment_oracle("quarter", _AVG.format(c="o_totalprice"), "amount_avg"),
+@query("q16_avg_amount_by_quarter", _payment_oracle("quarter", EXACT_AVG_SQL.format(c="o_totalprice"), "amount_avg"),
        tags=("parity", "J4", "A1"))
 def q16(spark, sf):
     """G16: payment avg by quarter (ipynb cell 37)."""
     return _payment_q(spark, sf, "quarter", exact_avg("amount", "amount_avg"), "amount_avg")
 
 
-@query("q17_sum_amount_by_year", _payment_oracle("year", _SUM.format(c="o_totalprice"), "amount_sum"),
+@query("q17_sum_amount_by_year", _payment_oracle("year", EXACT_SUM_SQL.format(c="o_totalprice"), "amount_sum"),
        tags=("parity", "J4", "A2"))
 def q17(spark, sf):
     """G17: payment sum by year (ipynb cell 37)."""
     return _payment_q(spark, sf, "year", exact_sum("amount", "amount_sum"), "amount_sum")
 
 
-@query("q18_avg_amount_by_year", _payment_oracle("year", _AVG.format(c="o_totalprice"), "amount_avg"),
+@query("q18_avg_amount_by_year", _payment_oracle("year", EXACT_AVG_SQL.format(c="o_totalprice"), "amount_avg"),
        tags=("parity", "J4", "A1"))
 def q18(spark, sf):
     """G18: payment avg by year (ipynb cell 37)."""
@@ -310,7 +306,7 @@ _MEMBER_ORACLE = f"""FROM orders JOIN customer ON o_custkey = c_custkey
 
 @query(
     "q19_member_avg_by_acct_band",
-    f"""SELECT {_BAND} AS acct_band, {_AVG.format(c='o_totalprice')} AS amount_avg
+    f"""SELECT {_BAND} AS acct_band, {EXACT_AVG_SQL.format(c='o_totalprice')} AS amount_avg
         {_MEMBER_ORACLE} ORDER BY amount_avg DESC, acct_band LIMIT 10""",
     tags=("parity", "P5", "A1"),
 )
@@ -322,7 +318,7 @@ def q19(spark, sf):
 
 @query(
     "q20_member_sum_by_acct_band",
-    f"""SELECT {_BAND} AS acct_band, {_SUM.format(c='o_totalprice')} AS amount_sum
+    f"""SELECT {_BAND} AS acct_band, {EXACT_SUM_SQL.format(c='o_totalprice')} AS amount_sum
         {_MEMBER_ORACLE} ORDER BY amount_sum DESC, acct_band LIMIT 10""",
     tags=("parity", "P5", "A2"),
 )
@@ -340,7 +336,7 @@ def q20(spark, sf):
 @query(
     "q21_member_spend_rides",
     f"""SELECT user_id, CAST(month(e_ts) AS INTEGER) AS month,
-               {_AVG.format(c='o_totalprice')} AS avg_amount,
+               {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_amount,
                count(event_id) AS num_rides
         FROM (SELECT event_id, user_id, ts AS e_ts FROM events) e
         JOIN orders ON user_id = o_custkey
@@ -372,8 +368,8 @@ def q21(spark, sf):
     "q22_member_spend_duration",
     f"""SELECT user_id, CAST(floor(value / 60) AS INTEGER) AS minutes,
                CAST(month(e_ts) AS INTEGER) AS month,
-               {_AVG.format(c='o_totalprice')} AS avg_amount,
-               {_AVG.format(c='value')} AS avg_duration
+               {EXACT_AVG_SQL.format(c='o_totalprice')} AS avg_amount,
+               {EXACT_AVG_SQL.format(c='value')} AS avg_duration
         FROM (SELECT event_id, user_id, value, ts AS e_ts FROM events) e
         JOIN customer ON user_id = c_custkey
         JOIN orders ON user_id = o_custkey
@@ -542,7 +538,7 @@ def q29(spark, sf):
 @query(
     "q30_status_priority_rollup",
     f"""SELECT o_orderstatus, o_orderpriority,
-               {_SUM.format(c='o_totalprice')} AS sum_price,
+               {EXACT_SUM_SQL.format(c='o_totalprice')} AS sum_price,
                count(*) AS n_orders
         FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""",
     tags=("extension", "rollup"),

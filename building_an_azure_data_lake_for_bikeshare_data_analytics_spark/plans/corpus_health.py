@@ -27,9 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import NORMALIZED_TEXT_SQL, TOKENS_SQL, tokens
 from .base import _ts, query
-from .extensions import _NORM, _TOKS
 
 #: the token-set (bag-of-words) identity, shared between engines: sorted
 #: distinct lowercase whitespace tokens, space-joined, md5'd
@@ -41,7 +40,7 @@ _TOKSET_SQL = (
 _LADDER_SQL = f"""WITH fps AS (
       SELECT doc_id,
              md5(text) AS raw,
-             md5({_NORM}) AS norm_ws_case,
+             md5({NORMALIZED_TEXT_SQL}) AS norm_ws_case,
              {_TOKSET_SQL} AS token_set
       FROM documents),
     lv AS (
@@ -100,7 +99,7 @@ def q242(spark, sf):
 
 
 _GROWTH_SQL = f"""WITH mx AS (SELECT max(doc_id) AS m FROM documents),
-    tok AS (SELECT doc_id, unnest({_TOKS}) AS tk FROM documents),
+    tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS tk FROM documents),
     firsts AS (SELECT tk, min(doc_id) AS first_doc FROM tok GROUP BY 1),
     dhist AS (SELECT CAST(floor(doc_id * 10.0 / (m + 1)) AS BIGINT) AS dec,
                      count(*) AS nd

@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 from pyspark.sql.window import Window
 
-from ..functions.text import STOPWORDS, fingerprint, marker_count, tokens
-from ..functions.vectors import EMBEDDING_DIM, dot, norm
+from ..functions.hashing import split_case_sql
+from ..functions.text import STOPWORDS, STOPWORDS_IN_SQL, fingerprint, marker_count, tokens
+from ..functions.vectors import DOT_SQL, EMBEDDING_DIM, dot, norm
 from ..operators.bpe import BPE_MERGES, BPE_TOP_WORDS
 from ..operators.similarity import (
     IVF_PQ_RERANK_FROM,
@@ -36,7 +37,12 @@ from ..operators.similarity import (
     PQ_M,
 )
 from .base import _t, _ts, query
-from .extensions import _ivf_oracle  # q130 carries its fold twin q56's oracle
+from .extensions import (
+    _Q_FILTER,
+    _ivf_oracle,  # q130 carries its fold twin q56's oracle
+    _query_sample,
+    _topk_inputs,
+)
 
 # ---------------------------------------------------------------------------
 # q114 — half-life-decayed per-user activity (sampling-weight primitive)
@@ -175,9 +181,6 @@ def q115(spark, sf):
 # q116 — ANN hard-negative mining (contrastive-training primitive)
 # ---------------------------------------------------------------------------
 
-_Q_FILTER = "vec_id % 50 = 0"
-_DOT = "list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-
 
 @query(
     "q116_hard_negatives",
@@ -185,9 +188,9 @@ _DOT = "list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUB
                    FROM embeddings WHERE {_Q_FILTER}),
          p AS (SELECT query_id, query_label,
                       e.vec_id AS neighbor_id, e.label AS neighbor_label,
-                      round({_DOT.format(a='qe', b='e.embedding')}
-                            / (sqrt({_DOT.format(a='qe', b='qe')})
-                               * sqrt({_DOT.format(a='e.embedding', b='e.embedding')})),
+                      round({DOT_SQL.format(a='qe', b='e.embedding')}
+                            / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                               * sqrt({DOT_SQL.format(a='e.embedding', b='e.embedding')})),
                             4) AS cos
                FROM embeddings e, q WHERE e.label <> query_label)
         SELECT query_id, query_label, neighbor_id, neighbor_label, cos,
@@ -210,7 +213,7 @@ def q116(spark, sf):
     emb = _ts(spark, sf, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")
     )
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
+    q = emb.where(F.expr(_Q_FILTER)).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
         F.col("embedding").alias("qe"),
@@ -236,7 +239,6 @@ def q116(spark, sf):
 # q117 — composite Gopher-style document filter gate
 # ---------------------------------------------------------------------------
 
-_STOPS_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
 
 #: shared gate-stats CTE chain (ends in ``s(doc_id, n_tok, stop_n,
 #: most_common_n, mean_len)``) and the keep-rule predicate — one source of
@@ -251,7 +253,7 @@ _GATE_CTES = f"""t AS (SELECT doc_id, text,
                 GROUP BY 1),
          s AS (SELECT t.doc_id,
                       CAST(len(ts) AS INTEGER) AS n_tok,
-                      CAST(len(list_filter(ts, x -> x IN ({_STOPS_IN}))) AS INTEGER)
+                      CAST(len(list_filter(ts, x -> x IN ({STOPWORDS_IN_SQL}))) AS INTEGER)
                           AS stop_n,
                       CAST(mc.most_common_n AS INTEGER) AS most_common_n,
                       length(replace(text, ' ', '')) * 1.0 / len(ts) AS mean_len
@@ -458,9 +460,9 @@ def _pq_oracle_tail(rerank_from: int | None) -> str:
           FROM p)
     WHERE rnk <= 5"""
     cos = (
-        f"round({_DOT.format(a='qe.embedding', b='ne.embedding')}"
-        f" / (sqrt({_DOT.format(a='qe.embedding', b='qe.embedding')})"
-        f" * sqrt({_DOT.format(a='ne.embedding', b='ne.embedding')})), 4)"
+        f"round({DOT_SQL.format(a='qe.embedding', b='ne.embedding')}"
+        f" / (sqrt({DOT_SQL.format(a='qe.embedding', b='qe.embedding')})"
+        f" * sqrt({DOT_SQL.format(a='ne.embedding', b='ne.embedding')})), 4)"
     )
     return f""",
     cand AS (
@@ -499,12 +501,8 @@ def q118(spark, sf):
     is measured on the stress corpus in SCALE_NOTES, not here."""
     from ..operators.similarity import pq_adc_topk, pq_fit
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    emb, q = _topk_inputs(spark, sf)
     books = pq_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     return pq_adc_topk(emb, q, books, k=5)
 
 
@@ -613,24 +611,14 @@ def q120(spark, sf):
     q118's fit-replay oracle verbatim."""
     from ..operators.similarity import pq_adc_topk_vectorized, pq_fit
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    emb, q = _topk_inputs(spark, sf)
     books = pq_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     return pq_adc_topk_vectorized(emb, q, books, k=5)
 
 
 # ---------------------------------------------------------------------------
 # q121 — the curation pipeline composed end-to-end
 # ---------------------------------------------------------------------------
-
-_HASH_SQL = "((doc_id % 100003) * 2654435761) % 1000"
-_SPLIT_SQL = f"""CASE WHEN {_HASH_SQL} < 800 THEN 'train'
-                      WHEN {_HASH_SQL} < 900 THEN 'val'
-                      ELSE 'test' END"""
-
 
 @query(
     "q121_curation_pipeline",
@@ -645,7 +633,7 @@ _SPLIT_SQL = f"""CASE WHEN {_HASH_SQL} < 800 THEN 'train'
                 GROUP BY f),
          ded AS (SELECT k.doc_id, k.n_tok
                  FROM kept k JOIN fp ON fp.keep_id = k.doc_id),
-         sp AS (SELECT {_SPLIT_SQL} AS split,
+         sp AS (SELECT {split_case_sql('doc_id', 22)} AS split,
                        CAST({_BUCKET_SQL} AS INTEGER) AS bucket,
                        n_tok
                 FROM ded)
@@ -669,8 +657,6 @@ def q121(spark, sf):
     shuffles -> one fp-keyed dedup shuffle -> map-only split/bucket ->
     one small aggregate; nothing wider than (doc_id, n_tok, fp) moves
     after the gate."""
-    from .training import _doc_hash
-
     t = _t(spark, sf, "documents").select(
         "doc_id", "text", tokens("text").alias("ts")
     )
@@ -686,11 +672,7 @@ def q121(spark, sf):
     ded = kept.join(
         keeps, kept["doc_id"] == keeps["keep_id"]
     ).select("doc_id", "n_tok")
-    split = (
-        F.when(_doc_hash() < 800, F.lit("train"))
-        .when(_doc_hash() < 900, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
+    split = F.expr(split_case_sql("doc_id", 0))
     return (
         ded.select(split.alias("split"), _bucket(F.col("n_tok")).alias("bucket"), "n_tok")
         .groupBy("split", "bucket")
@@ -805,12 +787,8 @@ def q123(spark, sf):
     ~4,000-literal encode fold's driver plan-analysis cost."""
     from ..operators.similarity import pq_adc_rerank_topk, pq_fit
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    emb, q = _topk_inputs(spark, sf)
     books = pq_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     return pq_adc_rerank_topk(emb, q, books, k=5, rerank_from=50)
 
 
@@ -939,12 +917,9 @@ def q125(spark, sf):
     # shuffle contract (every join broadcast, 2 window exchanges only) —
     # the conditional fanout exchange would break the pinned plan shape
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_fit(emb)
-    books = pq_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    return ivf_pq_rerank_topk(
+        emb, _query_sample(emb), kmeans_fit(emb), pq_fit(emb), k=5
     )
-    return ivf_pq_rerank_topk(emb, q, cents, books, k=5)
 
 
 @query(
@@ -969,12 +944,9 @@ def q129(spark, sf):
     )
 
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_fit(emb)
-    books = pq_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    return ivf_pq_rerank_topk_vectorized(
+        emb, _query_sample(emb), kmeans_fit(emb), pq_fit(emb), k=5
     )
-    return ivf_pq_rerank_topk_vectorized(emb, q, cents, books, k=5)
 
 
 @query(
@@ -992,12 +964,8 @@ def q130(spark, sf):
     seconds (SCALE_NOTES). Carries q56's oracle verbatim."""
     from ..operators.similarity import ivf_topk_vectorized, kmeans_fit
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    emb, q = _topk_inputs(spark, sf)
     cents = kmeans_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     return ivf_topk_vectorized(emb, q, cents, k=5)
 
 

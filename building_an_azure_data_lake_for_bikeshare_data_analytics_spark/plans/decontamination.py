@@ -41,9 +41,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.hashing import batch_sql
 from ..functions.text import tokens, word_shingles
 from .base import _ts, query
-from .training import _HASH_SQL
 
 #: (benchmark name, benchmark source, n-gram size, threshold in 1e-4
 #: units of the doc's distinct-shingle fraction). thresh_e4=0 means "any
@@ -252,17 +252,15 @@ def q244(spark, sf):
 # ---------------------------------------------------------------------------
 
 #: probe-side restriction for the maintained head: only the NEW batch
-#: (the 20% doc-hash split). Built FROM training._HASH_SQL so the oracle
-#: predicate and the Spark _doc_hash() Column share one source of truth —
-#: if the split arithmetic ever changes they move together (r9 advice).
-_BATCH_PRED = " AND " + _HASH_SQL.replace("doc_id", "s.doc_id") + " >= 800"
+#: (the 20% doc-hash split)
+_BATCH_PRED = " AND " + batch_sql("s.doc_id")
 
 _MAINT_DECON_SQL = (
     r"""WITH tok AS (SELECT doc_id, source,
                             string_split_regex(trim(text), '\s+') AS ts
                      FROM documents),
     src_n AS (SELECT source, count(*) AS n_docs FROM documents
-              WHERE """ + _HASH_SQL + """ >= 800
+              WHERE """ + batch_sql("doc_id") + """
               GROUP BY 1),
     bdim(benchmark, bsrc) AS (VALUES """
     + ", ".join(f"('{name}', '{bsrc}')" for name, bsrc, _, _ in BENCHMARKS)
@@ -313,7 +311,6 @@ def q249(spark, sf):
     naive N-pass replay restricted to batch docs) certifies the stored
     path value-for-value. Output: the batch's (source x benchmark)
     contamination matrix, zero rows included."""
-    from .training import _doc_hash
     from ..sources.versioned import (
         append_version,
         read_current,
@@ -343,7 +340,7 @@ def q249(spark, sf):
     vacuum(store, keep=2)
 
     # 3) query: the NEW batch probed against the STORED table
-    batch = d.where(_doc_hash() >= 800)
+    batch = d.where(F.expr(batch_sql("doc_id")))
     return probe_matrix(
         spark, corpus_shingles(batch), read_current(spark, store), batch
     )
@@ -396,12 +393,12 @@ ORDER BY label"""
 
 
 def _sem_decon_oracle() -> str:
-    from .extensions import _DOT
+    from ..functions.vectors import DOT_SQL
 
     return _SEM_DECON_SQL.format(
-        dot=_DOT.format(a="embedding", b="embedding"),
-        cdot=_DOT.format(a="embedding", b="embedding"),
-        xdot=_DOT.format(a="c.ce", b="b.be"),
+        dot=DOT_SQL.format(a="embedding", b="embedding"),
+        cdot=DOT_SQL.format(a="embedding", b="embedding"),
+        xdot=DOT_SQL.format(a="c.ce", b="b.be"),
     )
 
 

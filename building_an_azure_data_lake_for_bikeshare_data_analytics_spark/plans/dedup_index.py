@@ -39,8 +39,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.hashing import corpus_sql
 from ..functions.text import tokens
 
 #: the corpus-wide dedup operating threshold every index consumer shares;
@@ -52,9 +54,10 @@ _CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 #: same-session bound on cached (sf_dir, relation) entries. A long-lived
 #: session sweeping many sf dirs (the soak tools do exactly this) would
-#: otherwise accumulate persisted relations forever (r7 advice). 3
-#: relations per sf dir × 4 sf dirs of headroom; eviction is LRU and
-#: unpersists the evicted blocks eagerly.
+#: otherwise accumulate persisted relations forever (r7 advice). Up to
+#: five relations per sf dir (the four this module builds plus
+#: ``extensions.probe_scored``); eviction is LRU and unpersists the
+#: evicted blocks eagerly.
 _MAX_LIVE_ENTRIES = 12
 
 
@@ -148,7 +151,7 @@ def dup_pairs_lsh(spark, sf: str) -> DataFrame:
 
 def corpus_signatures(spark, sf: str) -> DataFrame:
     """The maintained LSH signature artifact (doc_id, band, sig) for the
-    EXISTING-corpus side of the q71 hash split (hh < 800 — the shared
+    EXISTING-corpus side of the q71 hash split (``hashing.corpus_sql`` — the shared
     fixture convention of every incremental head), memoized + persisted.
 
     This is the session-local form of the q245 stored signature table:
@@ -159,10 +162,9 @@ def corpus_signatures(spark, sf: str) -> DataFrame:
     as ``corpus_banded``). q103 reads it; q239 carries the same artifact
     through the versioned store end to end."""
     from ..operators.dedup import banded_signature_table, shingle_sets
-    from .training import _doc_hash
 
     def build():
-        corpus = _docs_tokens(spark, sf).where(_doc_hash() < 800)
+        corpus = _docs_tokens(spark, sf).where(F.expr(corpus_sql("doc_id")))
         return banded_signature_table(shingles=shingle_sets(corpus, 3))
 
     return _memo(spark, sf, "sigs_corpus", build)

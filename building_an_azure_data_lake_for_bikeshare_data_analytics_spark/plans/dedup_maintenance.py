@@ -54,10 +54,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.hashing import batch_sql
 from ..functions.text import tokens
 from .base import query
 from .extensions import _SHINGLES_SQL
-from .training import _HASH_SQL, _doc_hash
 
 _MAINT_SQL = f"""WITH RECURSIVE {_SHINGLES_SQL},
          sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -77,7 +77,7 @@ _MAINT_SQL = f"""WITH RECURSIVE {_SHINGLES_SQL},
                   FROM reach GROUP BY a)
         SELECT component_id,
                CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(CASE WHEN {_HASH_SQL} >= 800 THEN 1 ELSE 0 END)
+               CAST(sum(CASE WHEN {batch_sql('doc_id')} THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_batch_docs
         FROM comp GROUP BY 1 ORDER BY component_id"""
 
@@ -116,7 +116,7 @@ def q239(spark, sf):
     docs = _ts(spark, sf, "documents", "doc_id", "text", fan=True).select(
         "doc_id", tokens("text").alias("ts")
     )
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     corpus, batch = docs.where(~is_new), docs.where(is_new)
     store = session_store(spark, "dedup_index")
     sig_store = store + "_sigs"
@@ -127,9 +127,9 @@ def q239(spark, sf):
     # this is the shingle table you'd keep next to the index
     sh_all = shingle_sets(docs, 3).localCheckpoint(storageLevel=_CKPT_LEVEL)
     # same predicate as is_new, re-evaluated over the shingle relation's
-    # doc_id — ONE source of truth (_doc_hash) so the shingle-side filter
+    # doc_id — ONE source of truth (hashing.batch_sql) so the shingle-side filter
     # can never drift from the document-side split (r7 advice)
-    sh_new = _doc_hash() >= 800
+    sh_new = F.expr(batch_sql("doc_id"))
 
     # 1) v1: the existing corpus's component table, plus the corpus's
     #    banded SIGNATURE table in a sibling store (the q245 artifact —
@@ -189,7 +189,7 @@ def q239(spark, sf):
 
     # 3) census off the maintained table (read_current = the v2 snapshot)
     maintained = read_current(spark, store)
-    batch_flag = (_doc_hash() >= 800).cast("int")
+    batch_flag = F.expr(batch_sql("doc_id")).cast("int")
     return (
         maintained.select(F.col("comp").alias("component_id"), batch_flag.alias("b"))
         .groupBy("component_id")

@@ -19,7 +19,10 @@ from pyspark.sql.window import Window
 
 from ..functions.text import (
     LANG_MARKERS,
+    NORMALIZED_TEXT_SQL,
     STOPWORDS,
+    STOPWORDS_IN_SQL,
+    TOKENS_SQL,
     fingerprint,
     lang_guess,
     marker_count,
@@ -27,7 +30,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
-from ..functions.vectors import EMBEDDING_DIM, dot
+from ..functions.vectors import DOT_SQL, EMBEDDING_DIM, dot
 from ..operators.dedup import (
     MINHASH_BANDS,
     MINHASH_HASHES,
@@ -46,10 +49,8 @@ from ..operators.similarity import (
     hyperplanes,
     lsh_topk,
 )
-from ..functions.hashing import h60
+from ..functions.hashing import batch_sql, h60
 from .base import _t, _ts, query
-
-_TOKS = r"string_split_regex(trim(text), '\s+')"
 
 
 # --------------------------------------------------------------------------
@@ -58,7 +59,7 @@ _TOKS = r"string_split_regex(trim(text), '\s+')"
 
 @query(
     "q31_doc_token_count",
-    f"SELECT doc_id, CAST(len({_TOKS}) AS INTEGER) AS n_tokens FROM documents",
+    f"SELECT doc_id, CAST(len({TOKENS_SQL}) AS INTEGER) AS n_tokens FROM documents",
     tags=("text",),
 )
 def q31(spark, sf):
@@ -69,15 +70,13 @@ def q31(spark, sf):
     )
 
 
-_STOPS_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
-
 @query(
     "q32_doc_quality",
     f"""SELECT doc_id,
                CAST(len(ts) AS INTEGER) AS n_tokens,
                round(length(replace(text, ' ', '')) / len(ts), 4) AS avg_token_len,
-               round(len(list_filter(ts, t -> t IN ({_STOPS_IN}))) / len(ts), 4) AS stopword_ratio
-        FROM (SELECT doc_id, text, {_TOKS} AS ts FROM documents)""",
+               round(len(list_filter(ts, t -> t IN ({STOPWORDS_IN_SQL}))) / len(ts), 4) AS stopword_ratio
+        FROM (SELECT doc_id, text, {TOKENS_SQL} AS ts FROM documents)""",
     tags=("text", "quality"),
 )
 def q32(spark, sf):
@@ -109,7 +108,7 @@ def _marker_sql(markers: tuple[str, ...]) -> str:
                  {_marker_sql(LANG_MARKERS['fr'])} AS fr,
                  {_marker_sql(LANG_MARKERS['de'])} AS de,
                  {_marker_sql(LANG_MARKERS['es'])} AS es
-          FROM (SELECT doc_id, lang, {_TOKS} AS ts FROM documents))
+          FROM (SELECT doc_id, lang, {TOKENS_SQL} AS ts FROM documents))
         SELECT doc_id,
                CASE WHEN en >= fr AND en >= de AND en >= es THEN 'en'
                     WHEN fr >= de AND fr >= es THEN 'fr'
@@ -134,11 +133,9 @@ def q33(spark, sf):
     )
 
 
-_NORM = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
-
 @query(
     "q34_doc_fingerprint",
-    f"SELECT doc_id, md5({_NORM}) AS fp FROM documents",
+    f"SELECT doc_id, md5({NORMALIZED_TEXT_SQL}) AS fp FROM documents",
     tags=("text", "fingerprint"),
 )
 def q34(spark, sf):
@@ -155,7 +152,7 @@ def q34(spark, sf):
 
 @query(
     "q35_dedup_exact",
-    f"""SELECT md5({_NORM}) AS fp, min(doc_id) AS keep_id, count(*) AS dup_count
+    f"""SELECT md5({NORMALIZED_TEXT_SQL}) AS fp, min(doc_id) AS keep_id, count(*) AS dup_count
         FROM documents GROUP BY 1""",
     tags=("dedup", "exact"),
 )
@@ -171,7 +168,7 @@ def q35(spark, sf):
 
 
 _SHINGLES_SQL = f"""
-    tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
+    tok AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
     sh0 AS (SELECT doc_id, ts, unnest(range(1, len(ts) - 1)) AS i FROM tok),
     sh  AS (SELECT DISTINCT doc_id,
                    ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] AS shingle
@@ -467,7 +464,21 @@ def q38(spark, sf):
 # --------------------------------------------------------------------------
 
 _Q_FILTER = "vec_id % 50 = 0"
-_DOT = "list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+
+
+def _query_sample(emb):
+    """The top-k heads' query set: every 50th vector, as (query_id, qe)."""
+    return emb.where(F.expr(_Q_FILTER)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    )
+
+
+def _topk_inputs(spark, sf):
+    """A top-k head's corpus scan and its query sample. The scan is
+    fanned out (_ts): the search downstream is per-row vector math."""
+    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    return emb, _query_sample(emb)
+
 
 # Shared by q39 (Column-fold) and q64 (BLAS kernel): the two are row-equal
 # by construction up to float summation order — same round-4 cosines, same
@@ -477,9 +488,9 @@ _DOT = "list_sum(list_transform(range(1, len({a}) + 1), i -> CAST({a}[i] AS DOUB
 _BRUTE_TOPK_ORACLE = f"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
                    FROM embeddings WHERE {_Q_FILTER}),
          p AS (SELECT query_id, e.vec_id AS neighbor_id,
-                      round({_DOT.format(a='qe', b='e.embedding')}
-                            / (sqrt({_DOT.format(a='qe', b='qe')})
-                               * sqrt({_DOT.format(a='e.embedding', b='e.embedding')})),
+                      round({DOT_SQL.format(a='qe', b='e.embedding')}
+                            / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                               * sqrt({DOT_SQL.format(a='e.embedding', b='e.embedding')})),
                             4) AS cos
                FROM embeddings e, q WHERE e.vec_id <> query_id)
         SELECT query_id, neighbor_id, cos, CAST(rnk AS INTEGER) AS rnk
@@ -492,9 +503,9 @@ _BRUTE_TOPK_ORACLE = f"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe
 # (per-block BLAS kernel) — same twin contract as q39/q64.
 _EMB_DUP_PAIRS_ORACLE = f"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
          p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                      round({_DOT.format(a='a.embedding', b='b.embedding')}
-                            / (sqrt({_DOT.format(a='a.embedding', b='a.embedding')})
-                               * sqrt({_DOT.format(a='b.embedding', b='b.embedding')})), 4) AS cos
+                      round({DOT_SQL.format(a='a.embedding', b='b.embedding')}
+                            / (sqrt({DOT_SQL.format(a='a.embedding', b='a.embedding')})
+                               * sqrt({DOT_SQL.format(a='b.embedding', b='b.embedding')})), 4) AS cos
                FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id)
         SELECT vec_a, vec_b, cos FROM p WHERE cos >= 0.45"""
 
@@ -510,11 +521,7 @@ def q39(spark, sf):
     Scale shape: queries broadcast (small side), corpus never shuffles for
     the join; per-query top-k is one window shuffle keyed by query_id. The
     LSH-bucketed variant (q40) is the 100 TB path."""
-    # _ts (r12): per-row norm/cosine folds — fan the scan out
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    emb, q = _topk_inputs(spark, sf)
     return brute_force_topk(emb, q, k=5)
 
 
@@ -545,16 +552,16 @@ def _lsh_oracle() -> str:
              CAST(sum(CASE WHEN pid >= 4 AND d > 0 THEN power(2, pid - 4) ELSE 0 END) AS INTEGER) AS band1
       FROM dots GROUP BY 1, 2),
     q AS (SELECT vec_id AS query_id, embedding AS qe, band0 AS qb0, band1 AS qb1
-          FROM sig WHERE vec_id % 50 = 0),
+          FROM sig WHERE {_Q_FILTER}),
     cand AS (
       SELECT DISTINCT q.query_id, s.vec_id, q.qe, s.embedding
       FROM sig s JOIN q ON (s.band0 = q.qb0 OR s.band1 = q.qb1)
       WHERE s.vec_id <> q.query_id),
     scored AS (
       SELECT query_id, vec_id AS neighbor_id,
-             round({_DOT.format(a='qe', b='embedding')}
-                   / (sqrt({_DOT.format(a='qe', b='qe')})
-                      * sqrt({_DOT.format(a='embedding', b='embedding')})), 4) AS cos
+             round({DOT_SQL.format(a='qe', b='embedding')}
+                   / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                      * sqrt({DOT_SQL.format(a='embedding', b='embedding')})), 4) AS cos
       FROM cand)
     SELECT query_id, neighbor_id, cos, CAST(rnk AS INTEGER) AS rnk
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -571,11 +578,7 @@ def q40(spark, sf):
     The 100 TB ANN path: the corpus shuffles once by (band, bucket); no
     cross product. Deterministic planes make even this approximate operator
     oracle-checkable value-for-value."""
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    qs = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    emb, qs = _topk_inputs(spark, sf)
     return lsh_topk(emb, qs, k=5, planes=_PLANES, bands=2)
 
 
@@ -736,7 +739,7 @@ def q53(spark, sf):
 
 @query(
     "q54_dedup_keep_rows",
-    f"""WITH fp AS (SELECT doc_id, md5({_NORM}) AS f FROM documents),
+    f"""WITH fp AS (SELECT doc_id, md5({NORMALIZED_TEXT_SQL}) AS f FROM documents),
          keep AS (SELECT f, min(doc_id) AS keep_id FROM fp GROUP BY 1)
         SELECT d.doc_id, d.lang, d.source, d.n_chars
         FROM documents d JOIN keep ON d.doc_id = keep.keep_id""",
@@ -854,9 +857,9 @@ def _ivf_oracle() -> str:
       WHERE e.vec_id <> qp.query_id),
     scored AS (
       SELECT query_id, neighbor_id,
-             round({_DOT.format(a='qe', b='embedding')}
-                   / (sqrt({_DOT.format(a='qe', b='qe')})
-                      * sqrt({_DOT.format(a='embedding', b='embedding')})), 4) AS cos
+             round({DOT_SQL.format(a='qe', b='embedding')}
+                   / (sqrt({DOT_SQL.format(a='qe', b='qe')})
+                      * sqrt({DOT_SQL.format(a='embedding', b='embedding')})), 4) AS cos
       FROM cand)
     SELECT query_id, neighbor_id, cos, CAST(rnk AS INTEGER) AS rnk
     FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -892,12 +895,8 @@ def q56(spark, sf):
     literals; the probe is an equi-join on cell id."""
     from ..operators.similarity import ivf_topk, kmeans_fit
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
+    emb, q = _topk_inputs(spark, sf)
     cents = kmeans_fit(emb)
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
     return ivf_topk(emb, q, cents, k=5)
 
 
@@ -1643,42 +1642,29 @@ def _probe_oracle() -> str:
     )
 
 
-#: memoized probe-score artifact per (applicationId, realpath(sf_dir)) —
-#: the r7 dedup_index posture applied to the fitted probe (r13): seven
-#: heads (q145 + the q189/q211/q212/q218/q225 evaluation family) each
-#: replayed the SAME 8-iteration GD fit — 9 driver-blocking one-row
-#: aggregate jobs per head — on identical features and hyperparameters.
-#: At 100 TB the fitted quality classifier is a maintained model
-#: artifact consumers read, not a subtree every evaluation head
-#: re-trains. The scored relation is persisted + memoized; the bench
-#: forces it as the named ``index_build_probe_scores`` entry so every
-#: consumer's wall is the warm read path a deployment pays (the r7
-#: first-consumer-absorbs-the-build lesson). Results are deterministic
-#: (the fit is exact-decimal arithmetic), so warm and cold runs return
-#: identical rows — every consumer's oracle still replays the full fit.
-_PROBE_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
+# memoized probe-score artifact, one per session and sf dir in the
+# dedup_index memo — the r7 posture applied to the fitted probe (r13): seven
+# heads (q145 + the q189/q211/q212/q218/q225 evaluation family) each
+# replayed the SAME 8-iteration GD fit — 9 driver-blocking one-row
+# aggregate jobs per head — on identical features and hyperparameters.
+# At 100 TB the fitted quality classifier is a maintained model
+# artifact consumers read, not a subtree every evaluation head
+# re-trains. The scored relation is persisted + memoized; the bench
+# forces it as the named ``index_build_probe_scores`` entry so every
+# consumer's wall is the warm read path a deployment pays (the r7
+# first-consumer-absorbs-the-build lesson). Results are deterministic
+# (the fit is exact-decimal arithmetic), so warm and cold runs return
+# identical rows — every consumer's oracle still replays the full fit.
 def probe_scored(spark, sf):
     """(vec_id, label_true, score, pred) from the maintained probe fit."""
-    import os as _os
-
-    from pyspark.storagelevel import StorageLevel
-
     from ..operators.probe import logreg_probe_fit, logreg_probe_score, probe_features
+    from .dedup_index import _memo
 
-    app = spark.sparkContext.applicationId
-    key = (app, _os.path.realpath(sf))
-    hit = _PROBE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _PROBE_CACHE if k[0] != app]:
-        del _PROBE_CACHE[k]  # blocks died with their session
-    feats = probe_features(_t(spark, sf, "embeddings")).localCheckpoint()
-    w = logreg_probe_fit(feats)
-    df = logreg_probe_score(feats, w).persist(StorageLevel.MEMORY_AND_DISK)
-    _PROBE_CACHE[key] = df
-    return df
+    def build():
+        feats = probe_features(_t(spark, sf, "embeddings")).localCheckpoint()
+        return logreg_probe_score(feats, logreg_probe_fit(feats))
+
+    return _memo(spark, sf, "probe_scores", build)
 
 
 @query(
@@ -1728,9 +1714,9 @@ def _semdedup_oracle() -> str:
     the lowest-id-wins keep rule — the learned clusters are value-checked,
     not just the final flags."""
     cos = (
-        f"round({_DOT.format(a='ea.embedding', b='eb.embedding')}"
-        f" / (sqrt({_DOT.format(a='ea.embedding', b='ea.embedding')})"
-        f" * sqrt({_DOT.format(a='eb.embedding', b='eb.embedding')})), 4)"
+        f"round({DOT_SQL.format(a='ea.embedding', b='eb.embedding')}"
+        f" / (sqrt({DOT_SQL.format(a='ea.embedding', b='ea.embedding')})"
+        f" * sqrt({DOT_SQL.format(a='eb.embedding', b='eb.embedding')})), 4)"
     )
     return f"""
     WITH pts AS MATERIALIZED (
@@ -1868,15 +1854,10 @@ def q148(spark, sf):
     )
 
 
-# q103's deterministic 80/20 hash split (training._doc_hash), restated so
-# the span-level incremental pass partitions the corpus identically
-_INC_HASH = "((doc_id % 100003) * 2654435761) % 1000"
-
-
 @query(
     "q139_incremental_span_dedup",
-    rf"""WITH tok AS (SELECT doc_id, {_INC_HASH} >= 800 AS is_new,
-                          string_split_regex(trim(text), '\s+') AS ts
+    rf"""WITH tok AS (SELECT doc_id, {batch_sql('doc_id')} AS is_new,
+                          {TOKENS_SQL} AS ts
                    FROM documents),
         g AS (SELECT doc_id, is_new, i AS pos,
                      CAST('0x' || substr(md5(array_to_string(ts[i:i+{_SPAN_K - 1}], ' ')), 1, 15)
@@ -1922,7 +1903,7 @@ def q139(spark, sf):
     # _ts (r12): fan the one-row-group scan out below the tokenize
     d = _ts(spark, sf, "documents", "doc_id", "text").select(
         "doc_id",
-        (F.expr(_INC_HASH) >= 800).alias("is_new"),
+        F.expr(batch_sql("doc_id")).alias("is_new"),
         tokens("text").alias("ts"),
     )
     g = _gram_hashes(d, extra_cols=("is_new",))
@@ -2103,9 +2084,9 @@ def _semantic_lsh_oracle() -> str:
         ON (a.band0 = b.band0 OR a.band1 = b.band1) AND a.vec_id < b.vec_id),
     scored AS (
       SELECT vec_a, vec_b,
-             round({_DOT.format(a='ea', b='eb')}
-                   / (sqrt({_DOT.format(a='ea', b='ea')})
-                      * sqrt({_DOT.format(a='eb', b='eb')})), 4) AS cos
+             round({DOT_SQL.format(a='ea', b='eb')}
+                   / (sqrt({DOT_SQL.format(a='ea', b='ea')})
+                      * sqrt({DOT_SQL.format(a='eb', b='eb')})), 4) AS cos
       FROM cand)
     SELECT vec_a, vec_b, cos FROM scored WHERE cos >= {_SEMDEDUP_TAU}"""
 
@@ -2136,11 +2117,7 @@ def q64(spark, sf):
     pre-round — corpus-verified identical at gate and stress scale."""
     from ..operators.similarity import brute_force_topk_vectorized
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    qs = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    emb, qs = _topk_inputs(spark, sf)
     return brute_force_topk_vectorized(emb, qs, k=5)
 
 
@@ -2161,7 +2138,7 @@ _STEP = _CHUNK - _OVERLAP
 
 @query(
     "q66_doc_chunks",
-    f"""WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
+    f"""WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
          st AS (SELECT doc_id, ts, unnest(range(1, len(ts) + 1, {_STEP})) AS start FROM tok)
         SELECT doc_id,
                CAST((start - 1) // {_STEP} AS INTEGER) AS chunk_idx,
@@ -2282,11 +2259,7 @@ def q104(spark, sf):
     tests/test_dedup_similarity.py)."""
     from ..operators.similarity import quantized_int8_topk
 
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    qs = emb.where(F.expr(_Q_FILTER)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    emb, qs = _topk_inputs(spark, sf)
     return quantized_int8_topk(emb, qs, k=5)
 
 
@@ -2422,9 +2395,7 @@ def q109(spark, sf):
     from ..operators.similarity import quantized_int8_topk_vectorized
 
     emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    qs = emb.where(F.expr(_Q_FILTER)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    qs = _query_sample(emb)
     return quantized_int8_topk_vectorized(emb, qs, k=5)
 
 
@@ -2437,7 +2408,7 @@ _PMI_V = 30  # vocabulary cap: bounds the per-doc pair fan-out at V*(V-1)/2
 
 @query(
     "q157_token_pmi_pairs",
-    f"""WITH tk AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok
+    f"""WITH tk AS (SELECT DISTINCT doc_id, unnest({TOKENS_SQL}) AS tok
                     FROM documents),
     dfreq AS (SELECT tok, count(*) AS d FROM tk GROUP BY 1),
     vocab AS (SELECT tok, d

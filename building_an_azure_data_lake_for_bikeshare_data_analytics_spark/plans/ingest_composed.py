@@ -67,28 +67,25 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.hashing import H60_SQL
-from ..functions.text import tokens
+from ..functions.hashing import H60_SQL, batch_sql
+from ..functions.text import TOKENS_SQL, tokens
 from .base import _ts, query
 from .census_maintenance import _CK, _census_state
 from .packing import _NSHARDS, _SEQ_CAP
 from .decontamination import _MAINT_DECON_SQL
-from .training import _HASH_SQL, _doc_hash
 
 #: must match ``banded_signature_table``'s defaults — the oracle's
 #: signature-row arithmetic is docs-with-≥1-shingle × bands
 _BANDS = 16
 
-_VEC_HASH_SQL = "((vec_id % 100003) * 2654435761) % 1000"
-
 _COMPOSED_SQL = f"""WITH tk AS (
-      SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
-      FROM documents WHERE {_HASH_SQL} >= 800),
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok
+      FROM documents WHERE {batch_sql('doc_id')}),
     kmv AS (
       SELECT source, h,
              row_number() OVER (PARTITION BY source ORDER BY h) AS rn
       FROM (SELECT DISTINCT source, {H60_SQL.format(x="text")} AS h
-            FROM documents WHERE {_HASH_SQL} >= 800)),
+            FROM documents WHERE {batch_sql('doc_id')})),
     pk AS (
       SELECT shard, isnew, doc_id,
              unnest(generate_series(tok_start // {_SEQ_CAP},
@@ -100,24 +97,24 @@ _COMPOSED_SQL = f"""WITH tk AS (
                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
                     0) AS BIGINT) AS tok_start
         FROM (
-          SELECT doc_id, {_HASH_SQL} >= 800 AS isnew,
+          SELECT doc_id, {batch_sql('doc_id')} AS isnew,
                  CAST(doc_id % {_NSHARDS} AS INTEGER) AS shard,
-                 CAST(COALESCE(len(string_split_regex(trim(text), '\\s+')), 0)
+                 CAST(COALESCE(len({TOKENS_SQL}), 0)
                       AS BIGINT) AS n_toks
           FROM documents
-          WHERE COALESCE(len(string_split_regex(trim(text), '\\s+')), 0) > 0)))
+          WHERE COALESCE(len({TOKENS_SQL}), 0) > 0)))
     SELECT 'census_kmv_batch_state' AS artifact,
            CAST(count(*) AS BIGINT) AS n FROM kmv WHERE rn <= {_CK}
     UNION ALL
     SELECT 'census_stats_batch_state',
            CAST(count(DISTINCT source) AS BIGINT)
-    FROM documents WHERE {_HASH_SQL} >= 800
+    FROM documents WHERE {batch_sql('doc_id')}
     UNION ALL
     SELECT 'decon_contaminated', CAST(sum(n_contaminated) AS BIGINT)
     FROM ({_MAINT_DECON_SQL})
     UNION ALL
     SELECT 'ivf_rows_appended', CAST(count(*) AS BIGINT)
-    FROM embeddings WHERE {_VEC_HASH_SQL} >= 800
+    FROM embeddings WHERE {batch_sql('vec_id')}
     UNION ALL
     SELECT 'lexical_dl_appended', CAST(count(DISTINCT doc_id) AS BIGINT) FROM tk
     UNION ALL
@@ -130,8 +127,8 @@ _COMPOSED_SQL = f"""WITH tk AS (
     SELECT 'signature_rows_appended',
            CAST({_BANDS} * count(*) AS BIGINT)
     FROM documents
-    WHERE {_HASH_SQL} >= 800
-      AND len(string_split_regex(trim(text), '\\s+')) >= 3
+    WHERE {batch_sql('doc_id')}
+      AND len({TOKENS_SQL}) >= 3
     UNION ALL
     SELECT 'span_rows_appended', CAST(count(*) AS BIGINT)
     FROM pk WHERE isnew
@@ -167,7 +164,7 @@ def q252(spark, sf):
     every lifecycle head — the composed maintenance run IS the subject."""
     from ..operators.dedup import _CKPT_LEVEL, banded_signature_table, shingle_sets
     from ..operators.similarity import assign_cells, kmeans_fit
-    from ..plans.ann_maintenance import _vec_hash
+    from ..plans.ann_maintenance import _split_embeddings
     from ..plans.decontamination import (
         BENCHMARKS,
         bench_shingle_table,
@@ -212,11 +209,9 @@ def q252(spark, sf):
         .hint("rebalance")
         .localCheckpoint(storageLevel=_CKPT_LEVEL)
     )
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     corpus_d, batch_d = d.where(~is_new), d.where(is_new)
-    # _ts (r12): fan the one-row-group scan out — per-row vector math
-    emb = _ts(spark, sf, "embeddings", "vec_id", "embedding")
-    vec_new = _vec_hash() >= 800
+    _, vec_corpus, vec_batch = _split_embeddings(spark, sf)
     from .packing import packing_spans
 
     # ---- v1 builds (corpus side of the shared relation; paid once).
@@ -274,9 +269,9 @@ def q252(spark, sf):
         )
 
     def _b_ivf():
-        cents = kmeans_fit(emb.where(~vec_new))
+        cents = kmeans_fit(vec_corpus)
         write_version(
-            assign_cells(emb.where(~vec_new), cents), ivf_s, partition_by=["cell"]
+            assign_cells(vec_corpus, cents), ivf_s, partition_by=["cell"]
         )
         write_version(
             spark.createDataFrame(
@@ -329,7 +324,7 @@ def q252(spark, sf):
             for r in read_current(spark, cen_s).orderBy("cell").collect()
         ]
         return append_version(
-            assign_cells(emb.where(vec_new), stored_cents),
+            assign_cells(vec_batch, stored_cents),
             ivf_s,
             partition_by=["cell"],
         )

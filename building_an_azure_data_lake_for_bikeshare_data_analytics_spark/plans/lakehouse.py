@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 from pyspark.sql.window import Window
 
+from ..functions.vectors import DOT_SQL
 from .base import _t, _ts, query
 
 # --------------------------------------------------------------------------
@@ -258,24 +259,14 @@ WHERE rnk <= 20
 ORDER BY bm25 DESC, doc_id"""
 
 
-def _bm25_scores(spark, sf):
-    """(doc_id, score) for every document matching >= 1 fixed query term —
-    q151's scorer, shared with the q199 RRF fusion. Per-term contribution
+def _bm25_parts(tf, dl):
+    """The corpus statistics (nd, total_len) of the doc lengths ``dl``,
+    the document frequencies of the term frequencies ``tf``, and the
+    per-doc score aggregate over their join. Per-term contribution
     rounded to 6dp, summed through an exact decimal (order-independent —
     the q77/exact_sum rule applied to a float product)."""
-    from ..functions.text import tokens
-
-    tk = _t(spark, sf, "documents").select(
-        "doc_id", F.explode(tokens("text")).alias("tok")
-    )
-    dl = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("nd"), F.sum("len").alias("total_len")
-    )
-    tf = (
-        tk.where(F.col("tok").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("f"))
     )
     dfreq = tf.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
     avglen = F.col("total_len").cast("double") / F.col("nd")
@@ -283,16 +274,31 @@ def _bm25_scores(spark, sf):
     tfpart = (F.col("f") * (_BM25_K1 + 1)) / (
         F.col("f") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("len") / avglen)
     )
+    score = F.sum(F.round(idf * tfpart, 6).cast(DecimalType(18, 6))).cast("double")
+    return stats, dfreq, score.alias("score")
+
+
+def _bm25_scores(spark, sf):
+    """(doc_id, score) for every document matching >= 1 fixed query term —
+    q151's scorer, shared with the q199 RRF fusion."""
+    from ..functions.text import tokens
+
+    tk = _t(spark, sf, "documents").select(
+        "doc_id", F.explode(tokens("text")).alias("tok")
+    )
+    dl = tk.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
+    tf = (
+        tk.where(F.col("tok").isin(*_BM25_TERMS))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("f"))
+    )
+    stats, dfreq, score = _bm25_parts(tf, dl)
     return (
         tf.join(F.broadcast(dfreq), "tok")
         .join(F.broadcast(dl), "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
-        .agg(
-            F.sum(F.round(idf * tfpart, 6).cast(DecimalType(18, 6)))
-            .cast("double")
-            .alias("score")
-        )
+        .agg(score)
     )
 
 
@@ -797,18 +803,14 @@ def q166(spark, sf):
 
 _RRF_K = 60  # the standard Cormack/Clarke/Buettcher constant
 _RRF_DEPTH = 100  # per-system candidate depth fused
-_RRF_DOT = (
-    "list_sum(list_transform(range(1, len({a}) + 1),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
 
 
 def _rrf_oracle() -> str:
     bm25 = _bm25_oracle()
     scored_cte = bm25[bm25.index("WITH ") + 5 : bm25.index(")\nSELECT doc_id") + 1]
-    dot_qe = _RRF_DOT.format(a="qe", b="e.embedding")
-    nq = _RRF_DOT.format(a="qe", b="qe")
-    ne = _RRF_DOT.format(a="e.embedding", b="e.embedding")
+    dot_qe = DOT_SQL.format(a="qe", b="e.embedding")
+    nq = DOT_SQL.format(a="qe", b="qe")
+    ne = DOT_SQL.format(a="e.embedding", b="e.embedding")
     return f"""
 WITH {scored_cte},
 lexr AS (SELECT doc_id, CAST(rnk AS INTEGER) AS bm25_rank

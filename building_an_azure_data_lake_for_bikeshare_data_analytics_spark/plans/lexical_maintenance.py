@@ -42,12 +42,11 @@ Reference scope note: the reference notebook has no text surface at all
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType
 
+from ..functions.hashing import BATCH_FROM, SPLIT_SQL, batch_sql
 from ..functions.text import tokens
 from .base import _ts, query
-from .lakehouse import _BM25_B, _BM25_K1, _BM25_TERMS
-from .training import _HASH_SQL, _doc_hash
+from .lakehouse import _BM25_B, _BM25_K1, _BM25_TERMS, _bm25_parts
 
 
 #: token-prefix partition fan-out of the stored tf relation. The bucket
@@ -69,10 +68,10 @@ def _tok_bucket(term: str) -> int:
 
 def _hb_col() -> F.Column:
     """Doc-hash century (0..9): the dl store's partition key. The batch
-    predicate ``_doc_hash() >= 800`` is exactly ``hb IN (8, 9)``, so a
+    predicate (``hashing.batch_sql``) is exactly ``hb IN (8, 9)``, so a
     batch-side read of the stored doc-length table prunes to 2 of 10
     partition directories instead of scanning the O(corpus) table."""
-    return F.floor(_doc_hash() / F.lit(100)).cast("int")
+    return F.floor(F.expr(SPLIT_SQL.format(x="doc_id")) / F.lit(100)).cast("int")
 
 
 def index_rows(side):
@@ -120,29 +119,17 @@ def batch_bm25_from_tables(tf_all, dl_all):
     if "tok_bucket" in tf_all.columns:
         buckets = sorted({_tok_bucket(t) for t in _BM25_TERMS})
         tf = tf.where(F.col("tok_bucket").isin(*buckets))
-    batch_dl = dl_all.where(_doc_hash() >= 800)
+    batch_dl = dl_all.where(F.expr(batch_sql("doc_id")))
     if "hb" in dl_all.columns:
-        batch_dl = batch_dl.where(F.col("hb").isin(8, 9))
-    stats = dl_all.agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("len").alias("total_len")
-    )
-    dfreq = tf.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    avglen = F.col("total_len").cast("double") / F.col("nd")
-    idf = F.log(1 + (F.col("nd") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    tfpart = (F.col("f") * (_BM25_K1 + 1)) / (
-        F.col("f") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("len") / avglen)
-    )
+        batch_dl = batch_dl.where(F.col("hb").isin(*range(BATCH_FROM // 100, 10)))
+    stats, dfreq, score = _bm25_parts(tf, dl_all)
     scored = (
-        tf.where(_doc_hash() >= 800)
+        tf.where(F.expr(batch_sql("doc_id")))
         .join(F.broadcast(dfreq), "tok")
         .join(batch_dl.select("doc_id", "len"), "doc_id")
         .crossJoin(F.broadcast(stats))
         .groupBy("doc_id")
-        .agg(
-            F.sum(F.round(idf * tfpart, 6).cast(DecimalType(18, 6)))
-            .cast("double")
-            .alias("score")
-        )
+        .agg(score)
     )
     return (
         scored.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -176,7 +163,7 @@ scored AS (
   JOIN dfreq USING (tok)
   JOIN dl USING (doc_id)
   CROSS JOIN stats
-  WHERE {_HASH_SQL.replace("doc_id", "tf.doc_id")} >= 800
+  WHERE {batch_sql("tf.doc_id")}
   GROUP BY tf.doc_id)
 SELECT doc_id, round(score, 6) AS bm25
 FROM (SELECT *, row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
@@ -205,7 +192,7 @@ def q248(spark, sf):
 
     # _ts (r12): downstream index_rows_from_tokens tokenizes per row
     docs = _ts(spark, sf, "documents", "doc_id", "text")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     store = session_store(spark, "lex_index")
     tf_store, dl_store = store + "_tf", store + "_dl"
 

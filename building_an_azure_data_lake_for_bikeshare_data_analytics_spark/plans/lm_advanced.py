@@ -46,6 +46,14 @@ _KN_SCORED_CTE = r"""WITH tok AS (SELECT doc_id, string_split_regex(trim(text), 
                   FROM term GROUP BY doc_id)"""
 
 
+def _kn_scores(spark, sf):
+    """Per-doc Kneser-Ney scores of the documents under the model fit on
+    them: one checkpointed bigram pass feeds both the fit and the scoring
+    (the Spark side of ``_KN_SCORED_CTE``)."""
+    pairs = lm_pairs(_t(spark, sf, "documents")).localCheckpoint()
+    return lm_score_pairs_kn(pairs, *lm_fit_kn(pairs))
+
+
 @query(
     "q206_kneser_ney_lm_score",
     _KN_SCORED_CTE + "\n       SELECT doc_id, n_pairs, avg_logp_kn FROM scored",
@@ -73,10 +81,7 @@ def q206(spark, sf):
     relation (metadata-scale); scoring joins are keyed (w1,w2)/w1/w2 and
     ``nbig`` is the one whitelisted 1-row broadcast scalar. No driver
     state, no per-group sort — the petabyte n-gram-filter shape."""
-    d = _t(spark, sf, "documents")
-    pairs = lm_pairs(d).localCheckpoint()
-    bg, fw, bw, nb = lm_fit_kn(pairs)
-    return lm_score_pairs_kn(pairs, bg, fw, bw, nb)
+    return _kn_scores(spark, sf)
 
 
 @query(
@@ -122,13 +127,10 @@ def q209(spark, sf):
     extra vocab... doc-bounded rank (serial pass only over distinct
     coarse buckets) and a 1-row doc-count broadcast (whitelisted). No
     global sort, no all-pairs, nothing quadratic."""
-    d = _t(spark, sf, "documents")
-    pairs = lm_pairs(d).localCheckpoint()
-    bg, fw, bw, nb = lm_fit_kn(pairs)
     # three consumers (rank's bucket counts, its join-back, the n scalar)
     # — materialize once or the whole scoring join tree runs three times
     scored = (
-        lm_score_pairs_kn(pairs, bg, fw, bw, nb)
+        _kn_scores(spark, sf)
         .select("doc_id", "avg_logp_kn")
         .localCheckpoint()
     )

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .base import _ts, query
-from .extensions import _TOKS
+from ..functions.text import TOKENS_SQL
 from .packing import (
     _SEQ_CAP,
     _stage_ctes,
@@ -312,7 +312,7 @@ sp AS (
 pieces AS (
   SELECT k.step, k.slot, sp.shard, sp.seq_id, sp.doc_id, sp.n_span,
          array_to_string(
-             {_TOKS}[sp.doc_off + 1 : sp.doc_off + sp.n_span], ' ') AS piece
+             {TOKENS_SQL}[sp.doc_off + 1 : sp.doc_off + sp.n_span], ' ') AS piece
   FROM sp
   JOIN keys k ON sp.shard = k.shard AND sp.seq_id = k.seq_id
   JOIN documents d ON sp.doc_id = d.doc_id)

@@ -66,7 +66,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .base import _ts, query
-from .extensions import _TOKS
+from ..functions.text import TOKENS_SQL
 from .packing import (
     _NSHARDS,
     _PACKING_SQL,
@@ -379,7 +379,7 @@ sp AS (
 pieces AS (
   SELECT sp.shard, sp.seq_id, sp.doc_id, sp.n_span,
          array_to_string(
-             {_TOKS}[sp.doc_off + 1 : sp.doc_off + sp.n_span], ' ') AS piece
+             {TOKENS_SQL}[sp.doc_off + 1 : sp.doc_off + sp.n_span], ' ') AS piece
   FROM sp JOIN documents d ON sp.doc_id = d.doc_id)
 SELECT shard, seq_id,
        CAST(count(*) AS BIGINT) AS n_parts,

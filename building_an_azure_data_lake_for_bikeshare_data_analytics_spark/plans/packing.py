@@ -54,9 +54,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import token_count
+from ..functions.hashing import SPLIT_E6_SQL, batch_sql
+from ..functions.text import TOKENS_SQL, token_count
 from .base import _t, _ts, query
-from .extensions import _TOKS
 
 #: tokens per packed training sequence
 _SEQ_CAP = 256
@@ -73,13 +73,8 @@ def _w_col() -> F.Column:
     return (F.ascii(F.substring(F.col("source"), -1, 1)) % 3 + 1).cast("bigint")
 
 
-#: fine-grained deterministic doc hash on [0, 1e6) — the q41/_HASH_SQL
-#: split hash is 1000-granular; rates need e6 granularity
-_HASH6_SQL = "((doc_id % 99991) * 2654435761) % 1000000"
-
-
-def _hash6_col() -> F.Column:
-    return ((F.col("doc_id") % 99991) * F.lit(2654435761)) % F.lit(1_000_000)
+#: the e6 doc hash: the [0, 1000) split hash is too coarse for rates
+_HASH6_SQL = SPLIT_E6_SQL.format(x="doc_id")
 
 
 def _stage_ctes(src: str) -> str:
@@ -90,9 +85,9 @@ def _stage_ctes(src: str) -> str:
     return f"""t AS (
   SELECT doc_id,
          CAST(doc_id % {_NSHARDS} AS INTEGER) AS shard,
-         CAST(COALESCE(len({_TOKS}), 0) AS BIGINT) AS n_toks
+         CAST(COALESCE(len({TOKENS_SQL}), 0) AS BIGINT) AS n_toks
   FROM {src}
-  WHERE COALESCE(len({_TOKS}), 0) > 0),
+  WHERE COALESCE(len({TOKENS_SQL}), 0) > 0),
 c AS (
   SELECT shard, doc_id, n_toks,
          CAST(COALESCE(SUM(n_toks) OVER (PARTITION BY shard ORDER BY doc_id
@@ -292,7 +287,7 @@ def q253(spark, sf):
 #: mixture summary and the composed mix -> pack head (q257)
 _RATE_CTES = f"""tok AS (
   SELECT source, {_W_SQL} AS w,
-         CAST(SUM(len({_TOKS})) AS BIGINT) AS toks
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT) AS toks
   FROM documents GROUP BY source),
 g AS (SELECT SUM(w) AS sw, SUM(toks) AS st FROM tok),
 rate AS (
@@ -305,7 +300,7 @@ rate AS (
 _MIXTURE_SQL = f"""
 WITH {_RATE_CTES},
 kept AS (
-  SELECT d.source, len({_TOKS}) AS n_toks
+  SELECT d.source, len({TOKENS_SQL}) AS n_toks
   FROM documents d JOIN rate r ON d.source = r.source
   WHERE {_HASH6_SQL} < r.rate_e6)
 SELECT r.source,
@@ -354,7 +349,7 @@ def mixture_kept(docs):
     rate = mixture_rates(docs, None)
     return (
         docs.join(F.broadcast(rate), "source")
-        .where(_hash6_col() < F.col("rate_e6"))
+        .where(F.expr(_HASH6_SQL) < F.col("rate_e6"))
         .drop("rate_e6")
     )
 
@@ -369,7 +364,7 @@ def mixture_summary(docs, tok=None):
     rate = mixture_rates(docs, tok)
     kept = (
         d.join(F.broadcast(rate), "source")
-        .where(_hash6_col() < F.col("rate_e6"))
+        .where(F.expr(_HASH6_SQL) < F.col("rate_e6"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("n_tokens"))
     )
@@ -403,7 +398,7 @@ def q254(spark, sf):
 _REPETITION_SQL = f"""
 WITH tok AS (
   SELECT source, {_W_SQL} AS w,
-         CAST(SUM(len({_TOKS})) AS BIGINT) AS toks
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT) AS toks
   FROM documents GROUP BY source),
 g AS (SELECT SUM(w) AS sw FROM tok),
 plan AS (
@@ -416,7 +411,7 @@ rate AS (
          (target % toks) * 1000000 // toks AS rem_rate_e6
   FROM plan),
 rem AS (
-  SELECT d.source, len({_TOKS}) AS n_toks
+  SELECT d.source, len({TOKENS_SQL}) AS n_toks
   FROM documents d JOIN rate r ON d.source = r.source
   WHERE {_HASH6_SQL} < r.rem_rate_e6)
 SELECT r.source,
@@ -453,7 +448,7 @@ def repetition_plan(docs):
     )
     rem = (
         d.join(F.broadcast(rate), "source")
-        .where(_hash6_col() < F.col("rem_rate_e6"))
+        .where(F.expr(_HASH6_SQL) < F.col("rem_rate_e6"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs_rem"), F.sum("n_toks").alias("rem_toks"))
     )
@@ -509,10 +504,9 @@ def q256(spark, sf):
         write_version,
     )
     from .census_maintenance import _census_state, _merge_stats
-    from .training import _doc_hash
 
     docs = _ts(spark, sf, "documents", "doc_id", "source", "text", "n_chars")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     store = session_store(spark, "census_mix")
 
     # the q250 stats lifecycle: v1 corpus state, batch state merged in

@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
 from ..functions.hashing import h60
-from ..functions.text import normalized_text
+from ..functions.text import NORMALIZED_TEXT_SQL, normalized_text
 from ..sources.readers import load_star
 from .base import _t, _ts, query
 
@@ -669,15 +669,14 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
 _SNM_W = 3  # window size: each record pairs with the next w-1 in sort order
 _SNM_PREFIX = 40  # chars of normalized text fed to the verify distance
 _SNM_MAXDIST = 15  # candidate-pair acceptance threshold
-_SNM_NORM = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 
 
 # the SNM candidate-pair CTE chain, shared VERBATIM by the q177 oracle and
 # q185's triangle-count oracle (so the edge sets can never diverge)
 _SNM_PAIRS_CTE = f"""WITH d AS (
          SELECT doc_id, lang,
-                substr({_SNM_NORM}, 1, {_SNM_PREFIX}) AS prefix,
-                substr({_SNM_NORM}, 1, 1) AS blk
+                substr({NORMALIZED_TEXT_SQL}, 1, {_SNM_PREFIX}) AS prefix,
+                substr({NORMALIZED_TEXT_SQL}, 1, 1) AS blk
          FROM documents),
        w AS (
          SELECT doc_id, lang, blk, prefix,
@@ -1342,7 +1341,7 @@ _TFIDF_COS_MIN = 0.5  # emit pairs at or above this pruned-space cosine
 @query(
     "q186_tfidf_doc_pairs",
     f"""WITH d AS (
-         SELECT doc_id, string_split({_SNM_NORM}, ' ') AS ts
+         SELECT doc_id, string_split({NORMALIZED_TEXT_SQL}, ' ') AS ts
          FROM documents),
        toks AS (
          SELECT doc_id,
@@ -1821,6 +1820,16 @@ def q190(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _daily_counts_vs_mean(spark, sf):
+    """Daily event counts (day, n), each beside the mean count over all
+    days (mean_n, a broadcast 1-row scalar) — the series q191 and q195
+    both analyze."""
+    ev = _t(spark, sf, "events")
+    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
+    m = daily.agg((F.sum("n").cast("double") / F.count(F.lit(1))).alias("mean_n"))
+    return daily.crossJoin(F.broadcast(m))
+
+
 @query(
     "q191_cusum_changepoint",
     """WITH daily AS (
@@ -1855,19 +1864,13 @@ def q191(spark: SparkSession, sf: str) -> DataFrame:
     rounded to 6 and the running sum accumulates through an exact
     DECIMAL(18,6) window — order-independent, so the argmax cannot flip
     on an engine's window-accumulation strategy."""
-    ev = _t(spark, sf, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
-    m = daily.agg(
-        (F.sum("n").cast("double") / F.count(F.lit(1))).alias("mean_n")
-    )
     w = Window.orderBy("day")
     # each deviation rounds to 6 and accumulates through an exact decimal
     # window sum (the q175 discipline applied to the running sum) — a raw
     # double prefix sum would lean on both engines associating identically
     dev = F.round(F.col("n") - F.col("mean_n"), 6).cast(DecimalType(18, 6))
-    c = (
-        daily.crossJoin(F.broadcast(m))
-        .select("day", "n", F.sum(dev).over(w).cast("double").alias("cusum"))
+    c = _daily_counts_vs_mean(spark, sf).select(
+        "day", "n", F.sum(dev).over(w).cast("double").alias("cusum")
     )
     return (
         c.orderBy(F.abs(F.col("cusum")).desc(), "day")
@@ -2188,10 +2191,7 @@ def q195(spark: SparkSession, sf: str) -> DataFrame:
     shape: the fact-sized work is one (day) hash-agg; the lag join and
     both sums run over the BOUNDED day dimension (~2.4k rows x 7 lags) —
     the q171/q175/q191 bounded-window argument."""
-    ev = _t(spark, sf, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
-    m = daily.agg((F.sum("n").cast("double") / F.count(F.lit(1))).alias("mean_n"))
-    dev = daily.crossJoin(F.broadcast(m)).select(
+    dev = _daily_counts_vs_mean(spark, sf).select(
         "day", F.round(F.col("n") - F.col("mean_n"), 6).cast(DecimalType(18, 6)).alias("dv")
     ).localCheckpoint()  # three consumers: denominator + both join legs
     den = dev.agg(
@@ -2419,7 +2419,7 @@ def q198(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q200_source_overlap",
     f"""WITH d AS (
-         SELECT source, string_split({_SNM_NORM}, ' ') AS ts
+         SELECT source, string_split({NORMALIZED_TEXT_SQL}, ' ') AS ts
          FROM documents),
        sh AS (
          SELECT DISTINCT source,

@@ -22,12 +22,8 @@ from pyspark.sql.window import Window
 
 from ..functions.agg import exact_sum
 from ..functions.rank import exact_ntile
-from ..functions.text import normalized_text, tokens
+from ..functions.text import NORMALIZED_TEXT_SQL, STOPWORDS_IN_SQL, TOKENS_SQL, normalized_text, tokens
 from .base import _t, _ts, query
-
-# shared with extensions.py oracles: whitespace-collapsed lowercase text
-_NORM = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
-_TOKS = r"string_split_regex(trim(text), '\s+')"
 
 
 @query(
@@ -135,10 +131,10 @@ def q87(spark, sf):
 @query(
     "q88_repetition_ratio",
     f"""SELECT lang, count(*) AS n_docs,
-               CAST(sum(len({_TOKS})) AS BIGINT) AS total_tokens,
-               CAST(sum(len(list_distinct({_TOKS}))) AS BIGINT) AS distinct_tokens,
-               round(1.0 - sum(len(list_distinct({_TOKS}))) * 1.0
-                         / sum(len({_TOKS})), 6) AS dup_ratio
+               CAST(sum(len({TOKENS_SQL})) AS BIGINT) AS total_tokens,
+               CAST(sum(len(list_distinct({TOKENS_SQL}))) AS BIGINT) AS distinct_tokens,
+               round(1.0 - sum(len(list_distinct({TOKENS_SQL}))) * 1.0
+                         / sum(len({TOKENS_SQL})), 6) AS dup_ratio
         FROM documents GROUP BY 1 ORDER BY lang""",
     tags=("quality", "text", "repetition"),
 )
@@ -211,8 +207,8 @@ def q89(spark, sf):
 @query(
     "q90_edit_distance_pairs",
     f"""WITH d AS (SELECT doc_id, lang,
-                         substr({_NORM}, 1, 40) AS prefix,
-                         substr({_NORM}, 1, 12) AS block
+                         substr({NORMALIZED_TEXT_SQL}, 1, 40) AS prefix,
+                         substr({NORMALIZED_TEXT_SQL}, 1, 12) AS block
                   FROM documents)
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                CAST(levenshtein(a.prefix, b.prefix) AS INTEGER) AS dist
@@ -294,10 +290,10 @@ def q91(spark, sf):
 
 @query(
     "q92_first_stopword_position",
-    f"""WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
+    f"""WITH tok AS (SELECT doc_id, {TOKENS_SQL} AS ts FROM documents),
          p AS (SELECT doc_id, unnest(range(1, len(ts) + 1)) AS i, ts FROM tok),
          f AS (SELECT doc_id, CAST(min(i - 1) AS INTEGER) AS first_stop_pos
-               FROM p WHERE ts[i] IN ('the', 'a', 'of', 'and') GROUP BY 1)
+               FROM p WHERE ts[i] IN ({STOPWORDS_IN_SQL}) GROUP BY 1)
         SELECT first_stop_pos, count(*) AS n_docs
         FROM f GROUP BY 1 ORDER BY first_stop_pos""",
     tags=("quality", "posexplode", "generator"),

@@ -22,10 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
 from ..functions.rank import fractional_rank2
-from ..functions.text import STOPWORDS, marker_count, tokens
+from ..functions.text import STOPWORDS, STOPWORDS_IN_SQL, marker_count, tokens
 from .base import _ts, query
 
-_STOPS_IN = ", ".join(f"'{s}'" for s in STOPWORDS)
 
 _DEC38 = DecimalType(38, 0)
 
@@ -33,7 +32,7 @@ _DEC38 = DecimalType(38, 0)
 @query(
     "q210_score_length_bias",
     rf"""WITH s AS (
-         SELECT round(len(list_filter(ts, t -> t IN ({_STOPS_IN}))) / len(ts), 4)
+         SELECT round(len(list_filter(ts, t -> t IN ({STOPWORDS_IN_SQL}))) / len(ts), 4)
                     AS x,
                 n_chars AS y
          FROM (SELECT text, n_chars,

@@ -37,13 +37,12 @@ extension set.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from ..functions.hashing import batch_sql
 from ..functions.text import tokens
 from .base import _ts, query
 from .extensions import _SHINGLES_SQL
-from .training import _HASH_SQL, _doc_hash
-
-_HASH_A = _HASH_SQL.replace("doc_id", "doc_a")
-_HASH_B = _HASH_SQL.replace("doc_id", "doc_b")
 
 _CROSS_SQL = f"""WITH {_SHINGLES_SQL},
          sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -57,7 +56,7 @@ _CROSS_SQL = f"""WITH {_SHINGLES_SQL},
         JOIN sizes sa ON doc_a = sa.doc_id
         JOIN sizes sb ON doc_b = sb.doc_id
         WHERE inter / (sa.n + sb.n - inter) >= 0.5
-          AND ({_HASH_A} >= 800) <> ({_HASH_B} >= 800)
+          AND ({batch_sql('doc_a')}) <> ({batch_sql('doc_b')})
         ORDER BY doc_a, doc_b"""
 
 
@@ -94,7 +93,7 @@ def q245(spark, sf):
     # one shingle relation feeds signature build AND the exact verify —
     # the same shared-relation discipline as q239
     sh_all = shingle_sets(docs, 3).localCheckpoint(storageLevel=_CKPT_LEVEL)
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
 
     # 1) v1: the corpus side's signatures, stored with the index and
     #    hive-partitioned by band: each band's probe task reads exactly

@@ -22,33 +22,33 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.hashing import PRIME_E6, SPLIT_E6_SQL
+from ..functions.text import TOKENS_SQL, tokens
 from .base import _ts, query
-from .extensions import _TOKS
 
 #: fraction of docs FIM-transformed, in 1e-6 units against the e6 doc
 #: hash (the q254 mixture-rate granularity): 500000 = half the corpus
 _FIM_RATE_E6 = 500_000
-#: deterministic doc hash on [0, 1e6) — packing's _HASH6 formulation
-_H6_SQL = "((doc_id % 99991) * 2654435761) % 1000000"
+#: FIM selection: the e6 doc hash below the rate
+_FIM_PRED = f"{SPLIT_E6_SQL.format(x='doc_id')} < {_FIM_RATE_E6}"
 #: pivot mixers (distinct odd constants so p1/p2 decorrelate)
 _Q1, _Q2 = 2246822519, 3266489917
 
 _FIM_SQL = f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS ts,
-         CAST(COALESCE(len({_TOKS}), 0) AS BIGINT) AS n_toks,
-         {_H6_SQL} < {_FIM_RATE_E6} AS fim
+  SELECT doc_id, {TOKENS_SQL} AS ts,
+         CAST(COALESCE(len({TOKENS_SQL}), 0) AS BIGINT) AS n_toks,
+         {_FIM_PRED} AS fim
   FROM documents
-  WHERE COALESCE(len({_TOKS}), 0) > 0),
+  WHERE COALESCE(len({TOKENS_SQL}), 0) > 0),
 p AS (
   SELECT doc_id, ts, n_toks, fim,
-         CAST((((doc_id % 99991) * {_Q1}) % 99991) % (n_toks + 1)
+         CAST((((doc_id % {PRIME_E6}) * {_Q1}) % {PRIME_E6}) % (n_toks + 1)
               AS BIGINT) AS p1
   FROM t),
 pp AS (
   SELECT doc_id, ts, n_toks, fim, p1,
-         p1 + CAST((((doc_id % 99991) * {_Q2}) % 99991)
+         p1 + CAST((((doc_id % {PRIME_E6}) * {_Q2}) % {PRIME_E6})
                    % (n_toks - p1 + 1) AS BIGINT) AS p2
   FROM p)
 SELECT doc_id, n_toks,
@@ -69,26 +69,25 @@ def fim_transform(docs):
     tokenized doc — (doc_id, n_toks, fim, p1, p2, out_md5), where
     ``out_md5`` fingerprints the emitted token stream (PSM layout for
     transformed docs, the original stream for pass-through). Pivots:
-    ``p1 = mix1(doc_id % 99991) % (n+1)``, ``p2 = p1 + mix2(doc_id %
-    99991) % (n-p1+1)`` (doc_id modded before the mixer so the product
-    never overflows int64 at corpus-scale ids)
+    ``p1 = mix1(doc_id % p) % (n+1)``, ``p2 = p1 + mix2(doc_id % p) %
+    (n-p1+1)`` with ``p = PRIME_E6`` (doc_id modded before the mixer so
+    the product never overflows int64 at corpus-scale ids)
     — every split of the token range (including empty prefix/middle/
     suffix) is reachable, and both are pure functions of doc_id."""
-    h6 = ((F.col("doc_id") % 99991) * F.lit(2654435761)) % F.lit(1_000_000)
     t = docs.select(
         "doc_id",
         tokens("text").alias("ts"),
         F.size(tokens("text")).cast("bigint").alias("n_toks"),
-        (h6 < F.lit(_FIM_RATE_E6)).alias("fim"),
+        F.expr(_FIM_PRED).alias("fim"),
     ).where(F.col("n_toks") > 0)
-    # mod doc_id FIRST (the _HASH6 posture): a bare doc_id * mixer
+    # mod doc_id FIRST (the split hash's posture): a bare doc_id * mixer
     # overflows int64 past doc_id ~4e9 — a crash under ANSI at corpus
     # scale, silent wrap otherwise
-    p1 = (((F.col("doc_id") % 99991) * F.lit(_Q1)) % 99991) % (
+    p1 = (((F.col("doc_id") % PRIME_E6) * F.lit(_Q1)) % PRIME_E6) % (
         F.col("n_toks") + 1
     )
     t = t.withColumn("p1", p1.cast("bigint"))
-    p2 = F.col("p1") + (((F.col("doc_id") % 99991) * F.lit(_Q2)) % 99991) % (
+    p2 = F.col("p1") + (((F.col("doc_id") % PRIME_E6) * F.lit(_Q2)) % PRIME_E6) % (
         F.col("n_toks") - F.col("p1") + 1
     )
     t = t.withColumn("p2", p2.cast("bigint"))
@@ -159,7 +158,7 @@ def _ul2_sql() -> str:
         b = f"((({j} + 1) * n_toks) // k)"
         w = f"({b} - {a})"
         L = f"GREATEST(1, ({w} * {_UL2_PCT}) // 100)"
-        m0 = f"({a} + ((doc_id % 99991) * {_Q1} + {j} * {_Q3}) % 99991 % ({w} - {L} + 1))"
+        m0 = f"({a} + ((doc_id % {PRIME_E6}) * {_Q1} + {j} * {_Q3}) % {PRIME_E6} % ({w} - {L} + 1))"
         m1 = f"({m0} + {L})"
         return a, b, L, m0, m1
 
@@ -179,10 +178,10 @@ def _ul2_sql() -> str:
         masked.append(f"CASE WHEN k > {j} THEN {L} ELSE 0 END")
     return f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS ts,
-         CAST(COALESCE(len({_TOKS}), 0) AS BIGINT) AS n_toks
+  SELECT doc_id, {TOKENS_SQL} AS ts,
+         CAST(COALESCE(len({TOKENS_SQL}), 0) AS BIGINT) AS n_toks
   FROM documents
-  WHERE COALESCE(len({_TOKS}), 0) > 0),
+  WHERE COALESCE(len({TOKENS_SQL}), 0) > 0),
 tk AS (
   SELECT doc_id, ts, n_toks,
          LEAST({_UL2_MAX_K}, GREATEST(1, n_toks // 8)) AS k
@@ -221,7 +220,7 @@ def ul2_denoise(docs):
         b = ((F.lit(j) + 1) * n / F.col("k")).cast("bigint")
         w = b - a
         L = F.greatest(F.lit(1), (w * _UL2_PCT / 100).cast("bigint"))
-        mix = ((F.col("doc_id") % 99991) * F.lit(_Q1) + F.lit(j) * F.lit(_Q3)) % 99991
+        mix = ((F.col("doc_id") % PRIME_E6) * F.lit(_Q1) + F.lit(j) * F.lit(_Q3)) % PRIME_E6
         m0 = a + mix % (w - L + 1)
         return a, b, L, m0, m0 + L
 

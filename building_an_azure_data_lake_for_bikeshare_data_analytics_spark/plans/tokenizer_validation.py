@@ -28,10 +28,7 @@ from pyspark.sql import functions as F
 
 from .base import _t, _ts, query
 from .curation import _bpe_fit_ctes
-from ..operators.bpe import L as _L, R as _R
-
-#: the encodable-alphabet contract shared with the fit (operators/bpe.py)
-_ALPHA_RE = "^[a-z0-9]+$"
+from ..operators.bpe import ALPHA_RE, L as _L, R as _R
 
 _ENC_SQL = (
     "".join("replace(" for _ in range(8))
@@ -52,7 +49,7 @@ _ROUNDTRIP_SQL = rf"""WITH {_bpe_fit_ctes()},
       WHERE word <> ''),
     enc AS (
       SELECT source, word,
-             regexp_matches(word, '{_ALPHA_RE}') AS encodable,
+             regexp_matches(word, '{ALPHA_RE}') AS encodable,
              {_ENC_SQL} AS s
       FROM words),
     scored AS (

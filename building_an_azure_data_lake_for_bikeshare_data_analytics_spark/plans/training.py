@@ -29,24 +29,13 @@ from pyspark.sql.window import Window
 from ..functions.agg import exact_sum
 from ..functions.text import EMAIL_RE, PHONE_RE, redact_pii, token_count, tokens, word_shingles
 from ..operators.graph import connected_components
-from ..functions.hashing import h60
+from ..functions.hashing import BATCH_FROM, SPLIT_SQL, VAL_BELOW, batch_sql, h60, split_case_sql
 from .base import _t, _ts, query
 from .extensions import _SHINGLES_SQL
 
-# toy multiplicative hash (Knuth 2654435761), mod-reduced first so the
-# product stays far inside int64 under Spark 4's ANSI overflow checking
-_HASH_SQL = "((doc_id % 100003) * 2654435761) % 1000"
-
-
-def _doc_hash() -> F.Column:
-    return ((F.col("doc_id") % 100003) * F.lit(2654435761)) % 1000
-
-
 @query(
     "q71_hash_split",
-    f"""SELECT CASE WHEN {_HASH_SQL} < 800 THEN 'train'
-                    WHEN {_HASH_SQL} < 900 THEN 'val'
-                    ELSE 'test' END AS split,
+    f"""SELECT {split_case_sql("doc_id", 20)} AS split,
                count(*) AS n_docs,
                CAST(sum(n_chars) AS BIGINT) AS sum_chars
         FROM documents GROUP BY 1 ORDER BY split""",
@@ -60,13 +49,9 @@ def q71(spark, sf):
     across splits (unlike ``df.randomSplit``, which is seed- and
     partitioning-dependent). Scale shape: a map-only projection + one
     3-group aggregate."""
-    h = _doc_hash()
-    split = (
-        F.when(h < 800, F.lit("train")).when(h < 900, F.lit("val")).otherwise(F.lit("test"))
-    )
     return (
         _t(spark, sf, "documents")
-        .select(split.alias("split"), "n_chars")
+        .select(F.expr(split_case_sql("doc_id", 0)).alias("split"), "n_chars")
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
         .orderBy("split")
@@ -77,7 +62,7 @@ def q71(spark, sf):
     "q72_stratified_sample",
     f"""SELECT lang, count(*) AS n_sampled, CAST(sum(n_chars) AS BIGINT) AS sum_chars
         FROM documents
-        WHERE {_HASH_SQL} < CASE WHEN lang = 'en' THEN 200 ELSE 600 END
+        WHERE {SPLIT_SQL.format(x="doc_id")} < CASE WHEN lang = 'en' THEN 200 ELSE 600 END
         GROUP BY 1 ORDER BY lang""",
     tags=("training", "sample", "stratified"),
 )
@@ -90,7 +75,7 @@ def q72(spark, sf):
     rate = F.when(F.col("lang") == "en", 200).otherwise(600)
     return (
         _t(spark, sf, "documents")
-        .where(_doc_hash() < rate)
+        .where(F.expr(SPLIT_SQL.format(x="doc_id")) < rate)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_sampled"), F.sum("n_chars").alias("sum_chars"))
         .orderBy("lang")
@@ -665,13 +650,13 @@ def q102(spark, sf):
     # exhaustive cross-set oracle (same shape as q98's): a green row
     # certifies the banded cross-side candidate stage lost no >=0.5 pair
     f"""WITH {_SHINGLES_SQL},
-         hsplit AS (SELECT doc_id, {_HASH_SQL} AS hh FROM documents),
+         hsplit AS (SELECT doc_id, {SPLIT_SQL.format(x="doc_id")} AS hh FROM documents),
          sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
          inter AS (SELECT a.doc_id AS ca, b.doc_id AS nb, count(*) AS i
                    FROM sh a JOIN hsplit ha ON a.doc_id = ha.doc_id
                         JOIN sh b ON a.shingle = b.shingle
                         JOIN hsplit hb ON b.doc_id = hb.doc_id
-                   WHERE ha.hh < 800 AND hb.hh >= 800
+                   WHERE ha.hh < {BATCH_FROM} AND hb.hh >= {BATCH_FROM}
                    GROUP BY 1, 2),
          dropped AS (SELECT DISTINCT nb FROM inter
                      JOIN sizes sa ON ca = sa.doc_id
@@ -679,7 +664,7 @@ def q102(spark, sf):
                      WHERE i / (sa.n + sb.n - i) >= 0.5)
         SELECT d.doc_id, CAST(s.n AS INTEGER) AS n_shingles
         FROM hsplit d JOIN sizes s ON d.doc_id = s.doc_id
-        WHERE d.hh >= 800 AND d.doc_id NOT IN (SELECT nb FROM dropped)""",
+        WHERE d.hh >= {BATCH_FROM} AND d.doc_id NOT IN (SELECT nb FROM dropped)""",
     tags=("training", "dedup", "incremental", "lsh"),
 )
 def q103(spark, sf):
@@ -704,7 +689,7 @@ def q103(spark, sf):
     docs = _t(spark, sf, "documents").select("doc_id", tokens("text").alias("ts"))
     return incremental_near_dedup(
         docs,
-        _doc_hash() >= 800,
+        F.expr(batch_sql("doc_id")),
         threshold=0.5,
         corpus_banded=corpus_signatures(spark, sf),
     )
@@ -1001,9 +986,9 @@ def q112(spark, sf):
          g AS (SELECT d.doc_id, d.n_chars,
                       coalesce(c.component_id, d.doc_id) AS gid
                FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         s AS (SELECT *, CASE WHEN ((gid % 100003) * 2654435761) % 1000 < 800
+         s AS (SELECT *, CASE WHEN {SPLIT_SQL.format(x="gid")} < {BATCH_FROM}
                               THEN 'train'
-                              WHEN ((gid % 100003) * 2654435761) % 1000 < 900
+                              WHEN {SPLIT_SQL.format(x="gid")} < {VAL_BELOW}
                               THEN 'val' ELSE 'test' END AS split
                FROM g)
         SELECT split, count(*) AS n_docs, count(DISTINCT gid) AS n_groups,
@@ -1031,10 +1016,7 @@ def q113(spark, sf):
     docs = _t(spark, sf, "documents").select("doc_id", "n_chars")
     comps = dup_components(spark, sf)
     gid = F.coalesce(F.col("comp"), F.col("doc_id"))
-    h = ((gid % 100003) * F.lit(2654435761)) % 1000
-    split = (
-        F.when(h < 800, F.lit("train")).when(h < 900, F.lit("val")).otherwise(F.lit("test"))
-    )
+    split = F.expr(split_case_sql("coalesce(comp, doc_id)", 0))
     return (
         docs.select("doc_id", "n_chars")
         # broadcast: comps holds only docs that belong to a dup group (tiny

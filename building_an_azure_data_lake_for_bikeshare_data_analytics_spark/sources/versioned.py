@@ -171,6 +171,36 @@ def current_version(path: str) -> int | None:
         return int(f.read().strip())
 
 
+def _write_staged(df: DataFrame, target: str, partition_by: list[str] | None) -> None:
+    """Materialize ``df`` as parquet at ``target``, a staging directory or
+    delta part that no version references yet. A write that raises
+    removes ``target``, so a failed write leaves the store as it was.
+
+    A partitioned write takes a REBALANCE on its keys first (r12
+    hash-distribute, upgraded r13 to the AQE rebalance — the guide §6
+    "REBALANCE hint before the write"): without any distribution every
+    write task emits one file per partition key it holds, so file count
+    scales as tasks x keys — the r12 scan fanout turned a ~4-task x
+    16-band signature write into 32 x 16 = 512 tiny files per version.
+    The r12 plain ``repartition(*keys)`` fixed the file count but pinned
+    the write at the static shuffle-partition count (32 near-empty write
+    tasks per store version at local[32] — q252's profile); REBALANCE
+    keys the same exchange but lets AQE size the write stage from the
+    actual bytes: batch-sized appends coalesce to a task or two, and at
+    deployment scale a skewed partition key is SPLIT across tasks instead
+    of serializing its whole directory into one (splits only add files
+    per directory, never move rows across directories, so partition
+    pruning is unchanged)."""
+    w = df.write
+    if partition_by:
+        w = df.hint("rebalance", *partition_by).write.partitionBy(*partition_by)
+    try:
+        w.mode("overwrite").parquet(target)
+    except BaseException:
+        shutil.rmtree(target, ignore_errors=True)
+        raise
+
+
 def write_version(
     df: DataFrame,
     path: str,
@@ -195,28 +225,7 @@ def write_version(
     os.makedirs(path, exist_ok=True)
     base = current_version(path) if expected_base is _UNSET else expected_base
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
-    if partition_by:
-        # REBALANCE on the partition keys before a partitioned write
-        # (r12 hash-distribute, upgraded r13 to the AQE rebalance — the
-        # guide §6 "REBALANCE hint before the write"): without any
-        # distribution every write task emits one file per partition key
-        # it holds, so file count scales as tasks x keys — the r12 scan
-        # fanout turned a ~4-task x 16-band signature write into
-        # 32 x 16 = 512 tiny files per version. The r12 plain
-        # ``repartition(*keys)`` fixed the file count but pinned the
-        # write at the static shuffle-partition count (32 near-empty
-        # write tasks per store version at local[32] — q252's profile);
-        # REBALANCE keys the same exchange but lets AQE size the write
-        # stage from the actual bytes: batch-sized appends coalesce to a
-        # task or two, and at deployment scale a skewed partition key is
-        # SPLIT across tasks instead of serializing its whole directory
-        # into one (splits only add files per directory, never move rows
-        # across directories, so partition pruning is unchanged).
-        df = df.hint("rebalance", *partition_by)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
+    _write_staged(df, staging, partition_by)
     with writer_lock(path):
         cur = current_version(path)
         if cur != base:
@@ -306,14 +315,7 @@ def append_version(
     # unique part name: concurrent appends must not clobber each other's
     # data directories (both would otherwise guess the same p<k+1>)
     part_rel = os.path.join(_PARTS_DIR, f"p{cur + 1}_{uuid.uuid4().hex[:8]}")
-    if partition_by:
-        # same keyed REBALANCE as write_version (r13): bound the delta
-        # part's file count while letting AQE size the write stage
-        df = df.hint("rebalance", *partition_by)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(path, part_rel))
+    _write_staged(df, os.path.join(path, part_rel), partition_by)
     return _commit_append(path, part_rel, df, allow_new_columns, cur, expected_base)
 
 

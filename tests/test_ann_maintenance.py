@@ -14,14 +14,12 @@ from __future__ import annotations
 
 import duckdb
 
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import batch_sql, corpus_sql
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.similarity import (
     assign_cells,
     ivf_topk,
     ivf_topk_from_index,
     kmeans_fit,
-)
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-    _vec_hash,
 )
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
     ORACLES,
@@ -41,7 +39,7 @@ def _emb(spark):
 
 
 def _queries(emb):
-    return emb.where((_vec_hash() >= 800) & (F.col("vec_id") % 5 == 0)).select(
+    return emb.where(F.expr(batch_sql("vec_id")) & (F.col("vec_id") % 5 == 0)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
 
@@ -52,8 +50,8 @@ def test_stored_index_path_equals_recompute_path(spark):
     cell assignment is deterministic per vector, so the maintained table
     IS the recomputed one."""
     emb = _emb(spark)
-    corpus = emb.where(_vec_hash() < 800)
-    batch = emb.where(_vec_hash() >= 800)
+    corpus = emb.where(F.expr(corpus_sql("vec_id")))
+    batch = emb.where(F.expr(batch_sql("vec_id")))
     cents = kmeans_fit(corpus, k=8, max_iter=8)
     qs = _queries(emb)
 
@@ -104,7 +102,7 @@ def test_q246_store_lifecycle(spark):
     store = session_store(spark, "ann_index")
     emb = _emb(spark)
     n_all = emb.count()
-    n_corpus = emb.where(_vec_hash() < 800).count()
+    n_corpus = emb.where(F.expr(corpus_sql("vec_id"))).count()
 
     v1 = read_version(spark, store, current_version(store) - 1)
     cur = read_current(spark, store)
@@ -112,7 +110,7 @@ def test_q246_store_lifecycle(spark):
     assert cur.count() == n_all
     assert cur.select("vec_id").distinct().count() == n_all
     batch_ids = {
-        r["vec_id"] for r in emb.where(_vec_hash() >= 800).select("vec_id").collect()
+        r["vec_id"] for r in emb.where(F.expr(batch_sql("vec_id"))).select("vec_id").collect()
     }
     v1_ids = {r["vec_id"] for r in v1.select("vec_id").collect()}
     assert not (v1_ids & batch_ids)
@@ -131,8 +129,8 @@ def test_vectorized_index_probe_equals_fold(spark):
     )
 
     emb = _emb(spark)
-    corpus = emb.where(_vec_hash() < 800)
-    batch = emb.where(_vec_hash() >= 800)
+    corpus = emb.where(F.expr(corpus_sql("vec_id")))
+    batch = emb.where(F.expr(batch_sql("vec_id")))
     cents = kmeans_fit(corpus, k=8, max_iter=8)
     cells = assign_cells(corpus, cents).unionByName(assign_cells(batch, cents))
     qs = _queries(emb)
@@ -166,8 +164,8 @@ def test_q247_stored_codes_equal_recompute(spark):
     )
 
     emb = _emb(spark)
-    corpus = emb.where(_vec_hash() < 800)
-    batch = emb.where(_vec_hash() >= 800)
+    corpus = emb.where(F.expr(corpus_sql("vec_id")))
+    batch = emb.where(F.expr(batch_sql("vec_id")))
     cents = kmeans_fit(corpus, k=8, max_iter=8)
     books = pq_fit(corpus, m=4, ksub=8, max_iter=4)
     qs = _queries(emb)
@@ -206,8 +204,8 @@ def test_vectorized_pq_index_probe_equals_fold(spark):
     )
 
     emb = _emb(spark)
-    corpus = emb.where(_vec_hash() < 800)
-    batch = emb.where(_vec_hash() >= 800)
+    corpus = emb.where(F.expr(corpus_sql("vec_id")))
+    batch = emb.where(F.expr(batch_sql("vec_id")))
     cents = kmeans_fit(corpus, k=8, max_iter=8)
     books = pq_fit(corpus, m=4, ksub=8, max_iter=4)
     qs = _queries(emb)
@@ -263,7 +261,7 @@ def test_q247_store_lifecycle(spark):
     store = session_store(spark, "annpq_index")
     emb = _emb(spark)
     n_all = emb.count()
-    n_corpus = emb.where(_vec_hash() < 800).count()
+    n_corpus = emb.where(F.expr(corpus_sql("vec_id"))).count()
 
     v1 = read_version(spark, store, current_version(store) - 1)
     cur = read_current(spark, store)
@@ -271,7 +269,7 @@ def test_q247_store_lifecycle(spark):
     assert cur.count() == n_all
     assert cur.where(F.size("code") != 4).count() == 0
     batch_ids = {
-        r["vec_id"] for r in emb.where(_vec_hash() >= 800).select("vec_id").collect()
+        r["vec_id"] for r in emb.where(F.expr(batch_sql("vec_id"))).select("vec_id").collect()
     }
     assert not ({r["vec_id"] for r in v1.select("vec_id").collect()} & batch_ids)
     books = read_current(spark, store + "_codebooks")

@@ -14,7 +14,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import h60
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import batch_sql, h60
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import tokens
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.decontamination import (
     BENCHMARKS,
@@ -23,9 +23,6 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.decont
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
     ORACLES,
     QUERIES,
-)
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
-    _doc_hash,
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -87,7 +84,7 @@ def test_q249_probes_batch_only(spark):
     d = _docs(spark)
     batch_counts = {
         r["source"]: r["n"]
-        for r in d.where(_doc_hash() >= 800)
+        for r in d.where(F.expr(batch_sql("doc_id")))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -121,7 +118,7 @@ def test_q250_kmv_merge_identity(spark):
     )
 
     docs = _docs(spark).select("doc_id", "source", "text", "n_chars")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     _, kmv_corpus = _census_state(docs.where(~is_new))
     _, kmv_batch = _census_state(docs.where(is_new))
     _, kmv_full = _census_state(docs)
@@ -141,7 +138,7 @@ def test_q250_stats_merge_identity(spark):
     )
 
     docs = _docs(spark).select("doc_id", "source", "text", "n_chars")
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     s_corpus, _ = _census_state(docs.where(~is_new))
     s_batch, _ = _census_state(docs.where(is_new))
     s_full, _ = _census_state(docs)

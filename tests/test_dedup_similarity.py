@@ -2,6 +2,7 @@
 duplicate structure (the sf0.01 documents table has no exact dups, so we
 construct our own)."""
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -378,3 +379,41 @@ def test_containment_nonbinary_threshold(spark):
         for r in prefix_filter_containment_pairs(docs, threshold=0.7).collect()
     }
     assert got == _containment_truth(docs, 0.7) and got
+
+
+_ZERO_VEC = 99
+
+_DEDUP_KERNELS = {
+    "lsh_dup_pairs": lambda S, emb: S.lsh_dup_pairs(emb, S.hyperplanes(8, 64), threshold=0.45, bands=2),
+    "semantic_dedup_cells": lambda S, emb: S.semantic_dedup_cells(emb, S.kmeans_fit(emb, k=4), threshold=0.45),
+    "blocked_dup_pairs_vectorized": lambda S, emb: S.blocked_dup_pairs_vectorized(
+        emb, threshold=0.45, block_col="label"
+    ),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_DEDUP_KERNELS))
+def test_dedup_kernels_zero_norm_contract(spark, kernel):
+    """A zero vector has no cosine: the dedup kernels neither fail on one
+    (ANSI division by a zero norm) nor name it in any output row, and
+    still find the planted duplicates around it. Fixture: 31 small-integer
+    64-d vectors, exact copies of the first 8 (ids 31..38), one zero
+    vector."""
+    import numpy as np
+
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators import similarity as S
+
+    base = np.random.RandomState(7).randint(-3, 4, size=(31, 64)).astype(float)
+    vecs = list(base) + list(base[:8]) + [np.zeros(64)]
+    ids = list(range(39)) + [_ZERO_VEC]
+    emb = spark.createDataFrame(
+        [(i, "x", [float(x) for x in v]) for i, v in zip(ids, vecs)],
+        "vec_id long, label string, embedding array<float>",
+    )
+    rows = _DEDUP_KERNELS[kernel](S, emb).collect()
+    if kernel == "semantic_dedup_cells":
+        assert _ZERO_VEC not in {r["vec_id"] for r in rows}
+        assert {r["vec_id"] for r in rows if r["kept"] == 0} >= set(range(31, 39))
+    else:
+        assert not [r for r in rows if _ZERO_VEC in (r["vec_a"], r["vec_b"])]
+        assert {(r["vec_a"], r["vec_b"]) for r in rows} >= {(i, 31 + i) for i in range(8)}

@@ -92,11 +92,9 @@ def test_q248_store_lifecycle(spark):
     current == from-scratch tokenization by row count."""
     from pyspark.sql import functions as F
 
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import corpus_sql
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import (
         tokens,
-    )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
-        _doc_hash,
     )
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources.versioned import (
         current_version,
@@ -109,7 +107,7 @@ def test_q248_store_lifecycle(spark):
     dl_store = session_store(spark, "lex_index") + "_dl"
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     n_all = docs.count()
-    n_corpus = docs.where(_doc_hash() < 800).count()
+    n_corpus = docs.where(F.expr(corpus_sql("doc_id"))).count()
 
     v1 = read_version(spark, dl_store, current_version(dl_store) - 1)
     cur = read_current(spark, dl_store)

@@ -5,17 +5,15 @@ steps still reads back exactly the from-scratch artifact — the property
 that makes the maintained indexes correct on day 300, not just day 2.
 
 Tranches are cut by the same doc-hash arithmetic the heads use
-(plans/training._HASH_SQL): t1 = hash < 600, t2 = 600..799, t3 = >= 800.
+(functions/hashing.SPLIT_SQL): t1 = hash < 600, t2 = 600..799, t3 = >= 800.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import SPLIT_SQL
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import tokens
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
-    _doc_hash,
-)
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.sources import versioned as V
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -26,7 +24,7 @@ def _docs(spark):
 
 
 def _tranches(df):
-    h = _doc_hash()
+    h = F.expr(SPLIT_SQL.format(x="doc_id"))
     return df.where(h < 600), df.where((h >= 600) & (h < 800)), df.where(h >= 800)
 
 
@@ -71,7 +69,7 @@ def test_signature_table_three_batch_chain(spark, tmp_path):
 
     docs = _docs(spark).select("doc_id", tokens("text").alias("ts"))
     sh = shingle_sets(docs, 3).localCheckpoint()
-    h = _doc_hash()
+    h = F.expr(SPLIT_SQL.format(x="doc_id"))
     p = str(tmp_path / "sig")
 
     V.write_version(banded_signature_table(shingles=sh.where(h < 600)), p)
@@ -122,15 +120,12 @@ def test_pq_code_table_three_batch_chain(spark, tmp_path):
         kmeans_fit,
         pq_fit,
     )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.ann_maintenance import (
-        _vec_hash,
-    )
 
     emb = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
         .select("vec_id", "embedding")
     )
-    h = _vec_hash()
+    h = F.expr(SPLIT_SQL.format(x="vec_id"))
     t1, t2, t3 = emb.where(h < 600), emb.where((h >= 600) & (h < 800)), emb.where(h >= 800)
     cents = kmeans_fit(t1, k=8, max_iter=8)
     books = pq_fit(t1, m=4, ksub=8, max_iter=4)

@@ -415,17 +415,22 @@ def test_salted_band_join_salt_in_join_keys(spark):
 
 
 def test_span_and_doc_hash_splits_identical():
-    """q139's span-level incremental pass claims to partition the corpus
-    identically to q103's doc-level pass — the two hash-split SQL strings
-    live in different modules and must never drift."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.extensions import (
-        _INC_HASH,
+    """q139's span-level incremental pass partitions the corpus exactly
+    as q103's doc-level pass does: both registered oracles split on the
+    one hash template at the one batch boundary."""
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import (
+        BATCH_FROM,
+        SPLIT_SQL,
+        batch_sql,
     )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
-        _HASH_SQL,
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
+        ORACLES,
     )
 
-    assert _INC_HASH == _HASH_SQL
+    q103, q139 = ORACLES["q103_incremental_dedup"], ORACLES["q139_incremental_span_dedup"]
+    assert f"{SPLIT_SQL.format(x='doc_id')} AS hh" in q103
+    assert f"hb.hh >= {BATCH_FROM}" in q103
+    assert f"{batch_sql('doc_id')} AS is_new" in q139
 
 
 def test_gate_prefix_contract():

@@ -559,8 +559,8 @@ def test_q242_ladder_fingerprints_agree_on_edge_docs(spark):
     from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.corpus_health import (
         _TOKSET_SQL,
     )
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.extensions import (
-        _NORM,
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import (
+        NORMALIZED_TEXT_SQL as _NORM,
     )
 
     sdf, con = _edge_frames(spark)
@@ -591,8 +591,8 @@ def test_q243_first_occurrence_tokens_agree_on_edge_docs(spark):
     """The (token, first_doc_id) relation behind the Heaps-law curve —
     including the '' token empty docs contribute — must match across
     engines on edge docs."""
-    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.extensions import (
-        _TOKS,
+    from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import (
+        TOKENS_SQL as _TOKS,
     )
 
     sdf, con = _edge_frames(spark)

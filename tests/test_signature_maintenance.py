@@ -15,6 +15,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
+from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.hashing import batch_sql, corpus_sql
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.functions.text import tokens
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.dedup import (
     banded_signature_table,
@@ -25,9 +26,6 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.operators.de
 from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.registry import (
     ORACLES,
     QUERIES,
-)
-from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.training import (
-    _doc_hash,
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -43,7 +41,7 @@ def _docs(spark):
 
 def test_stored_table_path_equals_recompute_path(spark):
     docs = _docs(spark)
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     sh = shingle_sets(docs, 3).localCheckpoint()
 
     want = sorted(
@@ -103,9 +101,9 @@ def test_incremental_cross_pairs_corpus_banded_equals_fallback(spark):
     what q239 runs through the versioned store) must return row-for-row
     the fallback recompute relation."""
     docs = _docs(spark)
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     sh = shingle_sets(docs, 3).localCheckpoint()
-    stored = banded_signature_table(shingles=sh.where(_doc_hash() < 800))
+    stored = banded_signature_table(shingles=sh.where(F.expr(corpus_sql("doc_id"))))
 
     want = sorted(
         tuple(r)
@@ -135,9 +133,9 @@ def test_incremental_near_dedup_corpus_banded_equals_fallback(spark):
     )
 
     docs = _docs(spark)
-    is_new = _doc_hash() >= 800
+    is_new = F.expr(batch_sql("doc_id"))
     stored = banded_signature_table(
-        shingles=shingle_sets(docs.where(_doc_hash() < 800), 3)
+        shingles=shingle_sets(docs.where(F.expr(corpus_sql("doc_id"))), 3)
     )
 
     want = sorted(
@@ -168,7 +166,7 @@ def test_q239_sig_store_holds_corpus_signatures(spark):
     stored = read_current(spark, sig_store)
     docs = _docs(spark)
     n_corpus_shingled = (
-        shingle_sets(docs.where(_doc_hash() < 800), 3)
+        shingle_sets(docs.where(F.expr(corpus_sql("doc_id"))), 3)
         .select("doc_id")
         .distinct()
         .count()
@@ -176,7 +174,7 @@ def test_q239_sig_store_holds_corpus_signatures(spark):
     assert stored.select("doc_id").distinct().count() == n_corpus_shingled
     # batch docs never enter the corpus signature store
     batch_ids = {
-        r["doc_id"] for r in docs.where(_doc_hash() >= 800).select("doc_id").collect()
+        r["doc_id"] for r in docs.where(F.expr(batch_sql("doc_id"))).select("doc_id").collect()
     }
     stored_ids = {r["doc_id"] for r in stored.select("doc_id").distinct().collect()}
     assert not (stored_ids & batch_ids)

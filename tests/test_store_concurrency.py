@@ -178,3 +178,34 @@ def test_vacuum_grace_protects_inflight_part(spark, tmp_path):
     assert os.path.isdir(pending)
     V.vacuum(p, keep=1, grace_seconds=0)
     assert not os.path.exists(pending)
+
+
+def test_failed_writes_leave_the_store_as_it_was(spark, tmp_path):
+    """A write whose job raises leaves the store's directory tree as it
+    was: no ``_staging_*`` snapshot from write_version and no ``_parts``
+    delta part from append_version (vacuum would reclaim either only
+    after its grace period)."""
+    from pyspark.sql import functions as F
+
+    p = str(tmp_path / "failed")
+    V.write_version(_ids(spark, 0, 5), p)
+    V.append_version(_ids(spark, 5, 8), p)
+
+    def tree():
+        return sorted(
+            os.path.relpath(os.path.join(d, n), p)
+            for d, dirs, files in os.walk(p)
+            for n in dirs + files
+        )
+
+    before = tree()
+    bad = _ids(spark, 10, 15).select(
+        F.when(F.col("id") == 12, F.raise_error(F.lit("bad row")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    for write in (V.write_version, V.append_version):
+        with pytest.raises(Exception, match="bad row"):
+            write(bad, p)
+        assert tree() == before, write.__name__
+    assert _all_ids(spark, p) == list(range(8))
