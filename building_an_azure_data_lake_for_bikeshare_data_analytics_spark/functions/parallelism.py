@@ -1,10 +1,12 @@
-"""Parallelism primitives: cost-based scan-fanout for unsplittable inputs
-and overlapped independent Spark jobs (r12 optimization round, re-tuned in
-r13).
+"""Parallelism primitives: partition width decided from a byte estimate
+(cost-based scan-fanout for unsplittable inputs, and its mirror, one
+partition for small lake tables) and overlapped independent Spark jobs
+(r12 optimization round, re-tuned in r13).
 
 Two distinct idle-core problems measured in the r12 profile
 (``tools/profile_stages.py``), with the two standard remedies from the
-optimization playbook:
+optimization playbook, plus the opposite case, where the cores are busy
+with fixed per-stage cost rather than with data:
 
 * **spread** — the driver testdata writes each table as ONE parquet file
   with ONE row group. A row group is Spark's minimum split, so every scan
@@ -45,6 +47,22 @@ optimization playbook:
   of row-group splits and ``spread`` is the identity there; the exchange
   exists only in the regime where the input layout, not the plan, is the
   parallelism bound.
+
+* **narrow** — the mirror image of ``spread``, for the star lake that
+  ``operators.pipeline.run`` returns. Under AQE every shuffle is a stage
+  of its own and every stage a job, and at dashboard scale each of those
+  is one task of fixed cost: a 1,000-row ``groupBy`` + top-k costs
+  62-127 ms on a 4-core container whatever the data. A frame with ONE partition satisfies every
+  clustered or all-tuples requirement, so ``EnsureRequirements`` plans
+  the aggregates, top-ks and window functions above it with no
+  ``Exchange`` at all (*Shark*, SIGMOD 2013: each stage boundary of
+  partial DAG execution costs the same at any size). The rule narrows a
+  table to one partition when its files total no more than the session's
+  ``spark.sql.files.openCostInBytes`` (4 MB): the size below which
+  Spark's own split packing reads a one-file table as one split anyway,
+  so the parallelism given up is at most one open's worth of bytes.
+  Above the threshold it is the identity, so at the reference's scale
+  (trips ~230 MB) and at 100 TB the plans do not change.
 
 * **run_parallel** — lifecycle heads (q239/q252/q245/...) materialize
   several INDEPENDENT store artifacts; each ``write_version`` /
@@ -102,6 +120,15 @@ def spread(df: DataFrame, est_bytes: int, est_partitions: int) -> DataFrame:
     if target <= est_partitions:
         return df
     return df.repartition(target)
+
+
+def narrow(df: DataFrame, est_bytes: int) -> DataFrame:
+    """One partition for a table whose files total ``est_bytes`` <= the
+    session's ``spark.sql.files.openCostInBytes``; the identity above it.
+    ``coalesce(1)`` is a narrow dependency: it merges the scan's splits in
+    one task and adds no exchange of its own."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return df.coalesce(1) if est_bytes <= conf.filesOpenCostInBytes() else df
 
 
 def run_parallel(*thunks: Callable[[], Any], max_workers: int = 6) -> list[Any]:

@@ -223,12 +223,14 @@ def pagerank(
             F.round(F.col("pr") / F.col("deg"), scale).cast(DecimalType(28, scale)).alias("q"),
         )
         sums = contrib.groupBy("id").agg(F.sum("q").cast("double").alias("s"))
-        # LAZY checkpoint (r12): the fixed-iteration loop needs no
-        # per-round action — each round's state persists (DISK_ONLY,
-        # lineage-truncating LogicalRDD) when the CONSUMER's single
-        # action computes through it, so n_iter driver-blocking jobs
-        # collapse into one. The plan stays bounded: every round builds
-        # on the previous round's LogicalRDD, not its expression tree.
+        # EAGER checkpoint: each round's state is written before the next
+        # round reads it twice, so no RDD outlives the builder marked for
+        # a checkpoint but unwritten. Two concurrent stages of a later
+        # action that reach such an RDD can deadlock the scheduler
+        # (DAGScheduler.getCacheLocs -> RDD.checkpointRDD against a
+        # broadcast thread in RDDCheckpointData.checkpoint). The plan
+        # stays bounded: every round builds on the previous round's
+        # LogicalRDD, not its expression tree.
         pr = (
             pr.select("id", "deg")
             .join(sums, "id")
@@ -237,6 +239,6 @@ def pagerank(
                 "deg",
                 F.round(F.lit(base) + F.lit(damping) * F.col("s"), scale).alias("pr"),
             )
-            .localCheckpoint(eager=False, storageLevel=_ROUND_LEVEL)
+            .localCheckpoint(eager=True, storageLevel=_ROUND_LEVEL)
         )
     return pr.select("id", "pr")

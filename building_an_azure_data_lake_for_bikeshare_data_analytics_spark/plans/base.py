@@ -21,7 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.readers import read_parquet_table
+from ..sources.readers import parquet_files, read_parquet_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -76,7 +76,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: memoized table file layout: (realpath(sf_dir), name) -> (total_bytes,
-#: n_files). The testdata directories are immutable, so one os.walk per
+#: n_files). The testdata directories are immutable, so one file listing per
 #: table per process replaces the r12 per-call df.rdd.getNumPartitions()
 #: JVM round-trip (~40-60 ms x ~85 call sites — a measured slice of the
 #: suite's per-query driver floor).
@@ -94,17 +94,9 @@ def _table_layout(sf_dir: str, name: str) -> tuple[int, int]:
     key = (os.path.realpath(sf_dir), name)
     hit = _TABLE_LAYOUT.get(key)
     if hit is None:
-        file_path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isfile(file_path):
-            files = [file_path]
-        else:
-            files = []
-            for root, _dirs, names in os.walk(os.path.join(sf_dir, name)):
-                files.extend(
-                    os.path.join(root, n)
-                    for n in names
-                    if n.endswith(".parquet") and not n.startswith(("_", "."))
-                )
+        files = parquet_files(os.path.join(sf_dir, f"{name}.parquet")) or parquet_files(
+            os.path.join(sf_dir, name)
+        )
         total = sum(os.path.getsize(f) for f in files)
         hit = (total, max(1, len(files)))
         if files:  # an empty listing may be a table whose files come later

@@ -60,6 +60,21 @@ def read_parquet_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def parquet_files(path: str) -> list[str]:
+    """The data files of the parquet table at ``path``: the file itself, or
+    every ``*.parquet`` under the directory, partition subdirectories
+    included (``_``/``.``-prefixed markers skipped). Lists afresh on every
+    call; a caller that reads immutable data memoizes the result."""
+    if os.path.isfile(path):
+        return [path]
+    return [
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
+
+
 def load_star(
     spark: SparkSession,
     root: str,

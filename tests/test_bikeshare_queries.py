@@ -2,6 +2,8 @@
 cross-check a representative subset value-for-value against DuckDB running
 directly on the written parquet star schema."""
 
+import re
+
 import duckdb
 import pytest
 
@@ -10,6 +12,7 @@ from building_an_azure_data_lake_for_bikeshare_data_analytics_spark.plans.bikesh
     ALL_G_QUERIES,
 )
 
+from conftest import jobs_launched
 from test_pipeline import csv_dir  # noqa: F401  (reuse the fixture)
 
 
@@ -83,3 +86,50 @@ def test_g14_avg_amount_decimal_type(spark, star):
     df = ALL_G_QUERIES["g14_avg_amount_by_month"](tables)
     # A7 widening: avg(decimal(10,0)) -> decimal(14,4) like the reference
     assert dict(df.dtypes)["amount_avg"] == "decimal(14,4)"
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_g_queries_plan_no_shuffle(star):
+    """``run()`` returns each small lake table as one partition, which
+    satisfies every aggregate's and top-k's distribution: the only
+    exchange left is the broadcast of a dimension."""
+    tables, _ = star
+    shuffles = {
+        name: ex
+        for name, fn in ALL_G_QUERIES.items()
+        if set(ex := re.findall(r"\w*Exchange\b", _plan(fn(tables)))) - {"BroadcastExchange"}
+    }
+    assert not shuffles, shuffles
+
+
+def test_g_queries_run_one_job_per_stage(spark, star):
+    """With no shuffle stage, a G-query runs one job for its result plus
+    one per broadcast dimension: G1-G8 read trips alone, G9-G20 join one
+    dimension and G21/G22 two."""
+    tables, _ = star
+    got = {name: jobs_launched(spark, fn(tables).collect) for name, fn in ALL_G_QUERIES.items()}
+    want = {name: 1 if int(name[1:3]) <= 8 else 2 if int(name[1:3]) <= 20 else 3 for name in got}
+    assert got == want
+
+
+def test_tables_above_the_open_cost_keep_their_scan_partitioning(spark, csv_dir, star, tmp_path):  # noqa: F811
+    """The one-partition rule reads its threshold from the session's
+    ``spark.sql.files.openCostInBytes``: with it at 1 byte no table is
+    small, G5's aggregate shuffles by its key again, and every G-query
+    returns the same rows as on the narrowed lake."""
+    tables, _ = star
+    g5 = ALL_G_QUERIES["g05_avg_duration_by_start_station"]
+    assert "Exchange hashpartitioning" not in _plan(g5(tables))
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        wide = pipeline.run(spark, csv_dir, str(tmp_path / "lake"))
+        assert "Exchange hashpartitioning" in _plan(g5(wide))
+        got = {name: sorted(fn(wide).collect()) for name, fn in ALL_G_QUERIES.items()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == {name: sorted(fn(tables).collect()) for name, fn in ALL_G_QUERIES.items()}

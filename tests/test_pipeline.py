@@ -226,6 +226,26 @@ def test_empty_facts_give_empty_date_dims(spark, csv_dir):
     assert dims["payment_dates"].count() == 0
 
 
+@pytest.mark.parametrize("fact", ["payments", "trips"])
+def test_empty_fact_file_lands_an_empty_table(spark, csv_dir, tmp_path, fact):
+    """A monthly batch whose fact CSV is empty lands whole: the empty fact
+    and its date dim reload with their dtypes (a parquet directory with no
+    data file has no schema to infer), and the other four tables are
+    those of the full batch."""
+    d = tmp_path / f"no_{fact}"
+    shutil.copytree(csv_dir, d)
+    (d / f"{fact}.csv").write_text("")
+    full = pipeline.run(spark, csv_dir, str(tmp_path / "full"))
+    got = pipeline.run(spark, str(d), str(tmp_path / "lake"))
+    dim = {"payments": "payment_dates", "trips": "trip_dates"}[fact]
+    for name, df in got.items():
+        assert df.dtypes == full[name].dtypes, name
+        if name in (fact, dim):
+            assert df.count() == 0, name
+        else:
+            assert sorted(df.collect()) == sorted(full[name].collect()), name
+
+
 def test_pipeline_is_idempotent(spark, csv_dir, tmp_path):
     lake = str(tmp_path / "lake2")
     a = pipeline.run(spark, csv_dir, lake)["trips"].count()

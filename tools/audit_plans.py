@@ -12,8 +12,10 @@ claims in prose (SCALE_NOTES / docstrings):
 * ``BroadcastNestedLoopJoin`` only where a side is a bounded scalar/spine
   relation (the whitelist below, with the bounding argument).
 
-Writes AUDIT.md (per-query operator counts + the global invariant
-summary); tests/test_audit.py pins the invariants in CI.
+Prints the per-query operator counts and the global invariant summary
+as a markdown table on stdout (nothing is written, so there is no
+committed copy to go stale); tests/test_audit.py pins the invariants in
+CI.
 
 Usage: python tools/audit_plans.py [sf_dir]
 """
@@ -212,14 +214,7 @@ def main() -> None:
             f"{c['BroadcastHashJoin']} | {c['SortMergeJoin']} | "
             f"{c['BroadcastNestedLoopJoin']} | {c['Window']} | {arrow_py} |"
         )
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "AUDIT.md"
-    )
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(rows)} plans, violations={len(violations)}")
-    for v in violations:
-        print("  VIOLATION:", v)
+    print("\n".join(lines))
 
 
 if __name__ == "__main__":
